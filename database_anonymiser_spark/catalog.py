@@ -8,11 +8,26 @@ catalog round-trip; strictly cheaper than the reference's 1+N queries).
 At 100 TB each "table" is a partitioned parquet dataset; nothing here changes
 — ``spark.read.parquet`` unifies footers, and listing stays a driver-side
 metadata operation.
+
+Metadata answers launch no Spark job once a table version has been seen:
+``ParquetCatalog.read`` infers a table's schema once (one Spark job) and
+then hands the cached schema to ``spark.read.schema(...)``, keyed by the
+table's file signature so a rewritten file is re-inferred;
+:func:`footer_stats` sums parquet footer row counts with pyarrow.
+The cache pays off when one catalog reads an unchanged table more than
+once: ``--dryrun --emitSql`` (the script, then the dryrun), a versioned
+apply that creates version 0 (the mask, then the create), and a caller
+that runs a dryrun and then an apply on one catalog. A single ``--dryrun``
+or ``--apply`` reads each table once and pays only the signature walk.
 """
 
 from __future__ import annotations
 
+import os
+import threading
+import warnings
 from dataclasses import dataclass
+from functools import lru_cache
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -20,10 +35,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from database_anonymiser_spark.types import group_for_field
-
-
-import warnings
-from functools import lru_cache
 
 
 def _nanos_timestamp_columns(path: str) -> tuple[str, ...]:
@@ -41,7 +52,6 @@ def _nanos_timestamp_columns(path: str) -> tuple[str, ...]:
     are cached per concrete path: footers don't change for a given fixture
     path, and every load() would otherwise pay a pyarrow footer read."""
     import glob as _glob
-    import os
 
     target = path
     if any(ch in path for ch in "*?["):
@@ -76,8 +86,8 @@ def _nanos_timestamp_columns(path: str) -> tuple[str, ...]:
         return ()
 
 
-@lru_cache(maxsize=1024)
-def _nanos_probe_cached(path: str) -> tuple[str, ...]:
+def _nanos_columns_of(path: str) -> tuple[str, ...]:
+    """The TIMESTAMP(NANOS) columns of the first file's footer (uncached)."""
     import pyarrow as pa
     import pyarrow.dataset as ds
 
@@ -89,20 +99,66 @@ def _nanos_probe_cached(path: str) -> tuple[str, ...]:
     )
 
 
-def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet`` + lossless ns-timestamp repair.
+_nanos_probe_cached = lru_cache(maxsize=1024)(_nanos_columns_of)
 
-    With ``spark.sql.legacy.parquet.nanosAsLong=true`` (set in session.py),
+
+def _repair_nanos(df: DataFrame, nanos: tuple[str, ...]) -> DataFrame:
+    """With ``spark.sql.legacy.parquet.nanosAsLong=true`` (set in session.py),
     TIMESTAMP(NANOS) columns arrive as epoch-nanos longs; we convert them to
     ``timestamp_ntz`` via integer division (no double round-trip — epoch-ns
     exceeds float53 precision). This is a cheap projection, fully codegen'd.
     """
-    df = spark.read.parquet(path)
-    for c in _nanos_timestamp_columns(path):
+    for c in nanos:
         df = df.withColumn(
             c, F.expr(f"cast(timestamp_micros(`{c}` div 1000) as timestamp_ntz)")
         )
     return df
+
+
+def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet`` + lossless ns-timestamp repair."""
+    return _repair_nanos(spark.read.parquet(path), _nanos_timestamp_columns(path))
+
+
+@dataclass(frozen=True)
+class FooterStats:
+    rows: int
+    files: int
+    bytes: int
+
+
+def footer_stats(path: str | Path | list) -> FooterStats:
+    """Rows, data files and bytes of a parquet file, a directory of them, or
+    a list of files — summed from the footers by pyarrow, so no row data is
+    read and no Spark job runs. ``_``/``.``-prefixed files (``_SUCCESS``,
+    checksums) are skipped, as Spark skips them."""
+    import pyarrow.dataset as ds
+
+    src = [str(p) for p in path] if isinstance(path, list) else str(path)
+    dataset = ds.dataset(src, format="parquet")
+    return FooterStats(
+        rows=dataset.count_rows(),
+        files=len(dataset.files),
+        bytes=sum(os.path.getsize(f) for f in dataset.files),
+    )
+
+
+def _file_signature(path: str) -> tuple:
+    """(relative path, size, mtime_ns) of every data file of a table: the
+    file itself, or the files under a directory, skipping the ``_``/``.``-
+    prefixed names that Spark skips too. Empty when the path is missing."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return ((".", st.st_size, st.st_mtime_ns),)
+    out = []
+    for d, dirs, files in os.walk(path):
+        dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+        for f in files:
+            if not f.startswith(("_", ".")):
+                full = os.path.join(d, f)
+                st = os.stat(full)
+                out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
 
 
 @dataclass(frozen=True)
@@ -121,6 +177,9 @@ class ParquetCatalog:
         self.spark = spark
         self.root = Path(root)
         self.schema_name = schema_name
+        # table path → (file signature, inferred Spark schema, ns columns)
+        self._schemas: dict[str, tuple[tuple, T.StructType, tuple[str, ...]]] = {}
+        self._lock = threading.Lock()
 
     def list_tables(self) -> list[TableInfo]:
         """All base tables, ordered by name (≅ schema-reader.ts:16-25)."""
@@ -133,7 +192,23 @@ class ParquetCatalog:
         return str(self.root / f"{name}.parquet")
 
     def read(self, name: str) -> DataFrame:
-        return read_parquet_table(self.spark, self.table_path(name))
+        """The table, with the ns-timestamp repair of :func:`read_parquet_table`.
+
+        The first read of a table version infers its schema (one Spark job);
+        later reads pass the cached schema to ``spark.read.schema`` and launch
+        none. The cache is keyed by the file signature, so a rewritten,
+        added or removed file is re-inferred: the schema stays live."""
+        path = self.table_path(name)
+        sig = _file_signature(path)
+        with self._lock:
+            hit = self._schemas.get(path)
+        if hit is not None and hit[0] == sig:
+            return _repair_nanos(self.spark.read.schema(hit[1]).parquet(path), hit[2])
+        raw = self.spark.read.parquet(path)
+        nanos = _nanos_columns_of(path)
+        with self._lock:
+            self._schemas[path] = (sig, raw.schema, nanos)
+        return _repair_nanos(raw, nanos)
 
     def schema_of(self, name: str) -> T.StructType:
         """Live schema read (≅ executor.ts:19-39's per-table type re-read)."""

@@ -1,8 +1,10 @@
 """Plan executor: per-table mask → dryrun count / apply staged write.
 
 Rebuilds ``src/executor/executor.ts:87-147`` on Spark's immutable model:
-- dryrun (C4): compute the masked DataFrame and ``count()`` it — same affected
-  row counts the reference gets from UPDATE-under-ROLLBACK, with zero writes.
+- dryrun (C4): build the masked DataFrame and count the table's rows from its
+  parquet footers — the affected row counts the reference gets from
+  UPDATE-under-ROLLBACK, with zero writes. The mask rewrites every row, so
+  the affected count is the table's row count.
 - apply (C5): ALL tables are written to staging paths first; promotion
   (directory rename) happens only after every staging succeeded. Any table
   failure deletes every staging and promotes NOTHING — the all-or-nothing
@@ -15,15 +17,25 @@ Rebuilds ``src/executor/executor.ts:87-147`` on Spark's immutable model:
   manifest exists only once every staging succeeded). This matches the
   reference's single atomic ``COMMIT`` exposure, write-ahead-log style.
 
-100 TB posture:
+Cost:
+- Every table goes through one driver-side prepare step: mask, type-safety
+  downgrades, active-column count, footer row count. It launches no Spark
+  job once the catalog has the table version's schema (the first read of a
+  version pays one schema-inference job), so a dryrun is metadata only.
+- An apply checks the row cap on the prepared counts, before any write, and
+  masks each table once. Its only Spark jobs are the staged writes, one per
+  rewritten table; rows, files and bytes of the staged output come from the
+  written files' footers, not from a re-read.
 - The mask is one narrow projection — no shuffle, no Python; executors stream
   parquet in and out. Cost is IO-bound and embarrassingly parallel.
-- Dryrun counts avoid a second full read where possible: when ≥1 column is
-  rewritten the affected-row count is just the table row count, which Spark
-  answers from parquet footer statistics (no data scan).
-- Tables are independent jobs; ``parallelism`` submits them concurrently from
-  a thread pool so a 1000-executor cluster isn't serialized on one table's
-  tail (the reference is strictly sequential, executor.ts:104-132).
+- Tables are independent; ``parallelism`` prepares and writes them
+  concurrently from a thread pool, which inherits the caller's Spark job
+  group, so a 1000-executor cluster isn't serialized on one table's tail
+  (the reference is strictly sequential, executor.ts:104-132).
+- A write runs one task per input split, so a table stored as one parquet
+  row group is written by one task. That write is the critical path of a
+  small apply, and it is left narrow on purpose: a ``repartition`` would add
+  a shuffle whose cost exceeds the parallel write it buys at that size.
 - Staged writes are file-size governed: ``max_records_per_file`` caps every
   output file (SURVEY.md §7) so a 100 TB apply neither emits multi-TB
   single files nor a small-file storm — Spark splits each task's output at
@@ -36,12 +48,13 @@ import json
 import logging
 import os
 import shutil
+import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from pathlib import Path
 
-from database_anonymiser_spark.catalog import ParquetCatalog
+from database_anonymiser_spark.catalog import ParquetCatalog, footer_stats
 from database_anonymiser_spark.planner import Plan, PlannedTable
 from database_anonymiser_spark.safeguards import DEFAULT_ROW_CAP, enforce_row_cap
 from database_anonymiser_spark.strategies import (
@@ -66,6 +79,13 @@ class TableResult:
     skipped: bool = False
     error: str | None = None
     downgrades: list[dict] = field(default_factory=list)
+    #: parquet files and bytes ``rows`` was counted from: the source table
+    #: in a dryrun, the staged output in an apply
+    files: int = 0
+    bytes: int = 0
+    #: wall time spent on this table: the prepare step, plus the write in
+    #: an apply
+    wall_s: float = 0.0
 
 
 @dataclass
@@ -101,6 +121,104 @@ def mask_table(catalog: ParquetCatalog, planned: PlannedTable):
         if nc.downgraded_from
     ]
     return masked, active, downgrades
+
+
+def _fail(res: TableResult, e: Exception) -> None:
+    """Per-table failure isolation: reported, not swallowed."""
+    log.exception("table %s failed", res.table)
+    res.error = f"{type(e).__name__}: {e}"
+
+
+def _count_from_footers(res: TableResult, path) -> None:
+    stats = footer_stats(path)
+    res.rows, res.files, res.bytes = stats.rows, stats.files, stats.bytes
+
+
+def _prepare_table(catalog: ParquetCatalog, planned: PlannedTable):
+    """One table's driver-side bookkeeping: mask, downgrades, active-column
+    count, footer row count. Launches no Spark job once the catalog holds
+    the table's schema. Returns ``(result, masked)``; ``masked`` is None
+    when the table is skipped or failed."""
+    res = TableResult(table=planned.table)
+    t0 = time.perf_counter()
+    try:
+        masked, active, res.downgrades = mask_table(catalog, planned)
+        if active == 0:
+            # zero effective SETs → skip (query-builder.ts:54-56, executor.ts:120-124)
+            res.skipped = True
+            return res, None
+        _count_from_footers(res, catalog.table_path(planned.name))
+        return res, masked
+    except Exception as e:
+        _fail(res, e)
+        return res, None
+    finally:
+        res.wall_s = time.perf_counter() - t0
+
+
+def _map(spark, fn, items: list, parallelism: int) -> list:
+    """``fn`` over ``items`` in order; on a thread pool when ``parallelism``
+    and the item count allow. Pool threads inherit the caller's Spark local
+    properties, so their jobs land in the caller's job group."""
+    if parallelism <= 1 or len(items) <= 1:
+        return [fn(x) for x in items]
+    from pyspark.util import inheritable_thread_target
+
+    task = inheritable_thread_target(spark)(fn)
+    with ThreadPoolExecutor(max_workers=parallelism) as pool:
+        return list(pool.map(task, items))
+
+
+def _stage_table(
+    out_root: Path,
+    planned: PlannedTable,
+    res: TableResult,
+    masked,
+    max_records_per_file: int,
+) -> Path | None:
+    """Write one prepared table to a staging path — the apply's one Spark
+    job for it. NEVER promotes: returns the staging path (None on failure,
+    with the partial staging removed) so the caller promotes
+    all-or-nothing. Rows, files and bytes come from the staged footers."""
+    staging = out_root / f"_staging_{planned.name}_{uuid.uuid4().hex[:8]}"
+    t0 = time.perf_counter()
+    try:
+        # File-size governance (SURVEY.md §7): cap records per output file so
+        # apply output is neither giant files nor a small-file storm.
+        masked.write.option("maxRecordsPerFile", max_records_per_file).mode(
+            "overwrite"
+        ).parquet(str(staging))
+        _count_from_footers(res, staging)
+        return staging
+    except Exception as e:
+        _fail(res, e)
+        shutil.rmtree(staging, ignore_errors=True)
+        return None
+    finally:
+        res.wall_s += time.perf_counter() - t0
+
+
+def _counted(result: ExecutionResult) -> dict[str, int]:
+    """Rows per rewritten table: the row-cap input and ``updated_by_table``."""
+    return {tr.table: tr.rows for tr in result.tables if not tr.skipped and tr.error is None}
+
+
+def _prepare_plan(catalog, plan, dryrun, row_cap, force, parallelism):
+    """Prepare every table. A dryrun's result is complete here. For an
+    apply the row cap is enforced here, before any write, and a table that
+    failed to prepare rolls the apply back before anything is written
+    (all-or-nothing, main.ts:102-111 ROLLBACK)."""
+    result = ExecutionResult(mode="dryrun" if dryrun else "apply")
+    prepared = _map(
+        catalog.spark, lambda t: _prepare_table(catalog, t), list(plan.tables), parallelism
+    )
+    result.tables = [tr for tr, _ in prepared]
+    if dryrun:
+        result.updated_by_table = _counted(result)
+    else:
+        enforce_row_cap(sum(_counted(result).values()), cap=row_cap, force=force)
+        result.rolled_back = bool(result.failed_tables)
+    return result, prepared
 
 
 def recover_pending_promote(output_root: Path) -> list[str]:
@@ -140,41 +258,6 @@ def recover_pending_promote(output_root: Path) -> list[str]:
     return recovered
 
 
-def _execute_table(
-    catalog: ParquetCatalog,
-    planned: PlannedTable,
-    dryrun: bool,
-    output_root: Path | None,
-    max_records_per_file: int = DEFAULT_MAX_RECORDS_PER_FILE,
-) -> tuple[TableResult, Path | None]:
-    """One table's mask + (dryrun count | staged write). NEVER promotes —
-    returns the staging path so the caller can promote all-or-nothing."""
-    res = TableResult(table=planned.table)
-    try:
-        masked, active, downgrades = mask_table(catalog, planned)
-        res.downgrades = downgrades
-        if active == 0:
-            # zero effective SETs → skip (query-builder.ts:54-56, executor.ts:120-124)
-            res.skipped = True
-            return res, None
-        if dryrun:
-            res.rows = masked.count()
-            return res, None
-        assert output_root is not None
-        staging = output_root / f"_staging_{planned.name}_{uuid.uuid4().hex[:8]}"
-        # File-size governance (SURVEY.md §7): cap records per output file so
-        # apply output is neither giant files nor a small-file storm.
-        masked.write.option("maxRecordsPerFile", max_records_per_file).mode(
-            "overwrite"
-        ).parquet(str(staging))
-        res.rows = catalog.spark.read.parquet(str(staging)).count()
-        return res, staging
-    except Exception as e:  # per-table failure isolation, reported not swallowed
-        log.exception("table %s failed", planned.table)
-        res.error = f"{type(e).__name__}: {e}"
-        return res, None
-
-
 def _promote(staging: Path, final: Path) -> None:
     """Same-filesystem rename promote (near-atomic, data-independent)."""
     if final.exists():
@@ -202,6 +285,10 @@ def execute_plan_versioned(
     rendered on a transaction log. A failed apply is rolled back by
     ``restore()`` (forward, auditable), not by hoping a rename didn't land.
 
+    Every table is first prepared as in :func:`execute_plan` (mask plus
+    footer row count, no Spark job): a dryrun returns those counts, and an
+    apply checks the row cap on them and writes nothing if a table failed.
+
     All-or-nothing across tables, two-phase:
     1. every table's masked data files are fully written while INVISIBLE
        (referenced by no commit) — any failure here commits nothing and
@@ -217,9 +304,9 @@ def execute_plan_versioned(
        no multi-table transactions, and the window is milliseconds versus
        phase 1's hours at 100 TB.
 
-    Row counts come from the written files' parquet footers (metadata, no
-    second scan). NOTE: the log retains the pre-image until vacuumed past
-    retention — time travel to the unmasked original is the point for
+    An apply's row counts come from the written files' parquet footers
+    (metadata, no second scan). NOTE: the log retains the pre-image until
+    vacuumed past retention — time travel to the unmasked original is the point for
     staging-copy workflows (the reference also runs against a copy DB),
     but production anonymisation should vacuum old versions.
     """
@@ -230,73 +317,55 @@ def execute_plan_versioned(
     )
 
     root = Path(tables_root)
-    mode = "dryrun" if dryrun else "apply"
-    result = ExecutionResult(mode=mode)
+    result, prepared = _prepare_plan(catalog, plan, dryrun, row_cap, force, parallelism=1)
+    if dryrun or result.rolled_back:
+        return result
 
-    if not dryrun:
-        dry = execute_plan_versioned(catalog, plan, root, dryrun=True)
-        enforce_row_cap(dry.total_rows, cap=row_cap, force=force)
-
-    # phase 1: mask + (count | invisible write) per table
-    staged: list[tuple[PlannedTable, VersionedTable, list, int]] = []
+    # phase 1: invisible write per table
+    staged: list[tuple[VersionedTable, list]] = []
     touched: list[VersionedTable] = []  # every table phase 1 wrote into
-    for planned in plan.tables:
-        tr = TableResult(table=planned.table)
+    for planned, (tr, masked) in zip(plan.tables, prepared):
+        if masked is None:
+            continue
+        t0 = time.perf_counter()
         try:
-            masked, active, downgrades = mask_table(catalog, planned)
-            tr.downgrades = downgrades
-            if active == 0:
-                tr.skipped = True
-                result.tables.append(tr)
-                continue
-            if dryrun:
-                tr.rows = masked.count()
-            else:
-                t_root = root / planned.name
-                t = (
-                    VersionedTable(catalog.spark, t_root)
-                    if (t_root / "_log").is_dir()
-                    else VersionedTable.create(
-                        catalog.spark, t_root, catalog.read(planned.name), key_col=None
-                    )
+            t_root = root / planned.name
+            t = (
+                VersionedTable(catalog.spark, t_root)
+                if (t_root / "_log").is_dir()
+                else VersionedTable.create(
+                    catalog.spark, t_root, catalog.read(planned.name), key_col=None
                 )
-                touched.append(t)
-                adds = _write_data_files(masked, t.root, None)
-                import pyarrow.parquet as pq
-
-                tr.rows = sum(
-                    pq.ParquetFile(str(t.root / e.path)).metadata.num_rows
-                    for e in adds
-                )
-                staged.append((planned, t, adds, tr.rows))
-            result.tables.append(tr)
+            )
+            touched.append(t)
+            adds = _write_data_files(masked, t.root, None)
+            # the write already read each file's footer row count and size
+            tr.rows = sum(e.num_rows for e in adds)
+            tr.files = len(adds)
+            tr.bytes = sum(e.size for e in adds)
+            staged.append((t, adds))
         except Exception as e:
-            log.exception("table %s failed", planned.table)
-            tr.error = f"{type(e).__name__}: {e}"
-            result.tables.append(tr)
+            _fail(tr, e)
+        tr.wall_s += time.perf_counter() - t0
 
-    if any(tr.error is not None for tr in result.tables):
-        if not dryrun:
-            # nothing was committed; drop the invisible phase-1 files —
-            # from every table touched, not only those that finished
-            # staging (a mid-write failure leaves partial parquet too)
-            result.rolled_back = True
-            for t in touched:
-                # grace 0: these are OUR just-staged files (single
-                # writer inside the apply run), not a concurrent
-                # writer's in-flight window
-                t.vacuum(orphan_grace_s=0)
+    if result.failed_tables:
+        # nothing was committed; drop the invisible phase-1 files — from
+        # every table touched, not only those that finished staging (a
+        # mid-write failure leaves partial parquet too)
+        result.rolled_back = True
+        for t in touched:
+            # grace 0: these are OUR just-staged files (single writer
+            # inside the apply run), not a concurrent writer's in-flight
+            # window
+            t.vacuum(orphan_grace_s=0)
         return result
 
     # phase 2: metadata-only commit loop
-    for planned, t, adds, rows in staged:
+    for t, adds in staged:
         v = t.latest_version()
         removes = [e["path"] for e in t._live_entries(v)]
         _commit(t.root, v + 1, adds, removes, t.key_col(), op="anonymise")
-
-    for tr in result.tables:
-        if not tr.skipped and tr.error is None:
-            result.updated_by_table[tr.table] = tr.rows
+    result.updated_by_table = _counted(result)
     return result
 
 
@@ -312,58 +381,45 @@ def execute_plan(
 ) -> ExecutionResult:
     """≅ executePlan (executor.ts:87-147) with staged-write apply.
 
-    Apply enforces the row cap from a dryrun count first (safeguards made
-    live, SURVEY.md §2 C6), rolls forward any promote interrupted by a
-    previous crash, and journals its own promote phase so IT is
-    crash-atomic too.
+    Apply enforces the row cap on the prepared footer counts before any
+    write (safeguards made live, SURVEY.md §2 C6), rolls forward any
+    promote interrupted by a previous crash, and journals its own promote
+    phase so IT is crash-atomic too. A table that fails to prepare rolls
+    the apply back before anything is written.
     """
-    mode = "dryrun" if dryrun else "apply"
     out_root = Path(output_root) if output_root else None
     if not dryrun:
         if out_root is None:
             raise ValueError("apply mode requires output_root")
         out_root.mkdir(parents=True, exist_ok=True)
         recover_pending_promote(out_root)
-        dry = execute_plan(catalog, plan, dryrun=True, parallelism=parallelism)
-        enforce_row_cap(dry.total_rows, cap=row_cap, force=force)
 
-    result = ExecutionResult(mode=mode)
-    if parallelism > 1 and len(plan.tables) > 1:
-        with ThreadPoolExecutor(max_workers=parallelism) as pool:
-            futures = [
-                pool.submit(_execute_table, catalog, t, dryrun, out_root, max_records_per_file)
-                for t in plan.tables
-            ]
-            table_results = [f.result() for f in futures]
-    else:
-        table_results = [
-            _execute_table(catalog, t, dryrun, out_root, max_records_per_file)
-            for t in plan.tables
-        ]
-
-    any_error = any(tr.error is not None for tr, _ in table_results)
-    if not dryrun and any_error:
-        # all-or-nothing (main.ts:102-111 ROLLBACK): delete every staging,
-        # promote nothing — the output root is left exactly as it was
-        result.rolled_back = True
-        for _, staging in table_results:
-            if staging is not None:
-                shutil.rmtree(staging, ignore_errors=True)
-        for tr, _ in table_results:
-            result.tables.append(tr)
+    result, prepared = _prepare_plan(catalog, plan, dryrun, row_cap, force, parallelism)
+    if dryrun or result.rolled_back:
         return result
 
-    promotions: list[tuple[Path, Path]] = []
-    for (tr, staging), planned in zip(table_results, plan.tables):
-        result.tables.append(tr)
-        if tr.skipped or tr.error is not None:
-            continue
-        if not dryrun:
-            assert staging is not None and out_root is not None
-            promotions.append((staging, out_root / f"{planned.name}.parquet"))
-        result.updated_by_table[tr.table] = tr.rows
+    active = [(planned, tr, masked) for planned, (tr, masked)
+              in zip(plan.tables, prepared) if masked is not None]
+    stagings = _map(
+        catalog.spark,
+        lambda a: _stage_table(out_root, *a, max_records_per_file),
+        active,
+        parallelism,
+    )
+    if result.failed_tables:
+        # a write failed: delete every staging, promote nothing — the
+        # output root is left exactly as it was
+        result.rolled_back = True
+        for staging in stagings:
+            if staging is not None:
+                shutil.rmtree(staging, ignore_errors=True)
+        return result
+
+    promotions = [
+        (staging, out_root / f"{planned.name}.parquet")
+        for (planned, _, _), staging in zip(active, stagings)
+    ]
     if promotions:
-        assert out_root is not None
         # Journal-then-rename: a crash anywhere in the loop is rolled forward
         # by recover_pending_promote on the next apply. The journal itself
         # lands atomically (temp + os.replace) so a crash mid-journal can
@@ -382,4 +438,5 @@ def execute_plan(
         for staging, final in promotions:
             _promote(staging, final)
         manifest.unlink()
+    result.updated_by_table = _counted(result)
     return result

@@ -28,6 +28,9 @@ def build_report(mode: str, plan: Plan, result: ExecutionResult) -> dict:
                     "skipped": t.skipped,
                     "error": t.error,
                     "downgrades": t.downgrades,
+                    "files": t.files,
+                    "bytes": t.bytes,
+                    "wall_s": t.wall_s,
                 }
                 for t in result.tables
             ],

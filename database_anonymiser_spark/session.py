@@ -6,6 +6,36 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: local-mode driver heap ceiling, in MB
+DRIVER_MEM_CAP_MB = 16 * 1024
+#: share of physical memory the local-mode driver heap may take
+DRIVER_MEM_SHARE = 0.6
+
+
+def local_cpus() -> str:
+    """Local-mode core count: ``$SPARK_GRAFT_CPUS``, else the host's CPUs."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
+
+
+def physical_memory_bytes() -> int | None:
+    try:
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return None
+
+
+def driver_memory(mem_bytes: int | None = None) -> str:
+    """Local-mode driver heap: ``$SPARK_GRAFT_DRIVER_MEM``, else the smaller
+    of 16g and 60 % of physical memory (16g when that is unknown)."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    if mem_bytes is None:
+        mem_bytes = physical_memory_bytes()
+    if mem_bytes is None:
+        return f"{DRIVER_MEM_CAP_MB}m"
+    return f"{min(DRIVER_MEM_CAP_MB, int(mem_bytes * DRIVER_MEM_SHARE) >> 20)}m"
+
 
 def get_spark(
     app_name: str = "database-anonymiser-spark",
@@ -22,10 +52,10 @@ def get_spark(
     - shuffle partitions sized to cores locally; on a real cluster leave AQE's
       coalescing to right-size post-shuffle partitions.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else os.cpu_count() or 1
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -41,10 +71,11 @@ def get_spark(
         # local mode: the driver JVM hosts ALL executor memory — 8g across
         # 32 concurrent tasks (~250 MB/task + cached frames) produced
         # measured multi-minute GC storms during pipeline cache fills
-        # (guide §5: size memory to the workload). 16g is the local
-        # default for this host class; env-overridable, and irrelevant on
-        # a real cluster where executor memory is provisioned explicitly.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # (guide §5: size memory to the workload). The default is 16g,
+        # capped at 60 % of physical memory so the heap never exceeds the
+        # host; env-overridable, and irrelevant on a real cluster where
+        # executor memory is provisioned explicitly.
+        .config("spark.driver.memory", driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

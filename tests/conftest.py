@@ -88,8 +88,35 @@ SLOW_TESTS = {
 }
 
 
+def missing_slow_tests(slow_ids, modules, rootpath) -> list[str]:
+    """The SLOW_TESTS ids that name no test: the file is gone, or it was
+    collected and defines no such test. ``modules`` maps each collected
+    file (as in a node id) to its module, so a partial run (one file, one
+    node id, ``-k``) still checks every id of the files it touched."""
+    missing = []
+    for nid in sorted(slow_ids):
+        path, *names = nid.split("[", 1)[0].split("::")
+        if not (rootpath / path).is_file():
+            missing.append(nid)
+            continue
+        obj = modules.get(path)
+        for name in names:
+            obj = getattr(obj, name, None) if obj is not None else None
+        if path in modules and not callable(obj):
+            missing.append(nid)
+    return missing
+
+
 def pytest_collection_modifyitems(config, items):
+    modules = {}
     for item in items:
         nid = item.nodeid.replace("\\", "/")
+        modules.setdefault(nid.split("::", 1)[0], getattr(item, "module", None))
         if nid in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+    missing = missing_slow_tests(SLOW_TESTS, modules, config.rootpath)
+    if missing:
+        raise pytest.UsageError(
+            "SLOW_TESTS names tests that do not exist (renamed or removed?): "
+            + ", ".join(missing)
+        )

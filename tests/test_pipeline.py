@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from database_anonymiser_spark.catalog import ParquetCatalog
+from database_anonymiser_spark.catalog import ParquetCatalog, footer_stats
 from database_anonymiser_spark.config import (
     ConfigValidationError,
     config_from_dict,
@@ -15,6 +15,7 @@ from database_anonymiser_spark.executor import execute_plan
 from database_anonymiser_spark.planner import build_plan, resolve_strategy
 from database_anonymiser_spark.preflight import PreflightError, preflight_validate
 from database_anonymiser_spark.safeguards import RowCapExceeded, enforce_row_cap
+from database_anonymiser_spark.sql_gen import emit_sql_script
 
 
 @pytest.fixture(scope="module")
@@ -188,6 +189,32 @@ def test_apply_is_all_or_nothing(catalog, tmp_path):
     assert list(tmp_path.iterdir()) == []  # nothing promoted, stagings cleaned
 
 
+def test_apply_write_failure_removes_every_staging(catalog, tmp_path, monkeypatch):
+    """A table whose staged write fails after partial output landed rolls
+    the whole apply back: no table promoted, no staging left behind."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    d = base_config_dict()
+    d["column_strategy"]["s_name"] = "HASH_SHA256"
+    d["rules"].append(
+        {"table": "public.supplier", "enabled": True, "columns": [{"name": "s_name"}]}
+    )
+    real = DataFrameWriter.parquet
+
+    def failing(self, path, *a, **kw):
+        real(self, path, *a, **kw)
+        if "_staging_supplier" in str(path):
+            raise RuntimeError("simulated write failure")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    res = execute_plan(catalog, build_plan(config_from_dict(d)), dryrun=False,
+                       output_root=tmp_path, force=True)
+    assert res.rolled_back is True
+    assert [tr.table for tr in res.failed_tables] == ["public.supplier"]
+    assert res.updated_by_table == {}
+    assert list(tmp_path.iterdir()) == []
+
+
 def test_promote_crash_rolls_forward_on_rerun(catalog, spark, tmp_path, monkeypatch):
     """The promote phase itself is crash-atomic (round-2 VERDICT gap): the
     rename list is journaled to _promote_manifest.json before the first
@@ -259,6 +286,175 @@ def test_apply_respects_max_records_per_file(catalog, tmp_path):
     assert len(parts) >= 4  # 150 rows / cap 40
     assert all(pq.ParquetFile(p).metadata.num_rows <= 40 for p in parts)
     assert sum(pq.ParquetFile(p).metadata.num_rows for p in parts) == 150
+
+
+def _jobs_launched(spark, fn):
+    """(fn(), number of Spark jobs fn launched), counted through a job group
+    of its own; pool threads inherit the group from the calling thread."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _copy_tables(sf_dir, dst, names):
+    import shutil
+
+    dst.mkdir()
+    for n in names:
+        shutil.copy(f"{sf_dir}/{n}.parquet", dst / f"{n}.parquet")
+        (dst / f"{n}.parquet").chmod(0o644)
+    return dst
+
+
+def _rewrite(path, transform=lambda t: t):
+    """Rewrite a parquet file through pyarrow, bumping its mtime so the
+    file signature changes even when the bytes come out the same."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    table = transform(pq.read_table(path))
+    st = os.stat(path)
+    pq.write_table(table, path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+
+
+def test_dryrun_and_apply_job_counts(spark, sf_dir, tmp_path):
+    """The metadata parts of execute_plan launch no Spark job: on a warm
+    catalog a dryrun launches none, an apply launches exactly one (the
+    staged write) per rewritten table, and a table whose file changed pays
+    exactly one schema-inference job."""
+    src = _copy_tables(sf_dir, tmp_path / "src", ["customer", "supplier", "nation"])
+    catalog = ParquetCatalog(spark, src)
+    d = base_config_dict()
+    d["column_strategy"]["s_name"] = "HASH_SHA256"
+    d["rules"] += [
+        {"table": "public.supplier", "enabled": True, "columns": [{"name": "s_name"}]},
+        # only KEEP columns: skipped, so it is neither counted nor written
+        {"table": "public.nation", "enabled": True, "columns": [{"name": "n_name"}]},
+    ]
+    plan = build_plan(config_from_dict(d))
+
+    cold, n_cold = _jobs_launched(spark, lambda: execute_plan(catalog, plan, dryrun=True))
+    assert n_cold == 3  # one schema inference per table, nothing else
+    warm, n_warm = _jobs_launched(spark, lambda: execute_plan(catalog, plan, dryrun=True))
+    assert n_warm == 0
+    assert warm.updated_by_table == cold.updated_by_table == {
+        "public.customer": 150, "public.supplier": 10}
+    # --dryrun --emitSql reads every table twice in one process: the
+    # script's schema reads hit the cache as well
+    _, n_emit = _jobs_launched(spark, lambda: emit_sql_script(catalog, plan))
+    assert n_emit == 0
+
+    res, n_apply = _jobs_launched(spark, lambda: execute_plan(
+        catalog, plan, dryrun=False, output_root=tmp_path / "out"))
+    assert n_apply == 2 and res.updated_by_table == warm.updated_by_table
+    assert res.tables[2].skipped and not (tmp_path / "out" / "nation.parquet").exists()
+
+    _rewrite(src / "customer.parquet")
+    _, n_changed = _jobs_launched(spark, lambda: execute_plan(catalog, plan, dryrun=True))
+    assert n_changed == 1
+    _, n_rewarm = _jobs_launched(spark, lambda: execute_plan(catalog, plan, dryrun=True))
+    assert n_rewarm == 0
+
+
+def test_schema_cache_follows_a_rewritten_file(spark, sf_dir, tmp_path):
+    """The schema cache is keyed by the table's files: once c_acctbal is
+    rewritten as a string, REDACT on it stops being downgraded."""
+    import pyarrow as pa
+
+    src = _copy_tables(sf_dir, tmp_path / "src", ["customer"])
+    catalog = ParquetCatalog(spark, src)
+    d = base_config_dict(column_strategy={"c_acctbal": "REDACT", "c_name": "HASH_SHA256"})
+    d["rules"][0]["columns"] = [{"name": "c_acctbal"}, {"name": "c_name"}]
+    plan = build_plan(config_from_dict(d))
+
+    before = execute_plan(catalog, plan, dryrun=True).tables[0].downgrades
+    assert [g["column"] for g in before] == ["c_acctbal"]
+
+    def acctbal_as_string(t):
+        i = t.schema.get_field_index("c_acctbal")
+        return t.set_column(i, "c_acctbal", t.column(i).cast(pa.string()))
+
+    _rewrite(src / "customer.parquet", acctbal_as_string)
+    after = execute_plan(catalog, plan, dryrun=True)
+    assert after.tables[0].downgrades == []
+    assert catalog.schema_of("customer")["c_acctbal"].dataType.simpleString() == "string"
+    assert after.updated_by_table == {"public.customer": 150}
+
+
+def test_schema_cache_under_concurrent_reads(spark, sf_dir, tmp_path):
+    """Pool threads share one catalog: with more threads than cores and a
+    short switch interval, every read still sees its own table's schema and
+    the cache ends with one entry per table."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    names = ["customer", "supplier", "nation"]
+    src = _copy_tables(sf_dir, tmp_path / "src", names)
+    catalog = ParquetCatalog(spark, src)
+    want = {n: ParquetCatalog(spark, src).schema_of(n) for n in names}
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=12) as pool:
+            got = list(pool.map(lambda i: (names[i % 3], catalog.schema_of(names[i % 3])),
+                                range(48), timeout=300))
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(got) == 48 and all(schema == want[n] for n, schema in got)
+    assert sorted(catalog._schemas) == sorted(catalog.table_path(n) for n in names)
+
+
+def test_footer_stats_match_spark_count(spark, sf_dir, catalog, tmp_path):
+    """footer_stats sums parquet footers; it must agree with Spark's
+    count() on a multi-file directory, an empty table and a table with
+    TIMESTAMP(NANOS) columns."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    plan = build_plan(config_from_dict(base_config_dict()))
+    execute_plan(catalog, plan, dryrun=False, output_root=tmp_path / "out",
+                 max_records_per_file=40)
+    multi = ParquetCatalog(spark, tmp_path / "out")
+    assert len(list((tmp_path / "out" / "customer.parquet").glob("*.parquet"))) >= 4
+    assert footer_stats(multi.table_path("customer")).rows == multi.read("customer").count() == 150
+
+    src = _copy_tables(sf_dir, tmp_path / "src", [])
+    cust = pq.read_table(f"{sf_dir}/customer.parquet")
+    pq.write_table(cust.slice(0, 0), src / "empty.parquet")
+    events = pq.read_table(f"{sf_dir}/events.parquet")
+    i = events.schema.get_field_index("ts")
+    events = events.set_column(i, "ts", events.column(i).cast(pa.timestamp("ns")))
+    pq.write_table(events, src / "events.parquet", version="2.6")
+    assert pq.read_schema(src / "events.parquet").field("ts").type == pa.timestamp("ns")
+
+    local = ParquetCatalog(spark, src)
+    assert footer_stats(local.table_path("empty")).rows == local.read("empty").count() == 0
+    for _ in range(2):  # cold (inferred schema), then warm (cached schema)
+        df = local.read("events")
+        assert footer_stats(local.table_path("events")).rows == df.count() == 1000
+        assert df.schema["ts"].dataType.simpleString() == "timestamp_ntz"
+
+
+def test_missing_table_fails_in_dryrun(catalog):
+    d = base_config_dict()
+    d["rules"].append(
+        {"table": "public.ghost", "enabled": True, "columns": [{"name": "c_name"}]}
+    )
+    res = execute_plan(catalog, build_plan(config_from_dict(d)), dryrun=True)
+    assert [tr.table for tr in res.failed_tables] == ["public.ghost"]
+    assert res.updated_by_table == {"public.customer": 150}
 
 
 def test_cli_exits_nonzero_on_table_failure(sf_dir, tmp_path, monkeypatch):
@@ -720,6 +916,14 @@ def test_apply_with_hmac_strategy_no_key_leak(catalog, spark, tmp_path):
             ).hexdigest()
         report = build_report("apply", plan, result)
         write_json_report(tmp_path / "rep.json", report)
+        (entry,) = report["result"]["tables"]
+        assert set(entry) == {"table", "rows", "skipped", "error", "downgrades",
+                              "files", "bytes", "wall_s"}
+        # files/bytes describe the staged output the rows were counted from
+        parts = list((tmp_path / "out" / "customer.parquet").glob("*.parquet"))
+        assert entry["rows"] == 150 and entry["files"] == len(parts)
+        assert entry["bytes"] == sum(p.stat().st_size for p in parts)
+        assert entry["wall_s"] > 0
         assert key not in (tmp_path / "rep.json").read_text()
         assert key not in _json.dumps(report, default=str)
     finally:
