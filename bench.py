@@ -69,6 +69,21 @@ REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
 IDLE_CONTROL_SEC = 0.14
 IDLE_CONTROL_SA_SEC = 1.0
 
+#: the fully-gated curate_corpus configuration that curate_corpus_full
+#: and the stage attribution time (tools/perf_probe.py reuses it); the
+#: embeddings frame is passed alongside
+CURATE_KWARGS = dict(
+    min_tokens=3,
+    drop_boilerplate=True,
+    dedup_lines_min_docs=3,
+    drop_repetitive=True,
+    near_dedup=True,
+    cluster_balance=200,
+    decontam_n=8,
+    mixture_rates={"src0": 2.0, "src1": 0.5},
+    token_budgets={"src2": 2_000},
+)
+
 HEADLINE = [
     "anonymise_customer",
     "agg_multidim",
@@ -219,16 +234,8 @@ def main():
     def _curate_full():
         n = curate_corpus(
             load(spark, sf_dir, "documents"),
-            min_tokens=3,
-            drop_boilerplate=True,
-            dedup_lines_min_docs=3,
-            drop_repetitive=True,
-            near_dedup=True,
-            cluster_balance=200,
             embeddings=load(spark, sf_dir, "embeddings"),
-            decontam_n=8,
-            mixture_rates={"src0": 2.0, "src1": 0.5},
-            token_budgets={"src2": 2_000},
+            **CURATE_KWARGS,
         ).count()
         assert n > 0, "curate_corpus_full produced 0 rows - vacuous bench"
         return n
@@ -578,17 +585,9 @@ def main():
     def _curate_prefix(stop):
         return curate_corpus(
             load(spark, sf_dir, "documents"),
-            min_tokens=3,
-            drop_boilerplate=True,
-            dedup_lines_min_docs=3,
-            drop_repetitive=True,
-            near_dedup=True,
-            cluster_balance=200,
             embeddings=load(spark, sf_dir, "embeddings"),
-            decontam_n=8,
-            mixture_rates={"src0": 2.0, "src1": 0.5},
-            token_budgets={"src2": 2_000},
             stop_after=stop,
+            **CURATE_KWARGS,
         ).count()
 
     # round 11 (verdict #5): min-of-REPS PER CUMULATIVE PREFIX, then

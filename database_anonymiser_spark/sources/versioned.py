@@ -1149,126 +1149,41 @@ def _commit(
         _write_checkpoint(root, version)
 
 
-def _norm_merge_clauses(matched, not_matched):
-    """Shape-validate MERGE clause lists (Delta's multi-clause grammar)
-    into ``([(kind, cond, set|None)], [(kind, cond, values|None)])``.
-    All but the LAST clause of each list must carry a condition (Delta's
-    rule — an unconditional clause earlier would shadow the rest)."""
-    m_out: list[tuple] = []
-    for cl in matched or []:
-        if not isinstance(cl, (tuple, list)) or not cl:
-            raise ValueError(f"malformed matched clause: {cl!r}")
-        kind = cl[0]
-        if kind == "update":
-            if len(cl) != 3:
-                raise ValueError(
-                    "matched update clause is ('update', condition, set)"
-                )
-            _, cond, payload = cl
-            if payload is not None and (
-                not isinstance(payload, dict)
-                or not payload
-                or not all(isinstance(v, str) for v in payload.values())
-            ):
-                raise ValueError(
-                    "update set must be a non-empty {col: sql_expr_string} "
-                    "dict or None (updateAll)"
-                )
-        elif kind == "delete":
-            if len(cl) != 2:
-                raise ValueError("matched delete clause is ('delete', condition)")
-            _, cond = cl
-            payload = None
-        else:
+def _norm_clauses(clauses, family: str) -> list[tuple]:
+    """Shape-validate one MERGE clause list (Delta's multi-clause grammar)
+    into ``[(kind, cond, payload|None)]``. ``family`` is ``"matched"``
+    and ``"by-source"`` (``("update", cond, set)`` / ``("delete", cond)``)
+    or ``"not_matched"`` (``("insert", cond, values)``). A None payload
+    is updateAll/insertAll, which a by-source update cannot be (there is
+    no source row). All but the LAST clause must carry a condition
+    (Delta's rule: an earlier unconditional clause shadows the rest)."""
+    kinds = ("insert",) if family == "not_matched" else ("update", "delete")
+    out: list[tuple] = []
+    for cl in clauses or []:
+        kind = cl[0] if isinstance(cl, (tuple, list)) and cl else None
+        if kind not in kinds:
             raise ValueError(
-                f"matched clause kind must be 'update' or 'delete', got {kind!r}"
+                f"{family} clause kind must be one of {kinds}; got {cl!r}"
             )
+        if len(cl) != (2 if kind == "delete" else 3):
+            shape = "condition" if kind == "delete" else "condition, set|values"
+            raise ValueError(f"{family} {kind} clause is ({kind!r}, {shape})")
+        cond, payload = cl[1], (None if kind == "delete" else cl[2])
         if cond is not None and not isinstance(cond, str):
             raise ValueError("clause condition must be a SQL string or None")
-        m_out.append((kind, cond, payload))
-    nm_out: list[tuple] = []
-    for cl in not_matched or []:
-        if (
-            not isinstance(cl, (tuple, list))
-            or len(cl) != 3
-            or cl[0] != "insert"
-        ):
-            raise ValueError(
-                f"not_matched clause is ('insert', condition, values); got {cl!r}"
-            )
-        _, cond, payload = cl
-        if cond is not None and not isinstance(cond, str):
-            raise ValueError("clause condition must be a SQL string or None")
-        if payload is not None and (
+        if (payload is not None or (family, kind) == ("by-source", "update")) and (
             not isinstance(payload, dict)
             or not payload
             or not all(isinstance(v, str) for v in payload.values())
         ):
             raise ValueError(
-                "insert values must be a non-empty {col: sql_expr_string} "
-                "dict or None (insertAll)"
+                f"{family} {kind} payload must be a non-empty "
+                "{col: sql_expr_string} dict"
+                + ("" if family == "by-source" else " or None (updateAll/insertAll)")
             )
-        nm_out.append(("insert", cond, payload))
-    for kind, cond, _ in m_out[:-1]:
-        if cond is None:
-            raise ValueError(
-                "only the LAST matched clause may omit its condition"
-            )
-    for _, cond, _ in nm_out[:-1]:
-        if cond is None:
-            raise ValueError(
-                "only the LAST not_matched clause may omit its condition"
-            )
-    return m_out, nm_out
-
-
-def _norm_by_source_clauses(clauses):
-    """Shape-validate a not_matched_by_source clause LIST (Delta's
-    ``whenNotMatchedBySourceUpdate(condition, set)`` /
-    ``whenNotMatchedBySourceDelete(condition)``). Same grammar as the
-    matched list, but conditions and set exprs see the TARGET row only
-    (``t.`` — every ``s.`` column is NULL on these rows by definition)."""
-    out: list[tuple] = []
-    for cl in clauses:
-        if not isinstance(cl, (tuple, list)) or not cl:
-            raise ValueError(f"malformed by-source clause: {cl!r}")
-        kind = cl[0]
-        if kind == "update":
-            if len(cl) != 3:
-                raise ValueError(
-                    "by-source update clause is ('update', condition, set)"
-                )
-            _, cond, payload = cl
-            if (
-                not isinstance(payload, dict)
-                or not payload
-                or not all(isinstance(v, str) for v in payload.values())
-            ):
-                raise ValueError(
-                    "by-source update set must be a non-empty "
-                    "{col: sql_expr_string} dict (there is no source row "
-                    "to updateAll from)"
-                )
-        elif kind == "delete":
-            if len(cl) != 2:
-                raise ValueError(
-                    "by-source delete clause is ('delete', condition)"
-                )
-            _, cond = cl
-            payload = None
-        else:
-            raise ValueError(
-                f"by-source clause kind must be 'update' or 'delete', "
-                f"got {kind!r}"
-            )
-        if cond is not None and not isinstance(cond, str):
-            raise ValueError("clause condition must be a SQL string or None")
         out.append((kind, cond, payload))
-    for _k, cond, _p in out[:-1]:
-        if cond is None:
-            raise ValueError(
-                "only the LAST by-source clause may omit its condition"
-            )
+    if any(cond is None for _k, cond, _p in out[:-1]):
+        raise ValueError(f"only the LAST {family} clause may omit its condition")
     return out
 
 
@@ -1401,7 +1316,10 @@ class VersionedTable:
         without a logged schema fall back to the footer read."""
         sch = self._log_schema(version)
         if sch is not None:
-            return self.spark.createDataFrame([], sch)
+            # limit(0) lets the optimizer see the emptiness: a join
+            # against this frame folds away (a bare createDataFrame
+            # plans as an opaque RDD scan, joined like any other)
+            return self.spark.createDataFrame([], sch).limit(0)
         return self.snapshot(version).limit(0).where(F.lit(False))
 
     def key_col(self) -> "str | list | None":
@@ -2714,154 +2632,88 @@ class VersionedTable:
         not_matched: "list[tuple] | None" = None,
         max_retries: int = 3,
     ) -> int:
-        """MERGE ``source`` into the table on the table's key — a single
-        column, or the COLUMN TUPLE of a composite-key table (round 11):
-        the ON condition is the per-column equality conjunction, the
-        duplicate-source contract applies to the tuple, and file
-        skipping (range AND points) prunes by the conjunction of
-        per-column overlap tests.
+        """MERGE ``source`` into the table on the table's key: one column,
+        or the column tuple of a composite-key table (the ON condition is
+        the per-column equality conjunction). Clause grammar of Delta Lake
+        MERGE (Armbrust et al., VLDB 2020 §3.2); the reference's surface
+        has no MERGE (its writes are whole-table rewrites,
+        `src/executor/executor.ts`).
 
-        ``when_matched``: 'update' replaces the target row with the source
-        row; 'delete' drops matched target rows. Unmatched source rows are
-        inserted when ``insert_not_matched``. Duplicate keys in ``source``
-        are a contract violation (checked — Delta raises the same).
+        Rows resolve through three ORDERED clause lists. Per row the FIRST
+        clause whose condition is TRUE applies; a condition is a SQL
+        string over the ``t.``/``s.`` alias scopes, None means always and
+        is allowed only on a list's last clause.
 
-        Copy-on-write with file skipping: target files whose footer
-        [key_min, key_max] cannot contain any source key keep their data
-        UNTOUCHED and carry over by reference; only intersecting files are
-        rewritten (their non-matched rows preserved). The source's key
-        bounds come from one tiny aggregate; per-file intersection is
-        driver-side metadata arithmetic, never a data scan.
+        - ``matched``: ``("update", cond, set)`` / ``("delete", cond)``
+          over matched (target, source) pairs. A pair no clause accepts
+          is kept.
+        - ``not_matched``: ``("insert", cond, values)`` over unmatched
+          source rows (every ``t.`` column is NULL there). A row no
+          clause accepts is not inserted.
+        - ``not_matched_by_source``: ``("update", cond, set)`` /
+          ``("delete", cond)`` over unmatched target rows (every ``s.``
+          column is NULL there). A row no clause accepts is kept.
+          ``by_source_scope`` (``{col: (lo, hi)}``, the
+          :meth:`files_matching` vocabulary) limits the candidates: files
+          whose stats prove no row in scope carry over by reference, rows
+          are re-tested exactly, and a row whose scope test is NULL is
+          kept.
 
-        ``skip_by`` picks the skipping GRANULARITY:
+        ``set``/``values`` map target columns to SQL exprs. Columns absent
+        from an update's ``set`` keep the target value; columns absent
+        from insert ``values`` are NULL. None is updateAll/insertAll: the
+        source must carry every table column. The key, identity and
+        generated columns are not settable; generated columns are
+        recomputed on every written row. Duplicate source keys raise
+        (Delta does the same). CHECK constraints validate the written
+        files before the commit.
 
-        - ``"range"`` (default): one [lo, hi] interval for the whole
-          source — right for contiguous trickles (an hourly partition, a
-          key band), and the only option for unbounded sources.
-        - ``"points"``: collect the source's DISTINCT keys (capped at
-          ``POINT_SKIP_CAP``; beyond that, silently fall back to range)
-          and keep only target files whose [min, max] contains at least
-          one of them — bisect per file, same arithmetic as
-          :meth:`files_matching_any`. This is the SCATTERED-upsert shape:
-          a micro-batch whose keys land all over the keyspace has a
-          [lo, hi] spanning nearly every file, but its point set touches
-          almost none. The collect is the bounded-driver-collect contract
-          (micro-batch-sized by the caller's choice of this mode); the
-          streaming sinks pass it.
+        The legacy arguments are spellings of clause lists:
 
-        ``op_col`` (round 9) turns the merge MULTI-CLAUSE (Delta's
-        ``whenMatchedUpdate + whenMatchedDelete + whenNotMatchedInsert``
-        in one statement — the CDC-apply shape): ``source`` carries the
-        table's columns plus ``op_col`` ∈ 'upsert' | 'delete'; matched
-        upserts replace, matched deletes drop, unmatched upserts insert,
-        unmatched deletes no-op — ONE atomic commit, same single
-        full-outer join, same file skipping (both ops' keys participate:
-        a delete key intersecting a file forces its rewrite).
-        ``when_matched``/``insert_not_matched`` are ignored under
-        ``op_col`` (the op column IS the clause selector). Prefer the
-        :meth:`apply_changes` face. ``meta`` rides into the commit
-        record (streaming sinks' epoch witness).
+        ======================================  ===============================
+        argument                                clause lists
+        ======================================  ===============================
+        ``when_matched="update"`` (default)     ``matched=[("update", None,
+                                                None)]``
+        ``when_matched="delete"``               ``matched=[("delete", None)]``
+        ``insert_not_matched=True`` (default)   ``not_matched=[("insert",
+                                                None, None)]``
+        ``not_matched_by_source="delete"``      ``not_matched_by_source=
+                                                [("delete", None)]``
+        ``op_col="op"`` (values 'upsert' or     ``matched=[("update", "s.`op`
+        'delete'; the CDC-apply shape)          = 'upsert'", None), ("delete",
+                                                None)]``, ``not_matched=
+                                                [("insert", "s.`op` =
+                                                'upsert'", None)]``
+        ======================================  ===============================
 
-        ``not_matched_by_source='delete'`` (round 9) adds Delta's
-        ``whenNotMatchedBySourceDelete`` clause — target rows whose key
-        does NOT appear in the source are deleted, the FULL-SNAPSHOT-SYNC
-        shape (mirror a table from a periodic complete extract: matched
-        rows update, fresh rows insert, vanished rows leave — one atomic
-        commit). Scale contract: the clause inverts the skipping logic —
-        ANY target row could be unmatched, so without a scope EVERY live
-        file must be read (documented full rewrite, exactly Delta's
-        cost). ``by_source_scope`` is the fix and mirrors Delta's
-        recommended ``whenNotMatchedBySourceDelete(condition)``: a
-        ``{col: (lo, hi)}`` range dict (the :meth:`files_matching`
-        vocabulary) limiting which TARGET rows are candidates for the
-        by-source delete. Files whose recorded stats prove no row can
-        satisfy the scope carry over by reference (same
-        ``_entry_overlaps_range`` arithmetic as the read path); rows
-        inside a read file are re-tested exactly, and a row whose scope
-        predicate evaluates NULL is KEPT (the condition must be TRUE to
-        delete — SQL MERGE). Mutually exclusive with ``op_col`` (a CDC
-        feed is a partial extract; "absent from batch" means nothing
-        there).
+        Clause lists supersede ``when_matched``/``insert_not_matched``
+        (leave them at their defaults), exclude ``op_col``, and take
+        ``not_matched_by_source`` as a list. ``op_col`` excludes
+        ``not_matched_by_source`` (a CDC feed is a partial extract). The
+        commit op records the spelling used: ``merge_update``,
+        ``merge_delete``, ``apply_changes`` or ``merge_clauses``.
 
-        ``merge_schema=True`` (round 9) is Delta's MERGE schema
-        evolution (``spark.databricks.delta.schema.autoMerge`` /
-        ``withSchemaEvolution()``): additive source columns advance the
-        logged schema IN THE SAME COMMIT as the merge (touched files are
-        rewritten with the new column, untouched files NULL-fill at scan
-        time — no historical rewrite), and target columns the source
-        lacks take the TARGET row's value on matched updates (Delta's
-        autoMerge updateAll preserves target-only column values; round
-        10 — previously they were NULL-wiped) and NULL on inserts. The
-        rule set is :meth:`_align_schema` — byte-identical to append's
-        (type changes always rejected; column-mapping physical-name
-        collisions refused). Without the flag, extra source columns are
-        IGNORED and missing ones error — Delta's updateAll/insertAll
-        contract when autoMerge is off.
+        Cost: one full-outer join of the touched target files with the
+        source; every other file carries over by reference. A file is
+        touched when its key stats may match a source key or it may hold
+        an in-scope by-source row (an unscoped by-source list touches
+        every file). ``skip_by="range"`` tests the source's key bounds;
+        ``"points"`` tests its distinct keys, collected up to
+        ``POINT_SKIP_CAP`` (beyond that, range).
 
-        ``matched`` / ``not_matched`` (round 10) are Delta's CONDITIONAL
-        MULTI-CLAUSE grammar (``whenMatchedUpdate(condition, set)``,
-        ``whenMatchedDelete(condition)``, ``whenNotMatchedInsert(
-        condition, values)`` — DeltaTable.merge / SQL MERGE with multiple
-        WHEN clauses):
+        ``merge_schema=True`` is Delta's schema evolution: source columns
+        a clause assigns (all of them under updateAll/insertAll) join the
+        logged schema in the same commit, by :meth:`_align_schema`'s
+        rules; table columns the source lacks keep the target value on
+        update and are NULL on insert. Without it extra source columns
+        are ignored.
 
-        - ``matched`` is an ORDERED list of ``("update", condition,
-          set)`` / ``("delete", condition)`` clauses. For each matched
-          (target, source) pair the FIRST clause whose condition is TRUE
-          applies; a pair no clause accepts is KEPT UNCHANGED (SQL
-          MERGE). ``condition`` is a SQL string over the ``t.``/``s.``
-          alias scopes (None = always — allowed only on the LAST matched
-          clause, Delta's rule); ``set`` maps target columns to SQL
-          exprs over ``t.``/``s.`` — columns absent from ``set`` KEEP
-          the target row's value (the partial-column update; None =
-          updateAll). The key column, identity columns, and generated
-          columns may not appear in ``set`` (the key would break file
-          skipping and key uniqueness; the others are GENERATED ALWAYS —
-          generated columns are recomputed from the post-update image
-          instead, Delta's recompute-on-update).
-        - ``not_matched`` is an ordered list of ``("insert", condition,
-          values)`` clauses over unmatched SOURCE rows — first TRUE
-          condition inserts (conditions see ``s.`` only; ``t.`` is all
-          NULL there); a source row no clause accepts is NOT inserted.
-          ``values`` maps columns to SQL exprs (absent columns insert
-          NULL — Delta's insert(values) contract; None = insertAll).
-
-        ``not_matched_by_source`` ALSO accepts an ordered clause list
-        (round 10 — Delta's ``whenNotMatchedBySourceUpdate(condition,
-        set)`` / ``whenNotMatchedBySourceDelete(condition)``):
-        ``[("update", cond, set), ("delete", cond)]`` over unmatched
-        TARGET rows — first TRUE applies, none TRUE keeps the row.
-        Conditions and ``set`` exprs see ``t.`` only (every ``s.``
-        column is NULL on these rows by definition). ``by_source_scope``
-        scopes the candidates exactly as for the legacy ``'delete'``
-        string (out-of-scope files carry over by reference; out-of-scope
-        rows keep unconditionally). With matched/not_matched clause
-        lists, the legacy string form is refused — pass
-        ``[("delete", None)]``.
-
-        Losing an OCC race AUTO-REBASES when provably safe (round 10 —
-        Delta's logical conflict detection for MERGE): on
-        ``VersionConflict`` the winner commits are validated — data-only
-        ops, none of OUR rewritten files removed, no winner-added file
-        whose key stats could match the source keys (or fall in the
-        by-source scope) — and the already-written files re-commit at
-        the new head, up to ``max_retries`` times, with zero re-read or
-        rewrite. Concurrent trickle merges on DISJOINT key bands all
-        succeed (the multi-writer 100 TB shape); overlapping or
-        DDL-racing merges re-raise for a true retry against fresh state.
-
-        Passing any clause list supersedes ``when_matched`` /
-        ``insert_not_matched`` (which must stay at their defaults — a
-        silent conflict is refused) and is mutually exclusive with
-        ``op_col`` (that IS a clause mechanism). Same single full-outer
-        join, same file skipping: matched/insert clauses only ever touch
-        matched pairs and unmatched source rows, so the skipped-file
-        arithmetic is unchanged (a by-source clause list inverts it,
-        like the legacy string — scope or pay the full read). CHECK
-        constraints are validated on the REWRITTEN image (a ``set`` expr
-        can produce values the raw source never contained). Cites Delta
-        Lake MERGE (Armbrust et al., VLDB 2020 §3.2) for the clause
-        semantics; the reference's own surface has no MERGE (its writes
-        are whole-table rewrites, `src/executor/executor.ts`).
+        ``meta`` rides into the commit record. A lost OCC race re-commits
+        the written files at the new head, up to ``max_retries`` times,
+        unless a winner is not a data-only op, removed a file this merge
+        rewrote, or added a file that may match the source keys or the
+        by-source scope (:meth:`_commit_rebasing`).
         """
         if when_matched not in ("update", "delete"):
             raise ValueError("when_matched must be 'update' or 'delete'")
@@ -2869,24 +2721,20 @@ class VersionedTable:
             raise ValueError("skip_by must be 'range' or 'points'")
         if op_col is not None and op_col not in source.columns:
             raise ValueError(f"op_col {op_col!r} not in source columns")
-        bys_clauses: list[tuple] = []
-        if isinstance(not_matched_by_source, (list, tuple)):
-            # clause-list form (Delta's whenNotMatchedBySourceUpdate /
-            # ...Delete grammar) — forces the clause path, where matched
-            # pairs keep and unmatched source rows drop unless their own
-            # clause lists say otherwise (Delta's default row fates)
-            bys_clauses = _norm_by_source_clauses(not_matched_by_source)
-            if not bys_clauses:
-                raise ValueError(
-                    "not_matched_by_source clause list must be non-empty "
-                    "(pass None to disable)"
-                )
-            not_matched_by_source = "clauses"
+        by_source_list = isinstance(not_matched_by_source, (list, tuple))
+        if not (by_source_list or not_matched_by_source in (None, "delete")):
+            raise ValueError(
+                "not_matched_by_source must be None, 'delete', or a clause "
+                "list [('update', cond, set), ('delete', cond)]"
+            )
+        if by_source_list and not not_matched_by_source:
+            raise ValueError(
+                "not_matched_by_source clause list must be non-empty "
+                "(pass None to disable)"
+            )
         use_clauses = (
-            matched is not None or not_matched is not None or bool(bys_clauses)
+            matched is not None or not_matched is not None or by_source_list
         )
-        m_clauses: list[tuple] = []
-        nm_clauses: list[tuple] = []
         if use_clauses:
             if op_col is not None:
                 raise ValueError(
@@ -2898,18 +2746,7 @@ class VersionedTable:
                     "matched/not_matched clauses supersede when_matched/"
                     "insert_not_matched; leave those at their defaults"
                 )
-            m_clauses, nm_clauses = _norm_merge_clauses(matched, not_matched)
-        if not_matched_by_source not in (None, "delete", "clauses"):
-            raise ValueError(
-                "not_matched_by_source must be None, 'delete', or a clause "
-                "list [('update', cond, set), ('delete', cond)]"
-            )
-        if not_matched_by_source == "delete" and (
-            matched is not None or not_matched is not None
-        ):
-            # inside the clause grammar the by-source family is a clause
-            # list too — mixing the legacy string with clause lists would
-            # leave its interaction with the ordered clauses ambiguous
+        if use_clauses and not_matched_by_source == "delete":
             raise ValueError(
                 "with matched/not_matched clause lists, pass "
                 "not_matched_by_source as a clause list "
@@ -2923,16 +2760,36 @@ class VersionedTable:
             )
         if by_source_scope is not None and not_matched_by_source is None:
             raise ValueError("by_source_scope requires not_matched_by_source")
+        # the commit records the spelling the caller used
+        commit_op = (
+            "apply_changes" if op_col is not None
+            else "merge_clauses" if use_clauses
+            else f"merge_{when_matched}"
+        )
+        by_source_tag = None if not_matched_by_source is None else (
+            "clauses" if by_source_list else "delete"
+        )
+        if not use_clauses:
+            # lower the legacy spellings (docstring table): from here on
+            # the clause lists are the only way rows resolve
+            if op_col is not None:
+                upsert = f"s.`{op_col}` = 'upsert'"
+                matched = [("update", upsert, None), ("delete", None)]
+                not_matched = [("insert", upsert, None)]
+            else:
+                matched = [
+                    ("update", None, None) if when_matched == "update"
+                    else ("delete", None)
+                ]
+                not_matched = [("insert", None, None)] if insert_not_matched else []
+            if not_matched_by_source == "delete":
+                not_matched_by_source = [("delete", None)]
+        m_clauses = _norm_clauses(matched, "matched")
+        nm_clauses = _norm_clauses(not_matched, "not_matched")
+        bys_clauses = _norm_clauses(not_matched_by_source, "by-source")
         key_col = self.key_col()
         if key_col is None:
             raise ValueError("table has no key_col; cannot merge")
-        # COMPOSITE key (round 11): every key-wise step below operates on
-        # the tuple — the ON condition is the per-column equality
-        # conjunction, the duplicate contract is over the tuple, and the
-        # file skipping is the conjunction of per-column overlap tests
-        # (leading column via the entry key slots, trailing ones via the
-        # auto-declared stats) — so a two-column point merge touches only
-        # files whose bounds intersect on BOTH columns.
         key_cols = _key_tuple(key_col)
         k0 = key_cols[0]
         v = self.latest_version()
@@ -2940,53 +2797,43 @@ class VersionedTable:
         source = self._apply_generated(source)
         ident = self.identity_column()
         gen_cols = self.generated_columns()
-        if use_clauses:
-            for kind, _cond, payload in [*m_clauses, *bys_clauses]:
-                if kind == "update" and payload is not None:
-                    kbad = sorted(k for k in key_cols if k in payload)
-                    if kbad:
-                        raise ValueError(
-                            f"matched update set may not change the merge "
-                            f"key column(s) {kbad}"
-                        )
-                    if ident is not None and ident[0] in payload:
-                        raise ValueError(
-                            f"identity column {ident[0]!r} is GENERATED "
-                            "ALWAYS; update set may not touch it"
-                        )
-                    g = sorted(c for c in payload if c in gen_cols)
-                    if g:
-                        raise ValueError(
-                            f"generated column(s) {g} are recomputed from "
-                            "their expressions, not settable"
-                        )
-            if ident is not None:
-                for _k, _cond, vals in nm_clauses:
-                    if vals is not None and str(
-                        vals.get(ident[0], "")
-                    ).replace(" ", "") != f"s.{ident[0]}":
-                        raise ValueError(
-                            "insert values on an identity table must carry "
-                            f"the source's id: values[{ident[0]!r}] == "
-                            f"'s.{ident[0]}' (MERGE does not allocate "
-                            "identity values)"
-                        )
-        if ident is not None and ident[0] not in source.columns:
-            # a pure delete-merge needs no row images, so no ids; any
-            # other shape would have to allocate inside the join - route
-            # ingest through append (which allocates) or pre-assign keys
-            needs_ident = (
-                (bool(nm_clauses) or any(
-                    k == "update" and sm is None for k, _c, sm in m_clauses
-                ))
-                if use_clauses
-                else (
-                    op_col is not None
-                    or insert_not_matched
-                    or when_matched == "update"
-                )
-            )
-            if needs_ident:
+        for kind, _cond, payload in [*m_clauses, *bys_clauses]:
+            if kind == "update" and payload is not None:
+                kbad = sorted(k for k in key_cols if k in payload)
+                if kbad:
+                    raise ValueError(
+                        f"matched update set may not change the merge "
+                        f"key column(s) {kbad}"
+                    )
+                if ident is not None and ident[0] in payload:
+                    raise ValueError(
+                        f"identity column {ident[0]!r} is GENERATED "
+                        "ALWAYS; update set may not touch it"
+                    )
+                g = sorted(c for c in payload if c in gen_cols)
+                if g:
+                    raise ValueError(
+                        f"generated column(s) {g} are recomputed from "
+                        "their expressions, not settable"
+                    )
+        # updateAll/insertAll clauses take the whole source row
+        takes_all = any(
+            k == "update" and p is None for k, _c, p in m_clauses
+        ) or any(p is None for _k, _c, p in nm_clauses)
+        if ident is not None:
+            for _k, _cond, vals in nm_clauses:
+                if vals is not None and str(
+                    vals.get(ident[0], "")
+                ).replace(" ", "") != f"s.{ident[0]}":
+                    raise ValueError(
+                        "insert values on an identity table must carry "
+                        f"the source's id: values[{ident[0]!r}] == "
+                        f"'s.{ident[0]}' (MERGE does not allocate "
+                        "identity values)"
+                    )
+            if ident[0] not in source.columns and (nm_clauses or takes_all):
+                # a pure delete-merge writes no source row, so needs no
+                # ids; any other shape would allocate inside the join
                 raise ValueError(
                     f"merge source lacks identity column {ident[0]!r}; "
                     "MERGE does not allocate identity values - append new "
@@ -2997,61 +2844,45 @@ class VersionedTable:
         # columns the USER's source actually carries — anything
         # _align_schema NULL-backfills beyond this set is synthetic and
         # must not overwrite target values on matched updates (Delta's
-        # autoMerge updateAll preserves target-only columns; round 10)
+        # autoMerge updateAll preserves target-only columns)
         src_user_cols = set(source.columns)
         evolved_schema = None
         if merge_schema:
             cur = self._log_schema() or self.snapshot().schema
+            # Delta's clause-evolution rule: the schema evolves only for
+            # source columns a clause assigns; any other new column (a
+            # clause input, the op column) rides through as carry
             carry_cols: tuple = (op_col,) if op_col is not None else ()
-            if use_clauses:
-                # Delta's clause-evolution rule: the schema evolves only
-                # for source columns a clause ASSIGNS (set/values keys) —
-                # a clause-input column (the partial-shape delta) rides
-                # through as carry, never becoming a table column. An
-                # updateAll/insertAll clause assigns everything, so the
-                # whole source participates as before.
-                has_all = any(
-                    k == "update" and sm is None for k, _c, sm in m_clauses
-                ) or any(v is None for _k, _c, v in nm_clauses)
-                if not has_all:
-                    cur_names = {f.name for f in cur.fields}
-                    assigned = {
-                        c
-                        for _k, _c, payload in [
-                            *m_clauses, *nm_clauses, *bys_clauses
-                        ]
-                        if payload
-                        for c in payload
-                    }
-                    carry_cols = tuple(
-                        c
-                        for c in source.columns
-                        if c not in cur_names and c not in assigned
-                    )
+            if not takes_all:
+                cur_names = {f.name for f in cur.fields}
+                assigned = {
+                    c
+                    for _k, _c, payload in [*m_clauses, *nm_clauses, *bys_clauses]
+                    for c in payload or ()
+                }
+                carry_cols = tuple(
+                    c
+                    for c in source.columns
+                    if c not in cur_names and c not in assigned
+                )
             source, evolved_schema = self._align_schema(
-                source,
-                cur,
-                True,
-                op="merge",
-                carry=carry_cols,
+                source, cur, True, op="merge", carry=carry_cols,
             )
 
         # one aggregate pass serves BOTH the duplicate-key contract check
-        # and the skipping bounds (was two jobs; partial aggregation keeps
-        # map-side output to one row per task). NULL-key accounting: a
-        # key tuple with any NULL component never matches (SQL equality),
-        # so DISTINCT any-NULL tuples are legal — only a REPEATED
-        # any-NULL tuple is a duplicate. DISTINCT over a struct is
-        # null-safe, so (1,NULL) vs (2,NULL) count as two tuples while
-        # (1,NULL) twice counts as one (single-key: two bare-NULL keys
-        # collapse to one tuple and still fail, same as the old rule).
+        # and the skipping bounds (partial aggregation keeps map-side
+        # output to one row per task). NULL-key accounting: a key tuple
+        # with any NULL component never matches (SQL equality), so
+        # DISTINCT any-NULL tuples are legal — only a REPEATED any-NULL
+        # tuple is a duplicate. DISTINCT over a struct is null-safe, so
+        # (1,NULL) vs (2,NULL) count as two tuples while (1,NULL) twice
+        # counts as one.
         all_nn = key_cols and F.lit(True)
         for c in key_cols:
             all_nn = all_nn & F.col(c).isNotNull()
         aggs = [
             F.count(F.lit(1)).alias("n_all"),
-            # rows with a FULLY non-null key tuple (a row with any NULL
-            # key component never matches — SQL equality)
+            # rows with a FULLY non-null key tuple (the rows that can match)
             F.count(F.when(all_nn, 1)).alias("n_keys"),
             # count(DISTINCT c1, c2, ...) skips any-NULL rows — same set
             F.countDistinct(*key_cols).alias("n_distinct"),
@@ -3062,8 +2893,7 @@ class VersionedTable:
             ).alias("n_null_distinct"),
         ]
         for i, c in enumerate(key_cols):
-            # per-column bounds over fully-keyed rows only (the rows
-            # that can match) — single-column: identical to min/max(key)
+            # per-column bounds over fully-keyed rows only
             aggs += [
                 F.min(F.when(all_nn, F.col(c))).alias(f"_lo{i}"),
                 F.max(F.when(all_nn, F.col(c))).alias(f"_hi{i}"),
@@ -3096,18 +2926,10 @@ class VersionedTable:
                 f"({stats['_max_ident']} >= {ident[2]}); MERGE accepts only "
                 "previously-allocated ids (append allocates)"
             )
-        if use_clauses:
-            pass  # clause images are validated on the REWRITTEN frame below
-        elif op_col is not None:
-            self._check_constraints(
-                source.where(F.col(op_col) == "upsert").drop(op_col)
-            )
-        elif when_matched == "update":
-            self._check_constraints(source)
 
         los = [stats[f"_lo{i}"] for i in range(len(key_cols))]
         his = [stats[f"_hi{i}"] for i in range(len(key_cols))]
-        lo, hi = los[0], his[0]
+        lo = los[0]
 
         # per-key-column sorted DISTINCT probe lists — for a single key
         # this is exactly the old points list; for a composite key the
@@ -3189,7 +3011,7 @@ class VersionedTable:
         )
 
         def in_scope(e: dict) -> bool:
-            if not_matched_by_source is None:
+            if not bys_clauses:
                 return False
             if scope_pred is None:
                 return True  # unscoped full sync: every file is a candidate
@@ -3199,21 +3021,17 @@ class VersionedTable:
             )
 
         touched = [e for e in entries if may_match(e) or in_scope(e)]
-        touched_paths = {e["path"] for e in touched}
-        untouched = [e for e in entries if e["path"] not in touched_paths]
 
         new_files: list[_FileEntry] = []
-        # a clause merge with insert clauses still inserts when NO target
-        # file intersects the source keys — join against the empty frame
-        if touched or (use_clauses and nm_clauses and stats["n_all"] > 0):
-            # ONE full-outer join resolves keeps, updates/deletes, and
-            # inserts together (Delta's merge shape) — previously three
-            # separate joins (keep-anti, matched-semi over a distinct,
-            # insert-anti) re-read the touched files and re-shuffled the
-            # source; at 100 TB the rewrite is one co-shuffle of
-            # (touched rows, source rows). Presence markers (_t/_s)
-            # classify sides NULL-key-safely; the key join itself stays
-            # plain equality (NULL keys never match — SQL MERGE).
+        # insert clauses still insert when NO target file intersects the
+        # source keys: the join then runs against the empty frame, which
+        # the optimizer drops (no exchange, the source is projected)
+        if touched or (nm_clauses and stats["n_all"] > 0):
+            # ONE full-outer join resolves keeps, updates/deletes and
+            # inserts together (Delta's merge shape): one co-shuffle of
+            # (touched rows, source rows). Presence markers classify
+            # sides NULL-key-safely; the key join itself stays plain
+            # equality (NULL keys never match — SQL MERGE).
             tgt = (
                 self._read_paths(
                     [e["path"] for e in touched], dv_map=self._dv_map(touched)
@@ -3229,40 +3047,41 @@ class VersionedTable:
                     if f.name not in tgt.columns:
                         tgt = tgt.withColumn(f.name, F.lit(None).cast(f.dataType))
             cols = tgt.columns
-            # presence markers must not shadow real table columns (a user
-            # table may legitimately own '_t'/'_s'; round-7 advice) —
-            # suffix until free. The side aliases t/s are Spark alias
-            # scopes, not columns, so they cannot collide.
-            mt, ms = "_t", "_s"
-            while mt in cols:
-                mt += "_"
-            while ms in cols:
-                ms += "_"
-            bs = None
-            if not_matched_by_source is not None:
-                # row-level scope flag computed on the TARGET before the
-                # join (bare column refs stay unambiguous); file pruning
-                # already dropped provably-out-of-scope files, this
+            if takes_all:
+                miss = [c for c in cols if c not in source.columns]
+                if miss:
+                    raise ValueError(
+                        "updateAll/insertAll clauses (set/values None) need "
+                        f"the full target schema in the source; missing {miss}"
+                    )
+            # the marker columns must shadow no column of either side
+            # (a table or a source may own '_t'/'_s'); the aliases t/s
+            # are Spark alias scopes, not columns, so they cannot collide
+            taken = set(cols) | set(source.columns)
+
+            def free(name: str) -> str:
+                while name in taken:
+                    name += "_"
+                return name
+
+            mt, ms, bs = free("_t"), free("_s"), free("_bs")
+            if bys_clauses:
+                # row-level by-source scope flag computed on the TARGET
+                # before the join (bare column refs stay unambiguous);
+                # file pruning dropped provably-out-of-scope files, this
                 # re-tests the survivors' rows exactly
-                bs = "_bs"
-                while bs in cols:
-                    bs += "_"
-                if by_source_scope is None:
-                    scope_expr = F.lit(True)
-                else:
-                    scope_expr = F.lit(True)
-                    for c, (slo, shi) in by_source_scope.items():
-                        if slo is not None:
-                            scope_expr = scope_expr & (F.col(c) >= F.lit(slo))
-                        if shi is not None:
-                            scope_expr = scope_expr & (F.col(c) <= F.lit(shi))
+                scope_expr = F.lit(True)
+                for c, (slo, shi) in (by_source_scope or {}).items():
+                    if slo is not None:
+                        scope_expr = scope_expr & (F.col(c) >= F.lit(slo))
+                    if shi is not None:
+                        scope_expr = scope_expr & (F.col(c) <= F.lit(shi))
                 tgt = tgt.withColumn(bs, scope_expr)
             if VALIDATE_MERGE_TARGET_KEYS:
                 # opt-in invariant audit: the single-join MERGE emits one
-                # updated row PER duplicate target key (the old
-                # semi-over-distinct path deduplicated silently); a table
-                # whose key-uniqueness was broken by an external writer
-                # should fail loudly here, not drift
+                # updated row PER duplicate target key; a table whose
+                # key-uniqueness was broken by an external writer should
+                # fail loudly here, not drift
                 t_nn = F.lit(True)
                 for c in key_cols:
                     t_nn = t_nn & F.col(c).isNotNull()
@@ -3282,209 +3101,99 @@ class VersionedTable:
                         "merging"
                     )
             t = tgt.withColumn(mt, F.lit(1)).alias("t")
-            # a pure delete-merge needs only the source KEYS (documented:
-            # key-only sources are valid there); insert/update paths need
-            # the full row image. A CLAUSE merge carries whatever columns
-            # the source has (set/values exprs reference them by s.name;
-            # Delta's source-shape freedom) — the full target image is
-            # only demanded by updateAll/insertAll clauses.
-            need_full_img = use_clauses and (
-                any(k == "update" and sm is None for k, _c, sm in m_clauses)
-                or any(vals is None for _k, _c, vals in nm_clauses)
-            )
-            if need_full_img:
-                miss = [c for c in cols if c not in source.columns]
-                if miss:
-                    raise ValueError(
-                        "updateAll/insertAll clauses (set/values None) need "
-                        f"the full target schema in the source; missing {miss}"
-                    )
-            need_src_img = (
-                op_col is not None
-                or insert_not_matched
-                or when_matched == "update"
-            )
-            if use_clauses:
-                s_cols = list(source.columns)
-            elif op_col is not None:
-                s_cols = [*cols, op_col]
-            else:
-                s_cols = cols if need_src_img else list(key_cols)
-            s = source.select(*s_cols).withColumn(ms, F.lit(1)).alias("s")
+            s = source.withColumn(ms, F.lit(1)).alias("s")
             on = F.col(f"t.{k0}") == F.col(f"s.{k0}")
             for c in key_cols[1:]:
                 on = on & (F.col(f"t.{c}") == F.col(f"s.{c}"))
             j = t.join(s, on, "full_outer")
+            for _k, _c, payload in [*m_clauses, *nm_clauses, *bys_clauses]:
+                unknown = sorted(c for c in (payload or {}) if c not in cols)
+                if unknown:
+                    raise ValueError(
+                        f"clause set/values reference unknown target "
+                        f"column(s) {unknown}"
+                    )
+            dtypes = {f.name: f.dataType for f in tgt.schema.fields}
             t_img = F.struct(*[F.col(f"t.{c}").alias(c) for c in cols])
-            # NULL-backfilled columns (merge_schema sources lacking target
-            # columns) take the TARGET value: preserves matched rows'
-            # values (Delta updateAll), and t.c is NULL anyway on inserts
-            s_img = (
-                F.struct(
+            # updateAll/insertAll: columns _align_schema NULL-backfilled
+            # take the target value (Delta's autoMerge updateAll keeps
+            # target-only columns)
+            s_img = F.struct(
+                *[
+                    F.col(
+                        f"t.{c}" if merge_schema and c not in src_user_cols
+                        else f"s.{c}"
+                    ).alias(c)
+                    for c in cols
+                ]
+            )
+            null_img = F.lit(None).cast(
+                st.StructType([st.StructField(c, dtypes[c]) for c in cols])
+            )
+
+            def image(kind: str, payload) -> F.Column:
+                if kind == "delete":
+                    return null_img
+                if payload is None:
+                    return s_img
+                # an unmatched source row has every t. column NULL, so an
+                # absent column keeps the target value on an update and
+                # is NULL on an insert
+                return F.struct(
                     *[
                         (
-                            F.col(f"t.{c}")
-                            if (merge_schema and c not in src_user_cols
-                                and c in tgt.columns)
-                            else F.col(f"s.{c}")
+                            F.expr(payload[c]).cast(dtypes[c])
+                            if c in payload
+                            else F.col(f"t.{c}")
                         ).alias(c)
                         for c in cols
                     ]
                 )
-                if (need_src_img and not use_clauses) or need_full_img
-                else None
-            )
+
             unmatched_t = F.col(ms).isNull()
             unmatched_s = F.col(mt).isNull()
-            if op_col is not None:
-                # multi-clause: the op column selects the clause per row —
-                # matched/unmatched upserts take the source image,
-                # deletes (matched: drop; unmatched: no-op) fall through
-                # to NULL and are filtered
-                is_up = F.col(f"s.{op_col}") == "upsert"
-                out_img = F.when(unmatched_t, t_img).when(is_up, s_img)
-            elif use_clauses:
-                # conditional multi-clause resolution: one WHEN chain =
-                # clause order = Delta's first-TRUE-wins; matched pairs
-                # no clause accepts fall to the trailing keep branch,
-                # unmatched source rows no insert clause accepts fall
-                # through to NULL (not inserted)
-                dtypes = {f.name: f.dataType for f in tgt.schema.fields}
-                for _k, _c, payload in [*m_clauses, *nm_clauses, *bys_clauses]:
-                    unknown = sorted(c for c in (payload or {}) if c not in cols)
-                    if unknown:
-                        raise ValueError(
-                            f"clause set/values reference unknown target "
-                            f"column(s) {unknown}"
-                        )
-                matched_pair = ~unmatched_t & ~unmatched_s
-                null_img = F.lit(None).cast(
-                    st.StructType([st.StructField(c, dtypes[c]) for c in cols])
-                )
-                if not_matched_by_source == "clauses":
-                    # by-source clause family: out-of-scope unmatched
-                    # target rows keep unconditionally (scope pruning
-                    # re-tested row-exactly); in-scope rows take the
-                    # first-TRUE by-source clause; none TRUE -> keep.
-                    # Clause exprs see t.* only (s.* is NULL here).
-                    in_scope_t = F.col(f"t.{bs}").eqNullSafe(F.lit(True))
-                    cand = unmatched_t & in_scope_t
-                    out_img = F.when(unmatched_t & ~in_scope_t, t_img)
-                    for kind, cond, payload in bys_clauses:
-                        hit = cand if cond is None else (
-                            cand & F.expr(cond).eqNullSafe(F.lit(True))
-                        )
-                        if kind == "delete":
-                            out_img = out_img.when(hit, null_img)
-                        else:
-                            img = F.struct(
-                                *[
-                                    (
-                                        F.expr(payload[c]).cast(dtypes[c])
-                                        if c in payload
-                                        else F.col(f"t.{c}")
-                                    ).alias(c)
-                                    for c in cols
-                                ]
-                            )
-                            out_img = out_img.when(hit, img)
-                    out_img = out_img.when(unmatched_t, t_img)  # no-clause keep
-                else:
-                    # (the legacy 'delete' string cannot reach here: with
-                    # clause lists it must be passed as a clause list)
-                    out_img = F.when(unmatched_t, t_img)
-                for kind, cond, payload in m_clauses:
-                    hit = matched_pair if cond is None else (
-                        matched_pair & F.expr(cond).eqNullSafe(F.lit(True))
+            matched_pair = ~unmatched_t & ~unmatched_s
+            # one WHEN chain in clause order = Delta's first-TRUE-wins;
+            # target rows no clause accepts are kept, source rows no
+            # insert clause accepts fall through to NULL (not inserted)
+            branches = []
+            for rows, clauses, keep in (
+                (unmatched_t & F.col(f"t.{bs}").eqNullSafe(F.lit(True)),
+                 bys_clauses, unmatched_t),
+                (matched_pair, m_clauses, matched_pair),
+                (unmatched_s, nm_clauses, None),
+            ):
+                for kind, cond, payload in clauses:
+                    hit = rows if cond is None else (
+                        rows & F.expr(cond).eqNullSafe(F.lit(True))
                     )
-                    if kind == "delete":
-                        out_img = out_img.when(hit, null_img)
-                    elif payload is None:
-                        out_img = out_img.when(hit, s_img)
-                    else:
-                        img = F.struct(
-                            *[
-                                (
-                                    F.expr(payload[c])
-                                    .cast(dtypes[c])
-                                    if c in payload
-                                    else F.col(f"t.{c}")
-                                ).alias(c)
-                                for c in cols
-                            ]
-                        )
-                        out_img = out_img.when(hit, img)
-                out_img = out_img.when(matched_pair, t_img)  # no-clause keep
-                for _kind, cond, payload in nm_clauses:
-                    hit = unmatched_s if cond is None else (
-                        unmatched_s & F.expr(cond).eqNullSafe(F.lit(True))
-                    )
-                    if payload is None:
-                        out_img = out_img.when(hit, s_img)
-                    else:
-                        img = F.struct(
-                            *[
-                                (
-                                    F.expr(payload[c]).cast(dtypes[c])
-                                    if c in payload
-                                    else F.lit(None).cast(dtypes[c])
-                                ).alias(c)
-                                for c in cols
-                            ]
-                        )
-                        out_img = out_img.when(hit, img)
-            else:
-                if not_matched_by_source == "delete":
-                    # unmatched target rows survive only OUTSIDE the
-                    # scope; a NULL scope evaluation keeps the row (the
-                    # condition must be TRUE to delete — SQL MERGE)
-                    keep_t = unmatched_t & ~F.col(f"t.{bs}").eqNullSafe(
-                        F.lit(True)
-                    )
-                else:
-                    keep_t = unmatched_t
-                out_img = F.when(keep_t, t_img)
-                if insert_not_matched:
-                    out_img = out_img.when(unmatched_s, s_img)
-                if when_matched == "update":
-                    out_img = out_img.when(~unmatched_t & ~unmatched_s, s_img)
-            # delete: matched rows fall through to NULL and are dropped
-            if op_col is None and when_matched == "delete" and insert_not_matched:
-                # a delete-merge still INSERTS unmatched source rows —
-                # they must pass CHECK constraints like every other write
-                # path (round-6 advice; Delta validates on every write).
-                # The update path validated the whole source upfront.
-                self._check_constraints(
-                    j.where(unmatched_s).select(
-                        *[F.col(f"s.{c}").alias(c) for c in cols]
-                    )
-                )
+                    branches.append((hit, image(kind, payload)))
+                if keep is not None:
+                    branches.append((keep, t_img))
+            out_img = F.when(*branches[0])
+            for hit, img in branches[1:]:
+                out_img = out_img.when(hit, img)
             rewritten = (
                 j.select(out_img.alias("_r"))
                 .where(F.col("_r").isNotNull())
                 .select(*[F.col(f"_r.{c}").alias(c) for c in cols])
             )
-            if use_clauses and gen_cols:
-                # GENERATED ALWAYS: recompute from the post-merge image
-                # (Delta recomputes generated columns whose inputs an
-                # update touched; recomputing everywhere is the same
-                # value on untouched rows by the auto-constraint)
-                for gcol, gexpr in gen_cols.items():
-                    if gcol in cols:
-                        rewritten = rewritten.withColumn(gcol, F.expr(gexpr))
-                rewritten = rewritten.select(*cols)
+            # GENERATED ALWAYS: recompute from the post-merge image
+            # (Delta recomputes generated columns whose inputs an update
+            # touched; elsewhere the auto-constraint makes it the same value)
+            for gcol, gexpr in gen_cols.items():
+                if gcol in cols:
+                    rewritten = rewritten.withColumn(gcol, F.expr(gexpr))
             staged = _write_data_files(
                 rewritten, self.root, key_col, stats_cols=self._stats_cols,
                 colmap=self._colmap,
             )
-            if use_clauses and self.constraints():
+            if self.constraints():
                 # a set/values expr can produce values the raw source
                 # never contained — CHECK constraints validate the
-                # REWRITTEN image. Validate the WRITTEN files (staged,
-                # unreferenced until the commit below) instead of the
-                # lazy frame: the expensive join runs ONCE, the check is
-                # a cheap parquet read-back, and on violation the staged
-                # bytes are reclaimed and nothing was ever visible.
+                # WRITTEN files (staged, unreferenced until the commit):
+                # the join runs ONCE, the check is a parquet read-back,
+                # and on violation the staged bytes are reclaimed
                 try:
                     self._check_constraints(
                         self._read_paths(
@@ -3498,91 +3207,33 @@ class VersionedTable:
                             (self.root / bp).unlink(missing_ok=True)
                     raise
             new_files += staged
-        elif not use_clauses and (op_col is not None or insert_not_matched):
-            src = (
-                source.where(F.col(op_col) == "upsert")
-                if op_col is not None
-                else source
-            )
-            ins_cols = (
-                [f.name for f in evolved_schema.fields]
-                if evolved_schema is not None
-                else self._empty_frame(v).columns
-            )
-            inserts = src.select(*ins_cols)
-            if op_col is None and when_matched == "delete":
-                self._check_constraints(inserts)
-            new_files += _write_data_files(
-                inserts, self.root, key_col, stats_cols=self._stats_cols,
-                colmap=self._colmap,
-            )
 
-        commit_op = (
-            "apply_changes"
-            if op_col is not None
-            else ("merge_clauses" if use_clauses else f"merge_{when_matched}")
-        )
-        commit_schema = (
-            evolved_schema.jsonValue() if evolved_schema is not None else None
-        )
         # Delta's operationMetrics slot, FREE metrics only (every
-        # number below was already computed for the merge itself —
-        # no extra job): source size, skip outcome, rewrite scope
-        commit_meta = {
-            **(meta or {}),
-            "metrics": {
-                "source_rows": int(stats["n_all"]),
-                "skip_by": "points" if points_cols is not None else "range",
-                "files_touched": len(touched),
-                "files_carried": len(untouched),
-                "files_written": len(new_files),
-                **(
-                    {"by_source": not_matched_by_source}
-                    if not_matched_by_source is not None
-                    else {}
-                ),
-                **(
-                    {
-                        "matched_clauses": [k for k, _c, _p in m_clauses],
-                        "not_matched_clauses": len(nm_clauses),
-                    }
-                    if use_clauses
-                    else {}
-                ),
-            },
+        # number below was already computed for the merge itself)
+        metrics = {
+            "source_rows": int(stats["n_all"]),
+            "skip_by": "points" if points_cols is not None else "range",
+            "files_touched": len(touched),
+            "files_carried": len(entries) - len(touched),
+            "files_written": len(new_files),
         }
-        removes = [e["path"] for e in touched]
-        base_v = v
-        for attempt in range(max_retries + 1):
-            try:
-                _commit(
-                    self.root, base_v + 1, new_files, removes, key_col,
-                    op=commit_op, schema=commit_schema, meta=commit_meta,
-                )
-                return base_v + 1
-            except VersionConflict:
-                # OCC AUTO-REBASE (round 10 — Delta's logical conflict
-                # detection for MERGE): a concurrent writer took our
-                # version number. The prepared files stay valid iff every
-                # winner commit (a) is a data-only op (DDL / constraints /
-                # properties / restores invalidate the read assumptions
-                # wholesale), (b) removed NONE of the files we rewrote
-                # (else our pre-images are stale), and (c) added no file
-                # whose key stats could MATCH our source keys or fall in
-                # our by-source scope (else rows we should have
-                # updated/deleted/checked-for-insert-collision arrived
-                # after our snapshot). Then the same already-written
-                # files re-commit at the new head — no re-read, no
-                # rewrite. Concurrent trickle merges on DISJOINT key
-                # bands therefore all succeed (the 100 TB multi-writer
-                # shape); overlapping ones fail loudly for a true retry.
-                if attempt == max_retries:
-                    raise
-                base_v = self._rebase_head(
-                    base_v, touched_paths,
-                    lambda a: may_match(a) or in_scope(a),
-                )
-        raise AssertionError("unreachable")
+        if by_source_tag is not None:
+            metrics["by_source"] = by_source_tag
+        if use_clauses:
+            metrics["matched_clauses"] = [k for k, _c, _p in m_clauses]
+            metrics["not_matched_clauses"] = len(nm_clauses)
+        # a lost race rebases unless a winner added a file that may
+        # match our source keys or fall in our by-source scope
+        return self._commit_rebasing(
+            v, new_files, [e["path"] for e in touched], key_col,
+            lambda a: may_match(a) or in_scope(a), max_retries,
+            op=commit_op,
+            schema=(
+                evolved_schema.jsonValue() if evolved_schema is not None
+                else None
+            ),
+            meta={**(meta or {}), "metrics": metrics},
+        )
 
     def apply_changes(
         self,
@@ -3613,38 +3264,45 @@ class VersionedTable:
             meta=meta,
         )
 
-    def _rebase_head(self, base_v: int, touched_paths: set, add_conflict) -> int:
-        """Winner-commit validation for an OCC AUTO-REBASE (Delta's
-        logical conflict detection — round 10 for MERGE, generalized
-        round 11 to the other read-modify-write ops): every commit that
-        won between ``base_v`` and the current head must be a DATA-ONLY
-        op (no DDL / schema / column-mapping / restore), must have
-        removed NONE of the files we read or rewrote (our pre-images
-        would be stale), and must have added no file for which
-        ``add_conflict(entry)`` is True — the op-specific read-set test
-        (a merge asks "could this file's key stats match my source
-        keys"; a scoped update asks "could it hold rows inside my prune
-        ranges"; a compaction asks nothing — new files simply weren't
-        candidates). Returns the new head to re-commit at; re-raises
-        the ACTIVE VersionConflict otherwise (must be called from the
-        except block)."""
-        head = self.latest_version()
+    def _commit_rebasing(
+        self, base_v: int, adds: list, removes: list, key_col,
+        add_conflict, max_retries: int, **commit_kw,
+    ) -> int:
+        """Commit ``adds``/``removes`` at ``base_v + 1``; a lost OCC race
+        AUTO-REBASES when provably safe (Delta's logical conflict
+        detection) and re-commits the already-written files at the new
+        head — no re-read, no rewrite — up to ``max_retries`` times.
+        Every commit that won since ``base_v`` must be a DATA-ONLY op (no
+        DDL / schema / column-mapping / restore), must have removed none
+        of ``removes`` (our pre-images would be stale), and must have
+        added no file for which ``add_conflict(entry)`` is True: the op's
+        read-set test (a merge asks "could this file's key stats match my
+        source keys", a scoped update "could it hold rows inside my prune
+        ranges", a row-preserving rewrite asks nothing). With
+        ``add_conflict=None`` a lost race always re-raises. Returns the
+        committed version."""
         global COMMIT_READS
-        for wv in [x for x in self.versions() if base_v < x <= head]:
-            rec = json.loads(_log_path(self.root, wv).read_text())
-            COMMIT_READS += 1
-            if (
-                rec.get("op") not in MERGE_REBASE_SAFE_OPS
-                or rec.get("schema") is not None
-                or "column_mapping" in (rec.get("meta") or {})
-            ):
-                raise
-            if set(rec.get("removes") or ()) & touched_paths:
-                raise
-            for a in rec.get("adds") or ():
-                if add_conflict(a):
+        for attempt in range(max_retries + 1):
+            try:
+                _commit(self.root, base_v + 1, adds, removes, key_col, **commit_kw)
+                return base_v + 1
+            except VersionConflict:
+                if attempt == max_retries or add_conflict is None:
                     raise
-        return head
+                head = self.latest_version()
+                for wv in [x for x in self.versions() if base_v < x <= head]:
+                    rec = json.loads(_log_path(self.root, wv).read_text())
+                    COMMIT_READS += 1
+                    if (
+                        rec.get("op") not in MERGE_REBASE_SAFE_OPS
+                        or rec.get("schema") is not None
+                        or "column_mapping" in (rec.get("meta") or {})
+                        or not set(removes).isdisjoint(rec.get("removes") or ())
+                        or any(add_conflict(a) for a in rec.get("adds") or ())
+                    ):
+                        raise
+                base_v = head
+        raise AssertionError("unreachable")
 
     def _prune_add_conflict(self, prune, prune_values=None):
         """The read-set test a predicate-scoped UPDATE/DELETE rebase runs
@@ -3902,19 +3560,10 @@ class VersionedTable:
                 "files_written": len(new_files),
             }
         }
-        base_v = v
-        for attempt in range(max_retries + 1):
-            try:
-                _commit(
-                    self.root, base_v + 1, new_files, sorted(touched_paths),
-                    key_col, op="update_where", meta=op_meta,
-                )
-                return base_v + 1
-            except VersionConflict:
-                if attempt == max_retries:
-                    raise
-                base_v = self._rebase_head(base_v, touched_paths, add_conflict)
-        raise AssertionError("unreachable")
+        return self._commit_rebasing(
+            v, new_files, sorted(touched_paths), key_col, add_conflict,
+            max_retries, op="update_where", meta=op_meta,
+        )
 
     def _delete_dv(
         self, pred, touched, entries, key_col, v,
@@ -3968,7 +3617,6 @@ class VersionedTable:
                 )
             )
             removes.append(e["path"])
-        base_v = v
         # first DV on this table: the commit also adopts the
         # deletionVectors protocol feature (pre-feature readers would
         # resurrect the marked-dead rows)
@@ -3979,23 +3627,13 @@ class VersionedTable:
             "rows_marked": len(hits),
             **({"properties": adopted} if adopted else {}),
         }
-        for attempt in range(max_retries + 1):
-            try:
-                _commit(
-                    self.root, base_v + 1, new_adds, removes, key_col,
-                    op="delete_dv", meta=dv_meta,
-                )
-                return base_v + 1
-            except VersionConflict:
-                # the DV re-references the touched files, so a winner
-                # touching ANY of them (incl. another DV commit on the
-                # same path) conflicts via the removes-overlap check
-                if attempt == max_retries or add_conflict is None:
-                    raise
-                base_v = self._rebase_head(
-                    base_v, set(removes), add_conflict
-                )
-        raise AssertionError("unreachable")
+        # the DV re-references the touched files, so a winner touching
+        # ANY of them (incl. another DV commit on the same path)
+        # conflicts via the removes-overlap check
+        return self._commit_rebasing(
+            v, new_adds, removes, key_col, add_conflict, max_retries,
+            op="delete_dv", meta=dv_meta,
+        )
 
     def purge_dv(self) -> int:
         """Materialize every live deletion vector away (Delta's ``REORG
@@ -4154,19 +3792,10 @@ class VersionedTable:
                 ),
             }
         }
-        base_v = v
-        for attempt in range(max_retries + 1):
-            try:
-                _commit(
-                    self.root, base_v + 1, new_files, sorted(touched_paths),
-                    key_col, op="delete_where", meta=op_meta,
-                )
-                return base_v + 1
-            except VersionConflict:
-                if attempt == max_retries:
-                    raise
-                base_v = self._rebase_head(base_v, touched_paths, add_conflict)
-        raise AssertionError("unreachable")
+        return self._commit_rebasing(
+            v, new_files, sorted(touched_paths), key_col, add_conflict,
+            max_retries, op="delete_where", meta=op_meta,
+        )
 
     def restore_to_timestamp(self, timestamp: str) -> int:
         """``RESTORE TABLE ... TO TIMESTAMP AS OF`` — the time axis of
@@ -4496,27 +4125,16 @@ class VersionedTable:
         # until the next OPTIMIZE); a winner removing one of the files
         # we reclustered, or any DDL winner, re-raises
         removes = [e["path"] for e in entries]
-        base_v = v
-        for attempt in range(max_retries + 1):
-            try:
-                _commit(
-                    self.root, base_v + 1, new_files, removes, key_col,
-                    op="optimize_zorder", stats_cols=decl,
-                    meta={
-                        "metrics": {
-                            "files_reclustered": len(removes),
-                            "files_written": len(new_files),
-                        }
-                    },
-                )
-                return base_v + 1
-            except VersionConflict:
-                if attempt == max_retries:
-                    raise
-                base_v = self._rebase_head(
-                    base_v, set(removes), lambda a: False
-                )
-        raise AssertionError("unreachable")
+        return self._commit_rebasing(
+            v, new_files, removes, key_col, lambda a: False, max_retries,
+            op="optimize_zorder", stats_cols=decl,
+            meta={
+                "metrics": {
+                    "files_reclustered": len(removes),
+                    "files_written": len(new_files),
+                }
+            },
+        )
 
     def set_clustering(self, cols: tuple[str, ...]) -> int:
         """Declare the table's CLUSTERING KEY (round 12 — Delta liquid
@@ -4669,34 +4287,23 @@ class VersionedTable:
             clustered_run=new_run,
         )
         removes = [e["path"] for e in todo]
-        base_v = v
-        for attempt in range(max_retries + 1):
-            try:
-                _commit(
-                    self.root, base_v + 1, new_files, removes, key_col,
-                    op="optimize_cluster", stats_cols=decl,
-                    meta={
-                        "metrics": {
-                            "files_clustered": len(removes),
-                            "files_carried": len(entries) - len(removes),
-                            "files_written": len(new_files),
-                            "runs_before": runs_before,
-                            "runs_merged": folded,
-                            "runs_after": len(runs) + 1,
-                        }
-                    },
-                )
-                return base_v + 1
-            except VersionConflict:
-                if attempt == max_retries:
-                    raise
-                # row-preserving: winner ADDS stay live (they are just
-                # unclustered until the next optimize); a winner touching
-                # one of OUR files re-raises
-                base_v = self._rebase_head(
-                    base_v, set(removes), lambda a: False
-                )
-        raise AssertionError("unreachable")
+        # row-preserving: winner ADDS stay live (they are just
+        # unclustered until the next optimize); a winner touching one of
+        # OUR files re-raises
+        return self._commit_rebasing(
+            v, new_files, removes, key_col, lambda a: False, max_retries,
+            op="optimize_cluster", stats_cols=decl,
+            meta={
+                "metrics": {
+                    "files_clustered": len(removes),
+                    "files_carried": len(entries) - len(removes),
+                    "files_written": len(new_files),
+                    "runs_before": runs_before,
+                    "runs_merged": folded,
+                    "runs_after": len(runs) + 1,
+                }
+            },
+        )
 
     def compact(
         self,
@@ -4750,27 +4357,16 @@ class VersionedTable:
         # small files (or DDL) re-raises. Without this, in-line sink
         # maintenance serializes against trickle merges.
         removes = [e["path"] for e, _ in small]
-        base_v = v
-        for attempt in range(max_retries + 1):
-            try:
-                _commit(
-                    self.root, base_v + 1, new_files, removes, key_col,
-                    op="compact",
-                    meta={
-                        "metrics": {
-                            "files_compacted": len(removes),
-                            "files_written": len(new_files),
-                        }
-                    },
-                )
-                return base_v + 1
-            except VersionConflict:
-                if attempt == max_retries:
-                    raise
-                base_v = self._rebase_head(
-                    base_v, set(removes), lambda a: False
-                )
-        raise AssertionError("unreachable")
+        return self._commit_rebasing(
+            v, new_files, removes, key_col, lambda a: False, max_retries,
+            op="compact",
+            meta={
+                "metrics": {
+                    "files_compacted": len(removes),
+                    "files_written": len(new_files),
+                }
+            },
+        )
 
     def row_count(self, version: int | None = None) -> int:
         """COUNT(*) of a snapshot from the commit log's per-file footer

@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import hashlib
+from pathlib import Path
+
 import pytest
 
 from database_anonymiser_spark.session import get_spark
@@ -16,6 +19,38 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def in_tmp_path(tmp_path, monkeypatch):
+    """Run the test from its tmp_path: without --report, the CLI writes
+    its JSON report into the working directory."""
+    monkeypatch.chdir(tmp_path)
+
+
+#: a tracked report file in the repository root; a CLI run from the root
+#: without --report rewrites it, and no test may do that
+TRACKED_REPORT = Path(__file__).resolve().parent.parent / "anonymiser.sql.report.json"
+
+
+def _digest(path: Path) -> str | None:
+    return hashlib.sha256(path.read_bytes()).hexdigest() if path.is_file() else None
+
+
+_REPORT_AT_START = _digest(TRACKED_REPORT)  # conftest loads before any test
+
+
+def pytest_sessionfinish(session, exitstatus):
+    if _digest(TRACKED_REPORT) != _REPORT_AT_START:
+        tr = session.config.pluginmanager.get_plugin("terminalreporter")
+        if tr is not None:
+            tr.write_sep(
+                "!",
+                f"the run changed the tracked {TRACKED_REPORT.name}: run CLI "
+                "tests from tmp_path (the in_tmp_path fixture) or pass --report",
+                red=True,
+            )
+        session.exitstatus = pytest.ExitCode.TESTS_FAILED
 
 
 # ---------------------------------------------------------------------------

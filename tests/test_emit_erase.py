@@ -16,6 +16,9 @@ from database_anonymiser_spark.cli import main as cli_main
 from database_anonymiser_spark.sql_gen import emit_erase_script
 from database_anonymiser_spark.sources.versioned import VersionedTable
 
+# the CLI writes its report to the working directory without --report
+pytestmark = pytest.mark.usefixtures("in_tmp_path")
+
 
 def _mk(spark, root):
     return VersionedTable.create(

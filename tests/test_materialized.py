@@ -15,6 +15,9 @@ from database_anonymiser_spark.sources.materialized import (
 )
 from database_anonymiser_spark.sources.versioned import VersionedTable
 
+# the CLI writes its report to the working directory without --report
+pytestmark = pytest.mark.usefixtures("in_tmp_path")
+
 
 def _mv_visible(mv, keys, aggs):
     """The view's user-facing columns (hidden companions dropped)."""

@@ -22,6 +22,9 @@ from database_anonymiser_spark.sources.materialized import (
 )
 from database_anonymiser_spark.sources.versioned import VersionedTable
 
+# the CLI writes its report to the working directory without --report
+pytestmark = pytest.mark.usefixtures("in_tmp_path")
+
 LOSS_AGGS = {
     "n": ("count", None),
     "total": ("sum", "amt"),

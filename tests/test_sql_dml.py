@@ -28,6 +28,9 @@ from database_anonymiser_spark.sql_dml import (
 )
 from database_anonymiser_spark.sources.versioned import VersionedTable
 
+# the CLI writes its report to the working directory without --report
+pytestmark = pytest.mark.usefixtures("in_tmp_path")
+
 
 # --------------------------------------------------------------------------
 # parser units (no Spark)
@@ -349,6 +352,31 @@ def test_e2e_sql_merge(spark, dml_env, tmp_path):
     assert rows == {
         1: "one", 2: "two-new", 3: "three-new", 4: "four",
         99: "ninety-nine",
+    }
+
+
+def test_e2e_sql_merge_source_column_named_like_a_marker(
+    spark, dml_env, tmp_path
+):
+    """A subquery source may name a column _s, the name of the merge's
+    source presence marker."""
+    data_dir, root = dml_env
+    t = VersionedTable(spark, root)
+    rc = _run([
+        "--sql",
+        "MERGE INTO cust AS c USING (SELECT k, upper(v) AS _s FROM src) s "
+        "ON c.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET v = s._s "
+        "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s._s)",
+        "--data", str(data_dir),
+        "--versionedTable", f"cust={root}",
+        "--report", str(tmp_path / "rep.json"),
+    ])
+    assert rc == 0
+    rows = {r["k"]: r["v"] for r in t.snapshot().collect()}
+    assert rows == {
+        1: "one", 2: "TWO-NEW", 3: "THREE-NEW", 4: "four",
+        99: "NINETY-NINE",
     }
 
 

@@ -22,6 +22,9 @@ from database_anonymiser_spark.sql_txn import (
     sweep_workspaces,
 )
 
+# the CLI writes its report to the working directory without --report
+pytestmark = pytest.mark.usefixtures("in_tmp_path")
+
 
 def test_classify_txn():
     assert classify_txn("BEGIN") == "begin"

@@ -4063,11 +4063,18 @@ def test_merge_clauses_constraint_checked_on_rewritten_image(spark, table):
 
 def test_merge_clauses_insert_only_no_touched_files(spark, table):
     """Insert clauses fire even when NO target file intersects the
-    source keys (the skipped-everything fast path still joins against
-    the empty frame)."""
+    source keys: the merge joins the source against the empty frame,
+    whose emptiness the optimizer sees, so the join folds away."""
     src = spark.createDataFrame(
         [(10_000, 1.0), (10_001, -1.0)], "k long, s double"
     )
+    folded = (
+        table._empty_frame(table.latest_version())
+        .alias("t")
+        .join(src.alias("s"), F.col("t.k") == F.col("s.k"), "full_outer")
+    )
+    plan = folded._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan, plan
     v = table.merge(
         src,
         not_matched=[("insert", "s.s > 0", {"k": "s.k", "v": "s.s"})],
@@ -4076,6 +4083,173 @@ def test_merge_clauses_insert_only_no_touched_files(spark, table):
     assert m["files_touched"] == 0
     got = {r["k"]: r["v"] for r in table.snapshot().collect()}
     assert got[10_000] == 1.0 and 10_001 not in got and len(got) == 21
+
+
+def test_merge_markers_avoid_source_columns(spark, tmp_path):
+    """The presence markers (_t/_s) and the by-source scope flag (_bs)
+    shadow no column of the target or the source: a source column _s
+    feeds clause expressions, and sources carrying _t or _bs merge
+    through every spelling."""
+    base = spark.createDataFrame([(1, 10.0), (2, 20.0)], "k long, v double")
+    t = VersionedTable.create(spark, tmp_path / "t", base, key_col="k")
+    src = spark.createDataFrame([(1, 5.0), (3, 7.0)], "k long, _s double")
+    t.merge(
+        src,
+        matched=[("update", None, {"v": "s._s"})],
+        not_matched=[("insert", None, {"k": "s.k", "v": "s._s"})],
+    )
+    assert _rows(t.snapshot()) == [(1, 5.0), (2, 20.0), (3, 7.0)]
+
+    src = spark.createDataFrame(
+        [(1, 6.0, 0, 0), (4, 8.0, 0, 0)], "k long, v double, _t int, _bs int"
+    )
+    t.merge(src)  # when_matched="update": extra source columns ignored
+    assert _rows(t.snapshot()) == [(1, 6.0), (2, 20.0), (3, 7.0), (4, 8.0)]
+    t.merge(
+        src.withColumn("v", F.col("v") + 1),
+        matched=[("update", None, None)],
+        not_matched_by_source=[("delete", "t.k = 2")],
+    )
+    assert _rows(t.snapshot()) == [(1, 7.0), (3, 7.0), (4, 9.0)]
+
+
+_UPDATE_ALL = [("update", None, None)]
+_INSERT_ALL = [("insert", None, None)]
+_UPSERT = "s.`op` = 'upsert'"
+
+# (id, table key, legacy kwargs, equivalent clause kwargs, source keys,
+#  commit op, legacy commit metrics) — each legacy spelling of merge and
+# the clause lists it stands for
+_LEGACY_SPELLINGS = [
+    (
+        "update_only",
+        "k",
+        {"when_matched": "update", "insert_not_matched": False},
+        {"matched": _UPDATE_ALL},
+        [4, 6, 7],
+        "merge_update",
+        {"files_touched": 1, "files_carried": 2, "files_written": 1},
+    ),
+    (
+        "update_insert",
+        "k",
+        {},
+        {"matched": _UPDATE_ALL, "not_matched": _INSERT_ALL},
+        [4, 6, 7],
+        "merge_update",
+        {"files_touched": 1, "files_carried": 2, "files_written": 1},
+    ),
+    (
+        "delete_only",
+        "k",
+        {"when_matched": "delete", "insert_not_matched": False},
+        {"matched": [("delete", None)]},
+        [4, 6, 7],
+        "merge_delete",
+        {"files_touched": 1, "files_carried": 2, "files_written": 1},
+    ),
+    (
+        "delete_insert",
+        "k",
+        {"when_matched": "delete"},
+        {"matched": [("delete", None)], "not_matched": _INSERT_ALL},
+        [4, 6, 7],
+        "merge_delete",
+        {"files_touched": 1, "files_carried": 2, "files_written": 1},
+    ),
+    (
+        "op_col",
+        "k",
+        {"op_col": "op"},
+        {
+            "matched": [("update", _UPSERT, None), ("delete", None)],
+            "not_matched": [("insert", _UPSERT, None)],
+        },
+        [4, 6, 7, 9],
+        "apply_changes",
+        {"files_touched": 1, "files_carried": 2, "files_written": 1},
+    ),
+    (
+        "by_source_scope",
+        "k",
+        {"not_matched_by_source": "delete", "by_source_scope": {"k": (0, 28)}},
+        {
+            "matched": _UPDATE_ALL,
+            "not_matched": _INSERT_ALL,
+            "not_matched_by_source": [("delete", None)],
+            "by_source_scope": {"k": (0, 28)},
+        },
+        [4, 6, 7],
+        "merge_update",
+        {
+            "files_touched": 2, "files_carried": 1, "files_written": 1,
+            "by_source": "delete",
+        },
+    ),
+    (
+        "no_touched_insert",
+        "k",
+        {},
+        {"matched": _UPDATE_ALL, "not_matched": _INSERT_ALL},
+        [100, 101],
+        "merge_update",
+        {"files_touched": 0, "files_carried": 3, "files_written": 2},
+    ),
+    (
+        "composite_key",
+        ["k", "b"],
+        {},
+        {"matched": _UPDATE_ALL, "not_matched": _INSERT_ALL},
+        [4, 6, 7],
+        "merge_update",
+        {"files_touched": 1, "files_carried": 2, "files_written": 1},
+    ),
+]
+
+
+@pytest.mark.parametrize(
+    "key, legacy, clauses, keys, op, metrics",
+    [case[1:] for case in _LEGACY_SPELLINGS],
+    ids=[case[0] for case in _LEGACY_SPELLINGS],
+)
+def test_merge_legacy_spellings_equal_their_clause_lists(
+    spark, tmp_path, key, legacy, clauses, keys, op, metrics
+):
+    """Each legacy merge spelling (when_matched / insert_not_matched /
+    op_col / by-source 'delete') commits the same snapshot as the clause
+    lists it stands for, and keeps its own commit op and metrics."""
+    schema = "k long, b long, name string, v double"
+
+    def make(name):
+        # three one-file bands of even keys: [0, 18], [20, 38], [40, 58]
+        t = None
+        for lo in (0, 20, 40):
+            df = spark.createDataFrame(
+                [(i, i % 3, f"n{i}", i * 1.0) for i in range(lo, lo + 20, 2)],
+                schema,
+            ).coalesce(1)
+            if t is None:
+                t = VersionedTable.create(spark, tmp_path / name, df, key_col=key)
+            else:
+                t.append(df)
+        return t
+
+    src = spark.createDataFrame(
+        [(k, k % 3, f"s{k}", -1.0 * k, "delete" if k in (6, 9) else "upsert")
+         for k in keys],
+        schema + ", op string",
+    )
+    if "op_col" not in legacy:
+        src = src.drop("op")
+    a, b = make("legacy"), make("clauses")
+    va = a.merge(src, **legacy)
+    vb = b.merge(src, **clauses)
+    assert _rows(a.snapshot()) == _rows(b.snapshot())
+    assert _rows(a.snapshot()) != _rows(a.snapshot(va - 1))
+    assert a.commit_op(va) == op and b.commit_op(vb) == "merge_clauses"
+    assert a.commit_meta(va)["metrics"] == {
+        "source_rows": len(keys), "skip_by": "range", **metrics,
+    }
 
 
 def test_merge_clauses_generated_columns_recomputed(spark, tmp_path):

@@ -31,23 +31,16 @@ def curate_stages(spark, sf_dir: str, reps: int) -> None:
     """bench.py's cumulative-prefix stage attribution (min of ``reps``
     per prefix, marginals from the minima), printed with the width so
     c8/c32 tables line up."""
+    from bench import CURATE_KWARGS
     from database_anonymiser_spark.operators.curate import curate_corpus
     from database_anonymiser_spark.suite.base import load
 
     def prefix(stop):
         return curate_corpus(
             load(spark, sf_dir, "documents"),
-            min_tokens=3,
-            drop_boilerplate=True,
-            dedup_lines_min_docs=3,
-            drop_repetitive=True,
-            near_dedup=True,
-            cluster_balance=200,
             embeddings=load(spark, sf_dir, "embeddings"),
-            decontam_n=8,
-            mixture_rates={"src0": 2.0, "src1": 0.5},
-            token_budgets={"src2": 2_000},
             stop_after=stop,
+            **CURATE_KWARGS,
         ).count()
 
     width = spark.sparkContext.defaultParallelism
