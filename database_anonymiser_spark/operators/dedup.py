@@ -140,24 +140,28 @@ def explode_nonempty(
         # assertion is fused INTO the drop predicate (when/otherwise) so
         # filter combining/reordering can neither prune it nor
         # short-circuit past it: non-null elements keep the row, marker
-        # rows assert the source was empty and then drop.
+        # rows assert the source was empty and then drop. The helper
+        # column takes a name no output column has.
+        sz = "_src_sz"
+        while sz in keep_cols or sz == out_col:
+            sz = "_" + sz
         return (
             df.select(
                 *[F.col(c) for c in keep_cols],
-                F.coalesce(F.size(arr_col), F.lit(-1)).alias("_src_sz"),
+                F.coalesce(F.size(arr_col), F.lit(-1)).alias(sz),
                 out,
             )
             .where(
                 F.when(F.col(out_col).isNotNull(), F.lit(True)).otherwise(
                     F.assert_true(
-                        F.col("_src_sz") <= 0,
+                        F.col(sz) <= 0,
                         F.lit(
                             f"explode_nonempty({arr_col}): NULL array element"
                         ),
                     ).isNotNull()
                 )
             )
-            .drop("_src_sz")
+            .drop(sz)
         )
     return df.select(*[F.col(c) for c in keep_cols], out).where(
         F.col(out_col).isNotNull()

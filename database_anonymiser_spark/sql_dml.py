@@ -6,9 +6,8 @@ builds them, ``src/executor/executor.ts:45-85`` runs them inside one
 transaction).  Round 12's ``--sql`` mode ran SELECTs, but Spark's
 analyzer refuses ``UPDATE`` / ``DELETE`` / ``MERGE INTO`` against temp
 views — so the one statement class the reference exists for could not
-run through the SQL face.  This module closes that gap: a small quote-
-and paren-aware statement front that maps the three DML shapes onto the
-versioned table's NATIVE ops —
+run through the SQL face.  This module closes that gap: a statement
+front that maps the DML shapes onto the versioned table's NATIVE ops —
 
     ``UPDATE v SET c = e, ... [WHERE p]``  → :meth:`VersionedTable.update_where`
     ``DELETE FROM v [WHERE p]``            → :meth:`VersionedTable.delete_where`
@@ -18,9 +17,8 @@ versioned table's NATIVE ops —
 so the statement lands as ONE commit in the table's log — CDF-visible,
 OCC-rebased, constraint-checked, file-skipped — with time travel below
 it intact.  Expressions (SET values, WHERE predicates, merge clause
-conditions) pass through to Spark SQL verbatim; only the statement
-SKELETON is parsed here, so the full Spark expression language works
-inside every slot.
+conditions) pass through to Spark SQL verbatim, so the full Spark
+expression language works inside every slot.
 
 Scope contract — refusals are loud, never silent:
 
@@ -43,32 +41,42 @@ Scope contract — refusals are loud, never silent:
   key exists in the target never inserts, because the table's
   key-uniqueness contract forbids the duplicate key Delta would write
   there.  An ON that does not contain the full key equality is still
-  refused with the expected shape in the message;
-- statement-boundary keywords (``WHEN [NOT] MATCHED``, ``THEN UPDATE/
-  DELETE/INSERT``) are matched outside quotes and parens, so CASE WHEN
-  expressions inside SET values or conditions parse through unharmed.
+  refused with the expected shape in the message.
 
-Parsing is deliberately a scanner, not a SQL grammar: the four statement
-shapes are fixed, everything inside an expression slot is Spark's
-problem, and a malformed skeleton raises :class:`SqlDmlError` with the
-supported grammar in the message.
+The four DML shapes are parsed by Spark's own Catalyst parser
+(``sessionState().sqlParser().parsePlan``, once per statement), so the
+SQL dialect is exactly the one every expression slot is evaluated in:
+``"x"`` is a string literal, ``CASE WHEN`` and quoted keywords need no
+special handling, and a malformed statement raises :class:`SqlDmlError`
+with Spark's own message.  One walk over the parse tree fills the
+statement record; each expression slot keeps the text the user wrote
+(the slice its node's origin indexes).  Qualifier rewriting, the MERGE
+ON key split, ``[NOT] IN (SELECT ...)`` handling and the file-skipping
+hints read tree nodes, never the text.  A text scanner remains only
+for the engine's own statements Spark cannot parse (OPTIMIZE ... ZORDER,
+ERASE, CREATE ... USING VERSIONED, ...) and for splitting scripts.
 """
 
 from __future__ import annotations
 
+import json
+import math
 import re
 from dataclasses import dataclass, field
+from decimal import Decimal
+from functools import cached_property
 
 __all__ = ["SqlDmlError", "classify_dml", "execute_dml"]
 
 
 class SqlDmlError(ValueError):
-    """A DML statement we refuse to run — malformed skeleton, wrong
+    """A DML statement we refuse to run — malformed statement, wrong
     target class, or semantics the native ops cannot honor."""
 
 
 # --------------------------------------------------------------------------
-# scanner: quote- and paren-aware masks over the raw statement text
+# scanner: quote- and paren-aware masks over the raw statement text (the
+# utility statements Spark cannot parse, and script splitting)
 # --------------------------------------------------------------------------
 
 def _mask(s: str) -> list[tuple[int, bool]]:
@@ -147,30 +155,218 @@ def _unquote(ident: str) -> str:
     return ident
 
 
-def _requalify(expr: str, mapping: dict[str, str]) -> str:
-    """Rewrite ``alias.`` qualifiers to canonical ones (``t.`` / ``s.`` for
-    merge clauses, ``''`` to strip the target's self-qualifier) — single
-    simultaneous pass, word-bounded, never inside string literals."""
-    if not mapping:
-        return expr
-    mask = _mask(expr)
-    lower = {k.lower(): v for k, v in mapping.items()}
-    pat = re.compile(
-        r"\b(" + "|".join(re.escape(k) for k in mapping) + r")\s*\.\s*",
-        re.I,
-    )
+# --------------------------------------------------------------------------
+# parse trees: Spark's parser, walked over py4j
+# --------------------------------------------------------------------------
 
-    def sub(m: "re.Match") -> str:
-        if not mask[m.start()][1]:  # inside a string literal: keep
-            return m.group(0)
-        repl = lower[m.group(1).lower()]
-        return repl + "." if repl else ""
+#: node kinds the walks never descend into — a subquery's plan is not a
+#: child, and a literal or attribute has no children
+_LEAVES = frozenset(
+    {"UnresolvedAttribute", "Literal", "ListQuery", "ScalarSubquery", "Exists"}
+)
 
-    return pat.sub(sub, expr)
+
+def _seq(j) -> list:
+    """A Scala ``Seq`` as a Python list (one JVM call per element)."""
+    return [j.apply(i) for i in range(j.size())]
+
+
+def _opt(j):
+    """A Scala ``Option``'s value, or None."""
+    return j.get() if j.isDefined() else None
+
+
+def _parse(text: str, expression: bool = False) -> "_Node":
+    """Parse ``text`` with the active session's Catalyst parser — as one
+    statement, or as a bare expression.  A refusal from Spark's grammar
+    becomes a :class:`SqlDmlError` carrying Spark's message.  PySpark
+    logs every JVM exception it converts at ERROR, stack trace included,
+    whatever the log level; the refusal reaches the user as the
+    SqlDmlError, so that record is muted for the call."""
+    from pyspark.errors import AnalysisException
+    from pyspark.logger import PySparkLogger
+    from pyspark.sql import SparkSession
+
+    parser = SparkSession.active()._jsparkSession.sessionState().sqlParser()
+    # PySpark's own logger class: it takes the errorClass keyword
+    log = PySparkLogger.getLogger("SQLQueryContextLogger")
+    was, log.disabled = log.disabled, True
+    try:
+        j = parser.parseExpression(text) if expression else parser.parsePlan(text)
+    except AnalysisException as e:  # ParseException is one
+        raise SqlDmlError(f"{str(e).strip()}\n{_GRAMMAR}") from None
+    finally:
+        log.disabled = was
+    return _Node(j, text)
+
+
+class _Node:
+    """One node of a parse tree: the py4j handle plus the text its origin
+    indexes.  A JVM round trip costs ~0.2 ms, so every property is
+    cached: the passes over one statement (requalification, IN-subquery
+    handling, file skipping) cross into the JVM once per node touched."""
+
+    def __init__(self, j, text: str):
+        self.j, self.text = j, text
+
+    def at(self, j) -> "_Node":
+        """Another node of the same tree."""
+        return _Node(j, self.text)
+
+    @cached_property
+    def kind(self) -> str:
+        return self.j.nodeName()
+
+    @cached_property
+    def kids(self) -> list["_Node"]:
+        if self.kind in _LEAVES:
+            return []
+        if self.kind == "In" and self.j.inSetConvertible():
+            # a literal list holds no column; an erasure script's IN list
+            # has a thousand entries, which _in_values reads in one call
+            return [self.at(self.j.value())]
+        return [self.at(c) for c in _seq(self.j.children())]
+
+    @cached_property
+    def parts(self) -> list[str]:
+        """An attribute's (or a function's) name parts."""
+        return _seq(self.j.nameParts())
+
+    @cached_property
+    def lit(self) -> "tuple[str, str | None] | None":
+        """A literal's ``(type name, value text)``, else None."""
+        if self.kind != "Literal":
+            return None
+        d = json.loads(self.j.toJSON())[0]
+        return d["dataType"], d["value"]
+
+    @cached_property
+    def raw(self) -> "tuple[int, int] | None":
+        """``[start, stop)`` of the node's own origin in ``text``.  Spark
+        shares one object between all TRUE (and all FALSE) literals, so
+        theirs is stale: None."""
+        if self.lit is not None and self.lit[0] == "boolean":
+            return None
+        ctx = self.j.origin().context()
+        start = ctx.startIndex()
+        return (start, ctx.stopIndex() + 1) if start >= 0 else None
+
+    @cached_property
+    def span(self) -> "tuple[int, int] | None":
+        """The node's full extent: a postfix predicate's origin (``IN``,
+        ``LIKE``, ``BETWEEN``, ``IS NULL``) starts at its keyword, so it
+        widens over the leftmost child, parentheses included."""
+        own = self.raw
+        first = self.kids[0].span if self.kids else None
+        if own is None or first is None:
+            return own
+        return min(own[0], _parens(self.text, first)[0]), own[1]
+
+    @cached_property
+    def conjuncts(self) -> list["_Node"]:
+        """The leaves of the node's AND tree."""
+        if self.kind != "And":
+            return [self]
+        return [c for k in self.kids for c in k.conjuncts]
+
+    def walk(self, parent: "_Node | None" = None):
+        """``(node, parent)`` pairs in pre-order, never into a subquery."""
+        yield self, parent
+        for k in self.kids:
+            yield from k.walk(self)
+
+
+def _parens(text: str, span: tuple[int, int]) -> tuple[int, int]:
+    """``span`` widened over the parentheses that enclose it exactly — a
+    parenthesised node's origin leaves them out."""
+    start, stop = span
+    while True:
+        a, b = start, stop
+        while a > 0 and text[a - 1].isspace():
+            a -= 1
+        while b < len(text) and text[b].isspace():
+            b += 1
+        if not (a > 0 and b < len(text) and text[a - 1] == "(" and text[b] == ")"):
+            return start, stop
+        start, stop = a - 1, b + 1
+
+
+def _quote(part: str) -> str:
+    if part.isidentifier() and part.isascii():
+        return part
+    return "`" + part.replace("`", "``") + "`"
+
+
+def _render(node: _Node, qualifiers: dict[str, str], subs: dict | None = None,
+            parens: bool = False) -> str:
+    """The text the user wrote for ``node``, with two kinds of edits:
+
+    - an attribute whose FIRST name part is a key of ``qualifiers``
+      (lowercased) gets that part replaced by the mapped qualifier, or
+      dropped for ``''`` — ``u.c.x`` under ``{"u": "s", "c": "t"}`` is
+      ``s.c.x``, a struct path is never renamed;
+    - a node keyed (by ``id``) in ``subs`` as ``(span, text, descend)``
+      has ``span`` replaced by ``text``; ``descend`` keeps editing its
+      children.
+
+    ``parens`` widens the result over enclosing parentheses: a conjunct
+    taken out of an AND chain keeps its grouping."""
+    if node.span is None:  # a TRUE/FALSE literal
+        return node.j.sql()
+    subs = subs or {}
+    text = node.text
+    start, stop = _parens(text, node.span) if parens else node.span
+    edits: list[tuple[tuple[int, int], str]] = []
+
+    def visit(n: _Node) -> None:
+        if id(n) in subs:
+            span, repl, descend = subs[id(n)]
+            edits.append((span, repl))
+            if not descend:
+                return
+        elif n.kind == "UnresolvedAttribute" and len(n.parts) > 1 and n.span:
+            q = qualifiers.get(n.parts[0].lower())
+            if q is not None:
+                rest = ".".join(_quote(p) for p in n.parts[1:])
+                edits.append((n.span, f"{q}.{rest}" if q else rest))
+        for k in n.kids:
+            visit(k)
+
+    visit(node)
+    out, at = [], start
+    for (s, e), repl in sorted(edits):
+        out += [text[at:s], repl]
+        at = e
+    return "".join(out) + text[at:stop]
+
+
+def _column(node: _Node, qualifiers: dict[str, str]) -> str | None:
+    """The column a bare (or target-qualified) attribute names, else None."""
+    if node.kind != "UnresolvedAttribute":
+        return None
+    *qual, col = node.parts
+    if not qual or (len(qual) == 1 and qualifiers.get(qual[0].lower()) == ""):
+        return col
+    return None
+
+
+def _relation(node: _Node, alias_ok: bool, what: str) -> tuple[str, str]:
+    """``name [[AS] alias]`` → (name, qualifier); the qualifier defaults to
+    the name itself (SQL's rule when no alias is given)."""
+    alias = None
+    if node.kind == "SubqueryAlias" and alias_ok:
+        alias, node = node.j.alias(), node.at(node.j.child())
+    if node.kind != "UnresolvedRelation":
+        raise SqlDmlError(
+            f"unsupported {what} (aliases and subqueries are out of scope "
+            f"here)\n{_GRAMMAR}"
+        )
+    name = ".".join(_seq(node.j.multipartIdentifier()))
+    return name, alias or name
 
 
 # --------------------------------------------------------------------------
-# statement skeletons
+# statement records
 # --------------------------------------------------------------------------
 
 @dataclass
@@ -178,31 +374,43 @@ class _Update:
     table: str
     assignments: dict[str, str] = field(default_factory=dict)
     predicate: str | None = None
+    where: "_Node | None" = field(default=None, repr=False, compare=False)
 
 
 @dataclass
 class _Delete:
     table: str
     predicate: str | None = None
+    where: "_Node | None" = field(default=None, repr=False, compare=False)
 
 
 @dataclass
 class _Insert:
     table: str
     columns: "list[str] | None"          # None = positional full schema
-    values: "list[list[str]] | None"     # VALUES rows of exprs, or
-    query: "str | None"                  # ... a SELECT/WITH source
+    query: str                           # the source: a query or VALUES list
     overwrite: bool = False              # INSERT OVERWRITE (round 14)
+    inline: bool = False                 # the source is a VALUES list
+    rows: list = field(default_factory=list, repr=False, compare=False)
+
+    @property
+    def values(self) -> "list[list[str]] | None":
+        """The VALUES cells' texts, row by row; None for a query source,
+        and for an all-constant VALUES list, which Spark folds to rows
+        while parsing (its cells keep no text)."""
+        if not self.rows:
+            return None
+        return [[_render(c, {}) for c in row] for row in self.rows]
 
 
 @dataclass
 class _Merge:
     target: str
     target_alias: str
-    source_sql: str          # "TABLE name" or a full subquery SELECT
+    source_sql: str          # a table name or a full subquery SELECT
     source_is_query: bool
     source_alias: str
-    on: str
+    on: "_Node" = field(repr=False, compare=False)  # the ON condition
     matched: list[tuple] = field(default_factory=list)
     not_matched: list[tuple] = field(default_factory=list)
     by_source: list[tuple] = field(default_factory=list)
@@ -223,310 +431,147 @@ def _strip_stmt(stmt: str) -> str:
 
 
 _GRAMMAR = (
-    "supported DML grammar:\n"
+    "supported DML grammar (Spark SQL's own statements):\n"
     "  UPDATE <view> SET col = expr [, ...] [WHERE <pred>]\n"
     "  DELETE FROM <view> [WHERE <pred>]\n"
-    "  INSERT INTO <view> [(cols)] VALUES (exprs) [, ...] | <query>\n"
-    "  INSERT OVERWRITE [TABLE] <view> [(cols)] VALUES ... | <query>\n"
+    "  INSERT INTO|OVERWRITE [TABLE] <view> [(cols)] VALUES (exprs) [, ...] | <query>\n"
     "  MERGE INTO <view> [AS] t USING (<query>|<view>) [AS] s ON <key equality [AND residual]>\n"
     "    WHEN MATCHED [AND c] THEN UPDATE SET ...|SET *|DELETE\n"
     "    WHEN NOT MATCHED [BY TARGET] [AND c] THEN INSERT (cols) VALUES (exprs)|INSERT *\n"
-    "    WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE SET ...|DELETE"
+    "    WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE SET ...|DELETE\n"
+    "  (an alias on an UPDATE/DELETE/INSERT target is out of scope; a MATCHED\n"
+    "  clause without AND <c> must be the last MATCHED clause)"
 )
 
 
-def _parse_assignments(seg: str, strip_quals: tuple[str, ...]) -> dict[str, str]:
-    """``col = expr, ...`` — column names may carry the target qualifier
-    (``t.col``); expressions pass through verbatim."""
+def _assignments(seq, at: _Node, targets: tuple[str, ...],
+                 qualifiers: dict[str, str]) -> dict[str, str]:
+    """``col = expr, ...`` → ``{col: expr text}``, each expression
+    requalified.  A column may carry a target qualifier (``targets``);
+    any other qualifier, a nested field or a repeat is refused."""
     out: dict[str, str] = {}
-    for item in _split_top(seg):
-        m = re.match(
-            r"\s*(?:(" + _IDENT + r")\s*\.\s*)?(" + _IDENT + r")\s*=\s*(.+)$",
-            item,
-            re.S,
-        )
-        if not m:
+    for a in _seq(seq):
+        key = at.at(a.key())
+        *qual, col = key.parts
+        if len(qual) > 1 or (qual and qual[0].lower() not in targets):
             raise SqlDmlError(
-                f"malformed SET assignment {item.strip()!r}; expected "
-                f"col = expr\n{_GRAMMAR}"
+                f"SET column {'.'.join(key.parts)!r} is not a column of the "
+                "target table/alias"
             )
-        qual, col, expr = m.groups()
-        if qual is not None and _unquote(qual).lower() not in strip_quals:
-            raise SqlDmlError(
-                f"SET column {item.strip()!r} is qualified by "
-                f"{_unquote(qual)!r}, which is not the target table/alias"
-            )
-        col_name = _unquote(col)
-        if col_name in out:
-            raise SqlDmlError(f"column {col_name!r} assigned twice in SET")
-        out[col_name] = expr.strip()
-    if not out:
-        raise SqlDmlError("SET list is empty")
+        if col in out:
+            raise SqlDmlError(f"column {col!r} assigned twice in SET")
+        out[col] = _render(at.at(a.value()), qualifiers)
     return out
 
 
 def _parse_update(stmt: str) -> _Update:
-    stmt = _strip_stmt(stmt)
-    mask = _mask(stmt)
-    m = re.match(r"\s*UPDATE\s+(" + _IDENT + r")\s+SET\b", stmt, re.I)
-    if not m:
-        raise SqlDmlError(
-            "unsupported UPDATE shape (aliases and multi-table UPDATE are "
-            f"out of scope)\n{_GRAMMAR}"
-        )
-    table = _unquote(m.group(1))
-    rest_at = m.end()
-    w = _find(stmt, mask, r"\bWHERE\b", rest_at)
-    set_seg = stmt[rest_at : w.start()] if w else stmt[rest_at:]
-    pred = stmt[w.end() :].strip() if w else None
-    if w and not pred:
-        raise SqlDmlError("WHERE with an empty predicate")
-    quals = (table.lower(),)
-    assigns = {
-        c: _requalify(e, {table: ""})
-        for c, e in _parse_assignments(set_seg, quals).items()
-    }
-    return _Update(table, assigns, _requalify(pred, {table: ""}) if pred else None)
+    plan = _parse(stmt)
+    if plan.kind != "UpdateTable":
+        raise SqlDmlError(f"unsupported UPDATE shape\n{_GRAMMAR}")
+    table, _ = _relation(plan.at(plan.j.table()), False, "UPDATE target")
+    strip = {table.lower(): ""}
+    assigns = _assignments(plan.j.assignments(), plan, (table.lower(),), strip)
+    cond = _opt(plan.j.condition())
+    where = plan.at(cond) if cond is not None else None
+    return _Update(table, assigns, where and _render(where, strip), where)
 
 
 def _parse_delete(stmt: str) -> _Delete:
-    stmt = _strip_stmt(stmt)
-    mask = _mask(stmt)
-    m = re.match(r"\s*DELETE\s+FROM\s+(" + _IDENT + r")\s*", stmt, re.I)
-    if not m:
+    plan = _parse(stmt)
+    if plan.kind != "DeleteFromTable":
         raise SqlDmlError(f"unsupported DELETE shape\n{_GRAMMAR}")
-    table = _unquote(m.group(1))
-    rest = stmt[m.end() :].strip()
-    if not rest:
-        return _Delete(table, None)
-    w = _find(stmt, mask, r"\bWHERE\b", m.end())
-    if not w or stmt[m.end() : w.start()].strip():
-        raise SqlDmlError(
-            "unsupported DELETE shape (aliases are out of scope)\n" + _GRAMMAR
-        )
-    pred = stmt[w.end() :].strip()
-    if not pred:
-        raise SqlDmlError("WHERE with an empty predicate")
-    return _Delete(table, _requalify(pred, {table: ""}))
+    table, _ = _relation(plan.at(plan.j.table()), False, "DELETE target")
+    where = plan.at(plan.j.condition())
+    if where.lit == ("boolean", "true"):  # no WHERE (or WHERE TRUE)
+        return _Delete(table)
+    return _Delete(table, _render(where, {table.lower(): ""}), where)
 
 
 def _parse_insert(stmt: str) -> _Insert:
-    stmt = _strip_stmt(stmt)
-    m = re.match(
-        r"\s*INSERT\s+(INTO|OVERWRITE(?:\s+TABLE)?)\s+(" + _IDENT + r")\s*",
-        stmt, re.I,
-    )
-    if not m:
+    plan = _parse(stmt)
+    if (
+        plan.kind != "InsertIntoStatement"
+        or plan.j.byName()
+        or not plan.j.partitionSpec().isEmpty()
+    ):
         raise SqlDmlError(f"unsupported INSERT shape\n{_GRAMMAR}")
-    overwrite = m.group(1).upper() != "INTO"
-    table = _unquote(m.group(2))
-    rest = stmt[m.end() :].lstrip()
-    columns: list[str] | None = None
-    if rest.startswith("("):
-        rmask = _mask(rest)
-        close = next(
-            (i for i, c in enumerate(rest) if c == ")" and rmask[i] == (0, True)),
-            -1,
-        )
-        if close < 0:
-            raise SqlDmlError(f"unbalanced parens in INSERT column list")
-        inner = rest[1:close]
-        head = rest[close + 1 :].lstrip()
-        # "(cols) VALUES/SELECT ..." vs a bare "(SELECT ...)" source: a
-        # column list is a plain comma list of identifiers
-        if re.fullmatch(
-            r"\s*" + _IDENT + r"(\s*,\s*" + _IDENT + r")*\s*", inner
-        ) and re.match(r"(VALUES|SELECT|WITH|TABLE)\b", head, re.I):
-            columns = [_unquote(c) for c in _split_top(inner)]
-            if len(set(columns)) != len(columns):
-                raise SqlDmlError("duplicate column in INSERT list")
-            rest = head
-    vm = re.match(r"VALUES\b", rest, re.I)
-    if not vm:
-        if not rest:
-            raise SqlDmlError(f"INSERT needs VALUES or a query\n{_GRAMMAR}")
-        return _Insert(table, columns, None, rest, overwrite)
-    body = rest[vm.end() :]
-    rows: list[list[str]] = []
-    for grp in _split_top(body):
-        g = grp.strip()
-        if not (g.startswith("(") and g.endswith(")")):
-            raise SqlDmlError(
-                f"malformed VALUES row {g!r}; expected (expr, ...)"
-            )
-        row = [e.strip() for e in _split_top(g[1:-1])]
-        if rows and len(row) != len(rows[0]):
+    table, _ = _relation(plan.at(plan.j.table()), False, "INSERT target")
+    columns = _seq(plan.j.userSpecifiedCols()) or None
+    if columns and len(set(columns)) != len(columns):
+        raise SqlDmlError("duplicate column in INSERT list")
+    src = plan.at(plan.j.query())
+    query = src.text[slice(*src.raw)]
+    overwrite = bool(plan.j.overwrite())
+    if src.kind == "UnresolvedRelation":  # INSERT INTO t TABLE src
+        return _Insert(table, columns, f"TABLE {query}", overwrite)
+    if src.kind == "LocalRelation":  # constant VALUES, folded by Spark
+        width = src.j.output().size()
+        rows = []
+    elif src.kind == "UnresolvedInlineTable":
+        rows = [[src.at(c) for c in _seq(r)] for r in _seq(src.j.rows())]
+        width = len(rows[0])
+        if any(len(r) != width for r in rows):
             raise SqlDmlError("VALUES rows have inconsistent arity")
-        rows.append(row)
-    if not rows or not rows[0]:
-        raise SqlDmlError("empty VALUES list")
-    if columns is not None and len(columns) != len(rows[0]):
+    else:
+        return _Insert(table, columns, query, overwrite)
+    if columns is not None and len(columns) != width:
         raise SqlDmlError(
             f"INSERT arity mismatch: {len(columns)} columns, "
-            f"{len(rows[0])} values per row"
+            f"{width} values per row"
         )
-    return _Insert(table, columns, rows, None, overwrite)
-
-
-def _parse_name_alias(seg: str, what: str) -> tuple[str, str]:
-    """``name [[AS] alias]`` → (name, qualifier); qualifier defaults to
-    the name itself (SQL's rule when no alias is given)."""
-    toks = seg.split()
-    if len(toks) == 3 and toks[1].upper() == "AS":
-        toks = [toks[0], toks[2]]
-    if len(toks) == 1:
-        name = _unquote(toks[0])
-        return name, name
-    if len(toks) == 2:
-        return _unquote(toks[0]), _unquote(toks[1])
-    raise SqlDmlError(f"malformed {what} spec {seg.strip()!r}\n{_GRAMMAR}")
-
-
-_CLAUSE_BOUNDARY = (
-    r"\bWHEN\s+(?:(NOT)\s+)?MATCHED(?:\s+BY\s+(TARGET|SOURCE))?\b"
-)
-
-
-def _parse_merge_action(body: str, requal: dict[str, str],
-                        set_quals: tuple[str, ...]):
-    """``[AND cond] THEN action`` → (cond|None, action_kind, payload)."""
-    mask = _mask(body)
-    t = _find(body, mask, r"\bTHEN\s+(UPDATE|DELETE|INSERT)\b")
-    if not t:
-        raise SqlDmlError(
-            f"merge clause missing THEN UPDATE/DELETE/INSERT: "
-            f"{body.strip()!r}\n{_GRAMMAR}"
-        )
-    cond_seg = body[: t.start()].strip()
-    cond: str | None = None
-    if cond_seg:
-        am = re.match(r"AND\b(.*)$", cond_seg, re.I | re.S)
-        if not am or not am.group(1).strip():
-            raise SqlDmlError(
-                f"expected [AND <condition>] THEN, got {cond_seg!r}"
-            )
-        cond = _requalify(am.group(1).strip(), requal)
-    kind = t.group(1).upper()
-    action = body[t.end() :].strip()
-    if kind == "DELETE":
-        if action:
-            raise SqlDmlError(f"DELETE takes no arguments, got {action!r}")
-        return cond, "delete", None
-    if kind == "UPDATE":
-        um = re.match(r"SET\b(.*)$", action, re.I | re.S)
-        if not um:
-            raise SqlDmlError(f"expected UPDATE SET ..., got {action!r}")
-        seg = um.group(1).strip()
-        if seg == "*":
-            return cond, "update", None  # updateAll
-        assigns = {
-            c: _requalify(e, requal)
-            for c, e in _parse_assignments(seg, set_quals).items()
-        }
-        return cond, "update", assigns
-    # INSERT
-    if action == "*":
-        return cond, "insert", None  # insertAll
-    im = re.match(r"\((?P<cols>[^)]*)\)\s*VALUES\s*\((?P<vals>.*)\)\s*$",
-                  action, re.I | re.S)
-    if not im:
-        raise SqlDmlError(
-            f"expected INSERT * or INSERT (cols) VALUES (exprs), got "
-            f"{action!r}"
-        )
-    cols = [_unquote(c) for c in _split_top(im.group("cols"))]
-    vals = [v.strip() for v in _split_top(im.group("vals"))]
-    if len(cols) != len(vals) or not cols or any(not c.strip() for c in cols):
-        raise SqlDmlError(
-            f"INSERT column/value arity mismatch: {len(cols)} cols, "
-            f"{len(vals)} values"
-        )
-    values = {c: _requalify(v, requal) for c, v in zip(cols, vals)}
-    if len(values) != len(cols):
-        raise SqlDmlError("duplicate column in INSERT list")
-    return cond, "insert", values
+    return _Insert(table, columns, query, overwrite, True, rows)
 
 
 def _parse_merge(stmt: str) -> _Merge:
-    stmt = _strip_stmt(stmt)
-    mask = _mask(stmt)
-    head = re.match(r"\s*MERGE\s+INTO\b", stmt, re.I)
-    if not head:
+    plan = _parse(stmt)
+    if plan.kind != "MergeIntoTable":
         raise SqlDmlError(f"unsupported MERGE shape\n{_GRAMMAR}")
-    using = _find(stmt, mask, r"\bUSING\b", head.end())
-    on = _find(stmt, mask, r"\bON\b", using.end()) if using else None
-    first_when = _find(stmt, mask, _CLAUSE_BOUNDARY, on.end()) if on else None
-    if not (using and on and first_when):
-        raise SqlDmlError(
-            "MERGE must carry USING ... ON ... and at least one WHEN "
-            f"clause\n{_GRAMMAR}"
-        )
-    target, talias = _parse_name_alias(stmt[head.end() : using.start()], "target")
-    src_seg = stmt[using.end() : on.start()].strip()
-    if src_seg.startswith("("):
-        # subquery source: find its matching close paren, then the alias
-        smask = _mask(src_seg)
-        close = next(
-            (i for i, c in enumerate(src_seg)
-             if c == ")" and smask[i] == (0, True)),
-            -1,
-        )
-        if close < 0:
-            raise SqlDmlError(f"unbalanced parens in USING {src_seg!r}")
-        inner = src_seg[1:close].strip()
-        tail = src_seg[close + 1 :].strip()
-        am = re.match(r"(?:AS\s+)?(" + _IDENT + r")\s*$", tail, re.I)
-        if not am:
-            raise SqlDmlError(
-                "a subquery source needs an alias: USING (<query>) [AS] s"
-            )
-        source_sql, src_is_query, salias = inner, True, _unquote(am.group(1))
+    target, talias = _relation(plan.at(plan.j.targetTable()), True, "MERGE target")
+    src = plan.at(plan.j.sourceTable())
+    inner = src.at(src.j.child()) if src.kind == "SubqueryAlias" else src
+    if inner.kind == "UnresolvedRelation":
+        (source_sql, salias), is_query = _relation(src, True, "MERGE source"), False
+    elif src.kind == "SubqueryAlias":
+        source_sql, is_query = inner.text[slice(*inner.raw)], True
+        salias = src.j.alias()
     else:
-        name, salias = _parse_name_alias(src_seg, "source")
-        source_sql, src_is_query = name, False
-    on_cond = stmt[on.end() : first_when.start()].strip()
+        raise SqlDmlError(
+            "a subquery source needs an alias: USING (<query>) [AS] s"
+        )
     if talias.lower() == salias.lower():
         raise SqlDmlError(
             f"target and source qualifiers collide ({talias!r}); alias one"
         )
-
-    requal = {talias: "t", salias: "s"}
+    requal = {talias.lower(): "t", salias.lower(): "s"}
     # a SET column names a TARGET column: bare or target-qualified only
-    set_quals = (talias.lower(), "t")
-    merge = _Merge(
-        target, talias, source_sql, src_is_query, salias, on_cond
-    )
-    bounds = _find_all(stmt, mask, _CLAUSE_BOUNDARY)
-    bounds = [b for b in bounds if b.start() >= first_when.start()]
-    for i, b in enumerate(bounds):
-        end = bounds[i + 1].start() if i + 1 < len(bounds) else len(stmt)
-        body = stmt[b.end() : end]
-        is_not = b.group(1) is not None
-        by = (b.group(2) or "").upper()
-        if not is_not and by:
-            raise SqlDmlError("WHEN MATCHED takes no BY qualifier")
-        cond, kind, payload = _parse_merge_action(body, requal, set_quals)
-        if not is_not:  # WHEN MATCHED
-            if kind == "insert":
-                raise SqlDmlError("WHEN MATCHED cannot INSERT")
-            merge.matched.append(
-                (kind, cond, payload) if kind == "update" else (kind, cond)
-            )
-        elif by == "SOURCE":  # WHEN NOT MATCHED BY SOURCE
-            if kind == "insert":
-                raise SqlDmlError("WHEN NOT MATCHED BY SOURCE cannot INSERT")
-            merge.by_source.append(
-                (kind, cond, payload) if kind == "update" else (kind, cond)
-            )
-        else:  # WHEN NOT MATCHED [BY TARGET]
-            if kind != "insert":
-                raise SqlDmlError("WHEN NOT MATCHED can only INSERT")
-            merge.not_matched.append((kind, cond, payload))
+    targets = (talias.lower(), "t")
+    merge = _Merge(target, talias, source_sql, is_query, salias,
+                   plan.at(plan.j.mergeCondition()))
+    for actions, out in (
+        (plan.j.matchedActions(), merge.matched),
+        (plan.j.notMatchedActions(), merge.not_matched),
+        (plan.j.notMatchedBySourceActions(), merge.by_source),
+    ):
+        for a in _seq(actions):
+            kind = a.nodeName()
+            cond = _opt(a.condition())
+            cond = _render(plan.at(cond), requal) if cond is not None else None
+            if kind == "DeleteAction":
+                out.append(("delete", cond))
+            elif kind == "UpdateStarAction":  # UPDATE SET *
+                out.append(("update", cond, None))
+            elif kind == "InsertStarAction":  # INSERT *
+                out.append(("insert", cond, None))
+            else:
+                out.append((
+                    "update" if kind == "UpdateAction" else "insert", cond,
+                    _assignments(a.assignments(), plan, targets, requal),
+                ))
     return merge
 
 
-def _parse_on_keys(
-    on: str, talias: str, salias: str, key_cols: tuple
+def _on_keys(
+    on: _Node, talias: str, salias: str, key_cols: tuple
 ) -> tuple[dict[str, str], list[str]]:
     """Split the ON condition into the key-equality conjunction and the
     residual (round 14 — Delta accepts arbitrary ON; the native merge
@@ -537,19 +582,16 @@ def _parse_on_keys(
     would silently mean something other than what the key-joined native
     merge computes."""
     expected = " AND ".join(f"{talias}.{k} = {salias}.{k}" for k in key_cols)
-    requal = {talias: "t", salias: "s"}
+    side = {talias.lower(): "t", salias.lower(): "s"}
     pairs: dict[str, str] = {}
     residual: list[str] = []
     key_set = {str(k) for k in key_cols}
-    for conj in _split_top_and(on):
-        m = re.match(
-            r"\s*\(?\s*(" + _IDENT + r")\s*\.\s*(" + _IDENT + r")\s*=\s*("
-            + _IDENT + r")\s*\.\s*(" + _IDENT + r")\s*\)?\s*$",
-            conj,
-        )
-        if m:
-            q1, c1, q2, c2 = (_unquote(g) for g in m.groups())
-            side = {talias.lower(): "t", salias.lower(): "s"}
+    for conj in on.conjuncts:
+        names = [
+            k.parts for k in conj.kids if k.kind == "UnresolvedAttribute"
+        ] if conj.kind == "EqualTo" else []
+        if len(names) == 2 and all(len(p) == 2 for p in names):
+            (q1, c1), (q2, c2) = names
             s1, s2 = side.get(q1.lower()), side.get(q2.lower())
             if s1 is not None and s2 is not None and s1 != s2:
                 tcol, scol = (c1, c2) if s1 == "t" else (c2, c1)
@@ -558,7 +600,7 @@ def _parse_on_keys(
                     continue
                 # a qualified equality on a non-key column (or a repeat
                 # of a key column) is an ordinary residual conjunct
-        residual.append(_requalify(conj.strip(), requal))
+        residual.append(_render(conj, side, parens=True))
     if set(pairs) != key_set:
         raise SqlDmlError(
             f"merge ON must contain the key-equality conjunction for the "
@@ -566,6 +608,13 @@ def _parse_on_keys(
             f"{sorted(pairs)}. Expected: ON {expected} [AND <residual>]"
         )
     return pairs, residual
+
+
+def _parse_on_keys(
+    on: str, talias: str, salias: str, key_cols: tuple
+) -> tuple[dict[str, str], list[str]]:
+    """:func:`_on_keys` over an ON condition given as text."""
+    return _on_keys(_parse(on, expression=True), talias, salias, key_cols)
 
 
 #: SQL single-quoted literal with standard '' escaping — the
@@ -584,62 +633,70 @@ def _sq_unquote(body: str) -> str:
     return body.replace("''", "'")
 
 
-def _split_top_and(s: str) -> list[str]:
-    mask = _mask(s)
-    cuts = [m for m in re.compile(r"\bAND\b", re.I).finditer(s)
-            if mask[m.start()] == (0, True)]
-    # a top-level AND that pairs with a preceding top-level BETWEEN is
-    # the BETWEEN's own connective, not a conjunction boundary
-    betweens = [m.start() for m in re.compile(r"\bBETWEEN\b", re.I).finditer(s)
-                if mask[m.start()] == (0, True)]
-    real_cuts, bi = [], 0
-    for m in cuts:
-        if bi < len(betweens) and betweens[bi] < m.start():
-            bi += 1  # this AND closes that BETWEEN
-            continue
-        real_cuts.append(m)
-    parts, last = [], 0
-    for m in real_cuts:
-        parts.append(s[last : m.start()])
-        last = m.end()
-    parts.append(s[last:])
-    return parts
+# --------------------------------------------------------------------------
+# file skipping
+# --------------------------------------------------------------------------
+
+#: comparison node → operator, and its mirror for ``literal <op> col``
+_CMP = {"EqualTo": "=", "LessThan": "<", "LessThanOrEqual": "<=",
+        "GreaterThan": ">", "GreaterThanOrEqual": ">="}
+_FLIP = {"<": ">", ">": "<", "<=": ">=", ">=": "<=", "=": "="}
 
 
-_NUM_LIT = r"-?\d+(?:\.\d+)?"
-_STR_LIT = r"'(?:[^']|'')*'"
-_LIT = rf"(?:{_NUM_LIT}|{_STR_LIT})"
+def _lit_value(lit):
+    """A literal's ``(type name, value text)`` as a skipping bound:
+    integers and decimals as int/float, strings as str; anything else
+    (NULL, booleans, doubles, typed literals such as ``DATE'…'``) is
+    None — it bounds nothing."""
+    if lit is None or not isinstance(lit[0], str):
+        return None
+    typ, val = lit
+    if typ == "string":
+        return val
+    if typ in ("integer", "long", "short", "byte"):
+        return int(val)
+    if typ.startswith("decimal"):  # decimal(p,s); its text may be 1E-10
+        return int(Decimal(val)) if typ.endswith(",0)") else float(val)
+    return None
 
 
-def _lit_value(tok: str):
-    tok = tok.strip()
-    if tok.startswith("'"):
-        return tok[1:-1].replace("''", "'")
-    return float(tok) if "." in tok else int(tok)
+def _in_values(node: _Node) -> list | None:
+    """The literals of ``col IN (lit, ...)`` as bounds, in one JVM call
+    (the node's JSON: the IN node, its column, then one Literal per
+    entry), else None."""
+    if not node.j.inSetConvertible():
+        return None
+    flat = json.loads(node.j.toJSON())[2:]
+    return [_lit_value((d["dataType"], d["value"])) for d in flat]
 
 
-def derive_prune(pred: str) -> dict:
-    """Derive ``{col: (lo, hi) | "isnull" | "notnull"}`` file-skipping
-    hints IMPLIED by a SQL predicate — what Delta does when it compiles
-    data skipping from the WHERE clause, rendered for the native ops'
-    ``prune=`` vocabulary (round 13: a scoped SQL UPDATE/DELETE must
-    cost O(files containing matches), not O(table)).
+def _py_bound(v):
+    """A collected IN-subquery value as :func:`_lit_value` reads the
+    literal it is spliced in as."""
+    if v is None or isinstance(v, bool):
+        return None
+    if isinstance(v, float):
+        return v if math.isfinite(v) else None
+    return v if isinstance(v, int) else str(v)
 
-    One-sided by construction: only top-level AND conjuncts of the
-    shapes ``col <op> literal``, ``literal <op> col``, ``col BETWEEN a
-    AND b``, ``col IN (literals)``, ``col IS [NOT] NULL`` contribute;
-    anything else (ORs, functions, subqueries, column-to-column) is
-    simply not pruned on. A top-level OR disables derivation entirely
-    (the statement is a disjunction — no conjunct is implied). The
-    native ops additionally conjoin the prune into the row predicate
+
+def _prune(conjuncts: list[_Node], qualifiers: dict[str, str],
+           in_values: dict | None = None) -> dict:
+    """``{col: (lo, hi) | "isnull" | "notnull"}`` file-skipping hints
+    IMPLIED by a conjunction — what Delta compiles from the WHERE clause,
+    rendered for the native ops' ``prune=`` vocabulary (round 13: a
+    scoped SQL UPDATE/DELETE must cost O(files containing matches), not
+    O(table)).
+
+    One-sided by construction: only conjuncts of the shapes ``col <op>
+    literal``, ``literal <op> col``, ``col BETWEEN a AND b``, ``col IN
+    (literals)``, ``col LIKE 'prefix%'`` and ``col IS [NOT] NULL``
+    contribute; anything else (an OR, functions, subqueries,
+    column-to-column) is simply not pruned on.  ``in_values`` maps an
+    ``IN (SELECT ...)`` node (by ``id``) to its materialized values.
+    The native ops additionally conjoin the prune into the row predicate
     (their documented self-consistency contract), so a derived hint can
     narrow a read but never split semantics."""
-    mask = _mask(pred)
-    if any(
-        mask[m.start()] == (0, True)
-        for m in re.compile(r"\bOR\b", re.I).finditer(pred)
-    ):
-        return {}
     out: dict = {}
     unprunable: set = set()
 
@@ -666,80 +723,63 @@ def derive_prune(pred: str) -> dict:
             return
         out[col] = (clo, chi)
 
-    ident = r"(?:[A-Za-z_][\w$]*|`[^`]+`|\"[^\"]+\")"
-    for raw in _split_top_and(pred):
-        c = raw.strip()
-        while c.startswith("(") and c.endswith(")") and _mask(c)[len(c) - 1] == (0, True):
-            inner = c[1:-1].strip()
-            if not inner:
-                break
-            c = inner
-        m = re.fullmatch(
-            rf"({ident})\s*(=|==|<=|>=|<|>)\s*({_LIT})", c
-        ) or re.fullmatch(
-            rf"({_LIT})\s*(=|==|<=|>=|<|>)\s*({ident})", c
-        )
-        if m:
-            a, op, b = m.groups()
-            col_first = re.fullmatch(ident, a) is not None
-            col = _unquote(a if col_first else b)
-            val = _lit_value(b if col_first else a)
-            if not col_first:  # 5 < col  ≡  col > 5
-                op = {"<": ">", ">": "<", "<=": ">=", ">=": "<="}.get(op, op)
-            if op in ("=", "=="):
-                _narrow(col, val, val)
-            elif op in ("<", "<="):
-                _narrow(col, None, val)
-            else:
-                _narrow(col, val, None)
+    for c in conjuncts:
+        kids = c.kids
+        col = _column(kids[0], qualifiers) if kids else None
+        if c.kind in _CMP:
+            op, val = _CMP[c.kind], _lit_value(kids[1].lit)
+            if col is None or val is None:  # 5 < col  ≡  col > 5
+                op = _FLIP[op]
+                col, val = _column(kids[1], qualifiers), _lit_value(kids[0].lit)
+            if col is None or val is None:
+                continue
+            _narrow(col, val if op in ("=", ">", ">=") else None,
+                    val if op in ("=", "<", "<=") else None)
+        elif col is None:
             continue
-        m = re.fullmatch(
-            rf"({ident})\s+BETWEEN\s+({_LIT})\s+AND\s+({_LIT})", c, re.I
-        )
-        if m:
-            col, lo, hi = m.groups()
-            _narrow(_unquote(col), _lit_value(lo), _lit_value(hi))
-            continue
-        m = re.fullmatch(
-            rf"({ident})\s+IN\s*\(\s*({_LIT}(?:\s*,\s*{_LIT})*)\s*\)", c, re.I
-        )
-        if m:
-            vals = [_lit_value(v) for v in _split_top(m.group(2))]
-            try:
-                _narrow(_unquote(m.group(1)), min(vals), max(vals))
-            except TypeError:
-                pass  # mixed-type literal list: not prunable
-            continue
-        m = re.fullmatch(
-            rf"({ident})\s+LIKE\s+'(?P<pat>(?:[^'%_]|'')*)%'", c, re.I
-        )
-        if m:
+        elif c.kind == "UnresolvedFunction" and c.parts == ["between"] and len(kids) == 3:
+            lo, hi = (_lit_value(k.lit) for k in kids[1:])
+            if lo is not None and hi is not None:
+                _narrow(col, lo, hi)
+        elif c.kind in ("In", "InSubquery"):
+            vals = (
+                _in_values(c) if c.kind == "In"
+                else (in_values or {}).get(id(c))
+            )
+            if vals and None not in vals:
+                try:
+                    _narrow(col, min(vals), max(vals))
+                except TypeError:
+                    pass  # mixed-type literal list: not prunable
+        elif c.kind == "Like" and (kids[1].lit or ("",))[0] == "string":
             # plain-prefix LIKE: 'abc%' implies 'abc' <= col < 'abd'
             # (Delta-style truncation-increment: bump the last
             # incrementable char; EVERY string with prefix 'abc' sorts
             # strictly below 'abd', so the inclusive hi is one-sided-
-            # sound). Round-14 advice fix: the old prefix+U+10FFFF upper
-            # bound was NOT implied by the predicate — a value
-            # 'abc\U0010FFFFx' matches LIKE 'abc%' but sorts above it,
-            # and since prune ranges conjoin into the row predicate that
-            # silently skipped matching rows. (No _ or interior % in the
-            # prefix — anything else is not a pure prefix test and
-            # contributes nothing.)
-            prefix = m.group("pat").replace("''", "'")
-            if prefix:
+            # sound). Round-14 advice fix: a prefix+U+10FFFF upper bound
+            # is NOT implied by the predicate — 'abc\U0010FFFFx' matches
+            # LIKE 'abc%' but sorts above it, and since prune ranges
+            # conjoin into the row predicate that silently skipped
+            # matching rows. (A wildcard or escape inside the prefix is
+            # not a pure prefix test and contributes nothing.)
+            pat, esc = kids[1].lit[1], c.j.escapeChar()
+            prefix = pat[:-1]
+            if pat.endswith("%") and prefix and not (set(prefix) & {"%", "_", esc}):
                 hi = None
                 for k in range(len(prefix) - 1, -1, -1):
                     if ord(prefix[k]) < 0x10FFFF:
                         hi = prefix[:k] + chr(ord(prefix[k]) + 1)
                         break
-                _narrow(_unquote(m.group(1)), prefix, hi)
-            continue
-        m = re.fullmatch(rf"({ident})\s+IS\s+(NOT\s+)?NULL", c, re.I)
-        if m and _unquote(m.group(1)) not in out:
-            out[_unquote(m.group(1))] = (
-                "notnull" if m.group(2) else "isnull"
-            )
+                _narrow(col, prefix, hi)
+        elif c.kind in ("IsNull", "IsNotNull") and col not in out:
+            out[col] = "notnull" if c.kind == "IsNotNull" else "isnull"
     return out
+
+
+def derive_prune(pred: str) -> dict:
+    """File-skipping hints implied by a SQL predicate given as text
+    (:func:`_prune` over Spark's parse of it)."""
+    return _prune(_parse(pred, expression=True).conjuncts, {})
 
 
 # --------------------------------------------------------------------------
@@ -754,203 +794,106 @@ def derive_prune(pred: str) -> dict:
 IN_SUBQUERY_CAP = 10_000
 
 
-class _OversizedInSubquery(Exception):
-    """Internal signal: an IN-subquery exceeded IN_SUBQUERY_CAP.
-    Carries what :func:`_resolve_in_subqueries` needs to decide whether
-    the term can run as a membership semi-join."""
-
-    def __init__(self, span: tuple[int, int], operand: str, sub: str,
-                 negated: bool):
-        super().__init__("oversized IN-subquery")
-        self.span = span          # [start, end) of operand..close-paren
-        self.operand = operand    # text of the left operand
-        self.sub = sub            # the subquery SQL
-        self.negated = negated
+def _sql_literal(v) -> str:
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, (int, float)):
+        return repr(v)
+    return _sq_quote(v)
 
 
-def _materialize_in_subqueries(spark, pred: str) -> str:
-    """Rewrite every ``[NOT] IN (SELECT ...)`` inside ``pred`` into a
-    LITERAL value list by running the subquery (round 13) — the GDPR
-    shape ``UPDATE t SET ... WHERE id IN (SELECT id FROM revoked)``
-    cannot ride ``F.expr`` (no subquery resolution outside spark.sql),
-    so the statement front evaluates the one-column subquery and splices
-    the values back as SQL literals. Semantics are EXACT, including SQL
-    three-valued logic: collected NULLs are rendered as literal NULL
-    (``x NOT IN (1, NULL)`` keeps its UNKNOWN behavior). Bounded: more
-    than :data:`IN_SUBQUERY_CAP` values is refused with guidance to use
-    MERGE (a join, not a literal). An empty result renders the standard
-    empty-IN identities (``IN`` → FALSE, ``NOT IN`` → TRUE)."""
-    mask = _mask(pred)
-    out, i = [], 0
-    pat = re.compile(r"\b(NOT\s+)?IN\s*\(\s*(?:SELECT|WITH)\b", re.I)
-    while True:
-        m = pat.search(pred, i)
-        if not m:
-            out.append(pred[i:])
-            break
-        if not mask[m.start()][1]:  # inside a string literal
-            out.append(pred[i : m.end()])
-            i = m.end()
+def _resolve_where(spark, where: "_Node | None", qualifiers: dict[str, str]):
+    """The WHERE as executed: ``(predicate, membership, prune)``.
+
+    ``predicate`` is the text with ``qualifiers`` applied and every
+    ``[NOT] IN (SELECT ...)`` run (round 13) — the GDPR shape ``UPDATE t
+    SET ... WHERE id IN (SELECT id FROM revoked)`` cannot ride ``F.expr``
+    (no subquery resolution outside spark.sql).  A subquery of at most
+    :data:`IN_SUBQUERY_CAP` rows is spliced back as a LITERAL list, with
+    SQL three-valued logic kept exact: NULLs ride as literal NULL, and
+    an empty result replaces the whole test with the standard identity
+    (``IN`` → FALSE, ``NOT IN`` → TRUE, for every operand).  Its values
+    feed the IN-list file skipping.
+
+    Above the cap (round 14) the term runs as a DISTRIBUTED semi-join
+    instead: ``membership`` is the ``(col, subjects_df, negated)`` spec
+    the native ops take, and the term leaves the predicate.  That needs
+    the term to be a whole top-level conjunct (under an OR/NOT its truth
+    value can't be factored out of the row predicate) with a plain
+    column operand (an expression operand would need evaluating per row
+    on both sides of the join key), and at most one such term per
+    statement (two subject sets would need two joins); anything else is
+    refused with guidance to use MERGE.
+
+    ``prune`` is :func:`_prune` over the executed conjuncts."""
+    if where is None:
+        return None, None, None
+    subs: dict = {}
+    in_values: dict = {}
+    big = []
+    for n, parent in where.walk():
+        if n.kind != "InSubquery":
             continue
-        negated = m.group(1) is not None
-        open_idx = pred.index("(", m.start())
-        depth_at_open = mask[open_idx][0]
-        close = next(
-            (
-                j
-                for j in range(open_idx + 1, len(pred))
-                if pred[j] == ")" and mask[j] == (depth_at_open, True)
-            ),
-            -1,
+        *operands, query = n.kids
+        # `x NOT IN (...)`: the NOT is inside the IN node's own origin
+        negated = (
+            parent is not None and parent.kind == "Not"
+            and parent.raw[0] == n.raw[0]
         )
-        if close < 0:
-            raise SqlDmlError(f"unbalanced parens in IN-subquery: {pred!r}")
-        sub = pred[open_idx + 1 : close].strip()
+        plan = n.at(query.j.plan())
+        sub = plan.text[slice(*plan.raw)]
         rows = spark.sql(sub).limit(IN_SUBQUERY_CAP + 1).collect()
         if len(rows) > IN_SUBQUERY_CAP:
-            op_start = _operand_start(pred, mask, m.start())
-            raise _OversizedInSubquery(
-                (op_start, close + 1),
-                pred[op_start : m.start()].strip(),
-                sub,
-                negated,
-            )
-        if rows and len(rows[0]) != 1:
+            big.append((parent if negated else n, operands, sub, negated))
+            continue
+        if len(operands) != 1 or (rows and len(rows[0]) != 1):
             raise SqlDmlError("IN-subquery must select exactly one column")
-        lits = []
-        for r in rows:
-            v = r[0]
-            if v is None:
-                lits.append("NULL")
-            elif isinstance(v, bool):
-                lits.append("TRUE" if v else "FALSE")
-            elif isinstance(v, (int, float)):
-                lits.append(repr(v))
-            else:
-                lits.append("'" + str(v).replace("'", "''") + "'")
-        if lits:
-            out.append(pred[i : m.start()])
-            out.append(
-                ("NOT " if negated else "") + "IN (" + ", ".join(lits) + ")"
-            )
+        vals = [r[0] for r in rows]
+        if vals:
+            lits = ", ".join(_sql_literal(v) for v in vals)
+            subs[id(n)] = (n.raw, ("NOT " if negated else "") + f"IN ({lits})", True)
+            in_values[id(n)] = [_py_bound(v) for v in vals]
         else:
-            # empty result set: SQL defines `x IN (empty)` as FALSE and
-            # `x NOT IN (empty)` as TRUE for EVERY x, including NULL —
-            # operand-independent, so the exact rewrite replaces the
-            # WHOLE comparison (operand included; it is side-effect
-            # free) with the constant. The operand's left boundary is
-            # found by a quote/paren-aware backward scan; a mis-cut can
-            # only yield text F.expr refuses loudly, never silently
-            # wrong semantics.
-            op_start = _operand_start(pred, mask, m.start())
-            out.append(pred[i:op_start])
-            out.append("(TRUE)" if negated else "(FALSE)")
-        i = close + 1
-    return "".join(out)
+            subs[id(n)] = (n.span, "(TRUE)" if negated else "(FALSE)", False)
+    if not big:
+        return (_render(where, qualifiers, subs), None,
+                _prune(where.conjuncts, qualifiers, in_values))
+    term, operands, sub, negated = big[0]
+    col = _column(operands[0], qualifiers) if len(operands) == 1 else None
+    if col is None:
+        raise SqlDmlError(
+            f"IN-subquery returns more than {IN_SUBQUERY_CAP} values "
+            f"and its operand is not a plain column — only `col [NOT] "
+            "IN (SELECT ...)` can run as a distributed semi-join; use "
+            "MERGE INTO for join-shaped updates"
+        )
+    if not any(c is term for c in where.conjuncts):
+        raise SqlDmlError(
+            f"IN-subquery returns more than {IN_SUBQUERY_CAP} values "
+            "and is not a whole top-level conjunct of the WHERE — "
+            "its truth value cannot be factored into a semi-join "
+            "there; rewrite the predicate or use MERGE INTO"
+        )
+    if len(big) > 1:
+        raise SqlDmlError(
+            "at most one oversized IN (SELECT ...) membership "
+            "test per statement; use MERGE INTO for multi-set "
+            "join updates"
+        )
+    kept = [c for c in where.conjuncts if c is not term]
+    pred = " AND ".join(
+        _render(c, qualifiers, subs, parens=True) for c in kept
+    ) or None
+    return (pred, (col, spark.sql(sub), negated),
+            _prune(kept, qualifiers, in_values))
 
 
-def _operand_start(pred: str, mask, end: int) -> int:
-    """Left boundary of the expression immediately before position
-    ``end`` — an identifier (possibly qualified/quoted), a function
-    call, or a parenthesized expression."""
-    j = end - 1
-    while j >= 0 and pred[j].isspace():
-        j -= 1
-    if j < 0:
-        raise SqlDmlError("IN-subquery has no left operand")
-    if pred[j] == ")":
-        depth = mask[j][0]
-        k = j - 1
-        while k >= 0 and not (pred[k] == "(" and mask[k] == (depth, True)):
-            k -= 1
-        if k < 0:
-            raise SqlDmlError("unbalanced operand parens before IN")
-        j = k - 1  # optional function name continues below
-    elif pred[j] in "`\"":
-        quote, k = pred[j], j - 1
-        while k >= 0 and pred[k] != quote:
-            k -= 1
-        j = k - 1
-    while j >= 0 and (pred[j].isalnum() or pred[j] in "_$."):
-        j -= 1
-    return j + 1
-
-
-def _resolve_in_subqueries(spark, pred: str):
-    """Round 14 — the full ``[NOT] IN (SELECT ...)`` resolution policy:
-    returns ``(pred_without_membership_term, membership | None)`` where
-    ``membership`` is the ``(col, subjects_df, negated)`` spec the native
-    ops' semi-join path takes.
-
-    Below :data:`IN_SUBQUERY_CAP` the subquery materializes to literals
-    (unchanged round-13 behavior — exact 3VL, and the literal list feeds
-    ``derive_prune``'s IN-list file skipping). Above the cap, the term
-    runs as a DISTRIBUTED semi-join instead of refusing — provided it is
-
-    - an ENTIRE top-level conjunct of the WHERE (under an OR/NOT the
-      term's truth value can't be factored out of the row predicate, so
-      those shapes still refuse with guidance), and
-    - a plain column operand (an expression operand would need the whole
-      expression evaluated per row on both sides of the join key).
-
-    At most one oversized term per statement (two independent subject
-    sets would need two joins; refused with guidance to MERGE)."""
-    try:
-        return _materialize_in_subqueries(spark, pred), None
-    except _OversizedInSubquery as e:
-        term = pred[e.span[0] : e.span[1]].strip()
-        opm = re.fullmatch(r"(" + _IDENT + r")", e.operand)
-        if not opm:
-            raise SqlDmlError(
-                f"IN-subquery returns more than {IN_SUBQUERY_CAP} values "
-                f"and its operand {e.operand!r} is not a plain column — "
-                "only `col [NOT] IN (SELECT ...)` can run as a "
-                "distributed semi-join; use MERGE INTO for join-shaped "
-                "updates"
-            )
-        kept: list[str] = []
-        hit = False
-        for c in _split_top_and(pred):
-            cs = c.strip()
-            core = cs
-            if cs.startswith("(") and cs.endswith(")"):
-                cmask = _mask(cs)
-                close0 = next(
-                    (i for i, ch in enumerate(cs)
-                     if ch == ")" and cmask[i] == (0, True)),
-                    -1,
-                )
-                # strip the outer pair only if it closes at the very end
-                if close0 == len(cs) - 1:
-                    core = cs[1:-1].strip()
-            if not hit and (cs == term or core == term):
-                hit = True
-                continue
-            kept.append(cs)
-        if not hit:
-            raise SqlDmlError(
-                f"IN-subquery returns more than {IN_SUBQUERY_CAP} values "
-                "and is not a whole top-level conjunct of the WHERE — "
-                "its truth value cannot be factored into a semi-join "
-                "there; rewrite the predicate or use MERGE INTO"
-            )
-        remaining = " AND ".join(kept) if kept else None
-        if remaining is not None:
-            try:
-                # NOTE: small IN-subqueries that already materialized in
-                # the aborted first pass re-run here — bounded (only
-                # statements that ALSO carry an oversized term pay it,
-                # and each small list is ≤ the cap), and sources are
-                # static within a statement (temp views / snapshots)
-                remaining = _materialize_in_subqueries(spark, remaining)
-            except _OversizedInSubquery:
-                raise SqlDmlError(
-                    "at most one oversized IN (SELECT ...) membership "
-                    "test per statement; use MERGE INTO for multi-set "
-                    "join updates"
-                )
-        membership = (_unquote(e.operand), spark.sql(e.sub), e.negated)
-        return remaining, membership
+def _materialize_in_subqueries(spark, pred: str) -> str | None:
+    """The predicate text of :func:`_resolve_where` for a WHERE given as
+    text."""
+    return _resolve_where(spark, _parse(pred, expression=True), {})[0]
 
 
 def _membership_filter(vt, df, membership):
@@ -1165,11 +1108,16 @@ def statement_target(stmt: str) -> str | None:
     views, leaving them un-restored on --sqlRollbackOnError). Returns
     None for non-mutating statements (DESCRIBE) and shapes without a
     view target (CONVERT — it creates the table it names)."""
+    if classify_dml(stmt):  # a DML target comes from Spark's parse
+        plan = _parse(stmt)
+        if plan.kind == "MergeIntoTable":
+            return _relation(plan.at(plan.j.targetTable()), True, "target")[0]
+        if plan.kind in ("UpdateTable", "DeleteFromTable", "InsertIntoStatement"):
+            return _relation(plan.at(plan.j.table()), True, "target")[0]
+        return None
     s = _strip_stmt(stmt)
     m = re.match(
-        rf"(?:UPDATE|DELETE\s+FROM|MERGE\s+INTO|"
-        rf"INSERT\s+(?:INTO|OVERWRITE(?:\s+TABLE)?)|"
-        rf"OPTIMIZE|VACUUM|RESTORE(?:\s+TABLE)?|ERASE\s+FROM|"
+        rf"(?:OPTIMIZE|VACUUM|RESTORE(?:\s+TABLE)?|ERASE\s+FROM|"
         rf"ALTER\s+TABLE|COPY\s+INTO|TRUNCATE\s+TABLE|"
         rf"ANALYZE\s+TABLE)\s+({_IDENT})",
         s, re.I,
@@ -1668,12 +1616,12 @@ def _execute_explain(spark, s: str, stmt: str, versioned_views: dict) -> dict:
             len(vt.files_matching(prune)) if prune else total
         )
 
-    def _membership_report(pred):
-        """Resolve [NOT] IN (SELECT ...) exactly as execution would and
-        report which plan the term takes; returns the residual pred."""
-        if pred is None:
-            return None
-        new_pred, membership = _resolve_in_subqueries(spark, pred)
+    def _where_effect(vt, where, table: str):
+        """Resolve the WHERE exactly as execution would — [NOT] IN
+        (SELECT ...) included — and report which plan such a term takes
+        and what the derived skipping reads."""
+        quals = {table.lower(): ""}
+        new_pred, membership, prune = _resolve_where(spark, where, quals)
         if membership is not None:
             col, subjects, negated = membership
             out["membership"] = {
@@ -1682,13 +1630,13 @@ def _execute_explain(spark, s: str, stmt: str, versioned_views: dict) -> dict:
                           f"{IN_SUBQUERY_CAP}: subjects join distributed, "
                           "never collected",
             }
-        elif new_pred != pred:
+        elif where is not None and new_pred != _render(where, quals):
             out["membership"] = {
                 "plan": "literal_inline",
                 "reason": f"subquery materialized to ≤{IN_SUBQUERY_CAP} "
                           "literals (feeds IN-list file skipping)",
             }
-        return new_pred
+        _scan_effect(vt, prune)
 
     dk = classify_dml(inner)
     if dk == "update":
@@ -1696,8 +1644,7 @@ def _execute_explain(spark, s: str, stmt: str, versioned_views: dict) -> dict:
         vt = _vt(u.table)
         out["class"] = "update"
         out["native_op"] = "update_where"
-        pred = _membership_report(u.predicate)
-        _scan_effect(vt, derive_prune(pred) if pred else {})
+        _where_effect(vt, u.where, u.table)
         out["set_columns"] = sorted(u.assignments)
         return out
     if dk == "delete":
@@ -1705,15 +1652,14 @@ def _execute_explain(spark, s: str, stmt: str, versioned_views: dict) -> dict:
         vt = _vt(d.table)
         out["class"] = "delete"
         out["native_op"] = "delete_where"
-        pred = _membership_report(d.predicate)
-        _scan_effect(vt, derive_prune(pred) if pred else {})
+        _where_effect(vt, d.where, d.table)
         return out
     if dk == "insert":
         ins = _parse_insert(inner)
         _vt(ins.table)
         out["class"] = "insert"
         out["native_op"] = "overwrite" if ins.overwrite else "append"
-        out["source"] = "values" if ins.values is not None else "query"
+        out["source"] = "values" if ins.inline else "query"
         return out
     if dk == "merge":
         mg = _parse_merge(inner)
@@ -1721,7 +1667,7 @@ def _execute_explain(spark, s: str, stmt: str, versioned_views: dict) -> dict:
         out["class"] = "merge"
         out["native_op"] = "merge"
         key_cols = vt.key_cols()
-        pairs, residual = _parse_on_keys(
+        pairs, residual = _on_keys(
             mg.on, mg.target_alias, mg.source_alias, key_cols
         )
         out["on_keys"] = dict(pairs)
@@ -1748,8 +1694,8 @@ def _execute_explain(spark, s: str, stmt: str, versioned_views: dict) -> dict:
         vt = _vt(m.group(1))
         out["class"] = "erase"
         out["native_op"] = "erase"
-        pred = _membership_report(m.group("p").strip())
-        _scan_effect(vt, derive_prune(pred) if pred else {})
+        _where_effect(vt, _parse(m.group("p").strip(), expression=True),
+                      _unquote(m.group(1)))
         return out
     if uk == "optimize":
         m = re.fullmatch(
@@ -2275,10 +2221,10 @@ def execute_utility(
                 f"{_UTILITY_GRAMMAR}"
             )
         t = _table(m.group(1))
-        pred = _requalify(
-            m.group("p").strip(), {_unquote(m.group(1)): ""}
+        pred, membership, prune = _resolve_where(
+            spark, _parse(m.group("p").strip(), expression=True),
+            {_unquote(m.group(1)).lower(): ""},
         )
-        pred, membership = _resolve_in_subqueries(spark, pred)
         if dryrun:
             # the one dryrun-able maintenance statement (round 15): a
             # GDPR erasure script MUST be previewable before it runs —
@@ -2296,7 +2242,7 @@ def execute_utility(
                     "statement": stmt}
         result = t.erase(
             pred or "true",
-            prune=(derive_prune(pred) or None) if pred else None,
+            prune=prune or None,
             membership=membership,
         )
         return {"mode": "sql_utility", "op": "erase",
@@ -2543,16 +2489,14 @@ def execute_dml(
         u = _parse_update(stmt)
         table_name = u.table
         vt = _target_table(u.table)
-        membership = None
-        if u.predicate:
-            # [NOT] IN (SELECT ...) → literal list below the cap (also
-            # unlocks derive_prune's IN-list skipping); above it, a
-            # conjunct-level term becomes a distributed semi-join spec
-            u.predicate, membership = _resolve_in_subqueries(
-                spark, u.predicate
-            )
+        # [NOT] IN (SELECT ...) → literal list below the cap (also
+        # unlocks the IN-list skipping); above it, a conjunct-level term
+        # becomes a distributed semi-join spec
+        pred, membership, prune = _resolve_where(
+            spark, u.where, {u.table.lower(): ""}
+        )
         if dryrun:
-            would = vt.snapshot().where(F.expr(u.predicate or "true"))
+            would = vt.snapshot().where(F.expr(pred or "true"))
             if membership is not None:
                 would = _membership_filter(vt, would, membership)
             n = would.count()
@@ -2571,24 +2515,22 @@ def execute_dml(
             }
         new_v = vt.update_where(
             u.assignments,
-            u.predicate or "true",
+            pred or "true",
             # file-skipping hints implied by the WHERE (Delta compiles
             # data skipping from the predicate; here the statement front
             # does): a scoped SQL UPDATE reads O(matching files)
-            prune=(derive_prune(u.predicate) or None) if u.predicate else None,
+            prune=prune or None,
             membership=membership,
         )
     elif kind == "delete":
         d = _parse_delete(stmt)
         table_name = d.table
         vt = _target_table(d.table)
-        membership = None
-        if d.predicate:
-            d.predicate, membership = _resolve_in_subqueries(
-                spark, d.predicate
-            )
+        pred, membership, prune = _resolve_where(
+            spark, d.where, {d.table.lower(): ""}
+        )
         if dryrun:
-            would = vt.snapshot().where(F.expr(d.predicate or "true"))
+            would = vt.snapshot().where(F.expr(pred or "true"))
             if membership is not None:
                 would = _membership_filter(vt, would, membership)
             n = would.count()
@@ -2597,8 +2539,8 @@ def execute_dml(
                 "rows_would_change": int(n), "statement": stmt,
             }
         new_v = vt.delete_where(
-            d.predicate or "true",
-            prune=(derive_prune(d.predicate) or None) if d.predicate else None,
+            pred or "true",
+            prune=prune or None,
             membership=membership,
         )
     elif kind == "insert":
@@ -2619,11 +2561,7 @@ def execute_dml(
                 f"identity column {ident[0]!r} is GENERATED ALWAYS; use a "
                 "column list that omits it (values are allocated)"
             )
-        if ins.values is not None:
-            rows_sql = ", ".join("(" + ", ".join(r) + ")" for r in ins.values)
-            src = spark.sql(f"VALUES {rows_sql}")
-        else:
-            src = spark.sql(ins.query)
+        src = spark.sql(ins.query)
         if len(src.columns) != len(target_cols):
             raise SqlDmlError(
                 f"INSERT arity mismatch: {len(target_cols)} target "
@@ -2670,7 +2608,7 @@ def execute_dml(
                 f"MERGE target {mg.target!r} has no declared key; the "
                 "native merge joins on the table key"
             )
-        pairs, residual = _parse_on_keys(
+        pairs, residual = _on_keys(
             mg.on, mg.target_alias, mg.source_alias, key_cols
         )
         src = (

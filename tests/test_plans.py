@@ -312,6 +312,22 @@ def test_explode_nonempty_row_set_matches_bare_explode(spark):
     assert line_dedup(docs, "doc_id", "text").count() == 6
 
 
+def test_explode_nonempty_debug_keeps_caller_columns(spark, monkeypatch):
+    """Under SPARK_GRAFT_DEBUG=1 the contract check selects a helper
+    column beside the caller's; a caller column with the helper's usual
+    name (``_src_sz``) must survive, values intact."""
+    from database_anonymiser_spark.operators.dedup import explode_nonempty
+
+    monkeypatch.setenv("SPARK_GRAFT_DEBUG", "1")
+    df = spark.createDataFrame(
+        [(1, 10, ["a", "b"]), (2, 20, [])],
+        "id long, _src_sz long, arr array<string>",
+    )
+    got = explode_nonempty(df, "arr", "x", "id", "_src_sz")
+    assert got.columns == ["id", "_src_sz", "x"]
+    assert sorted(map(tuple, got.collect())) == [(1, 10, "a"), (1, 10, "b")]
+
+
 def _heavy_filter_lines(plan: str) -> list[str]:
     """Filter lines carrying a heavy derived chain — the r15
     inferred-generate-filter class. 'array_join(' marks the shingle /

@@ -33,7 +33,7 @@ pytestmark = pytest.mark.usefixtures("in_tmp_path")
 
 
 # --------------------------------------------------------------------------
-# parser units (no Spark)
+# parser units (Spark's parser: the session fixture, no jobs)
 # --------------------------------------------------------------------------
 
 def test_classify():
@@ -44,21 +44,27 @@ def test_classify():
     assert classify_dml("WITH x AS (SELECT 1) SELECT * FROM x") is None
 
 
-def test_parse_update_basic():
+def test_parse_update_basic(spark):
     u = _parse_update("UPDATE cust SET v = upper(v), n = n + 1 WHERE k <= 2;")
     assert u.table == "cust"
     assert u.assignments == {"v": "upper(v)", "n": "n + 1"}
     assert u.predicate == "k <= 2"
 
 
-def test_parse_update_no_where_and_quoted():
-    u = _parse_update('UPDATE `cust` SET "v" = \'a,b=c WHERE x\'')
+def test_parse_update_no_where_and_quoted(spark):
+    u = _parse_update("UPDATE `cust` SET `v` = 'a,b=c WHERE x'")
     assert u.table == "cust"
     assert u.assignments == {"v": "'a,b=c WHERE x'"}
     assert u.predicate is None
 
 
-def test_parse_update_case_when_expr():
+def test_parse_update_double_quoted_column_refused(spark):
+    # "v" is a string literal in Spark SQL, not a column: SET refuses it
+    with pytest.raises(SqlDmlError):
+        _parse_update('UPDATE `cust` SET "v" = \'a,b=c WHERE x\'')
+
+
+def test_parse_update_case_when_expr(spark):
     # CASE WHEN inside a SET expr must not confuse the skeleton scan
     u = _parse_update(
         "UPDATE t SET v = CASE WHEN k > 2 THEN 'hi' ELSE v END "
@@ -68,13 +74,17 @@ def test_parse_update_case_when_expr():
     assert u.predicate.startswith("v IN (SELECT")
 
 
-def test_parse_update_self_qualifier_stripped():
+def test_parse_update_self_qualifier_stripped(spark):
     u = _parse_update("UPDATE cust SET cust.v = concat(cust.v, '!') WHERE cust.k = 1")
     assert u.assignments == {"v": "concat(v, '!')"}
     assert u.predicate == "k = 1"
+    # only a FIRST name part is a qualifier: a struct field named like
+    # the table is kept
+    u = _parse_update("UPDATE cust SET v = info.cust.k")
+    assert u.assignments == {"v": "info.cust.k"}
 
 
-def test_parse_update_refusals():
+def test_parse_update_refusals(spark):
     with pytest.raises(SqlDmlError):  # alias unsupported
         _parse_update("UPDATE cust AS c SET v = 1")
     with pytest.raises(SqlDmlError):  # foreign qualifier on SET column
@@ -85,7 +95,7 @@ def test_parse_update_refusals():
         _parse_update("UPDATE cust SET v = 1 WHERE ")
 
 
-def test_parse_delete():
+def test_parse_delete(spark):
     d = _parse_delete("DELETE FROM cust WHERE k = 3")
     assert (d.table, d.predicate) == ("cust", "k = 3")
     d2 = _parse_delete("delete from cust;")
@@ -94,7 +104,7 @@ def test_parse_delete():
         _parse_delete("DELETE FROM cust c WHERE c.k = 3")
 
 
-def test_parse_merge_full_grammar():
+def test_parse_merge_full_grammar(spark):
     m = _parse_merge(
         "MERGE INTO cust AS c USING (SELECT * FROM src WHERE k > 0) AS u "
         "ON c.k = u.k "
@@ -112,9 +122,15 @@ def test_parse_merge_full_grammar():
         ("insert", "s.op != 'del'", {"k": "s.k", "v": "s.v"})
     ]
     assert m.by_source == [("delete", "t.k > 100")]
+    # a source struct field named like the target alias is not renamed
+    m = _parse_merge(
+        "MERGE INTO cust AS c USING src AS u ON c.k = u.k "
+        "WHEN MATCHED THEN UPDATE SET v = u.c.x + 1"
+    )
+    assert m.matched == [("update", None, {"v": "s.c.x + 1"})]
 
 
-def test_parse_merge_star_forms_and_named_source():
+def test_parse_merge_star_forms_and_named_source(spark):
     m = _parse_merge(
         "MERGE INTO cust t USING src s ON t.k = s.k "
         "WHEN MATCHED THEN UPDATE SET * "
@@ -125,7 +141,7 @@ def test_parse_merge_star_forms_and_named_source():
     assert m.not_matched == [("insert", None, None)]
 
 
-def test_parse_merge_case_when_in_clause_expr():
+def test_parse_merge_case_when_in_clause_expr(spark):
     m = _parse_merge(
         "MERGE INTO a t USING b s ON t.k = s.k "
         "WHEN MATCHED THEN UPDATE SET v = CASE WHEN s.v > t.v THEN s.v ELSE t.v END"
@@ -133,7 +149,7 @@ def test_parse_merge_case_when_in_clause_expr():
     assert m.matched[0][2]["v"].startswith("CASE WHEN")
 
 
-def test_parse_merge_refusals():
+def test_parse_merge_refusals(spark):
     with pytest.raises(SqlDmlError):  # no WHEN clause
         _parse_merge("MERGE INTO a t USING b s ON t.k = s.k")
     with pytest.raises(SqlDmlError):  # matched INSERT
@@ -163,7 +179,7 @@ def test_parse_merge_refusals():
         )
 
 
-def test_parse_on_keys():
+def test_parse_on_keys(spark):
     assert _parse_on_keys("t.k = s.kk", "t", "s", ("k",)) == ({"k": "kk"}, [])
     # reversed sides + composite
     assert _parse_on_keys(
@@ -277,6 +293,16 @@ def test_e2e_rollback_tracks_quoted_target(spark, dml_env):
     assert t.latest_version() > v0  # history keeps the attempt
     rows = {r["k"]: r["v"] for r in t.snapshot().collect()}
     assert rows[1] == "one"
+    # INSERT INTO TABLE <view>: the tracked target is Spark's parse of it
+    v1 = t.latest_version()
+    rc = _run([
+        "--sql", "INSERT INTO TABLE cust VALUES (5, 'five');\n"
+                 "UPDATE cust SET nope = 1;\n",
+        "--data", str(data_dir), "--versionedTable", f"cust={root}",
+        "--sqlRollbackOnError",
+    ])
+    assert rc == 2 and t.latest_version() > v1 + 1  # insert, then restore
+    assert 5 not in {r["k"] for r in t.snapshot().collect()}
 
 
 def test_e2e_sql_update_commit_cdf_timetravel(spark, dml_env, tmp_path):
@@ -605,7 +631,7 @@ def test_e2e_sql_script_and_dryrun(spark, dml_env, tmp_path):
     assert rc == 2 and t.latest_version() == v0 + 3
 
 
-def test_parse_insert():
+def test_parse_insert(spark):
     from database_anonymiser_spark.sql_dml import _parse_insert
 
     i = _parse_insert("INSERT INTO cust (k, v) VALUES (7, 'x'), (8, concat('y', 'z'))")
@@ -659,7 +685,7 @@ def test_e2e_sql_insert(spark, dml_env, tmp_path):
     assert rc == 2
 
 
-def test_derive_prune_units():
+def test_derive_prune_units(spark):
     from database_anonymiser_spark.sql_dml import derive_prune as dp
 
     assert dp("k >= 100") == {"k": (100, None)}
@@ -679,9 +705,12 @@ def test_derive_prune_units():
     assert dp("k > 5 AND (v = 'x' OR v = 'y')") == {"k": (5, None)}
     # string with escaped quote; float literal
     assert dp("v = 'it''s' AND p < 1.5") == {"v": ("it's", "it's"), "p": (None, 1.5)}
+    assert dp("p < 0.0000000001") == {"p": (None, 1e-10)}
     # column-to-column and subqueries are not prunable
     assert dp("a = b") == {}
     assert dp("k IN (SELECT k FROM t)") == {}
+    # "k" is a string literal, not a column
+    assert dp("\"k\" = 'k'") == {}
 
 
 def test_e2e_sql_update_prunes_files(spark, tmp_path):
@@ -716,6 +745,51 @@ def test_e2e_sql_update_prunes_files(spark, tmp_path):
     assert m["files_touched"] == 1 and m["files_carried"] == 3
     rows = {r["k"]: r["v"] for r in t.snapshot().collect()}
     assert rows[200] == "X" and rows[100] == "x" and rows[300] == "x"
+
+
+def test_e2e_double_quoted_name_is_a_string_literal(spark, tmp_path):
+    """``"name"`` is a string literal in Spark SQL, so ``"name" =
+    'name'`` is TRUE for every row: all three rows change. Reading it as
+    the column ``name`` would derive a file-skipping hint that (conjoined
+    into the row predicate) changes only the row whose name is 'name'."""
+    data_dir = tmp_path / "data"
+    data_dir.mkdir()
+    spark.range(1).write.parquet(str(data_dir / "dummy.parquet"))
+    root = tmp_path / "t"
+    t = VersionedTable.create(
+        spark, str(root),
+        spark.createDataFrame(
+            [(1, "name", "x"), (2, "other", "x"), (3, None, "x")],
+            "k long, name string, v string",
+        ),
+        key_col="k",
+    )
+    rc = _run([
+        "--sql", "UPDATE t SET v = 'y' WHERE \"name\" = 'name'",
+        "--data", str(data_dir), "--versionedTable", f"t={root}",
+    ])
+    assert rc == 0
+    assert sorted(r["v"] for r in t.snapshot().collect()) == ["y", "y", "y"]
+
+
+def test_e2e_refused_statement_prints_only_the_error(dml_env, capfd):
+    """A statement Spark's parser refuses reaches the user as the one
+    ``sql dml:`` line — no ERROR log record or JVM stack trace."""
+    data_dir, root = dml_env
+    for stmt in (
+        "UPDATE cust SET WHERE k = 1",
+        "MERGE INTO cust t USING src s ON t.k = s.k",
+    ):
+        capfd.readouterr()
+        rc = _run([
+            "--sql", stmt,
+            "--data", str(data_dir), "--versionedTable", f"cust={root}",
+        ])
+        out, err = capfd.readouterr()
+        assert rc == 2
+        assert "sql dml: [" in err  # Spark's error class leads the message
+        for noise in ("SQLQueryContextLogger", "Traceback", "\tat org.apache"):
+            assert noise not in out + err
 
 
 def test_e2e_sql_maintenance_statements(spark, dml_env, tmp_path):
@@ -1732,7 +1806,7 @@ def test_emitted_sql_script_reproduces_keyed_apply(spark, sf_dir, tmp_path):
         S.set_hmac_key(None)
 
 
-def test_derive_prune_like_prefix():
+def test_derive_prune_like_prefix(spark):
     from database_anonymiser_spark.sql_dml import derive_prune as dp
 
     # truncation-increment upper bound (round-14 advice fix): every
@@ -1753,7 +1827,7 @@ def test_derive_prune_like_prefix():
     assert dp("v LIKE '%'") == {}
 
 
-def test_derive_prune_mixed_type_bounds_drop_column():
+def test_derive_prune_mixed_type_bounds_drop_column(spark):
     """Round-14 advice fix: mixed literal types on one column must drop
     it from pruning (conservative), not raise an uncaught TypeError out
     of execute_dml past the CLI's except clause."""

@@ -1,9 +1,10 @@
-"""Property tests for the SQL statement front's scanner primitives
-(round 13): the quote/paren mask, the top-level splitter, the comment
-stripper, and derive_prune's structural invariants. These are the
-load-bearing parsing pieces — a mask bug would mis-split a statement
-whose EXPRESSIONS contain commas/keywords inside strings, the silent
-class of bug the e2e tests can't enumerate."""
+"""Property tests for the SQL statement front (round 13): the scanner
+primitives that still split scripts and parse the engine's own
+statements (the quote/paren mask, the top-level splitter, the comment
+stripper), derive_prune's structural invariants and the MERGE ON split
+over Spark's parse tree. A mask bug would mis-split a script whose
+EXPRESSIONS contain commas/keywords inside strings, the silent class of
+bug the e2e tests can't enumerate."""
 
 from __future__ import annotations
 
@@ -77,7 +78,7 @@ def test_line_comments_stripped_outside_strings(code, comment):
         max_size=5,
     )
 )
-def test_derive_prune_structural_invariants(conjuncts):
+def test_derive_prune_structural_invariants(spark, conjuncts):
     pred = " AND ".join(f"{c} {op} {v}" for c, op, v in conjuncts)
     prune = derive_prune(pred)
     mentioned = {c for c, _o, _v in conjuncts}
@@ -97,19 +98,18 @@ def test_derive_prune_structural_invariants(conjuncts):
 
 @settings(max_examples=200, deadline=None)
 @given(st.lists(st.integers(-5, 5), min_size=1, max_size=6))
-def test_derive_prune_equality_chain_is_intersection(vals):
+def test_derive_prune_equality_chain_is_intersection(spark, vals):
     pred = " AND ".join(f"k = {v}" for v in vals)
     prune = derive_prune(pred)
     assert prune == {"k": (max(vals), min(vals))}
 
 
 # --------------------------------------------------------------------------
-# round 14: ON-split, conjunct splitter, literal escaping, MV parser
+# round 14: ON-split, literal escaping, MV parser
 # --------------------------------------------------------------------------
 
 from database_anonymiser_spark.sql_dml import (  # noqa: E402
     _parse_on_keys,
-    _split_top_and,
     _sq_quote,
     _sq_unquote,
     _SQ_LIT,
@@ -127,6 +127,8 @@ _residual = st.sampled_from([
     "coalesce(s.x, 0) <> t.y",
     "(t.p = 1 OR s.q = 2)",
     "s.name LIKE 'a%'",
+    "name = 'x AND y'",
+    "upper(v) IN ('AND', 'OR')",
 ])
 
 
@@ -136,7 +138,7 @@ _residual = st.sampled_from([
     residuals=st.lists(_residual, max_size=3),
     flip=st.booleans(),
 )
-def test_on_split_partitions_conjuncts(keys, residuals, flip):
+def test_on_split_partitions_conjuncts(spark, keys, residuals, flip):
     """_parse_on_keys: the key-equality conjuncts land in the pair map,
     EVERYTHING else lands verbatim (requalified) in the residual — a
     partition, nothing dropped, order preserved within the residual."""
@@ -155,29 +157,6 @@ def test_on_split_partitions_conjuncts(keys, residuals, flip):
             assert False, "missing key equality must refuse"
         except SqlDmlError:
             pass
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    conjs=st.lists(
-        st.sampled_from([
-            "k = 1",
-            "v BETWEEN 2 AND 9",
-            "name = 'x AND y'",
-            "(a = 1 AND b = 2)",
-            "ts BETWEEN '2020' AND '2021'",
-            "upper(v) IN ('AND', 'OR')",
-        ]),
-        min_size=1,
-        max_size=5,
-    )
-)
-def test_split_top_and_round_trips(conjs):
-    """Joining conjuncts with AND then splitting returns the SAME list
-    (modulo the surrounding whitespace callers strip): BETWEEN's own
-    AND, quoted ANDs, and parenthesized ANDs never split."""
-    got = [c.strip() for c in _split_top_and(" AND ".join(conjs))]
-    assert got == conjs
 
 
 @settings(max_examples=300, deadline=None)
