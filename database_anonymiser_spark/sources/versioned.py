@@ -225,6 +225,12 @@ class _FileEntry:
     clustered: "bool | int | None" = None
 
 
+def _col(name: str):
+    """The column ``name``, quoted: a bare ``F.col`` reads dots as struct
+    access and refuses a name with a backtick."""
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
 def _log_path(root: Path, version: int) -> Path:
     return root / _LOG_DIR / f"{version:08d}.json"
 
@@ -1589,9 +1595,9 @@ class VersionedTable:
             else schema
         )
         out_cols = (
-            [F.col(m.get(f.name, f.name)).alias(f.name) for f in schema.fields]
+            [_col(m.get(f.name, f.name)).alias(f.name) for f in schema.fields]
             if m
-            else [F.col(f.name) for f in schema.fields]
+            else [_col(f.name) for f in schema.fields]
         )
         dv_map = {p: r for p, r in (dv_map or {}).items() if p in set(paths)}
         meta_cols = [
@@ -3535,9 +3541,9 @@ class VersionedTable:
                 pred = pred & member
             rewritten = tgt.select(
                 *[
-                    F.when(pred, assigns[c]).otherwise(F.col(c)).alias(c)
+                    F.when(pred, assigns[c]).otherwise(_col(c)).alias(c)
                     if c in assigns
-                    else F.col(c)
+                    else _col(c)
                     for c in out_cols
                 ]
             )

@@ -3,11 +3,14 @@
 The reference's executor never touches rows itself — it COMPILES the
 plan to per-table ``UPDATE "t" SET "col" = expr`` statements and ships
 them to Postgres (``src/executor/query-builder.ts:52-74``). This module
-is that compiler for the Spark engine: the same resolved, type-safety-
-normalized plan the executor runs is rendered to reviewable SQL, one
-UPDATE per table, runnable back through ``--sqlFile`` against
-``--versionedTable`` views (the round-13 DML face routes each statement
-to the native copy-on-write ops).
+renders that script for the Spark engine: the same resolved, type-safety-
+normalized plan the executor runs, one UPDATE per table, each SET
+expression the text of ``strategies.strategy_sql`` — the very text
+``--apply`` runs through ``selectExpr``, so there is one compiler, not
+a twin to keep equal. Every table and column identifier is backtick-
+quoted. The script runs back through ``--sqlFile`` against
+``--versionedTable`` views (the DML face routes each statement to the
+native copy-on-write ops).
 
 Why it exists: the emitted script is the reference's LITERAL artifact —
 a user migrating from the reference can diff this script against what
@@ -27,65 +30,12 @@ config/report/log paths.
 from __future__ import annotations
 
 from database_anonymiser_spark.strategies import (
-    DEFAULT_TRUNCATE_LENGTH,
     normalize_columns_for_types,
+    quote_ident,
+    strategy_sql,
 )
 
-__all__ = ["strategy_sql", "emit_sql_script", "emit_erase_script"]
-
-
-def _s(col: str) -> str:
-    """The reference's null-safe stringification, as SQL."""
-    return f"coalesce(CAST({col} AS STRING), '')"
-
-
-def strategy_sql(
-    strategy: str, col: str, type_sql: str, params: dict | None = None
-) -> str | None:
-    """SQL rendering of one (strategy, column) — the exact twin of
-    ``strategies.strategy_expr`` (asserted value-equal by the pytest
-    equivalence check). Returns None for KEEP/unknown (no SET clause —
-    query-builder.ts:48-56)."""
-    params = params or {}
-    s = (strategy or "KEEP").upper()
-    if s == "SET_NULL":
-        return f"CAST(NULL AS {type_sql})"
-    if s == "REDACT":
-        return "'***'"
-    if s == "HASH_SHA256":  # the reference's md5-under-that-name quirk
-        return f"md5({_s(col)})"
-    if s == "HASH_SHA256_REAL":
-        return f"sha2({_s(col)}, 256)"
-    if s == "HASH_HMAC":
-        # raw-byte RFC 2104 — the exact twin of strategies.hash_hmac
-        # (binary pads via unhex, inner digest unhex'd back to bytes);
-        # round-14 advice fix: the hex-text shape below is HASH_KEYED's,
-        # and emitting it here produced different values than --apply
-        inner = (
-            "sha2(concat(unhex('{{HMAC_IPAD_HEX}}'), CAST("
-            + _s(col)
-            + " AS BINARY)), 256)"
-        )
-        return (
-            "sha2(concat(unhex('{{HMAC_OPAD_HEX}}'), unhex("
-            + inner
-            + ")), 256)"
-        )
-    if s == "HASH_KEYED":
-        # hex-text keyed_hash construction (engine-portable: no binary
-        # concat needed) with key-material placeholders — see the module
-        # docstring; strategies.keyed_hash_sql renders the same shape
-        # for a CONCRETE key when an auditor asks
-        return (
-            "sha2(concat('{{HMAC_OPAD_HEX}}', sha2(concat("
-            "'{{HMAC_IPAD_HEX}}', " + _s(col) + "), 256)), 256)"
-        )
-    if s == "TRUNCATE":
-        n = int(params.get("n", DEFAULT_TRUNCATE_LENGTH))
-        return f"substring({_s(col)}, 1, {n})"
-    if s == "EMAIL_FAKE":
-        return f"concat(md5({_s(col)}), '@example.com')"
-    return None  # KEEP / unknown: no SET clause
+__all__ = ["emit_sql_script", "emit_erase_script"]
 
 
 def emit_sql_script(catalog, plan, transactional: bool = False) -> str:
@@ -125,14 +75,12 @@ def emit_sql_script(catalog, plan, transactional: bool = False) -> str:
         except Exception:
             lines.append(f"-- {pt.name}: not in the extract, skipped")
             continue
-        types = {f.name: f.dataType.simpleString() for f in schema.fields}
         sets = []
         for nc in normalize_columns_for_types(list(pt.columns), schema):
-            expr = strategy_sql(
-                nc.strategy, nc.column, types[nc.column], nc.params
-            )
+            col = quote_ident(nc.column)
+            expr = strategy_sql(nc.strategy, col, nc.params)
             if expr is not None:
-                sets.append(f"{nc.column} = {expr}")
+                sets.append(f"{col} = {expr}")
             if nc.downgraded_from:
                 lines.append(
                     f"-- {pt.name}.{nc.column}: {nc.downgraded_from} "
@@ -142,7 +90,7 @@ def emit_sql_script(catalog, plan, transactional: bool = False) -> str:
             lines.append(f"-- {pt.name}: no active rewrites, skipped")
             lines.append("")
             continue
-        lines.append(f"UPDATE {pt.name} SET")
+        lines.append(f"UPDATE {quote_ident(pt.name)} SET")
         lines.append(",\n".join(f"  {s}" for s in sets) + ";")
         lines.append("")
         emitted += 1

@@ -1,14 +1,21 @@
-"""Masking strategies as native Spark Column expressions.
+"""Masking strategies, compiled to Spark SQL text.
 
 Rebuilds the strategy compiler of the reference
 (``src/executor/query-builder.ts:21-51``) and the type-safety downgrade guard
-(``src/executor/executor.ts:45-85``) as pure functions over ``Column`` /
-``StructType``.
+(``src/executor/executor.ts:45-85``). Like the reference, the compiler emits
+SQL text, one expression per (strategy, column): :func:`strategy_sql`. The
+same text serves both faces of the engine:
+
+- ``--dryrun`` / ``--apply``: :func:`masked_projection` builds a table's mask
+  as ONE ``df.selectExpr(...)`` of that text, so Catalyst parses and analyses
+  the whole projection in one JVM call;
+- ``--emitSql``: ``sql_gen`` renders the same text into reviewable
+  ``UPDATE ... SET`` statements.
 
 100 TB posture: every strategy is a built-in Catalyst expression (md5,
 coalesce, substring, concat, literals) — whole-stage-codegen'd on the JVM, no
 Python in the row path, no serialization boundary. A full-table mask is one
-narrow ``select`` projection: no shuffle, scales linearly with input splits.
+narrow projection: no shuffle, scales linearly with input splits.
 
 Semantics preserved exactly:
 - ``HASH_SHA256`` is **actually md5** in the reference
@@ -24,8 +31,12 @@ from __future__ import annotations
 import hashlib
 import logging
 import os
+import re
+import threading
 from dataclasses import dataclass, field
 
+from pyspark.errors.exceptions.captured import CapturedException
+from pyspark.logger import PySparkLogger
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -45,13 +56,6 @@ ALWAYS_ALLOWED = frozenset({"KEEP", "SET_NULL"})
 # The HASH strategy family shares one type-safety rule (executor.ts:76-81).
 HASH_FAMILY = frozenset({"HASH_SHA256", "HASH_SHA256_REAL", "HASH_HMAC", "HASH_KEYED"})
 
-KNOWN_STRATEGIES = frozenset(
-    {
-        "KEEP", "SET_NULL", "REDACT", "HASH_SHA256", "HASH_SHA256_REAL",
-        "HASH_HMAC", "HASH_KEYED", "TRUNCATE", "EMAIL_FAKE",
-    }
-)
-
 #: env var the keyed HASH_HMAC strategy reads its secret from when no key
 #: was set programmatically / via --hmacKey. The key lives ONLY in the
 #: process environment or the CLI invocation — never in the YAML config,
@@ -59,6 +63,23 @@ KNOWN_STRATEGIES = frozenset(
 HMAC_KEY_ENV = "ANONYMISER_HMAC_KEY"
 _HMAC_BLOCK = 64  # SHA-256 block size (RFC 2104)
 _hmac_key_override: "bytes | None" = None
+
+#: placeholders the keyed strategies' SQL carries instead of pad material;
+#: :func:`masked_projection` substitutes them in memory, an emitted script
+#: keeps them for the operator to fill at run time
+IPAD_HEX = "{{HMAC_IPAD_HEX}}"
+OPAD_HEX = "{{HMAC_OPAD_HEX}}"
+
+#: 32+ contiguous hex chars (optionally 0x-prefixed): the shape of the HMAC
+#: pad literals (64-byte pads = 128 hex chars). Analyzer error messages can
+#: embed expression literals, so text derived from a keyed plan or its
+#: errors passes through :func:`redact_pad_hex` before it is reported.
+_PAD_HEX = re.compile(r"(?:0x)?[0-9A-Fa-f]{32,}")
+
+
+def redact_pad_hex(text) -> str:
+    """``text`` with every pad-shaped hex run replaced by a marker."""
+    return _PAD_HEX.sub("<redacted-literal>", str(text))
 
 
 def set_hmac_key(key: "str | bytes | None") -> None:
@@ -72,7 +93,11 @@ def set_hmac_key(key: "str | bytes | None") -> None:
         _hmac_key_override = key.encode() if isinstance(key, str) else bytes(key)
 
 
-def _resolve_hmac_key() -> bytes:
+def _resolve_hmac_key(key: "str | bytes | None" = None) -> bytes:
+    """Key precedence: explicit ``key`` > :func:`set_hmac_key` >
+    ``ANONYMISER_HMAC_KEY`` — never the YAML config, never logged."""
+    if key is not None:
+        return key.encode() if isinstance(key, str) else bytes(key)
     if _hmac_key_override is not None:
         return _hmac_key_override
     env = os.environ.get(HMAC_KEY_ENV)
@@ -85,41 +110,11 @@ def _resolve_hmac_key() -> bytes:
     )
 
 
-def _as_string(col: Column) -> Column:
-    """``COALESCE(col::text, '')`` — the reference's null-safe stringification."""
-    return F.coalesce(col.cast("string"), F.lit(""))
-
-
-def keep(col: Column) -> Column:
-    """T1 KEEP — identity (query-builder.ts:22-23)."""
-    return col
-
-
-def set_null(col: Column, data_type: T.DataType | str = "string") -> Column:
-    """T2 SET_NULL — typed NULL (query-builder.ts:25-26)."""
-    return F.lit(None).cast(data_type)
-
-
-def redact(col: Column) -> Column:
-    """T3 REDACT — constant '***' (query-builder.ts:29-30)."""
-    return F.lit("***")
-
-
-def hash_md5(col: Column) -> Column:
-    """T4 'HASH_SHA256' — md5(coalesce(col::text,'')) (query-builder.ts:33-34)."""
-    return F.md5(_as_string(col))
-
-
-def hash_sha256(col: Column) -> Column:
-    """Extension: what the reference's name promised — real SHA-256."""
-    return F.sha2(_as_string(col), 256)
-
-
 def _hmac_pads(key: bytes) -> tuple[bytes, bytes]:
     """RFC 2104 inner/outer pads for SHA-256: keys longer than the 64-byte
     block are hashed first, then zero-padded; pads are key ⊕ 0x36 / 0x5c.
     Driver-side byte arithmetic. CAVEAT (honest, not hand-waved): the
-    pads ride the compiled plan as binary literals and are KEY-EQUIVALENT
+    pads ride the compiled plan as literals and are KEY-EQUIVALENT
     material (XOR with the public constants inverts them) — the key
     stays out of configs/reports/logs BY THIS MODULE, but an
     ``EXPLAIN``/plan dump of a keyed expression must be treated as
@@ -133,77 +128,99 @@ def _hmac_pads(key: bytes) -> tuple[bytes, bytes]:
     )
 
 
-def hash_hmac(col: Column, key: "str | bytes | None" = None) -> Column:
-    """Keyed deterministic masking: HMAC-SHA256(key, coalesce(col::text,''))
-    as pure Column expressions — the production-grade upgrade over T4's
-    bare md5 (round-12 verdict #1): an un-keyed hash of a LOW-ENTROPY
-    domain (phone numbers ≈ 10^10 preimages — the reference's own default
-    HASH targets, ``config-generator.ts:11-17``) is dictionary-reversible;
-    HMAC with a secret key is not, while staying deterministic (same
-    input + key → same token, so joins across masked tables still work).
-
-    RFC 2104 construction, JVM-side only: H((K⊕opad) ∥ H((K⊕ipad) ∥ m))
-    = two nested ``sha2(concat(binary, ...))`` — whole-stage-codegen'd,
-    no Python in the row path, reproducible in any ANSI engine with
-    sha256/concat/unhex (the ``mask_strategies`` 'hmac' oracle variant
-    pins it against DuckDB and Python's ``hmac`` stdlib). Key resolution:
-    explicit arg > :func:`set_hmac_key` > ``ANONYMISER_HMAC_KEY`` env —
-    never the YAML config, never logged, never in the report."""
-    kb = (
-        key.encode() if isinstance(key, str)
-        else bytes(key) if key is not None
-        else _resolve_hmac_key()
-    )
-    ipad, opad = _hmac_pads(kb)
-    inner = F.sha2(
-        F.concat(F.lit(ipad), _as_string(col).cast("binary")), 256
-    )
-    return F.sha2(F.concat(F.lit(opad), F.unhex(inner)), 256)
-
-
-def keyed_hash(col: Column, key: "str | bytes | None" = None) -> Column:
-    """Engine-portable keyed hash: the nested secret-prefix construction
-    sha256(hex(opad) ∥ sha256(hex(ipad) ∥ coalesce(col::text, ''))) with
-    the RFC 2104 pads rendered as HEX TEXT instead of raw bytes.
-
-    Why it exists next to :func:`hash_hmac`: true RFC 2104 concatenates
-    the outer pad with the inner digest's RAW BYTES, which an engine
-    whose sha256 only accepts text (DuckDB 1.0's ``sha256(VARCHAR)``)
-    cannot express — so the cross-engine oracle pins THIS construction
-    (``mask_strategies`` 'hmac' row), while the stdlib-``hmac`` pytest
-    pins the RFC one. Same security rationale (secret-prefix nested
-    hashing; the outer hash blocks length extension), same key
-    resolution, same determinism — same input + key → same token on any
-    ANSI engine with sha256 ∥ concat."""
-    kb = (
-        key.encode() if isinstance(key, str)
-        else bytes(key) if key is not None
-        else _resolve_hmac_key()
-    )
-    ipad, opad = _hmac_pads(kb)
-    inner = F.sha2(F.concat(F.lit(ipad.hex()), _as_string(col)), 256)
-    return F.sha2(F.concat(F.lit(opad.hex()), inner), 256)
+def _with_pads(sql: str, key: "str | bytes | None" = None) -> str:
+    """``sql`` with the pad placeholders of a keyed strategy filled in
+    for the resolved key; text without placeholders is returned as is."""
+    if IPAD_HEX not in sql:
+        return sql
+    ipad, opad = _hmac_pads(_resolve_hmac_key(key))
+    return sql.replace(IPAD_HEX, ipad.hex()).replace(OPAD_HEX, opad.hex())
 
 
 def keyed_hash_sql(expr: str, key: "str | bytes") -> str:
-    """The ANSI-SQL twin of :func:`keyed_hash` for a given key — what a
-    DuckDB/Trino auditor runs to reproduce a HASH_KEYED release."""
-    kb = key.encode() if isinstance(key, str) else bytes(key)
-    ipad, opad = _hmac_pads(kb)
+    """The DuckDB/Trino twin of ``HASH_KEYED`` for a given key — what an
+    auditor runs to reproduce a HASH_KEYED release."""
+    ipad, opad = _hmac_pads(_resolve_hmac_key(key))
     return (
         f"sha256('{opad.hex()}' || "
         f"sha256('{ipad.hex()}' || coalesce(CAST({expr} AS VARCHAR), '')))"
     )
 
 
-def truncate(col: Column, n: int = DEFAULT_TRUNCATE_LENGTH) -> Column:
-    """T5 TRUNCATE — LEFT(coalesce(col::text,''), n) (query-builder.ts:37-42)."""
-    return F.substring(_as_string(col), 1, int(n))
+def quote_ident(name: str) -> str:
+    """``name`` as a backtick-quoted Spark SQL identifier (an embedded
+    backtick doubles). Bare names are not safe even when they look plain:
+    ``e-mail`` parses as a subtraction, ``null`` and ``true`` as literals."""
+    return "`" + str(name).replace("`", "``") + "`"
 
 
-def email_fake(col: Column) -> Column:
-    """T6 EMAIL_FAKE — md5(col) || '@example.com' (query-builder.ts:44-45)."""
-    return F.concat(hash_md5(col), F.lit("@example.com"))
+def _s(col: str) -> str:
+    """``COALESCE(col::text, '')`` — the reference's null-safe stringification."""
+    return f"coalesce(CAST({col} AS STRING), '')"
+
+
+def strategy_sql(strategy: str, col: str, params: dict | None = None) -> str | None:
+    """SQL text of one (strategy, column): the switch in ``buildUpdateSql``
+    (query-builder.ts:21-51). ``col`` is a quoted identifier (or any SQL
+    expression). Returns None for KEEP and unknown strategies: no SET
+    clause, the column passes through (query-builder.ts:48-56).
+
+    The keyed strategies carry :data:`IPAD_HEX` / :data:`OPAD_HEX`
+    placeholders, never pad material."""
+    params = params or {}
+    s = (strategy or "KEEP").upper()
+    if s == "SET_NULL":
+        # T2 — a NULL of the column's own type: Catalyst types the IF by its
+        # column branch and folds it to a typed null literal, so the column
+        # is never read. Spark's DDL cannot spell every type (an ARRAY with
+        # non-null elements), which rules out CAST(NULL AS <type>).
+        return f"if(false, {col}, NULL)"
+    if s == "REDACT":  # T3 (query-builder.ts:29-30)
+        return "'***'"
+    if s == "HASH_SHA256":  # T4: the reference's md5-under-that-name quirk
+        return f"md5({_s(col)})"
+    if s == "HASH_SHA256_REAL":  # what the reference's name promised
+        return f"sha2({_s(col)}, 256)"
+    if s == "HASH_HMAC":
+        # Keyed deterministic masking: RFC 2104 HMAC-SHA256(key, coalesce
+        # (col::text, '')) = H((K⊕opad) ∥ H((K⊕ipad) ∥ m)) as two nested
+        # sha2(concat(binary, ...)), the inner digest unhex'd back to raw
+        # bytes. An un-keyed hash of a low-entropy domain (phone numbers,
+        # the reference's own HASH targets, config-generator.ts:11-17) is
+        # dictionary-reversible; a keyed one is not, and stays deterministic
+        # (same input + key → same token, so joins across tables still work).
+        inner = f"sha2(concat(unhex('{IPAD_HEX}'), CAST({_s(col)} AS BINARY)), 256)"
+        return f"sha2(concat(unhex('{OPAD_HEX}'), unhex({inner})), 256)"
+    if s == "HASH_KEYED":
+        # The engine-portable keyed hash: the same nested secret-prefix
+        # construction with the pads as HEX TEXT. True RFC 2104 needs the
+        # inner digest's raw bytes, which an engine whose sha256 takes only
+        # text (DuckDB's) cannot express — so the cross-engine oracle pins
+        # this one (keyed_hash_sql is its DuckDB twin), and the stdlib-hmac
+        # pytest pins HASH_HMAC.
+        return (
+            f"sha2(concat('{OPAD_HEX}', "
+            f"sha2(concat('{IPAD_HEX}', {_s(col)}), 256)), 256)"
+        )
+    if s == "TRUNCATE":  # T5 LEFT(coalesce(col::text,''), n) (query-builder.ts:37-42)
+        n = int(params.get("n", DEFAULT_TRUNCATE_LENGTH))
+        return f"substring({_s(col)}, 1, {n})"
+    if s == "EMAIL_FAKE":  # T6 md5(col) || '@example.com' (query-builder.ts:44-45)
+        return f"concat(md5({_s(col)}), '@example.com')"
+    return None
+
+
+def strategy_column(
+    strategy: str,
+    name: str,
+    params: dict | None = None,
+    key: "str | bytes | None" = None,
+) -> Column:
+    """One strategy over column ``name`` as a Column: :func:`strategy_sql`
+    through ``F.expr``, for callers that put a mask into a select of their
+    own. ``key`` overrides the key resolution of the keyed strategies."""
+    col = quote_ident(name)
+    return F.expr(_with_pads(strategy_sql(strategy, col, params) or col, key))
 
 
 def mask_sample_preview(col: Column) -> Column:
@@ -221,41 +238,6 @@ def mask_sample_preview(col: Column) -> Column:
             F.substring(s, F.length(s) - 1, F.lit(2)),
         )
     )
-
-
-def strategy_expr(
-    strategy: str,
-    col: Column,
-    data_type: T.DataType | str = "string",
-    params: dict | None = None,
-) -> Column:
-    """Compile one (strategy, column) pair to a Column expression.
-
-    Mirrors the ``switch`` in ``buildUpdateSql`` (query-builder.ts:21-51);
-    unknown strategies are a safe no-op (``:48-50``).
-    """
-    params = params or {}
-    s = (strategy or "KEEP").upper()
-    if s == "KEEP":
-        return keep(col)
-    if s == "SET_NULL":
-        return set_null(col, data_type)
-    if s == "REDACT":
-        return redact(col)
-    if s == "HASH_SHA256":
-        return hash_md5(col)
-    if s == "HASH_SHA256_REAL":
-        return hash_sha256(col)
-    if s == "HASH_HMAC":
-        return hash_hmac(col)
-    if s == "HASH_KEYED":
-        return keyed_hash(col)
-    if s == "TRUNCATE":
-        return truncate(col, params.get("n", DEFAULT_TRUNCATE_LENGTH))
-    if s == "EMAIL_FAKE":
-        return email_fake(col)
-    log.warning("unknown strategy %r — treating as KEEP (safe no-op)", strategy)
-    return keep(col)
 
 
 @dataclass(frozen=True)
@@ -318,8 +300,26 @@ def normalize_columns_for_types(
     return out
 
 
+#: set while this thread analyses a projection that holds pad material
+_keyed_compile = threading.local()
+# PySpark logs an analysis error's SQL fragment to stderr through this
+# logger when the exception is raised — for a keyed projection, pad hex.
+PySparkLogger.getLogger("SQLQueryContextLogger").addFilter(
+    lambda record: not getattr(_keyed_compile, "active", False)
+)
+
+
+def _pad_free(e: Exception) -> Exception:
+    """A copy of ``e`` whose message has its pad hex redacted."""
+    msg = redact_pad_hex(e)
+    if isinstance(e, CapturedException):  # AnalysisException, ParseException, ...
+        return type(e)(desc=msg, stackTrace="")
+    return RuntimeError(f"{type(e).__name__}: {msg}")
+
+
 def masked_projection(df, normalized: list[NormalizedColumn]) -> tuple:
-    """Build the single SELECT that applies all strategies to one table.
+    """Build the single SELECT that applies all strategies to one table: one
+    ``df.selectExpr`` of :func:`strategy_sql` text, one JVM call.
 
     Returns ``(masked_df, active_count)``. Non-planned columns pass through
     untouched (the UPDATE-only-touches-SET-columns semantics of
@@ -328,24 +328,39 @@ def masked_projection(df, normalized: list[NormalizedColumn]) -> tuple:
 
     SET_NULL on a non-nullable StructField raises ``ValueError`` — Spark has no
     constraints, so we emulate the reference's "the DB rejects it" failure mode
-    (executor.ts:56, SURVEY.md §7).
+    (executor.ts:56, SURVEY.md §7). A keyed strategy without a key raises the
+    ``ValueError`` of :func:`_resolve_hmac_key`. The pads of a keyed strategy
+    are substituted in memory; an error while analysing such a projection
+    leaves here with its pad hex redacted and is not logged by PySpark.
     """
     by_name = {nc.column: nc for nc in normalized}
     exprs = []
     active = 0
     for f in df.schema.fields:
+        col = quote_ident(f.name)
         nc = by_name.get(f.name)
-        if nc is None or nc.strategy == "KEEP" or nc.strategy.upper() not in KNOWN_STRATEGIES:
-            # Unknown strategies pass through without counting as a rewrite —
-            # the reference emits no SET clause for them (query-builder.ts:48-56),
-            # so a table whose only strategies are unknown is skipped entirely.
-            exprs.append(F.col(f.name))
+        # KEEP and unknown strategies render no SQL: the column passes
+        # through without counting as a rewrite — the reference emits no SET
+        # clause for them (query-builder.ts:48-56), so a table whose only
+        # strategies are unknown is skipped entirely.
+        sql = nc and strategy_sql(nc.strategy, col, nc.params)
+        if not sql:
+            exprs.append(col)
             continue
-        if nc.strategy == "SET_NULL" and not f.nullable:
+        if nc.strategy.upper() == "SET_NULL" and not f.nullable:
             raise ValueError(
                 f"SET_NULL on non-nullable column {f.name!r} violates schema "
                 "(reference lets the DB constraint reject this; we fail the table)"
             )
-        exprs.append(strategy_expr(nc.strategy, F.col(f.name), f.dataType, nc.params).alias(f.name))
+        exprs.append(f"{sql} AS {col}")
         active += 1
-    return df.select(*exprs), active
+    if not any(IPAD_HEX in e for e in exprs):
+        return df.selectExpr(*exprs), active
+    keyed = [_with_pads(e) for e in exprs]
+    _keyed_compile.active = True
+    try:
+        return df.selectExpr(*keyed), active
+    except Exception as e:
+        raise _pad_free(e) from None
+    finally:
+        _keyed_compile.active = False

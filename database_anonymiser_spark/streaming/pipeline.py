@@ -116,10 +116,10 @@ def session_agg_stream(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
 
 
 def masked_stream(events: DataFrame) -> DataFrame:
-    """Stateless streaming anonymisation: the same strategy expressions the
-    batch executor compiles (strategies.py) applied to an unbounded stream —
+    """Stateless streaming anonymisation: the same strategy SQL the batch
+    executor compiles (strategies.py) applied to an unbounded stream —
     props (JSON group) hashed, user_id kept, value kept."""
-    from database_anonymiser_spark.strategies import hash_md5
+    from database_anonymiser_spark.strategies import strategy_column
 
     return events.select(
         "event_id",
@@ -127,7 +127,7 @@ def masked_stream(events: DataFrame) -> DataFrame:
         "user_id",
         "event_type",
         "value",
-        hash_md5(F.col("props")).alias("props"),
+        strategy_column("HASH_SHA256", "props").alias("props"),
     )
 
 

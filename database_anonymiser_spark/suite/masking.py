@@ -287,7 +287,7 @@ def mask_strategies(spark, sf_dir):
     Round 12 adds 'hmac' — KEYED deterministic masking (the top
     round-11 verdict gap: a bare hash of a low-entropy domain is
     dictionary-reversible). The row checks the engine-portable
-    ``keyed_hash`` construction under the suite's fixture key; the RFC
+    ``HASH_KEYED`` construction under the suite's fixture key; the RFC
     2104 ``HASH_HMAC`` twin is pinned against Python's stdlib ``hmac``
     by pytest (DuckDB 1.0's sha256 is VARCHAR-only, so the raw-byte
     inner digest is not oracle-expressible).
@@ -324,13 +324,13 @@ def mask_strategies(spark, sf_dir):
     masks = df.select(
         F.lit("mask").alias("kind"),
         "c_custkey",
-        S.keep(name).alias("keep_name"),
-        S.set_null(F.col("c_mktsegment"), "string").alias("null_mktsegment"),
-        S.redact(F.col("c_mktsegment")).alias("redact_mktsegment"),
-        S.hash_md5(name).alias("hash_name"),
-        S.hash_sha256(name).alias("sha256_name"),
-        S.truncate(name, 4).alias("trunc_name"),
-        S.email_fake(name).alias("email_name"),
+        S.strategy_column("KEEP", "c_name").alias("keep_name"),
+        S.strategy_column("SET_NULL", "c_mktsegment").alias("null_mktsegment"),
+        S.strategy_column("REDACT", "c_mktsegment").alias("redact_mktsegment"),
+        S.strategy_column("HASH_SHA256", "c_name").alias("hash_name"),
+        S.strategy_column("HASH_SHA256_REAL", "c_name").alias("sha256_name"),
+        S.strategy_column("TRUNCATE", "c_name", {"n": 4}).alias("trunc_name"),
+        S.strategy_column("EMAIL_FAKE", "c_name").alias("email_name"),
         S.mask_sample_preview(name).alias("preview_name"),
         *pad,
     )
@@ -427,7 +427,7 @@ def mask_strategies(spark, sf_dir):
         F.lit(None).cast("string").alias("keep_name"),
         F.lit(None).cast("string").alias("null_mktsegment"),
         F.lit(None).cast("string").alias("redact_mktsegment"),
-        S.keyed_hash(name, _HMAC_FIXTURE_KEY).alias("hash_name"),
+        S.strategy_column("HASH_KEYED", "c_name", key=_HMAC_FIXTURE_KEY).alias("hash_name"),
         F.lit(None).cast("string").alias("sha256_name"),
         F.lit(None).cast("string").alias("trunc_name"),
         F.lit(None).cast("string").alias("email_name"),

@@ -7,12 +7,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from database_anonymiser_spark.strategies import (
-    email_fake,
-    hash_md5,
-    redact,
-    truncate,
-)
+from database_anonymiser_spark.strategies import strategy_column
 
 TEXT = st.text(min_size=0, max_size=64)
 FAST = settings(
@@ -27,22 +22,27 @@ def _apply(spark, values, expr_fn):
     return [r[0] for r in df.select(expr_fn(F.col("v")).alias("o")).collect()]
 
 
+def _mask(strategy, params=None):
+    """The strategy over ``_apply``'s one column ``v``."""
+    return lambda _: strategy_column(strategy, "v", params)
+
+
 @given(vals=st.lists(TEXT, min_size=1, max_size=30))
 @FAST
 def test_masking_idempotent_and_deterministic(spark, vals):
-    for fn in (redact, hash_md5, email_fake):
-        once = _apply(spark, vals, fn)
-        twice = _apply(spark, once, fn)
-        again = _apply(spark, vals, fn)
+    for strategy in ("REDACT", "HASH_SHA256", "EMAIL_FAKE"):
+        once = _apply(spark, vals, _mask(strategy))
+        twice = _apply(spark, once, _mask(strategy))
+        again = _apply(spark, vals, _mask(strategy))
         assert once == again  # deterministic
-        if fn is redact:
+        if strategy == "REDACT":
             assert twice == once  # idempotent (fixed point)
 
 
 @given(vals=st.lists(TEXT, min_size=1, max_size=30), n=st.integers(1, 16))
 @FAST
 def test_truncate_length_bound(spark, vals, n):
-    out = _apply(spark, vals, lambda c: truncate(c, n))
+    out = _apply(spark, vals, _mask("TRUNCATE", {"n": n}))
     for v, o in zip(vals, out):
         assert o is not None  # null-coalesced to ''
         assert len(o) <= n
@@ -52,7 +52,7 @@ def test_truncate_length_bound(spark, vals, n):
 @given(vals=st.lists(st.one_of(st.none(), TEXT), min_size=1, max_size=30))
 @FAST
 def test_hash_null_coalesces_to_empty_hash(spark, vals):
-    out = _apply(spark, vals, hash_md5)
+    out = _apply(spark, vals, _mask("HASH_SHA256"))
     import hashlib
 
     for v, o in zip(vals, out):
@@ -63,7 +63,7 @@ def test_hash_null_coalesces_to_empty_hash(spark, vals):
 @given(vals=st.lists(TEXT, min_size=1, max_size=30))
 @FAST
 def test_email_fake_shape(spark, vals):
-    out = _apply(spark, vals, email_fake)
+    out = _apply(spark, vals, _mask("EMAIL_FAKE"))
     for o in out:
         assert o.endswith("@example.com") and len(o) == 32 + len("@example.com")
 

@@ -27,30 +27,30 @@ def one(df, col):
 
 
 def test_redact(spark, df):
-    assert one(df, S.redact(F.col("s"))) == "***"
+    assert one(df, S.strategy_column("REDACT", "s")) == "***"
 
 
 def test_hash_is_md5_and_null_coalesces(spark, df):
-    assert one(df, S.hash_md5(F.col("s"))) == hashlib.md5(b"hello world").hexdigest()
-    assert one(df, S.hash_md5(F.col("empty"))) == hashlib.md5(b"").hexdigest()
+    assert one(df, S.strategy_column("HASH_SHA256", "s")) == hashlib.md5(b"hello world").hexdigest()
+    assert one(df, S.strategy_column("HASH_SHA256", "empty")) == hashlib.md5(b"").hexdigest()
 
 
 def test_real_sha256(spark, df):
-    assert one(df, S.hash_sha256(F.col("s"))) == hashlib.sha256(b"hello world").hexdigest()
+    assert one(df, S.strategy_column("HASH_SHA256_REAL", "s")) == hashlib.sha256(b"hello world").hexdigest()
 
 
 def test_truncate_default4_and_null(spark, df):
-    assert one(df, S.truncate(F.col("s"))) == "hell"
-    assert one(df, S.truncate(F.col("s"), 2)) == "he"
-    assert one(df, S.truncate(F.col("empty"))) == ""
+    assert one(df, S.strategy_column("TRUNCATE", "s")) == "hell"
+    assert one(df, S.strategy_column("TRUNCATE", "s", {"n": 2})) == "he"
+    assert one(df, S.strategy_column("TRUNCATE", "empty")) == ""
 
 
 def test_email_fake(spark, df):
-    assert one(df, S.email_fake(F.col("s"))) == hashlib.md5(b"hello world").hexdigest() + "@example.com"
+    assert one(df, S.strategy_column("EMAIL_FAKE", "s")) == hashlib.md5(b"hello world").hexdigest() + "@example.com"
 
 
 def test_set_null_preserves_type(spark, df):
-    out = df.select(S.set_null(F.col("n"), T.IntegerType()).alias("n"))
+    out = df.select(S.strategy_column("SET_NULL", "n").alias("n"))
     assert out.schema["n"].dataType == T.IntegerType()
     assert out.first()["n"] is None
 
@@ -63,7 +63,7 @@ def test_sample_preview(spark):
 
 
 def test_unknown_strategy_is_noop(spark, df):
-    assert one(df, S.strategy_expr("WAT", F.col("s"))) == "hello world"
+    assert one(df, S.strategy_column("WAT", "s")) == "hello world"
 
 
 @pytest.mark.parametrize(
@@ -120,8 +120,285 @@ def test_set_null_on_non_nullable_fails(spark):
 
 def test_masking_idempotent(spark, df):
     # property: mask(mask(x)) == mask(x) for REDACT / EMAIL_FAKE domain outputs
-    redacted = one(df, S.redact(F.col("s")))
-    assert one(df.select(F.lit(redacted).alias("s")), S.redact(F.col("s"))) == redacted
+    redacted = one(df, S.strategy_column("REDACT", "s"))
+    assert one(df.select(F.lit(redacted).alias("s")), S.strategy_column("REDACT", "s")) == redacted
+
+
+# ---------------------------------------------------------------------------
+# The masking compiler: one selectExpr of strategy_sql text per table
+# ---------------------------------------------------------------------------
+
+#: every strategy family; SET_NULL runs on the nullable columns only
+FAMILIES = (
+    "KEEP", "SET_NULL", "REDACT", "HASH_SHA256", "HASH_SHA256_REAL",
+    "HASH_HMAC", "HASH_KEYED", "TRUNCATE", "EMAIL_FAKE",
+)
+#: output nullability of each string-valued family's column
+FAMILY_NULLABLE = {
+    "REDACT": False, "HASH_SHA256": False, "TRUNCATE": False, "EMAIL_FAKE": False,
+    "HASH_SHA256_REAL": True, "HASH_HMAC": True, "HASH_KEYED": True,
+}
+
+
+def _family_expected(family: str, text: str, key: bytes) -> str:
+    """What ``family`` makes of a value whose ``CAST(... AS STRING)`` is
+    ``text`` ('' for NULL), by stdlib hashlib/hmac."""
+    import hmac as pyhmac
+
+    md5 = hashlib.md5(text.encode()).hexdigest()
+    if family == "REDACT":
+        return "***"
+    if family == "HASH_SHA256":
+        return md5
+    if family == "HASH_SHA256_REAL":
+        return hashlib.sha256(text.encode()).hexdigest()
+    if family == "HASH_HMAC":
+        return pyhmac.new(key, text.encode(), hashlib.sha256).hexdigest()
+    if family == "HASH_KEYED":
+        ipad, opad = S._hmac_pads(key)
+        inner = hashlib.sha256((ipad.hex() + text).encode()).hexdigest()
+        return hashlib.sha256((opad.hex() + inner).encode()).hexdigest()
+    if family == "TRUNCATE":
+        return text[:S.DEFAULT_TRUNCATE_LENGTH]
+    assert family == "EMAIL_FAKE"
+    return md5 + "@example.com"
+
+
+def _check_every_family(df, key: bytes) -> None:
+    """masked_projection of every family over every column of ``df``:
+    values, typed NULLs and the output schema of the Column compiler it
+    replaced (names, types, nullability)."""
+    fields = df.schema.fields
+    rows = df.collect()
+    texts = df.selectExpr(
+        *[f"CAST({S.quote_ident(f.name)} AS STRING)" for f in fields]
+    ).collect()
+    for family in FAMILIES:
+        masked_fields = [f for f in fields if family != "SET_NULL" or f.nullable]
+        masked, active = S.masked_projection(
+            df, [S.NormalizedColumn(f.name, family) for f in masked_fields]
+        )
+        assert active == (0 if family == "KEEP" else len(masked_fields))
+        assert masked.columns == df.columns
+        got = masked.collect()
+        for i, f in enumerate(fields):
+            out = masked.schema[f.name]
+            rewritten = f in masked_fields and family not in ("KEEP", "SET_NULL")
+            if rewritten:
+                assert out.dataType == T.StringType(), (family, f.name)
+                assert out.nullable == FAMILY_NULLABLE[family], (family, f.name)
+            else:
+                assert out.dataType == f.dataType, (family, f.name)
+                assert out.nullable == f.nullable, (family, f.name)
+            for row, text, g in zip(rows, texts, got):
+                if not rewritten and (family == "KEEP" or not f.nullable):
+                    assert g[i] == row[i], (family, f.name)
+                elif family == "SET_NULL":
+                    assert g[i] is None, f.name
+                else:
+                    want = _family_expected(family, text[i] or "", key)
+                    assert g[i] == want, (family, f.name, text[i])
+    for f in fields:
+        if not f.nullable:
+            with pytest.raises(ValueError, match="non-nullable"):
+                S.masked_projection(df, [S.NormalizedColumn(f.name, "SET_NULL")])
+
+
+def test_masked_projection_covers_every_type(spark, tmp_path, monkeypatch):
+    """Every strategy family over a column of each type the engine reads,
+    nullable and not: values by stdlib hashlib/hmac, SET_NULL as a NULL of
+    the field's exact type (non-null array elements, a NOT NULL struct
+    field), and the Column compiler's output schema."""
+    import datetime as dt
+    from decimal import Decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from database_anonymiser_spark.catalog import read_parquet_table
+
+    key = b"type-coverage-key"
+    monkeypatch.delenv(S.HMAC_KEY_ENV, raising=False)
+    S.set_hmac_key(key)
+    Fld = T.StructField
+    schema = T.StructType([
+        Fld("s", T.StringType(), True), Fld("s_nn", T.StringType(), False),
+        Fld("i", T.IntegerType(), True), Fld("l", T.LongType(), False),
+        Fld("dec", T.DecimalType(12, 2), True), Fld("dbl", T.DoubleType(), True),
+        Fld("bo", T.BooleanType(), True), Fld("d", T.DateType(), True),
+        Fld("ts", T.TimestampType(), True), Fld("ntz", T.TimestampNTZType(), True),
+        Fld("bin", T.BinaryType(), True),
+        Fld("arr", T.ArrayType(T.IntegerType(), False), True),
+        Fld("mp", T.MapType(T.StringType(), T.IntegerType(), True), True),
+        Fld("st", T.StructType([
+            Fld("x", T.IntegerType(), False), Fld("y z", T.StringType(), True),
+        ]), False),
+    ])
+    when = dt.datetime(2024, 2, 29, 13, 5, 7, 123456)
+    df = spark.createDataFrame([
+        ("héllo wörld", "x", 42, 2**40, Decimal("-1234.50"), 2.5, True,
+         dt.date(2024, 2, 29), when, when, b"\x00ab", [1, 2], {"k": 1},
+         (7, "y")),
+        (None, "", None, -1, None, None, None, None, None, None, None, None,
+         None, (8, None)),
+    ], schema)
+    # a TIMESTAMP(NANOS) column, which the reader repairs to timestamp_ntz
+    path = tmp_path / "nanos.parquet"
+    pq.write_table(pa.table({
+        "t_ns": pa.array([1_700_000_000_123_456_789, None], pa.timestamp("ns")),
+        "n": pa.array([1, 2], pa.int64()),
+    }), path)
+    nanos = read_parquet_table(spark, str(path))
+    assert nanos.schema["t_ns"].dataType == T.TimestampNTZType()
+    try:
+        _check_every_family(df, key)
+        _check_every_family(nanos, key)
+    finally:
+        S.set_hmac_key(None)
+
+
+def test_masked_projection_is_one_select_expr_per_table(spark, sf_dir, monkeypatch):
+    """The compile is one JVM round trip per table: ``masked_projection``
+    calls ``DataFrame.selectExpr`` once and builds no Column."""
+    from pyspark.sql.classic.column import Column as ClassicColumn
+
+    from database_anonymiser_spark.catalog import ParquetCatalog
+    from database_anonymiser_spark.executor import mask_table
+    from database_anonymiser_spark.planner import PlannedColumn, PlannedTable
+
+    catalog = ParquetCatalog(spark, sf_dir)
+    tables = [
+        PlannedTable(table=f"public.{name}", schema="public", name=name, columns=cols)
+        for name, cols in (
+            ("customer", (PlannedColumn("c_name", "HASH_HMAC"),
+                          PlannedColumn("c_mktsegment", "TRUNCATE"),
+                          PlannedColumn("c_nationkey", "SET_NULL"))),
+            ("orders", (PlannedColumn("o_orderstatus", "REDACT"),
+                        PlannedColumn("o_orderpriority", "EMAIL_FAKE"),
+                        PlannedColumn("o_totalprice", "HASH_SHA256"))),  # downgraded
+        )
+    ]
+    frames = [catalog.read(t.name) for t in tables]  # warm the schema cache
+    calls = {"selectExpr": 0, "Column": 0}
+    frame_cls = type(frames[0])
+    select_expr, column_init = frame_cls.selectExpr, ClassicColumn.__init__
+
+    def counted_select_expr(self, *exprs):
+        calls["selectExpr"] += 1
+        return select_expr(self, *exprs)
+
+    def counted_column_init(self, *args, **kwargs):
+        calls["Column"] += 1
+        column_init(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "selectExpr", counted_select_expr)
+    monkeypatch.setattr(ClassicColumn, "__init__", counted_column_init)
+    S.set_hmac_key("compile-cost-key")
+    try:
+        for t in tables:
+            masked, active, _ = mask_table(catalog, t)
+            assert active == (3 if t.name == "customer" else 2)
+    finally:
+        S.set_hmac_key(None)
+    assert calls == {"selectExpr": len(tables), "Column": 0}
+
+
+def test_mask_table_schemas_of_the_benchmark_tables(spark, tmp_path):
+    """``mask_table``'s output schema for the five benchmark tables under
+    the benchmark's config, as the Column compiler produced it (name, type,
+    nullable); the benchmark's tiny inputs have the same schemas."""
+    from database_anonymiser_spark.catalog import ParquetCatalog
+    from database_anonymiser_spark.config import config_from_dict
+    from database_anonymiser_spark.executor import mask_table
+    from database_anonymiser_spark.planner import build_plan
+    from perfbench import anonymise, gen
+
+    expected = {
+        "customer": ["c_custkey:bigint:1", "c_name:string:1", "c_nationkey:int:1",
+                     "c_acctbal:double:1", "c_mktsegment:string:1"],
+        "orders": ["o_orderkey:bigint:1", "o_custkey:bigint:1", "o_orderstatus:string:1",
+                   "o_totalprice:double:1", "o_orderdate:timestamp_ntz:1",
+                   "o_orderpriority:string:0"],
+        "lineitem": ["l_orderkey:bigint:1", "l_partkey:bigint:1", "l_suppkey:bigint:1",
+                     "l_linenumber:int:1", "l_quantity:double:1",
+                     "l_extendedprice:double:1", "l_discount:double:1", "l_tax:double:1",
+                     "l_returnflag:string:0", "l_linestatus:string:0",
+                     "l_shipdate:timestamp_ntz:1"],
+        "documents": ["doc_id:bigint:1", "text:string:0", "lang:string:1",
+                      "source:string:0", "n_chars:bigint:1"],
+        "events": ["event_id:bigint:1", "ts:timestamp_ntz:1", "user_id:bigint:1",
+                   "event_type:string:0", "value:double:1", "props:string:1"],
+    }
+    catalog = ParquetCatalog(spark, gen.ensure_inputs(tmp_path, "tiny", 1))
+    plan = build_plan(config_from_dict(anonymise.config()))
+    S.set_hmac_key("benchmark-schema-key")
+    try:
+        got = {
+            t.name: [
+                f"{f.name}:{f.dataType.simpleString()}:{int(f.nullable)}"
+                for f in mask_table(catalog, t)[0].schema.fields
+            ]
+            for t in plan.tables
+        }
+    finally:
+        S.set_hmac_key(None)
+    assert got == expected
+
+
+def test_keyed_projection_error_keeps_pads_out_of_reports_and_logs(
+    spark, sf_dir, tmp_path, monkeypatch, capfd
+):
+    """A keyed projection that fails analysis reports its error without
+    pad material: not in ``TableResult.error``, the JSON report, or stderr
+    (PySpark's query-context logger and the executor's traceback)."""
+    import logging
+    import sys
+
+    from pyspark.logger import PySparkLogger
+
+    from database_anonymiser_spark.catalog import ParquetCatalog
+    from database_anonymiser_spark.executor import execute_plan
+    from database_anonymiser_spark.planner import Plan, PlannedColumn, PlannedTable
+    from database_anonymiser_spark.reporting import build_report, write_json_report
+
+    strategy_sql = S.strategy_sql
+
+    def broken(strategy, col, params=None):
+        sql = strategy_sql(strategy, col, params)
+        return sql if strategy != "HASH_HMAC" else f"concat({sql}, no_such_column)"
+
+    monkeypatch.setattr(S, "strategy_sql", broken)
+    key = "leak-probe-key"
+    ipad, opad = S._hmac_pads(key.encode())
+    plan = Plan(created_at="t0", tables=(PlannedTable(
+        table="public.customer", schema="public", name="customer",
+        columns=(PlannedColumn("c_name", "HASH_HMAC"),),
+    ),))
+    # both loggers write to stderr, as under the CLI
+    handlers = [
+        (logging.getLogger(), logging.StreamHandler(sys.stderr)),
+        (PySparkLogger.getLogger("SQLQueryContextLogger"), logging.StreamHandler(sys.stderr)),
+    ]
+    for logger, handler in handlers:
+        logger.addHandler(handler)
+    S.set_hmac_key(key)
+    try:
+        result = execute_plan(ParquetCatalog(spark, sf_dir), plan, dryrun=True)
+    finally:
+        S.set_hmac_key(None)
+        for logger, handler in handlers:
+            logger.removeHandler(handler)
+    (tr,) = result.failed_tables
+    assert tr.error.startswith("AnalysisException: [UNRESOLVED_COLUMN")
+    assert "no_such_column" in tr.error and "<redacted-literal>" in tr.error
+    report = tmp_path / "report.json"
+    write_json_report(report, build_report("dryrun", plan, result))
+    err = capfd.readouterr().err
+    assert "no_such_column" in err  # the failure was logged ...
+    for text in (tr.error, report.read_text(), err):
+        # ... without the pads
+        assert ipad.hex() not in text and opad.hex() not in text
+        assert key not in text
 
 
 # ---------------------------------------------------------------------------
@@ -389,28 +666,28 @@ def test_hmac_rfc2104_matches_stdlib(spark, df):
     """HASH_HMAC is real RFC 2104 HMAC-SHA256: pinned against Python's
     ``hmac`` stdlib (the authoritative oracle for a crypto primitive —
     DuckDB 1.0's sha256 is VARCHAR-only so the raw-byte inner digest is
-    not SQL-expressible; the portable ``keyed_hash`` carries the
+    not SQL-expressible; the portable ``HASH_KEYED`` carries the
     cross-engine oracle instead)."""
     import hmac as pyhmac
 
     key = "rotate-me-please"
     expect = lambda m: pyhmac.new(key.encode(), m, hashlib.sha256).hexdigest()
-    assert one(df, S.hash_hmac(F.col("s"), key)) == expect(b"hello world")
+    assert one(df, S.strategy_column("HASH_HMAC", "s", key=key)) == expect(b"hello world")
     # NULL coalesces to '' like every other strategy (query-builder.ts:34)
-    assert one(df, S.hash_hmac(F.col("empty"), key)) == expect(b"")
+    assert one(df, S.strategy_column("HASH_HMAC", "empty", key=key)) == expect(b"")
     # non-string input hashes its string rendering (HASH on OTHER group)
-    assert one(df, S.hash_hmac(F.col("n"), key)) == expect(b"42")
+    assert one(df, S.strategy_column("HASH_HMAC", "n", key=key)) == expect(b"42")
     # >block-size keys are pre-hashed per RFC 2104
     long_key = "k" * 100
-    assert one(df, S.hash_hmac(F.col("s"), long_key)) == pyhmac.new(
+    assert one(df, S.strategy_column("HASH_HMAC", "s", key=long_key)) == pyhmac.new(
         long_key.encode(), b"hello world", hashlib.sha256
     ).hexdigest()
     # key rotation changes every token (deterministic per key)
-    assert one(df, S.hash_hmac(F.col("s"), "other-key")) != expect(b"hello world")
+    assert one(df, S.strategy_column("HASH_HMAC", "s", key="other-key")) != expect(b"hello world")
 
 
 def test_keyed_hash_portable_construction(spark, df):
-    """keyed_hash = sha256(hex(opad) || sha256(hex(ipad) || msg)) — the
+    """HASH_KEYED = sha256(hex(opad) || sha256(hex(ipad) || msg)) — the
     engine-portable keyed variant; its SQL twin renders the identical
     string, and DuckDB executes it to the same digest."""
     key = "suite-fixture-key-v1"
@@ -420,7 +697,7 @@ def test_keyed_hash_portable_construction(spark, df):
             (ipad.hex() + "hello world").encode()
         ).hexdigest()).encode()
     ).hexdigest()
-    assert one(df, S.keyed_hash(F.col("s"), key)) == manual
+    assert one(df, S.strategy_column("HASH_KEYED", "s", key=key)) == manual
 
     import duckdb
 
@@ -437,23 +714,23 @@ def test_hmac_key_resolution_and_safety(spark, df, monkeypatch):
     monkeypatch.delenv(S.HMAC_KEY_ENV, raising=False)
     S.set_hmac_key(None)
     with pytest.raises(ValueError, match=S.HMAC_KEY_ENV):
-        S.strategy_expr("HASH_HMAC", F.col("s"))
+        S.strategy_column("HASH_HMAC", "s")
     monkeypatch.setenv(S.HMAC_KEY_ENV, "env-key")
     import hmac as pyhmac
 
-    assert one(df, S.strategy_expr("HASH_HMAC", F.col("s"))) == pyhmac.new(
+    assert one(df, S.strategy_column("HASH_HMAC", "s")) == pyhmac.new(
         b"env-key", b"hello world", hashlib.sha256
     ).hexdigest()
     S.set_hmac_key("override-key")
     try:
-        assert one(df, S.strategy_expr("HASH_HMAC", F.col("s"))) == pyhmac.new(
+        assert one(df, S.strategy_column("HASH_HMAC", "s")) == pyhmac.new(
             b"override-key", b"hello world", hashlib.sha256
         ).hexdigest()
         # the plaintext key is absent from the analyzed plan (only the
         # XOR-derived pads ride as literals; explain output is still to
         # be treated as sensitive, like any keyed system's plan)
         plan = df.select(
-            S.strategy_expr("HASH_HMAC", F.col("s")).alias("h")
+            S.strategy_column("HASH_HMAC", "s").alias("h")
         )._jdf.queryExecution().analyzed().toString()
         assert "override-key" not in plan
     finally:
@@ -585,8 +862,8 @@ def test_keyed_pad_material_absent_from_committed_artifacts():
     expression. The suite's fixture key is the one key whose pads could
     plausibly leak through plan-derived artifacts (plan_audit, bench
     stderr, notes) — assert they appear in NO committed artifact, in
-    either rendering (hex text, as keyed_hash embeds; or repr'd raw
-    bytes, as hash_hmac embeds). Also pin the redaction helper that
+    either rendering (hex text, as HASH_KEYED embeds; or repr'd raw
+    bytes, as a binary literal prints). Also pin the redaction helper that
     keeps analyzer error messages literal-free in PLANS.md."""
     import os
     import sys

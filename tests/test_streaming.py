@@ -343,7 +343,7 @@ def test_composed_streaming_pipeline_end_to_end(spark, sf_dir, events_path):
     (stateless broadcast) → tumbling count by enriched key (windowed
     state). Runs as a single Structured Streaming query; emitted windows
     must match the equivalent batch pipeline exactly."""
-    from database_anonymiser_spark.strategies import hash_md5
+    from database_anonymiser_spark.strategies import strategy_column
     from database_anonymiser_spark.streaming.pipeline import (
         dedup_stream,
         enriched_stream,
@@ -361,7 +361,7 @@ def test_composed_streaming_pipeline_end_to_end(spark, sf_dir, events_path):
     # batch-parity form, not the composition form)
     masked = dedup_stream(ev).select(
         "event_id", "ts", "user_id", "event_type", "value",
-        hash_md5(F.col("props")).alias("props"),
+        strategy_column("HASH_SHA256", "props").alias("props"),
     )
     enriched = enriched_stream(masked, dim)
     agg = (

@@ -21,6 +21,14 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+# Analyzer error MESSAGES can embed expression literals, among them the HMAC
+# pads of a keyed expression: redact before anything derived from a plan or
+# an exception is committed. Plan TEXT never lands in PLANS.md (only
+# operator counts do).
+from database_anonymiser_spark.strategies import (  # noqa: E402
+    redact_pad_hex as redact_literals,
+)
+
 # queries where a nested-loop / cartesian is the *intended* plan on
 # bounded inputs (documented in their docstrings)
 NESTED_LOOP_OK = {
@@ -58,19 +66,6 @@ def plan_of(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
-
-
-#: 32+ contiguous hex chars (optionally 0x-prefixed): the shape of the
-#: HMAC ipad/opad literals (64-byte pads = 128 hex chars) that ride a
-#: keyed expression's compiled plan. Plan TEXT never lands in PLANS.md
-#: (only operator counts do), but analyzer error MESSAGES can embed
-#: expression literals — redact before anything derived from a plan or
-#: an exception is committed (round-13 keyed-plan hygiene).
-_HEX_LITERAL = re.compile(r"(?:0x)?[0-9A-Fa-f]{32,}")
-
-
-def redact_literals(text: str) -> str:
-    return _HEX_LITERAL.sub("<redacted-literal>", str(text))
 
 
 def n_ops(plan: str, op: str) -> int:
