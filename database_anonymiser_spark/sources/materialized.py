@@ -342,28 +342,48 @@ def _full_frame(src_df, keys: list, aggs: dict):
 #: from its definition (create evaluates it once over the snapshot;
 #: refresh re-evaluates it only over CHANGED rows, so unchanged rows
 #: never age in or out). Blocklisted loudly instead (round-15 review).
-_NON_ROW_LOCAL = (
-    r"\b(?:current_date|current_timestamp|localtimestamp|now|"
-    r"current_timezone|today)\b"
-    r"|\b(?:rand|randn|random|uuid|shuffle|"
-    r"monotonically_increasing_id|input_file_name|"
-    r"spark_partition_id)\s*\("
-)
+_NON_ROW_LOCAL = frozenset({
+    "current_date", "current_timestamp", "current_time", "localtimestamp",
+    "now", "curdate", "current_timezone", "rand", "randn", "random",
+    "randstr", "uniform", "uuid", "shuffle", "monotonically_increasing_id",
+    "input_file_name", "input_file_block_start", "input_file_block_length",
+    "spark_partition_id",
+})
+#: the time functions Spark's grammar also takes as a bare name: parsed
+#: as an attribute, or (ANSI reserved keywords) as one of these nodes
+_BARE_TIME = frozenset({
+    "current_date", "current_timestamp", "current_time", "localtimestamp",
+})
+_TIME_NODES = frozenset({
+    "CurrentDate", "CurrentTimestamp", "CurrentTime", "LocalTimestamp", "Now",
+})
 
 
-def _check_filter_row_local(filter_sql: str):
-    m = re.search(_NON_ROW_LOCAL, filter_sql, re.I)
-    if m:
-        raise ValueError(
-            f"materialized-view filter uses {m.group(0).strip('(').strip()!r}"
-            " — a filter must be ROW-LOCAL and deterministic (its value "
-            "may depend only on the row): time- or randomness-dependent "
-            "predicates would silently diverge the view from its "
-            "definition, because refresh re-evaluates the filter only "
-            "over CHANGED rows (unchanged rows never age in or out). "
-            "Materialize the moving window downstream of the view, or "
-            "filter on a data column"
-        )
+def _check_row_local(filt):
+    """Refuse a parsed filter that calls a function of the clock or of
+    randomness — read from its function nodes, never its text (a string
+    literal ``'now'`` calls nothing)."""
+    for n, _ in filt.walk():
+        if n.kind == "UnresolvedFunction":
+            name = n.parts[-1].lower()
+            # unix_timestamp() reads the clock; unix_timestamp(col) does not
+            bad = name in _NON_ROW_LOCAL or (name == "unix_timestamp" and not n.kids)
+        elif n.kind == "UnresolvedAttribute":
+            name = ".".join(n.parts).lower()
+            bad = name in _BARE_TIME
+        else:
+            name, bad = n.kind, n.kind in _TIME_NODES
+        if bad:
+            raise ValueError(
+                f"materialized-view filter uses {name!r}"
+                " — a filter must be ROW-LOCAL and deterministic (its value "
+                "may depend only on the row): time- or randomness-dependent "
+                "predicates would silently diverge the view from its "
+                "definition, because refresh re-evaluates the filter only "
+                "over CHANGED rows (unchanged rows never age in or out). "
+                "Materialize the moving window downstream of the view, or "
+                "filter on a data column"
+            )
 
 
 def _check_no_null_keys(df, keys: list, where: str):
@@ -419,7 +439,9 @@ def create_materialized(
     src_v = src.latest_version()
     snap = src.snapshot(src_v)
     if filter_sql:
-        _check_filter_row_local(filter_sql)
+        from database_anonymiser_spark.sql_dml import _parse
+
+        _check_row_local(_parse(filter_sql, expression=True))
         snap = snap.where(F.expr(filter_sql))
     _check_no_null_keys(snap.select(*keys), keys, "the source snapshot")
     mv_df = _full_frame(snap, keys, aggs)
@@ -616,6 +638,19 @@ def _attach_recompute(mv, src, delta, keys: list, aggs: dict, to_v: int,
     return j.join(rec, on=list(keys), how="left"), int(n_rec)
 
 
+def refresh_target(last: int, head: int, to_version: int | None) -> int:
+    """The version a refresh advances to: the source head, or a pinned
+    ``to_version`` inside [watermark, head] (refused outside it)."""
+    if to_version is None:
+        return head
+    if not last <= to_version <= head:
+        raise ValueError(
+            f"refresh to_version {to_version} is outside "
+            f"[watermark {last}, source head {head}]"
+        )
+    return to_version
+
+
 def refresh_materialized(spark, mv_root, to_version: int | None = None) -> dict:
     """Advance the view to the source's head (or a PINNED
     ``to_version``) by delta propagation: read the source change feed
@@ -641,13 +676,7 @@ def refresh_materialized(spark, mv_root, to_version: int | None = None) -> dict:
     keys, aggs = info["keys"], _validate_aggs(info["aggs"])
     last = info["last_version"]
     head = src.latest_version()
-    if to_version is None:
-        to_version = head
-    elif not last <= to_version <= head:
-        raise ValueError(
-            f"refresh to_version {to_version} is outside "
-            f"[watermark {last}, source head {head}]"
-        )
+    to_version = refresh_target(last, head, to_version)
     if to_version == last:
         return {"refreshed": False, "from_version": last,
                 "to_version": to_version, "groups_changed": 0}
@@ -887,100 +916,86 @@ def _apply_delta_merge(mv, src, keys, aggs, changes, last, to_version,
 #            GROUP BY keys
 # --------------------------------------------------------------------------
 
-_AGG_RE = re.compile(
-    r"^\s*(count|sum|avg|min|max|approx_count_distinct)\s*"
-    r"\((?P<arg>.+)\)\s+AS\s+(?P<name>[A-Za-z_][\w$]*)\s*$",
-    re.I | re.S,
-)
+#: the SQL aggregates the refresh algebra maintains (SQL name → kind)
+_SQL_AGGS = {"count": "count", "sum": "sum", "avg": "avg", "min": "min",
+             "max": "max", "approx_count_distinct": "approx_distinct"}
+#: a name the view's SQL renders unquoted (group keys, output columns)
+_NAME = re.compile(r"[A-Za-z_][\w$]*")
 
 
 def parse_mv_query(select_sql: str) -> tuple[str, list, dict, "str | None"]:
     """Parse the restricted MV SELECT shape into (source_view, keys,
-    aggs, filter_sql). Every select item is either a bare group-key
-    column or ``count(*)|count(e)|sum(e)|avg(e)|min(e)|max(e)|
-    approx_count_distinct(e) AS name``; FROM names one view, optionally
-    followed by a row-local ``WHERE <pred>`` (round 15 — the filtered-
-    view shape); GROUP BY lists the key columns. Anything else refuses
-    with the shape — a materialized view's refresh algebra only exists
-    for this family, so the parser only claims it."""
+    aggs, filter_sql), reading Spark's parse of it: an Aggregate over
+    one view, optionally under a row-local ``WHERE <pred>`` (round 15 —
+    the filtered-view shape). Every select item is either a bare
+    group-key column or ``count(*)|count(e)|sum(e)|avg(e)|min(e)|
+    max(e)|approx_count_distinct(e) AS name``; GROUP BY lists the key
+    columns. Expressions and the filter keep the text the user wrote.
+    Anything else refuses with the shape — a materialized view's
+    refresh algebra only exists for this family, so the parser only
+    claims it."""
+    from database_anonymiser_spark.sql_dml import SqlDmlError, _parse, _render, _seq
+
     shape_err = ValueError(
         "materialized view query must be: SELECT <keys and "
         "count/sum/avg/min/max/approx_count_distinct aggregates> "
         "FROM <view> [WHERE <row-local pred>] GROUP BY <keys>"
     )
-    m = re.match(
-        r"\s*SELECT\s+(?P<sel>.+?)\s+FROM\s+(?P<src>[A-Za-z_][\w$.]*)\s+"
-        r"(?P<rest>.+)$",
-        select_sql, re.I | re.S,
-    )
-    if not m:
-        raise shape_err
-    # quote-aware clause split (round-15 review fix: a filter literal
-    # containing the text "GROUP BY" must not end the WHERE early) —
-    # the LAST top-level GROUP BY is the clause boundary in this
-    # restricted grammar
-    from database_anonymiser_spark.sql_dml import _find_all, _mask
-
-    rest = m.group("rest")
-    gbs = _find_all(rest, _mask(rest), r"\bGROUP\s+BY\b")
-    if not gbs:
-        raise shape_err
-    gb = gbs[-1]
-    before = rest[: gb.start()].strip()
-    gb_list = rest[gb.end():].strip()
+    try:
+        plan = _parse(select_sql)
+    except SqlDmlError:
+        raise shape_err from None
+    src = plan.at(plan.j.child()) if plan.kind == "Aggregate" else plan
     filt = None
-    if before:
-        wm_ = re.match(r"WHERE\s+(?P<w>.+)$", before, re.I | re.S)
-        if not wm_:
-            raise shape_err
-        filt = wm_.group("w").strip()
-    keys = [c.strip() for c in gb_list.split(",") if c.strip()]
-    if not all(re.fullmatch(r"[A-Za-z_][\w$]*", k) for k in keys):
+    if src.kind == "Filter":
+        filt, src = src.at(src.j.condition()), src.at(src.j.child())
+    if plan.kind != "Aggregate" or src.kind != "UnresolvedRelation":
+        raise shape_err
+    keys = [plan.at(g) for g in _seq(plan.j.groupingExpressions())]
+    if not all(
+        g.kind == "UnresolvedAttribute" and len(g.parts) == 1
+        and _NAME.fullmatch(g.parts[0]) for g in keys
+    ):
         raise ValueError(
             "GROUP BY items must be plain columns (coalesce/derive them "
             "in a source view first)"
         )
+    keys = [g.parts[0] for g in keys]
     aggs: dict = {}
     seen_keys = []
-    # split the select list on top-level commas (parens nest in agg args)
-    items, depth, cur = [], 0, []
-    for ch in m.group("sel"):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            items.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    items.append("".join(cur))
-    for item in items:
-        it = item.strip()
-        am = _AGG_RE.match(it)
-        if am:
-            kind = am.group(1).lower()
-            arg = am.group("arg").strip()
-            if kind == "count" and re.match(r"DISTINCT\b", arg, re.I):
-                raise ValueError(
-                    "COUNT(DISTINCT ...) is not incrementally "
-                    "maintainable with bounded per-group state — use "
-                    "APPROX_COUNT_DISTINCT(expr) AS name (maintained KMV "
-                    f"sketch, EXACT below {_KMV_K} distinct values)"
-                )
-            if kind == "approx_count_distinct":
-                kind = "approx_distinct"
-            aggs[am.group("name")] = (
-                kind, None if (kind == "count" and arg == "*") else arg
-            )
-        elif re.fullmatch(r"[A-Za-z_][\w$]*", it):
-            seen_keys.append(it)
-        else:
+    for item in (plan.at(e) for e in _seq(plan.j.aggregateExpressions())):
+        if item.kind == "UnresolvedAttribute" and len(item.parts) == 1:
+            seen_keys.append(item.parts[0])
+            continue
+        fn = item.at(item.j.child()) if item.kind == "Alias" else item
+        kind = (
+            _SQL_AGGS.get(fn.parts[-1].lower())
+            if fn.kind == "UnresolvedFunction" and len(fn.parts) == 1
+            else None
+        )
+        if kind == "count" and fn.j.isDistinct():
             raise ValueError(
-                f"unsupported materialized-view select item {it!r}: "
-                "use a bare group key or count/sum/avg/min/max/"
-                "approx_count_distinct(...) AS name"
+                "COUNT(DISTINCT ...) is not incrementally "
+                "maintainable with bounded per-group state — use "
+                "APPROX_COUNT_DISTINCT(expr) AS name (maintained KMV "
+                f"sketch, EXACT below {_KMV_K} distinct values)"
             )
+        if (
+            item.kind != "Alias" or not _NAME.fullmatch(item.j.name())
+            or kind is None or len(fn.kids) != 1 or fn.j.isDistinct()
+            or fn.j.filter().isDefined()
+        ):
+            raise ValueError(
+                f"unsupported materialized-view select item "
+                f"{_render(item, {})!r}: use a bare group key or "
+                "count/sum/avg/min/max/approx_count_distinct(...) AS name"
+            )
+        arg = fn.kids[0]
+        # Spark parses count(*) as count(1), the literal's origin the call's
+        star = kind == "count" and arg.lit == ("integer", "1") and (
+            arg.raw in (None, fn.raw)
+        )
+        aggs[item.j.name()] = (kind, None if star else _render(arg, {}))
     if sorted(seen_keys) != sorted(keys):
         raise ValueError(
             f"select keys {sorted(seen_keys)} must equal GROUP BY keys "
@@ -988,6 +1003,7 @@ def parse_mv_query(select_sql: str) -> tuple[str, list, dict, "str | None"]:
         )
     if not aggs:
         raise ValueError("materialized view needs at least one aggregate")
-    if filt:
-        _check_filter_row_local(filt)
-    return m.group("src"), keys, aggs, filt
+    if filt is not None:
+        _check_row_local(filt)
+    source = ".".join(_seq(src.j.multipartIdentifier()))
+    return source, keys, aggs, filt and _render(filt, {}, parens=True)

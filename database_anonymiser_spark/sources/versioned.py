@@ -4392,42 +4392,49 @@ class VersionedTable:
     # ------------------------------------------------------ constraints
 
     def add_column(self, name: str, dtype) -> int:
-        """``ALTER TABLE ADD COLUMN`` as a pure METADATA commit — zero
+        """``ALTER TABLE ADD COLUMN``: :meth:`add_columns` of one."""
+        return self.add_columns([(name, dtype)])
+
+    def add_columns(self, columns) -> int:
+        """``ALTER TABLE ADD COLUMNS`` as ONE pure METADATA commit — zero
         data reads or writes: the logged schema gains the (nullable)
-        field and every existing file NULL-fills it at read through the
+        fields and every existing file NULL-fills them at read through the
         same explicit-schema projection as merge_schema appends; the
         live file set is untouched, so incremental consumers (changes(),
-        IVM) see an empty file-level diff across it. ``dtype`` is a
-        DataType or a DDL type string. Refused when the name already
-        exists or collides with a historical physical name (the same
-        resurrection guard as evolution: old files hold bytes under that
-        name belonging to a DIFFERENT logical column)."""
+        IVM) see an empty file-level diff across it. ``columns`` is a
+        list of ``(name, dtype)``, each dtype a DataType or a DDL type
+        string. Refused — before anything commits — when a name repeats,
+        already exists or collides with a historical physical name (the
+        same resurrection guard as evolution: old files hold bytes under
+        that name belonging to a DIFFERENT logical column)."""
         from pyspark.sql.types import DataType, StructField, StructType
 
         schema = self._log_schema()
         if schema is None:
             raise ValueError("add_column requires a logged schema")
-        if isinstance(dtype, str):
-            from pyspark.sql.types import _parse_datatype_string
-
-            dtype = _parse_datatype_string(dtype)
-        if not isinstance(dtype, DataType):
-            raise ValueError(f"not a data type: {dtype!r}")
         names = [f.name for f in schema.fields]
-        if name in names:
-            raise ValueError(f"column already exists: {name!r}")
         m = self._map()
         physicals = {m.get(n, n) for n in names}
         retired = set(self._colmap.get("retired") or [])
-        if name in physicals | retired:
-            raise ValueError(
-                f"{name!r} collides with a historical physical column "
-                "name; files on disk hold bytes under that name for a "
-                "different logical column"
-            )
-        new_schema = StructType(
-            [*schema.fields, StructField(name, dtype, True)]
-        )
+        fields = []
+        for name, dtype in columns:
+            if isinstance(dtype, str):
+                from pyspark.sql.types import _parse_datatype_string
+
+                dtype = _parse_datatype_string(dtype)
+            if not isinstance(dtype, DataType):
+                raise ValueError(f"not a data type: {dtype!r}")
+            if name in names:
+                raise ValueError(f"column already exists: {name!r}")
+            if name in physicals | retired:
+                raise ValueError(
+                    f"{name!r} collides with a historical physical column "
+                    "name; files on disk hold bytes under that name for a "
+                    "different logical column"
+                )
+            names.append(name)
+            fields.append(StructField(name, dtype, True))
+        new_schema = StructType([*schema.fields, *fields])
         v = self.latest_version()
         _commit(
             self.root, v + 1, [], [], self.key_col(), op="add_column",
@@ -4537,14 +4544,12 @@ class VersionedTable:
                 "files on disk hold bytes under that name for a different "
                 "logical column"
             )
-        for cname, sql in (self._constraints or {}).items():
-            import re as _re
-
-            if _re.search(rf"\b{_re.escape(old)}\b", sql):
-                raise ValueError(
-                    f"constraint {cname!r} references {old!r}; drop or "
-                    "rewrite it before renaming"
-                )
+        refs = self._constraints_on(old)
+        if refs:
+            raise ValueError(
+                f"constraint {refs[0]!r} references {old!r}; drop or "
+                "rewrite it before renaming"
+            )
         phys = m.pop(old, old)
         m[new] = phys
         from pyspark.sql.types import StructField, StructType
@@ -4577,6 +4582,22 @@ class VersionedTable:
         )
         return v + 1
 
+    def _constraints_on(self, column: str) -> list[str]:
+        """The CHECK constraints whose predicate reads ``column``: the
+        attributes of Spark's parse of each predicate, compared
+        case-insensitively as Spark's default resolver does (a string
+        literal names no column)."""
+        from database_anonymiser_spark.sql_dml import _parse
+
+        return [
+            cname for cname, sql in (self._constraints or {}).items()
+            if any(
+                n.kind == "UnresolvedAttribute"
+                and n.parts[0].lower() == column.lower()
+                for n, _ in _parse(sql, expression=True).walk()
+            )
+        ]
+
     def drop_column(self, name: str) -> int:
         """``ALTER TABLE DROP COLUMN`` — metadata only (Delta column
         mapping): the logical schema loses the field; the physical bytes
@@ -4591,13 +4612,11 @@ class VersionedTable:
             raise ValueError(f"no such column: {name!r}")
         if name in self.key_cols():
             raise ValueError("cannot drop a key column")
-        for cname, sql in (self._constraints or {}).items():
-            import re as _re
-
-            if _re.search(rf"\b{_re.escape(name)}\b", sql):
-                raise ValueError(
-                    f"constraint {cname!r} references {name!r}; drop it first"
-                )
+        refs = self._constraints_on(name)
+        if refs:
+            raise ValueError(
+                f"constraint {refs[0]!r} references {name!r}; drop it first"
+            )
         m = self._map()
         retired = set(self._colmap.get("retired") or [])
         retired.add(m.pop(name, name))

@@ -52,9 +52,21 @@ with Spark's own message.  One walk over the parse tree fills the
 statement record; each expression slot keeps the text the user wrote
 (the slice its node's origin indexes).  Qualifier rewriting, the MERGE
 ON key split, ``[NOT] IN (SELECT ...)`` handling and the file-skipping
-hints read tree nodes, never the text.  A text scanner remains only
-for the engine's own statements Spark cannot parse (OPTIMIZE ... ZORDER,
-ERASE, CREATE ... USING VERSIONED, ...) and for splitting scripts.
+hints read tree nodes, never the text.
+
+The maintenance and DDL statements take the same route.  Those Spark's
+grammar accepts — the ALTER TABLE family, TRUNCATE, DROP TABLE, SHOW
+CREATE TABLE / TBLPROPERTIES and ANALYZE ... FOR COLUMNS — are parsed
+once, and one walk over the tree fills the record execution reads (a
+CHECK predicate keeps the user's text through its origin slice).  The
+engine's own statements (OPTIMIZE, VACUUM, RESTORE, ERASE, COPY INTO,
+CONVERT, REFRESH / DROP MATERIALIZED VIEW, DESCRIBE HISTORY|DETAIL,
+ANALYZE ... BLOOM COLUMNS, CREATE ... USING VERSIONED, EXPLAIN) keep one
+head pattern each, in one table: the keyword, the target and the engine
+options.  Every predicate, query, column list and property list inside
+them goes to Catalyst.  A quote- and paren-aware scanner remains only
+for splitting scripts and for the CREATE TABLE body, whose ``KEY``,
+``CLONE`` and identity ``STEP`` are not Spark grammar.
 """
 
 from __future__ import annotations
@@ -75,8 +87,8 @@ class SqlDmlError(ValueError):
 
 
 # --------------------------------------------------------------------------
-# scanner: quote- and paren-aware masks over the raw statement text (the
-# utility statements Spark cannot parse, and script splitting)
+# scanner: quote- and paren-aware masks over the raw statement text
+# (script splitting and the CREATE TABLE body)
 # --------------------------------------------------------------------------
 
 def _mask(s: str) -> list[tuple[int, bool]]:
@@ -125,14 +137,6 @@ def _find(s: str, mask, pattern: str, start: int = 0) -> "re.Match | None":
     return None
 
 
-def _find_all(s: str, mask, pattern: str) -> list["re.Match"]:
-    return [
-        m
-        for m in re.compile(pattern, re.I).finditer(s)
-        if mask[m.start()] == (0, True)
-    ]
-
-
 def _split_top(s: str, sep: str = ",") -> list[str]:
     """Split on top-level ``sep`` characters (never inside quotes/parens)."""
     mask = _mask(s)
@@ -176,10 +180,12 @@ def _opt(j):
     return j.get() if j.isDefined() else None
 
 
-def _parse(text: str, expression: bool = False) -> "_Node":
+def _parse(text: str, expression: bool = False,
+           grammar: str | None = None) -> "_Node":
     """Parse ``text`` with the active session's Catalyst parser — as one
     statement, or as a bare expression.  A refusal from Spark's grammar
-    becomes a :class:`SqlDmlError` carrying Spark's message.  PySpark
+    becomes a :class:`SqlDmlError` carrying Spark's message and
+    ``grammar`` (default: the DML grammar).  PySpark
     logs every JVM exception it converts at ERROR, stack trace included,
     whatever the log level; the refusal reaches the user as the
     SqlDmlError, so that record is muted for the call."""
@@ -194,7 +200,7 @@ def _parse(text: str, expression: bool = False) -> "_Node":
     try:
         j = parser.parseExpression(text) if expression else parser.parsePlan(text)
     except AnalysisException as e:  # ParseException is one
-        raise SqlDmlError(f"{str(e).strip()}\n{_GRAMMAR}") from None
+        raise SqlDmlError(f"{str(e).strip()}\n{grammar or _GRAMMAR}") from None
     finally:
         log.disabled = was
     return _Node(j, text)
@@ -617,20 +623,9 @@ def _parse_on_keys(
     return _on_keys(_parse(on, expression=True), talias, salias, key_cols)
 
 
-#: SQL single-quoted literal with standard '' escaping — the
-#: TBLPROPERTIES key/value grammar (round 14)
-_SQ_LIT = r"'((?:[^']|'')*)'"
-
-
 def _sq_quote(s: str) -> str:
     """Render a string as a SQL single-quoted literal ('' escaping)."""
     return "'" + str(s).replace("'", "''") + "'"
-
-
-def _sq_unquote(body: str) -> str:
-    """Inverse of :func:`_sq_quote` for the regex GROUP (quotes already
-    stripped by the match)."""
-    return body.replace("''", "'")
 
 
 # --------------------------------------------------------------------------
@@ -918,222 +913,21 @@ def _membership_filter(vt, df, membership):
     return joined.where(member).drop(_MEMBER_MARK)
 
 
-def classify_utility(stmt: str) -> str | None:
-    """'optimize' | 'vacuum' | 'restore' | 'describe' | 'alter' | ...
-    when the statement STARTS like one of the table-maintenance shapes
-    (Delta's SQL surface for the same ops), else None. Keyword-level
-    only — the router must use :func:`claim_utility`, which also checks
-    the SHAPE and the target, because DESCRIBE/ALTER/CREATE are valid
-    plain Spark SQL too (round-14 advice fix: round 13 claimed every
-    DESCRIBE/ALTER and broke e.g. ``DESCRIBE customer``)."""
-    head = re.match(
-        r"\s*(OPTIMIZE|VACUUM|RESTORE|DESCRIBE|ALTER|ERASE|CREATE|COPY|"
-        r"CONVERT|TRUNCATE|SHOW|REFRESH|DROP|EXPLAIN|ANALYZE)\b",
-        stmt, re.I,
-    )
-    return head.group(1).lower() if head else None
-
-
-def claim_utility(stmt: str, versioned_views: dict[str, dict]) -> str | None:
-    """The router's claim check: the utility kind when
-    :func:`execute_utility` will actually handle this statement, else
-    None (the caller falls through to ``spark.sql``).
-
-    OPTIMIZE / VACUUM / RESTORE / ERASE / COPY INTO / CONVERT are not
-    Spark SQL statements at all, so the keyword alone claims them (a
-    malformed shape then errors with OUR grammar, which beats Spark's
-    parse error). DESCRIBE / ALTER / CREATE exist in plain Spark SQL,
-    so only the engine's own shapes are claimed:
-
-    - ``DESCRIBE HISTORY|DETAIL <versioned view>``
-    - ``ALTER TABLE <versioned view> ...`` (any sub-shape: if it is not
-      one the utility face supports, refusing with the grammar is the
-      right outcome for a versioned target)
-    - ``CREATE TABLE ... USING VERSIONED ...`` (the explicit format
-      marker, like Spark's ``USING delta``)
-    """
-    kind = classify_utility(stmt)
-    if kind is None:
-        return None
-    if kind == "explain":
-        # EXPLAIN is valid Spark SQL too — claim only when the INNER
-        # statement is ours (a claimed DML/utility shape, or a
-        # single-table SELECT on a registered versioned view, whose
-        # pushdown plan the engine can explain); every other EXPLAIN
-        # falls through to Spark's own (round 15)
-        inner = re.sub(r"^\s*EXPLAIN\s+", "", _strip_stmt(stmt), flags=re.I)
-        dk = classify_dml(inner)
-        if dk:
-            t = statement_target(inner)
-            return kind if t and t.lower() in versioned_views else None
-        if claim_utility(inner, versioned_views):
-            return kind
-        m = re.match(
-            rf"SELECT\s+.+?\s+FROM\s+({_IDENT})\s*(?:WHERE\b.+)?$",
-            inner, re.I | re.S,
-        )
-        return (
-            kind
-            if m and _unquote(m.group(1)).lower() in versioned_views
-            else None
-        )
-    if kind == "analyze":
-        # ANALYZE TABLE is valid Spark SQL on catalog tables — claim
-        # only a registered versioned view's (round 15)
-        m = re.match(
-            rf"\s*ANALYZE\s+TABLE\s+({_IDENT})\b", stmt, re.I
-        )
-        return (
-            kind
-            if m and _unquote(m.group(1)).lower() in versioned_views
-            else None
-        )
-    if kind not in (
-        "describe", "alter", "create", "truncate", "show", "refresh",
-        "drop",
-    ):
-        return kind
-    s = _strip_stmt(stmt)
-    if kind == "describe":
-        m = re.match(
-            rf"DESCRIBE\s+(?:HISTORY|DETAIL)\s+({_IDENT})\s*$", s, re.I
-        )
-        return (
-            kind
-            if m and _unquote(m.group(1)).lower() in versioned_views
-            else None
-        )
-    if kind == "alter":
-        m = re.match(rf"ALTER\s+TABLE\s+({_IDENT})\b", s, re.I)
-        return (
-            kind
-            if m and _unquote(m.group(1)).lower() in versioned_views
-            else None
-        )
-    if kind == "truncate":
-        # TRUNCATE TABLE is valid Spark SQL on catalog tables — claim
-        # only a versioned-view target (round 14)
-        m = re.match(rf"TRUNCATE\s+TABLE\s+({_IDENT})\s*$", s, re.I)
-        return (
-            kind
-            if m and _unquote(m.group(1)).lower() in versioned_views
-            else None
-        )
-    if kind == "show":
-        # only SHOW CREATE TABLE / SHOW TBLPROPERTIES on a registered
-        # versioned view; every other SHOW is plain Spark SQL
-        m = re.match(
-            rf"SHOW\s+(?:CREATE\s+TABLE|TBLPROPERTIES)\s+({_IDENT})\s*$",
-            s, re.I,
-        )
-        return (
-            kind
-            if m and _unquote(m.group(1)).lower() in versioned_views
-            else None
-        )
-    if kind == "refresh":
-        # REFRESH TABLE is plain Spark SQL; only the MATERIALIZED VIEW
-        # form on a registered versioned view is ours (round 14)
-        m = re.match(
-            rf"REFRESH\s+MATERIALIZED\s+VIEW\s+({_IDENT})"
-            rf"(?:\s+TO\s+VERSION\s+\d+)?\s*$",
-            s, re.I,
-        )
-        return (
-            kind
-            if m and _unquote(m.group(1)).lower() in versioned_views
-            else None
-        )
-    if kind == "drop":
-        # DROP TABLE/VIEW are plain Spark SQL on catalog objects; only
-        # a registered versioned view's drop is ours (round 14)
-        m = re.match(
-            rf"DROP\s+(?:TABLE|MATERIALIZED\s+VIEW)\s+(?:IF\s+EXISTS\s+)?"
-            rf"({_IDENT})\s*$",
-            s, re.I,
-        )
-        return (
-            kind
-            if m and _unquote(m.group(1)).lower() in versioned_views
-            else None
-        )
-    # CREATE: claimed with the explicit USING VERSIONED marker, or the
-    # clone form whose SOURCE is a versioned view (round 14)
-    mask = _mask(s)
-    if _find(s, mask, r"\bUSING\s+VERSIONED\b"):
-        return kind
-    m = re.match(
-        rf"CREATE\s+TABLE\s+{_IDENT}\s+(?:SHALLOW|DEEP)\s+CLONE\s+"
-        rf"({_IDENT})\b",
-        s, re.I,
-    )
-    return (
-        kind
-        if m and _unquote(m.group(1)).lower() in versioned_views
-        else None
-    )
-
-
-def created_view_name(stmt: str) -> str | None:
-    """The view a ``CREATE TABLE ... USING VERSIONED`` or ``CONVERT ...
-    AS <name>`` statement WILL register, for the script router's
-    speculative pre-scan (round 14): later statements in the same script
-    target tables that exist only once the earlier ones run, so the
-    all-routed check must see the names before execution."""
-    s = _strip_stmt(stmt)
-    m = re.match(
-        rf"CREATE\s+(?:TABLE|MATERIALIZED\s+VIEW)\s+({_IDENT})\b", s, re.I
-    )
-    if m and (
-        _find(s, _mask(s), r"\bUSING\s+VERSIONED\b")
-        or re.match(
-            r"\s*(?:SHALLOW|DEEP)\s+CLONE\b", s[m.end():], re.I
-        )
-    ):
-        return _unquote(m.group(1))
-    m = re.match(
-        rf"CONVERT\s+TO\s+VERSIONED\s+'[^']+'\s+KEY\s*\([^)]*\)\s+"
-        rf"AS\s+({_IDENT})\s*$",
-        s, re.I,
-    )
-    return _unquote(m.group(1)) if m else None
-
-
-def statement_target(stmt: str) -> str | None:
-    """The UNQUOTED table a DML or mutating-maintenance statement
-    touches, for the CLI's rollback bookkeeping — parsed with the same
-    identifier grammar as the statement fronts, so quoted targets
-    (``UPDATE `cust` SET ...``) are tracked too (round-14 advice fix:
-    the CLI's ad-hoc bare-identifier regex silently skipped quoted
-    views, leaving them un-restored on --sqlRollbackOnError). Returns
-    None for non-mutating statements (DESCRIBE) and shapes without a
-    view target (CONVERT — it creates the table it names)."""
-    if classify_dml(stmt):  # a DML target comes from Spark's parse
-        plan = _parse(stmt)
-        if plan.kind == "MergeIntoTable":
-            return _relation(plan.at(plan.j.targetTable()), True, "target")[0]
-        if plan.kind in ("UpdateTable", "DeleteFromTable", "InsertIntoStatement"):
-            return _relation(plan.at(plan.j.table()), True, "target")[0]
-        return None
-    s = _strip_stmt(stmt)
-    m = re.match(
-        rf"(?:OPTIMIZE|VACUUM|RESTORE(?:\s+TABLE)?|ERASE\s+FROM|"
-        rf"ALTER\s+TABLE|COPY\s+INTO|TRUNCATE\s+TABLE|"
-        rf"ANALYZE\s+TABLE)\s+({_IDENT})",
-        s, re.I,
-    )
-    return _unquote(m.group(1)) if m else None
-
+# --------------------------------------------------------------------------
+# utility statements: one head table, one walk over Spark's parse
+# --------------------------------------------------------------------------
 
 _UTILITY_GRAMMAR = (
-    "supported maintenance grammar (Delta's SQL surface on the native ops):\n"
+    "supported maintenance grammar (Delta's SQL surface on the native ops;\n"
+    "ALTER TABLE, TRUNCATE, DROP TABLE, SHOW and ANALYZE ... FOR COLUMNS are\n"
+    "Spark SQL's own statements, parsed by Spark):\n"
     "  OPTIMIZE <view> [ZORDER BY (cols) [WHERE <pred>] | MERGE RUNS <k>]\n"
     "      -- WHERE (scoped OPTIMIZE): recluster only stats-overlapping files\n"
     "  VACUUM <view> [RETAIN <n> VERSIONS | RETAIN <h> HOURS] [DRY RUN]\n"
     "  RESTORE [TABLE] <view> TO VERSION AS OF <n> | TO TIMESTAMP AS OF '<ts>'\n"
     "  DESCRIBE HISTORY|DETAIL <view>\n"
     "  ALTER TABLE <view> CLUSTER BY (cols)\n"
-    "  ALTER TABLE <view> ADD COLUMN <col> <type>\n"
+    "  ALTER TABLE <view> ADD COLUMN[S] <col> <type> | (<col> <type>, ...)\n"
     "  ALTER TABLE <view> RENAME COLUMN <col> TO <col>\n"
     "  ALTER TABLE <view> DROP COLUMN <col>\n"
     "  ALTER TABLE <view> ALTER COLUMN <col> TYPE <type>   -- lossless widening\n"
@@ -1157,16 +951,429 @@ _UTILITY_GRAMMAR = (
     "  DROP TABLE [IF EXISTS] <view> | DROP MATERIALIZED VIEW <view>\n"
     "      -- deregister only (external-location semantics: data stays)\n"
     "  SHOW CREATE TABLE <view>         -- executable round-trip DDL\n"
-    "  SHOW TBLPROPERTIES <view>        -- the versioned property map as rows\n"
+    "  SHOW TBLPROPERTIES <view> [('k')] -- the versioned property map as rows\n"
     "  COPY INTO <view> FROM '<parquet dir or file>'   -- idempotent by file\n"
     "  CONVERT TO VERSIONED '<dir>' KEY (col) [AS <view>]\n"
     "  ERASE FROM <view> WHERE <pred>   -- engine extension: GDPR Art. 17\n"
     "      verified hard delete (delete + vacuum + log-stat scrub +\n"
     "      re-scan verification; time travel below the erase is GONE)\n"
-    "  EXPLAIN <statement>              -- plan only, zero execution:\n"
+    "  EXPLAIN <statement or single-table SELECT>   -- plan only, zero execution:\n"
     "      classification, target, derived prune ranges + file-count effect,\n"
     "      membership plan (literal vs semi-join), the native op that would run"
 )
+
+#: a utility statement's first keyword — read without the JVM, so a
+#: statement that starts with any other word costs one regex match
+_UTILITY_KEYWORD = re.compile(
+    r"\s*(OPTIMIZE|VACUUM|RESTORE|DESCRIBE|ALTER|ERASE|CREATE|COPY|"
+    r"CONVERT|TRUNCATE|SHOW|REFRESH|DROP|EXPLAIN|ANALYZE)\b",
+    re.I,
+)
+
+_T = rf"(?P<t>{_IDENT})"
+
+#: the heads of the statements Spark's grammar does not accept, as
+#: ``(keyword, op, head)``.  A head matches the whole statement; its
+#: named groups are the record's fields (``t``: the target view).  An
+#: embedded predicate, query, column or property list is captured as
+#: text and read by Catalyst.  SET/UNSET TBLPROPERTIES are here because
+#: Spark's grammar reserves the keys owner, location, provider and
+#: external, which the versioned property map accepts.
+_HEADS = [(kind, op, re.compile(head, re.I | re.S)) for kind, op, head in (
+    ("optimize", "optimize",
+     rf"OPTIMIZE\s+{_T}(?:\s+ZORDER\s+BY\s*\((?P<zorder>[^)]*)\)"
+     r"|\s+MERGE\s+RUNS\s+(?P<runs>\d+))?(?:\s+WHERE\s+(?P<where>.+))?"),
+    ("vacuum", "vacuum",
+     rf"VACUUM\s+{_T}(?:\s+RETAIN\s+(?P<n>\d+(?:\.\d+)?)\s+"
+     r"(?P<unit>VERSIONS|HOURS))?(?:\s+(?P<dry>DRY\s+RUN))?"),
+    ("restore", "restore",
+     rf"RESTORE\s+(?:TABLE\s+)?{_T}\s+TO\s+(?:VERSION\s+AS\s+OF\s+"
+     r"(?P<v>\d+)|TIMESTAMP\s+AS\s+OF\s+'(?P<ts>[^']+)')"),
+    ("erase", "erase", rf"ERASE\s+FROM\s+{_T}\s+WHERE\s+(?P<where>.+)"),
+    ("copy", "copy_into", rf"COPY\s+INTO\s+{_T}\s+FROM\s+'(?P<path>[^']+)'"),
+    ("convert", "convert",
+     r"CONVERT\s+TO\s+VERSIONED\s+'(?P<path>[^']+)'\s+KEY\s*"
+     rf"\((?P<key>[^)]*)\)(?:\s+AS\s+(?P<name>{_IDENT}))?"),
+    ("refresh", "refresh_materialized_view",
+     rf"REFRESH\s+MATERIALIZED\s+VIEW\s+{_T}(?:\s+TO\s+VERSION\s+(?P<v>\d+))?"),
+    ("drop", "drop_table", rf"DROP\s+MATERIALIZED\s+VIEW\s+{_T}"),
+    ("describe", "describe", rf"DESCRIBE\s+(?P<what>HISTORY|DETAIL)\s+{_T}"),
+    ("analyze", "analyze",
+     rf"ANALYZE\s+TABLE\s+{_T}\s+COMPUTE\s+STATISTICS\s+FOR"
+     r"(?:\s+COLUMNS\s+(?P<stats>.+?))?\s+BLOOM\s+COLUMNS\s+(?P<bloom>.+)"),
+    ("alter", "set_properties",
+     rf"ALTER\s+TABLE\s+{_T}\s+SET\s+TBLPROPERTIES\s*(?P<props>\(.*\))"),
+    ("alter", "unset_properties",
+     rf"ALTER\s+TABLE\s+{_T}\s+UNSET\s+TBLPROPERTIES\s*(?P<props>\(.*\))"),
+    ("create", "create_materialized_view",
+     rf"CREATE\s+MATERIALIZED\s+VIEW\s+{_T}\s+USING\s+VERSIONED\s+"
+     r"LOCATION\s+'(?P<loc>[^']+)'\s+AS\s+(?P<query>.+)"),
+    ("create", "clone",
+     rf"CREATE\s+TABLE\s+{_T}\s+(?P<mode>SHALLOW|DEEP)\s+CLONE\s+"
+     rf"(?P<source>{_IDENT})(?:\s+VERSION\s+AS\s+OF\s+(?P<v>\d+))?"
+     r"\s+LOCATION\s+'(?P<loc>[^']+)'"),
+    ("create", "create_table", rf"CREATE\s+TABLE\s+{_T}(?P<body>.*)"),
+    ("explain", "explain", r"EXPLAIN\s+(?P<inner>.+)"),
+)]
+
+#: the keywords Spark's grammar parses, with the plan nodes each claims
+#: (None: every ALTER TABLE command — on a versioned target a sub-shape
+#: the engine does not run refuses with the grammar)
+_CATALYST = {
+    "alter": None,
+    "truncate": ("TruncateTable", "TruncatePartition"),
+    "show": ("ShowTableProperties", "ShowCreateTable"),
+    "drop": ("DropTable",),
+    "analyze": ("AnalyzeColumn", "AnalyzeTable"),
+}
+
+#: refusal texts that say more than "unsupported <KEYWORD> shape"
+_SHAPE_HINTS = {
+    "alter": "unsupported ALTER TABLE shape",
+    "erase": "ERASE needs FROM <view> WHERE <pred> (an unscoped erase "
+             "would be DELETE-the-table; write it explicitly)",
+    "analyze": "ANALYZE needs: ANALYZE TABLE <view> COMPUTE STATISTICS "
+               "FOR [COLUMNS a, b] [BLOOM COLUMNS c, d]",
+}
+
+#: keywords that are not Spark SQL at all: the keyword alone claims the
+#: statement, so a malformed shape refuses with the engine's grammar
+_KEYWORD_CLAIMED = ("optimize", "vacuum", "restore", "erase", "copy", "convert")
+
+#: the keywords whose statements write their target
+_WRITES = ("optimize", "vacuum", "restore", "erase", "alter", "copy",
+           "truncate", "analyze")
+
+#: the keywords whose statements open no existing versioned table
+_NO_TABLE = ("create", "convert", "drop", "explain")
+
+
+@dataclass
+class _Shape:
+    op: str | None                  # what execution runs; None: refused
+    target: str | None = None       # the view it names, unquoted
+    args: dict = field(default_factory=dict)
+    error: str | None = None        # the refusal, when op is None
+
+
+class _Utility:
+    """One utility statement: its keyword, read without the JVM, and its
+    shape, read on first use — the engine head it matches, or one walk
+    over Spark's parse of it."""
+
+    def __init__(self, kind: str, text: str):
+        self.kind, self.text = kind, text
+
+    @cached_property
+    def shape(self) -> _Shape:
+        for kind, op, head in _HEADS:
+            m = head.fullmatch(self.text) if kind == self.kind else None
+            if m:
+                args = m.groupdict()
+                target = args.pop("t", None)
+                target = target and _unquote(target)
+                try:
+                    return _Shape(op, target, _head_args(op, args))
+                except SqlDmlError as e:
+                    return _Shape(None, target, error=str(e))
+        hint = _SHAPE_HINTS.get(self.kind, f"unsupported {self.kind.upper()} shape")
+        if self.kind not in _CATALYST:
+            return _Shape(None, error=f"{hint}\n{_UTILITY_GRAMMAR}")
+        try:
+            plan = _parse(self.text, grammar=_UTILITY_GRAMMAR)
+        except SqlDmlError as e:
+            return _Shape(None, error=f"{hint}\n{e}")
+        return _catalyst_shape(self.kind, plan, f"{hint}\n{_UTILITY_GRAMMAR}")
+
+
+def _parse_utility(stmt: str) -> "_Utility | None":
+    """The utility record of ``stmt``, or None when its first keyword is
+    not a utility keyword (no JVM call either way: the shape is read on
+    first use)."""
+    head = _UTILITY_KEYWORD.match(stmt)
+    return _Utility(head.group(1).lower(), _strip_stmt(stmt)) if head else None
+
+
+def _column_list(text: str) -> tuple[str, ...]:
+    """The names of a column list (``a, `b c```), read as Spark reads a
+    projection of bare columns."""
+    plan = _parse(f"SELECT {text}", grammar=_UTILITY_GRAMMAR)
+    items = (
+        [plan.at(e) for e in _seq(plan.j.projectList())]
+        if plan.kind == "Project"
+        and plan.j.child().nodeName() == "OneRowRelation" else []
+    )
+    if not items or any(
+        i.kind != "UnresolvedAttribute" or len(i.parts) != 1 for i in items
+    ):
+        raise SqlDmlError(f"expected a list of columns, got ({text})")
+    return tuple(i.parts[0] for i in items)
+
+
+def _head_args(op: str, a: dict) -> dict:
+    """An engine head's fields, its ANALYZE column lists and TBLPROPERTIES
+    lists read by Catalyst.  SET's list is read by Spark's property-list
+    grammar under SERDEPROPERTIES, which reserves no key; UNSET's keys (a
+    string or a dotted name each) are read as an array's arguments."""
+    if op == "analyze":
+        return {"stats": _column_list(a["stats"]) if a["stats"] else (),
+                "bloom": _column_list(a["bloom"])}
+    if op == "set_properties":
+        plan = _parse(f"ALTER TABLE t SET SERDEPROPERTIES {a['props']}",
+                      grammar=_UTILITY_GRAMMAR)
+        props, it = {}, plan.j.serdeProperties().get().iterator()
+        while it.hasNext():
+            kv = it.next()
+            props[kv._1()] = kv._2()
+        if "" in props:
+            raise SqlDmlError("malformed TBLPROPERTIES item: empty key")
+        return {"properties": props}
+    if op == "unset_properties":
+        arr = _parse(f"array{a['props']}", expression=True,
+                     grammar=_UTILITY_GRAMMAR)
+        keys = arr.kids if arr.kind == "UnresolvedFunction" else []
+        out = [
+            k.lit[1] if k.lit and k.lit[0] == "string"
+            else ".".join(k.parts) if k.kind == "UnresolvedAttribute" else ""
+            for k in keys
+        ]
+        if not out or "" in out:
+            raise SqlDmlError(
+                f"malformed UNSET TBLPROPERTIES list {a['props']}; "
+                "expected ('key', ...)"
+            )
+        return {"keys": out}
+    return a
+
+
+def _datatype(j):
+    """A parsed JVM data type as PySpark's."""
+    from pyspark.sql.types import _parse_datatype_json_string
+
+    return _parse_datatype_json_string(j.json())
+
+
+def _table_name(plan: _Node) -> str | None:
+    """The table a command names: its leaf relation's identifier."""
+    j = plan.j
+    while j.children().size():
+        j = j.children().apply(0)
+    kind = j.nodeName()
+    if kind == "UnresolvedIdentifier":
+        return ".".join(_seq(j.nameParts()))
+    if kind in ("UnresolvedTable", "UnresolvedTableOrView", "UnresolvedRelation"):
+        return ".".join(_seq(j.multipartIdentifier()))
+    return None
+
+
+def _catalyst_shape(kind: str, plan: _Node, refusal: str) -> _Shape:
+    """The one walk over a Spark-grammar utility statement: a claimed
+    plan node names its target; a shape the engine runs fills ``op`` and
+    ``args``, any other refuses with ``refusal``."""
+    j, node = plan.j, plan.kind
+    claims = _CATALYST[kind]
+    target = _table_name(plan) if claims is None or node in claims else None
+    refuse = _Shape(None, target, error=refusal)
+    if target is None:
+        return refuse
+    if node == "AddColumns":
+        cols = []
+        for c in _seq(j.columnsToAdd()):
+            name = _seq(c.name())
+            if len(name) != 1 or not c.nullable() or any(
+                o.isDefined() for o in (c.comment(), c.position(), c.default())
+            ):
+                return _Shape(None, target, error=(
+                    "ADD COLUMNS takes `<col> <type>` items: a nested field, "
+                    "NOT NULL, COMMENT, FIRST/AFTER or DEFAULT is not "
+                    f"supported\n{_UTILITY_GRAMMAR}"
+                ))
+            cols.append((name[0], _datatype(c.dataType())))
+        return _Shape("add_column", target, {"columns": cols})
+    if node == "RenameColumn":
+        old = _seq(j.column().name())
+        if len(old) == 1:
+            return _Shape("rename_column", target,
+                          {"from": old[0], "to": j.newName()})
+    if node == "DropColumns":
+        cols = [_seq(c.name()) for c in _seq(j.columnsToDrop())]
+        if not j.ifExists() and len(cols) == 1 and len(cols[0]) == 1:
+            return _Shape("drop_column", target, {"column": cols[0][0]})
+    if node == "AlterColumns":
+        specs = _seq(j.specs())
+        spec = specs[0] if len(specs) == 1 else None
+        col = _seq(spec.column().name()) if spec is not None else []
+        if (
+            len(col) == 1 and spec.newDataType().isDefined()
+            and not spec.dropDefault() and not any(o.isDefined() for o in (
+                spec.newNullability(), spec.newComment(),
+                spec.newPosition(), spec.newDefaultExpression(),
+            ))
+        ):
+            return _Shape("widen_column", target, {
+                "column": col[0], "type": _datatype(spec.newDataType().get()),
+            })
+    if node == "AddCheckConstraint":
+        cc = j.checkConstraint()
+        if cc.userProvidedName() is not None:
+            # the predicate as the user wrote it: its origin slice
+            return _Shape("add_constraint", target, {
+                "name": cc.userProvidedName(),
+                "predicate": _render(plan.at(cc.child()), {}),
+            })
+    if node == "DropConstraint" and not j.ifExists() and not j.cascade():
+        return _Shape("drop_constraint", target, {"name": j.name()})
+    if node == "AlterTableClusterBy":
+        spec = _opt(j.clusterBySpec())
+        cols = [list(n.fieldNames()) for n in _seq(spec.columnNames())] if spec else []
+        if all(len(c) == 1 for c in cols):
+            return _Shape("set_clustering", target,
+                          {"cols": tuple(c[0] for c in cols)})
+    if node == "TruncateTable":
+        return _Shape("truncate", target)
+    if node == "ShowTableProperties":
+        return _Shape("show_tblproperties", target, {"key": _opt(j.propertyKey())})
+    if node == "ShowCreateTable" and not j.asSerde():
+        return _Shape("show_create_table", target)
+    if node == "DropTable" and not j.purge():
+        return _Shape("drop_table", target)
+    if node == "AnalyzeColumn" and not j.allColumns():
+        return _Shape("analyze", target, {
+            "stats": tuple(_seq(j.columnNames().get())), "bloom": (),
+        })
+    return refuse
+
+
+def classify_utility(stmt: str) -> str | None:
+    """'optimize' | 'vacuum' | 'restore' | 'describe' | 'alter' | ...
+    when the statement STARTS like one of the table-maintenance shapes
+    (Delta's SQL surface for the same ops), else None. Keyword-level
+    only — the router must use :func:`claim_utility`, which also checks
+    the SHAPE and the target, because DESCRIBE/ALTER/CREATE are valid
+    plain Spark SQL too (round-14 advice fix: round 13 claimed every
+    DESCRIBE/ALTER and broke e.g. ``DESCRIBE customer``)."""
+    u = _parse_utility(stmt)
+    return u.kind if u else None
+
+
+def _versioned_create(sh: _Shape) -> bool:
+    """A CREATE that carries the explicit ``USING VERSIONED`` marker
+    (Spark's ``USING delta``)."""
+    return sh.op == "create_materialized_view" or (
+        sh.op == "create_table"
+        and _find(sh.args["body"], _mask(sh.args["body"]), r"\bUSING\s+VERSIONED\b")
+        is not None
+    )
+
+
+def claim_utility(stmt: str, versioned_views: dict[str, dict]) -> str | None:
+    """The router's claim check: the utility kind when
+    :func:`execute_utility` will actually handle this statement, else
+    None (the caller falls through to ``spark.sql``).
+
+    OPTIMIZE / VACUUM / RESTORE / ERASE / COPY INTO / CONVERT are not
+    Spark SQL statements at all, so the keyword alone claims them.
+    Every other keyword exists in plain Spark SQL, so only the engine's
+    own shapes are claimed: a statement on a registered versioned view
+    (``DESCRIBE HISTORY|DETAIL``, ``REFRESH`` / ``DROP MATERIALIZED
+    VIEW``, and every ALTER TABLE, TRUNCATE, DROP TABLE, SHOW CREATE
+    TABLE / TBLPROPERTIES and ANALYZE Spark parses), a ``CREATE ...
+    USING VERSIONED`` or a clone of a versioned view, and an EXPLAIN of
+    a claimed statement or of a single-table SELECT on a versioned view.
+    A statement with no utility keyword costs no JVM call."""
+    u = _parse_utility(stmt)
+    if u is None:
+        return None
+    if u.kind in _KEYWORD_CLAIMED:
+        return u.kind
+    sh = u.shape
+    if u.kind == "explain":
+        return u.kind if sh.op and _explained(sh.args["inner"], versioned_views) else None
+    name = sh.target
+    if u.kind == "create":
+        if sh.op != "clone":
+            return u.kind if _versioned_create(sh) else None
+        name = _unquote(sh.args["source"])
+    return u.kind if name and name.lower() in versioned_views else None
+
+
+def _explained(inner: str, versioned_views: dict) -> bool:
+    """Whether EXPLAIN of ``inner`` is the engine's: a claimed DML or
+    utility statement, or a single-table SELECT on a versioned view
+    (every other EXPLAIN is Spark's own)."""
+    if classify_dml(inner):
+        try:
+            t = statement_target(inner)
+        except SqlDmlError:
+            return False  # Spark's EXPLAIN reports the parse error
+        return bool(t) and t.lower() in versioned_views
+    if _parse_utility(inner) is not None:
+        return claim_utility(inner, versioned_views) is not None
+    scan = _select_scan(inner)
+    return scan is not None and scan[0].lower() in versioned_views
+
+
+#: the one-child operators a single-table SELECT stacks over its relation
+_SCAN_CHAIN = frozenset({
+    "Project", "Aggregate", "Filter", "UnresolvedHaving", "Sort",
+    "GlobalLimit", "LocalLimit", "Offset", "Distinct",
+})
+
+
+def _select_scan(text: str) -> "tuple[str, dict, _Node | None] | None":
+    """``(view, qualifiers, WHERE)`` of a single-table SELECT — one-child
+    operators over one relation — else None.  The WHERE is the Filter
+    right above the relation: a HAVING filters groups, not rows."""
+    try:
+        node = _parse(text)
+    except SqlDmlError:
+        return None
+    where = None
+    while node.kind in _SCAN_CHAIN:
+        child = node.at(node.j.child())
+        if node.kind == "Filter" and child.kind in ("SubqueryAlias", "UnresolvedRelation"):
+            where = node.at(node.j.condition())
+        node = child
+    try:
+        name, qual = _relation(node, True, "EXPLAIN source")
+    except SqlDmlError:
+        return None
+    return name, {name.lower(): "", qual.lower(): ""}, where
+
+
+def created_view_name(stmt: str) -> str | None:
+    """The view a ``CREATE TABLE ... USING VERSIONED`` or ``CONVERT ...
+    AS <name>`` statement WILL register, for the script router's
+    speculative pre-scan (round 14): later statements in the same script
+    target tables that exist only once the earlier ones run, so the
+    all-routed check must see the names before execution."""
+    u = _parse_utility(stmt)
+    if u is None or u.kind not in ("create", "convert"):
+        return None
+    sh = u.shape
+    if sh.op == "convert":
+        return sh.args["name"] and _unquote(sh.args["name"])
+    return sh.target if sh.op == "clone" or _versioned_create(sh) else None
+
+
+def statement_target(stmt: str) -> str | None:
+    """The UNQUOTED table a DML or mutating-maintenance statement
+    touches, for the CLI's rollback bookkeeping — read by the statement
+    fronts themselves, so quoted targets (``UPDATE `cust` SET ...``) are
+    tracked too (round-14 advice fix: the CLI's ad-hoc bare-identifier
+    regex silently skipped quoted views, leaving them un-restored on
+    --sqlRollbackOnError). Returns None for non-mutating statements
+    (DESCRIBE) and shapes without a view target (CONVERT — it creates
+    the table it names)."""
+    if classify_dml(stmt):  # a DML target comes from Spark's parse
+        plan = _parse(stmt)
+        if plan.kind == "MergeIntoTable":
+            return _relation(plan.at(plan.j.targetTable()), True, "target")[0]
+        if plan.kind in ("UpdateTable", "DeleteFromTable", "InsertIntoStatement"):
+            return _relation(plan.at(plan.j.table()), True, "target")[0]
+        return None
+    u = _parse_utility(stmt)
+    return u.shape.target if u is not None and u.kind in _WRITES else None
 
 
 def _register_versioned_view(spark, name: str, root: str,
@@ -1327,7 +1534,7 @@ def show_create_table(t, name: str, versioned_views: dict | None = None) -> str:
     return ";\n".join(parts) + ";"
 
 
-def _execute_create_materialized(spark, m, stmt: str,
+def _execute_create_materialized(spark, sh: _Shape, stmt: str,
                                  versioned_views: dict) -> dict:
     """``CREATE MATERIALIZED VIEW mv USING VERSIONED LOCATION '<dir>'
     AS SELECT <keys, count/sum/avg aggs> FROM <versioned view> GROUP BY
@@ -1341,14 +1548,14 @@ def _execute_create_materialized(spark, m, stmt: str,
         parse_mv_query,
     )
 
-    name = _unquote(m.group(1))
+    name, loc = sh.target, sh.args["loc"]
     if name.lower() in versioned_views:
         raise SqlDmlError(
             f"CREATE MATERIALIZED VIEW {name!r}: the view is already "
             "registered; refusing to shadow it"
         )
     try:
-        src_view, keys, aggs, filt = parse_mv_query(m.group("q").strip())
+        src_view, keys, aggs, filt = parse_mv_query(sh.args["query"].strip())
     except ValueError as e:
         raise SqlDmlError(str(e)) from e
     src_meta = versioned_views.get(src_view.lower())
@@ -1365,28 +1572,27 @@ def _execute_create_materialized(spark, m, stmt: str,
         )
     try:
         mv = create_materialized(
-            spark, m.group("loc"), src_meta["root"], keys, aggs,
-            filter_sql=filt,
+            spark, loc, src_meta["root"], keys, aggs, filter_sql=filt,
         )
     except OSError as e:
         raise SqlDmlError(f"CREATE refused: {e}") from e
-    _register_versioned_view(spark, name, m.group("loc"), versioned_views)
+    _register_versioned_view(spark, name, loc, versioned_views)
     # re-register the temp view over the VISIBLE columns only (the
     # hidden avg companions are maintenance state, not user surface)
     (
-        spark.read.format("versioned").option("path", m.group("loc")).load()
+        spark.read.format("versioned").option("path", loc).load()
         .select(*keys, *aggs.keys())
         .createOrReplaceTempView(name)
     )
     return {
         "mode": "sql_utility", "op": "create_materialized_view",
-        "table": name, "root": m.group("loc"), "source": src_view,
+        "table": name, "root": loc, "source": src_view,
         "num_rows": int(mv.row_count(mv.latest_version())),
         "statement": stmt,
     }
 
 
-def _execute_create(spark, s: str, stmt: str, versioned_views: dict) -> dict:
+def _execute_create(spark, sh: _Shape, stmt: str, versioned_views: dict) -> dict:
     """``CREATE TABLE ... USING VERSIONED`` — empty-schema or CTAS form,
     into a fresh versioned root (``VersionedTable.create``); the new
     table registers into the session and ``versioned_views`` so the rest
@@ -1397,67 +1603,50 @@ def _execute_create(spark, s: str, stmt: str, versioned_views: dict) -> dict:
     cleanly instead of crashing the runner (round 14)."""
     from database_anonymiser_spark.sources.versioned import VersionedTable
 
-    mvm = re.match(
-        rf"CREATE\s+MATERIALIZED\s+VIEW\s+({_IDENT})\s+USING\s+VERSIONED\s+"
-        rf"LOCATION\s+'(?P<loc>[^']+)'\s+AS\s+(?P<q>.+)$",
-        s, re.I | re.S,
-    )
-    if mvm:
-        return _execute_create_materialized(
-            spark, mvm, stmt, versioned_views
-        )
-    head = re.match(rf"CREATE\s+TABLE\s+({_IDENT})\s*", s, re.I)
-    if not head:
-        raise SqlDmlError(f"unsupported CREATE shape\n{_UTILITY_GRAMMAR}")
-    name = _unquote(head.group(1))
+    if sh.op == "create_materialized_view":
+        return _execute_create_materialized(spark, sh, stmt, versioned_views)
+    name, a = sh.target, sh.args
     if name.lower() in versioned_views:
         raise SqlDmlError(
             f"CREATE TABLE {name!r}: the view is already registered; "
             "refusing to shadow it"
         )
-    # clone form (round 14): CREATE TABLE dst SHALLOW|DEEP CLONE src
-    #   [VERSION AS OF n] LOCATION '<dir>'
-    cm = re.match(
-        rf"(SHALLOW|DEEP)\s+CLONE\s+({_IDENT})"
-        rf"(?:\s+VERSION\s+AS\s+OF\s+(?P<v>\d+))?"
-        rf"\s+LOCATION\s+'(?P<loc>[^']+)'\s*$",
-        s[head.end():], re.I,
-    )
-    if cm:
-        src_meta = versioned_views.get(_unquote(cm.group(2)).lower())
+    if sh.op == "clone":
+        # CREATE TABLE dst SHALLOW|DEEP CLONE src [VERSION AS OF n]
+        #   LOCATION '<dir>' (round 14)
+        src_meta = versioned_views.get(_unquote(a["source"]).lower())
         if src_meta is None:
             raise SqlDmlError(
-                f"CLONE source {cm.group(2)!r} is not a versioned view"
+                f"CLONE source {a['source']!r} is not a versioned view"
             )
         try:
             t = VersionedTable.clone(
-                spark, src_meta["root"], cm.group("loc"),
-                version=int(cm.group("v")) if cm.group("v") else None,
-                deep=cm.group(1).upper() == "DEEP",
+                spark, src_meta["root"], a["loc"],
+                version=int(a["v"]) if a["v"] else None,
+                deep=a["mode"].upper() == "DEEP",
             )
         except OSError as e:
             raise SqlDmlError(f"CLONE refused: {e}") from e
-        _register_versioned_view(spark, name, cm.group("loc"), versioned_views)
+        _register_versioned_view(spark, name, a["loc"], versioned_views)
         return {
             "mode": "sql_utility", "op": "clone", "table": name,
-            "source": _unquote(cm.group(2)), "root": cm.group("loc"),
-            "deep": cm.group(1).upper() == "DEEP",
+            "source": _unquote(a["source"]), "root": a["loc"],
+            "deep": a["mode"].upper() == "DEEP",
             "num_rows": int(t.row_count(t.latest_version())),
             "statement": stmt,
         }
-    i = head.end()
+    s = a["body"].lstrip()
+    i = 0
     mask = _mask(s)
     schema_ddl = None
-    if i < len(s) and s[i] == "(":
-        depth = mask[i][0]
+    if s[:1] == "(":
         close = next(
-            (j for j in range(i + 1, len(s))
-             if s[j] == ")" and mask[j] == (depth, True)),
+            (j for j in range(1, len(s)) if s[j] == ")" and mask[j] == (0, True)),
             -1,
         )
         if close < 0:
             raise SqlDmlError(f"unbalanced column list in CREATE\n{_UTILITY_GRAMMAR}")
-        schema_ddl = s[i + 1 : close].strip()
+        schema_ddl = s[1:close].strip()
         i = close + 1
     m = re.match(
         r"\s*USING\s+VERSIONED\s+LOCATION\s+'(?P<loc>[^']+)'", s[i:], re.I
@@ -1472,16 +1661,12 @@ def _execute_create(spark, s: str, stmt: str, versioned_views: dict) -> dict:
     key_cols: tuple = ()
     km = re.match(r"\s*KEY\s*\((?P<k>[^)]*)\)", s[i:], re.I)
     if km:
-        key_cols = tuple(
-            _unquote(c) for c in _split_top(km.group("k")) if c.strip()
-        )
+        key_cols = _column_list(km.group("k"))
         i += km.end()
     cluster: tuple = ()
     cm = re.match(r"\s*CLUSTER\s+BY\s*\((?P<c>[^)]*)\)", s[i:], re.I)
     if cm:
-        cluster = tuple(
-            _unquote(c) for c in _split_top(cm.group("c")) if c.strip()
-        )
+        cluster = _column_list(cm.group("c"))
         i += cm.end()
     rest = s[i:].strip()
     gen_map: dict[str, str] = {}
@@ -1578,7 +1763,93 @@ def _execute_create(spark, s: str, stmt: str, versioned_views: dict) -> dict:
     }
 
 
-def _execute_explain(spark, s: str, stmt: str, versioned_views: dict) -> dict:
+def _utility_target(spark, kind: str, name: str, versioned_views: dict,
+                    mutating: bool = True):
+    """The versioned table a utility statement works on, after the
+    refusals every statement of its kind makes — execution and EXPLAIN
+    alike.  Mutating statements require an UN-pinned view; reads
+    (DESCRIBE, SHOW, VACUUM ... DRY RUN) work on pinned registrations
+    too (they read the log, not a snapshot)."""
+    from database_anonymiser_spark.sources.versioned import VersionedTable
+
+    meta = versioned_views.get(name.lower())
+    if meta is None:
+        raise SqlDmlError(
+            f"{kind.upper()} target {name!r} is not a versioned view "
+            "(--versionedTable registers one)"
+        )
+    if mutating and meta["pinned"]:
+        raise SqlDmlError(
+            f"{kind.upper()} target {name!r} is pinned to a historical "
+            "version/timestamp; maintenance runs at the head only"
+        )
+    t = VersionedTable(spark, meta["root"])
+    # content-rewriting maintenance on a MATERIALIZED VIEW would
+    # diverge it from its definition while the recorded watermark
+    # masks the divergence (round 14); layout ops (OPTIMIZE, VACUUM,
+    # CLUSTER BY) and reads stay allowed — they preserve the rows
+    if kind in ("restore", "truncate", "erase") and "ivm.source" in (
+        t._raw_properties() or {}
+    ):
+        raise SqlDmlError(
+            f"{kind.upper()} target {name!r} is a MATERIALIZED VIEW "
+            "— its contents are derived; mutate the source and "
+            "REFRESH MATERIALIZED VIEW (or drop and re-create the "
+            "view) instead"
+        )
+    return t
+
+
+def _mutating(sh: _Shape) -> bool:
+    """Whether the statement writes (a DRY RUN only lists candidates)."""
+    return sh.op not in (
+        "describe", "show_tblproperties", "show_create_table"
+    ) and not sh.args.get("dry")
+
+
+def _optimize_plan(t, a: dict) -> tuple[str, dict]:
+    """The native op an OPTIMIZE runs and its arguments, after its
+    refusals — execution calls it, EXPLAIN reports it.
+
+    ``WHERE`` (round 15 — Delta's scoped OPTIMIZE) reclusters ONLY the
+    files whose stats overlap the predicate's derived range, rewritten
+    whole (the row set must not change): ``optimize_zorder(where=)``
+    with the range :func:`derive_prune` derives for SQL UPDATE/DELETE.
+    Without ZORDER BY, a CLUSTER BY table clusters incrementally
+    (``MERGE RUNS k``: the bounded cross-generation merge) and any other
+    table compacts."""
+    if a["where"] is not None:
+        if not a["zorder"]:
+            raise SqlDmlError(
+                "OPTIMIZE ... WHERE needs ZORDER BY (<cols>): the "
+                "scoped rewrite is a scoped z-order; incremental "
+                "clustering (OPTIMIZE on a CLUSTER BY table) is "
+                "already scoped to unclustered files"
+            )
+        rng = derive_prune(a["where"].strip())
+        if not rng:
+            raise SqlDmlError(
+                "OPTIMIZE ... WHERE derives no file-skipping range "
+                "from the predicate (top-level AND of col-vs-literal "
+                "conjuncts required) — an unscoped WHERE would "
+                "silently rewrite the whole table; drop the WHERE "
+                "to do that explicitly"
+            )
+        return "optimize_zorder", {"cols": _column_list(a["zorder"]), "where": rng}
+    if a["zorder"]:
+        return "optimize_zorder", {"cols": _column_list(a["zorder"])}
+    if t.clustering_cols():
+        runs = a["runs"]
+        return "optimize_cluster", {"merge_runs": None if runs is None else int(runs)}
+    if a["runs"] is not None:
+        raise SqlDmlError(
+            "OPTIMIZE ... MERGE RUNS needs a declared clustering key "
+            "(ALTER TABLE ... CLUSTER BY first)"
+        )
+    return "compact", {}
+
+
+def _execute_explain(spark, inner: str, stmt: str, versioned_views: dict) -> dict:
     """``EXPLAIN <statement>`` (round 15): the statement front's OWN
     plan with ZERO mutation — classification, target, the derived
     file-skipping ranges (:func:`derive_prune`), their file-count
@@ -1587,21 +1858,23 @@ def _execute_explain(spark, s: str, stmt: str, versioned_views: dict) -> dict:
     ...)`` term resolves to (literal inline vs distributed semi-join —
     the subquery runs read-only, the identical decision procedure the
     real statement uses), and the native operation that would commit.
-    Reference parity: the closest reference surface is the BEGIN …
-    ROLLBACK dryrun (``executor.ts:98-136``), which counts rows;
-    EXPLAIN stays at the metadata level and never reads table data."""
+    A maintenance statement goes through the same validation as its
+    execution, so explaining a statement that would refuse refuses with
+    the same message.  Reference parity: the closest reference surface
+    is the BEGIN … ROLLBACK dryrun (``executor.ts:98-136``), which
+    counts rows; EXPLAIN stays at the metadata level and never reads
+    table data."""
     from database_anonymiser_spark.sources.versioned import VersionedTable
 
-    inner = re.sub(r"^EXPLAIN\s+", "", s, flags=re.I)
     out: dict = {"mode": "sql_explain", "op": "explain", "statement": stmt}
 
     def _vt(name: str) -> "VersionedTable":
-        meta = versioned_views.get(_unquote(name).lower())
+        meta = versioned_views.get(name.lower())
         if meta is None:
             raise SqlDmlError(
                 f"EXPLAIN target {name!r} is not a versioned view"
             )
-        out["table"] = _unquote(name)
+        out["table"] = name
         out["pinned"] = bool(meta["pinned"])
         return VersionedTable(spark, meta["root"])
 
@@ -1638,10 +1911,15 @@ def _execute_explain(spark, s: str, stmt: str, versioned_views: dict) -> dict:
             }
         _scan_effect(vt, prune)
 
+    def _dml(name: str) -> "VersionedTable":
+        vt = _dml_target(spark, dk, name, versioned_views)
+        out["table"], out["pinned"] = name, False
+        return vt
+
     dk = classify_dml(inner)
     if dk == "update":
         u = _parse_update(inner)
-        vt = _vt(u.table)
+        vt = _dml(u.table)
         out["class"] = "update"
         out["native_op"] = "update_where"
         _where_effect(vt, u.where, u.table)
@@ -1649,21 +1927,21 @@ def _execute_explain(spark, s: str, stmt: str, versioned_views: dict) -> dict:
         return out
     if dk == "delete":
         d = _parse_delete(inner)
-        vt = _vt(d.table)
+        vt = _dml(d.table)
         out["class"] = "delete"
         out["native_op"] = "delete_where"
         _where_effect(vt, d.where, d.table)
         return out
     if dk == "insert":
         ins = _parse_insert(inner)
-        _vt(ins.table)
+        _dml(ins.table)
         out["class"] = "insert"
         out["native_op"] = "overwrite" if ins.overwrite else "append"
         out["source"] = "values" if ins.inline else "query"
         return out
     if dk == "merge":
         mg = _parse_merge(inner)
-        vt = _vt(mg.target)
+        vt = _dml(mg.target)
         out["class"] = "merge"
         out["native_op"] = "merge"
         key_cols = vt.key_cols()
@@ -1683,109 +1961,49 @@ def _execute_explain(spark, s: str, stmt: str, versioned_views: dict) -> dict:
             "source key-bounds range prune (per-column conjunction)"
         )
         return out
-    uk = classify_utility(inner)
-    if uk == "erase":
-        m = re.fullmatch(
-            rf"ERASE\s+FROM\s+({_IDENT})\s+WHERE\s+(?P<p>.+)", inner,
-            re.I | re.S,
-        )
-        if not m:
-            raise SqlDmlError(f"unsupported ERASE shape\n{_UTILITY_GRAMMAR}")
-        vt = _vt(m.group(1))
-        out["class"] = "erase"
-        out["native_op"] = "erase"
-        _where_effect(vt, _parse(m.group("p").strip(), expression=True),
-                      _unquote(m.group(1)))
-        return out
-    if uk == "optimize":
-        m = re.fullmatch(
-            rf"OPTIMIZE\s+({_IDENT})"
-            r"(?:\s+ZORDER\s+BY\s*\((?P<z>[^)]*)\)"
-            r"|\s+MERGE\s+RUNS\s+(?P<mr>\d+))?"
-            r"(?:\s+WHERE\s+(?P<w>.+))?",
-            inner, re.I | re.S,
-        )
-        if not m:
-            raise SqlDmlError(f"unsupported OPTIMIZE shape\n{_UTILITY_GRAMMAR}")
-        vt = _vt(m.group(1))
-        out["class"] = "optimize"
-        # EXPLAIN is the rehearsal of what WILL run, so this branch must
-        # mirror execute_utility's dispatch EXACTLY — including its
-        # refusals: explaining a statement that would refuse must refuse
-        # with the same message (round-15 review fix)
-        if m.group("w") is not None:
-            if not m.group("z"):
-                raise SqlDmlError(
-                    "OPTIMIZE ... WHERE needs ZORDER BY (<cols>): the "
-                    "scoped rewrite is a scoped z-order; incremental "
-                    "clustering (OPTIMIZE on a CLUSTER BY table) is "
-                    "already scoped to unclustered files"
-                )
-            rng = derive_prune(m.group("w").strip())
-            if not rng:
-                raise SqlDmlError(
-                    "OPTIMIZE ... WHERE derives no file-skipping range "
-                    "from the predicate (top-level AND of col-vs-literal "
-                    "conjuncts required) — an unscoped WHERE would "
-                    "silently rewrite the whole table; drop the WHERE "
-                    "to do that explicitly"
-                )
-            out["native_op"] = "optimize_zorder"
-            _scan_effect(vt, rng)
-            out["scoped"] = True
-        elif m.group("z"):
-            out["native_op"] = "optimize_zorder"
-            _scan_effect(vt, {})
-        elif vt.clustering_cols():
-            out["native_op"] = "optimize_cluster"
-            out["clustering_cols"] = list(vt.clustering_cols())
-            if m.group("mr") is not None:
-                out["merge_runs"] = int(m.group("mr"))
-        elif m.group("mr") is not None:
-            raise SqlDmlError(
-                "OPTIMIZE ... MERGE RUNS needs a declared clustering key "
-                "(ALTER TABLE ... CLUSTER BY first)"
-            )
-        else:
-            out["native_op"] = "compact"
-        return out
-    if uk == "refresh":
-        m = re.fullmatch(
-            rf"REFRESH\s+MATERIALIZED\s+VIEW\s+({_IDENT})"
-            rf"(?:\s+TO\s+VERSION\s+(?P<v>\d+))?",
-            inner, re.I,
-        )
-        if m:
+    u = _parse_utility(inner)
+    if u is not None:
+        sh = u.shape
+        if sh.op is None:
+            raise SqlDmlError(sh.error)
+        out["class"] = "refresh_materialized_view" if u.kind == "refresh" else u.kind
+        if u.kind in _NO_TABLE:
+            return out  # the statement names no existing table
+        vt = _utility_target(spark, u.kind, sh.target, versioned_views,
+                             mutating=_mutating(sh))
+        out["table"] = sh.target
+        out["pinned"] = bool(versioned_views[sh.target.lower()]["pinned"])
+        if sh.op == "erase":
+            out["native_op"] = "erase"
+            _where_effect(vt, _parse(sh.args["where"].strip(), expression=True),
+                          sh.target)
+        elif sh.op == "optimize":
+            op, kw = _optimize_plan(vt, sh.args)
+            out["native_op"] = op
+            if op == "optimize_zorder":
+                _scan_effect(vt, kw.get("where") or {})
+                if "where" in kw:
+                    out["scoped"] = True
+            elif op == "optimize_cluster":
+                out["clustering_cols"] = list(vt.clustering_cols())
+                if kw["merge_runs"] is not None:
+                    out["merge_runs"] = kw["merge_runs"]
+        elif sh.op == "refresh_materialized_view":
             from database_anonymiser_spark.sources.materialized import (
                 _LOSS_KINDS,
                 materialized_info,
+                refresh_target,
             )
 
-            vt = _vt(m.group(1))
-            if out.get("pinned"):
-                # mirror execution: the real REFRESH refuses pinned
-                # registrations (round-15 review fix)
-                raise SqlDmlError(
-                    f"REFRESH target {m.group(1)!r} is pinned to a "
-                    "historical version/timestamp; maintenance runs at "
-                    "the head only"
-                )
+            # the interval refresh_materialized would run, or its refusal
             try:
                 info = materialized_info(vt)
+                head = VersionedTable(spark, info["source"]).latest_version()
+                v = sh.args["v"]
+                to = refresh_target(info["last_version"], head,
+                                    int(v) if v else None)
             except ValueError as e:
                 raise SqlDmlError(str(e)) from e
-            src = VersionedTable(spark, info["source"])
-            head = src.latest_version()
-            to = int(m.group("v")) if m.group("v") else head
-            if m.group("v") and not info["last_version"] <= to <= head:
-                # the same range refusal refresh_materialized raises —
-                # EXPLAIN must not describe a statement that will refuse
-                raise SqlDmlError(
-                    f"refresh to_version {to} is outside "
-                    f"[watermark {info['last_version']}, source head "
-                    f"{head}]"
-                )
-            out["class"] = "refresh_materialized_view"
             out["native_op"] = "ivm_delta_merge"
             out["source"] = info["source"]
             out["watermark"] = info["last_version"]
@@ -1795,25 +2013,14 @@ def _execute_explain(spark, s: str, stmt: str, versioned_views: dict) -> dict:
             out["loss_aggs"] = sorted(
                 c for c, (k, e) in info["aggs"].items() if k in _LOSS_KINDS
             )
-            return out
-    if uk:
-        # any other claimed maintenance statement: class + target only
-        out["class"] = uk
-        t = statement_target(inner)
-        if t and t.lower() in versioned_views:
-            _vt(t)
         return out
-    m = re.match(
-        rf"SELECT\s+.+?\s+FROM\s+({_IDENT})\s*(?:WHERE\s+(?P<w>.+))?$",
-        inner, re.I | re.S,
-    )
-    if m:
-        vt = _vt(m.group(1))
+    scan = _select_scan(inner)
+    if scan is not None:
+        name, quals, where = scan
+        vt = _vt(name)
         out["class"] = "select"
         out["native_op"] = "pushdown_scan"
-        _scan_effect(
-            vt, derive_prune(m.group("w").strip()) if m.group("w") else {}
-        )
+        _scan_effect(vt, _prune(where.conjuncts, quals) if where is not None else {})
         return out
     raise SqlDmlError(
         "EXPLAIN supports the engine's own statement shapes "
@@ -1832,136 +2039,83 @@ def execute_utility(
     when no clustering key is declared) / OPTIMIZE ZORDER BY → full
     z-order rewrite; VACUUM → orphan or retention reclaim; RESTORE →
     forward rollback commit; DESCRIBE HISTORY/DETAIL → the log's own
-    metadata as rows; ALTER TABLE ... CLUSTER BY → declare the
-    clustering key. Mutating statements require an UN-pinned view;
-    DESCRIBE works on pinned registrations too (it reads the log, not
-    a snapshot)."""
-    from database_anonymiser_spark.sources.versioned import VersionedTable
+    metadata as rows; ALTER TABLE → a metadata-only commit (the DDL
+    family). Mutating statements require an UN-pinned view; DESCRIBE
+    works on pinned registrations too (it reads the log, not a
+    snapshot)."""
+    u = _parse_utility(stmt)
+    if u is None:
+        raise SqlDmlError(f"not a maintenance statement\n{_UTILITY_GRAMMAR}")
+    sh, a = u.shape, u.shape.args
+    if sh.op is None:
+        raise SqlDmlError(sh.error)
+    name = sh.target
+    if sh.op == "explain":
+        return _execute_explain(spark, a["inner"], stmt, versioned_views)
+    if u.kind == "create":
+        return _execute_create(spark, sh, stmt, versioned_views)
+    if sh.op == "convert":
+        from database_anonymiser_spark.sources.versioned import VersionedTable
 
-    kind = classify_utility(stmt)
-    s = _strip_stmt(stmt)
-    if kind == "explain":
-        return _execute_explain(spark, s, stmt, versioned_views)
-
-    def _table(name: str, mutating: bool = True) -> "VersionedTable":
-        meta = versioned_views.get(_unquote(name).lower())
+        kcols = _column_list(a["key"])
+        if len(kcols) != 1:
+            raise SqlDmlError(
+                "CONVERT takes exactly one KEY column (the footer-stats "
+                "adoption harvests single-column bounds)"
+            )
+        try:
+            t = VersionedTable.convert(spark, a["path"], key_col=kcols[0])
+        except OSError as e:
+            raise SqlDmlError(f"CONVERT refused: {e}") from e
+        frag = {
+            "mode": "sql_utility", "op": "convert",
+            "root": a["path"],
+            "new_version": int(t.latest_version()),
+            "files_adopted": int(t.detail()["num_files"]),
+            "statement": stmt,
+        }
+        if a["name"]:
+            view = _unquote(a["name"])
+            _register_versioned_view(spark, view, a["path"], versioned_views)
+            frag["table"] = view
+        return frag
+    if sh.op == "drop_table":
+        meta = versioned_views.get(name.lower())
         if meta is None:
             raise SqlDmlError(
-                f"{kind.upper()} target {name!r} is not a versioned view "
+                f"DROP target {name!r} is not a versioned view "
                 "(--versionedTable registers one)"
             )
-        if mutating and meta["pinned"]:
-            raise SqlDmlError(
-                f"{kind.upper()} target {name!r} is pinned to a historical "
-                "version/timestamp; maintenance runs at the head only"
-            )
-        t = VersionedTable(spark, meta["root"])
-        # content-rewriting maintenance on a MATERIALIZED VIEW would
-        # diverge it from its definition while the recorded watermark
-        # masks the divergence (round 14); layout ops (OPTIMIZE, VACUUM,
-        # CLUSTER BY) and reads stay allowed — they preserve the rows
-        if kind in ("restore", "truncate", "erase") and "ivm.source" in (
-            t._raw_properties() or {}
-        ):
-            raise SqlDmlError(
-                f"{kind.upper()} target {name!r} is a MATERIALIZED VIEW "
-                "— its contents are derived; mutate the source and "
-                "REFRESH MATERIALIZED VIEW (or drop and re-create the "
-                "view) instead"
-            )
-        return t
-
-    def _cols(seg: str) -> tuple:
-        return tuple(
-            _unquote(c) for c in _split_top(seg) if c.strip()
-        )
-
-    if kind == "optimize":
-        m = re.fullmatch(
-            rf"OPTIMIZE\s+({_IDENT})"
-            r"(?:\s+ZORDER\s+BY\s*\((?P<z>[^)]*)\)"
-            r"|\s+MERGE\s+RUNS\s+(?P<mr>\d+))?"
-            r"(?:\s+WHERE\s+(?P<w>.+))?",
-            s, re.I | re.S,
-        )
-        if not m:
-            raise SqlDmlError(f"unsupported OPTIMIZE shape\n{_UTILITY_GRAMMAR}")
-        t = _table(m.group(1))
-        if m.group("w") is not None:
-            # OPTIMIZE ... WHERE (round 15 — Delta's scoped OPTIMIZE):
-            # recluster ONLY the files whose stats overlap the
-            # predicate's derived range, rewritten whole (the row set
-            # must not change), everything else untouched — the
-            # epoch-by-epoch maintenance loop a 100 TB table actually
-            # runs. Routes to optimize_zorder(where=) (round 9), the
-            # range dict coming from the same derive_prune that scopes
-            # SQL UPDATE/DELETE.
-            if not m.group("z"):
-                raise SqlDmlError(
-                    "OPTIMIZE ... WHERE needs ZORDER BY (<cols>): the "
-                    "scoped rewrite is a scoped z-order; incremental "
-                    "clustering (OPTIMIZE on a CLUSTER BY table) is "
-                    "already scoped to unclustered files"
-                )
-            rng = derive_prune(m.group("w").strip())
-            if not rng:
-                raise SqlDmlError(
-                    "OPTIMIZE ... WHERE derives no file-skipping range "
-                    "from the predicate (top-level AND of col-vs-literal "
-                    "conjuncts required) — an unscoped WHERE would "
-                    "silently rewrite the whole table; drop the WHERE "
-                    "to do that explicitly"
-                )
-            v = t.optimize_zorder(_cols(m.group("z")), where=rng)
-            return {
-                "mode": "sql_utility", "op": "optimize_zorder",
-                "table": _unquote(m.group(1)), "new_version": int(v),
-                "scope": {c: list(b) if isinstance(b, tuple) else b
-                          for c, b in rng.items()},
-                "statement": stmt,
-            }
-        if m.group("z"):
-            v = t.optimize_zorder(_cols(m.group("z")))
-            op = "optimize_zorder"
-        elif t.clustering_cols():
-            # MERGE RUNS k = the round-13 bounded cross-generation merge
-            mr = m.group("mr")
-            v = t.optimize_cluster(
-                merge_runs=int(mr) if mr is not None else None
-            )
-            op = "optimize_cluster"
-        elif m.group("mr") is not None:
-            raise SqlDmlError(
-                "OPTIMIZE ... MERGE RUNS needs a declared clustering key "
-                "(ALTER TABLE ... CLUSTER BY first)"
-            )
-        else:
-            v = t.compact()
-            op = "compact"
-        return {"mode": "sql_utility", "op": op, "table": _unquote(m.group(1)),
-                "new_version": int(v), "statement": stmt}
-    if kind == "vacuum":
-        m = re.fullmatch(
-            rf"VACUUM\s+({_IDENT})"
-            r"(?:\s+RETAIN\s+(?P<n>\d+(?:\.\d+)?)\s+(?P<unit>VERSIONS|HOURS))?"
-            r"(?:\s+(?P<dry>DRY\s+RUN))?",
-            s, re.I,
-        )
-        if not m:
-            raise SqlDmlError(f"unsupported VACUUM shape\n{_UTILITY_GRAMMAR}")
-        # DRY RUN only lists candidates — pinned views may preflight too
-        dry = m.group("dry") is not None
-        t = _table(m.group(1), mutating=not dry)
-        if m.group("unit") and m.group("unit").upper() == "VERSIONS":
-            reclaimed = t.vacuum(
-                retain_versions=int(float(m.group("n"))), dry_run=dry
-            )
-        elif m.group("unit"):
-            reclaimed = t.vacuum(retain_hours=float(m.group("n")), dry_run=dry)
+        # Delta's EXTERNAL-table DROP semantics: deregister only — the
+        # commit log and data stay on disk (every table here lives at a
+        # user-supplied LOCATION, exactly the class Delta never deletes
+        # on DROP); re-register with --versionedTable or CONVERT is the
+        # undo, VACUUM/filesystem removal is the explicit data-deletion
+        # path. A DROP that silently deleted 100 TB would be a landmine.
+        del versioned_views[name.lower()]
+        spark.catalog.dropTempView(name)
+        return {"mode": "sql_utility", "op": "drop_table", "table": name,
+                "root": meta["root"], "data_retained": True,
+                "statement": stmt}
+    t = _utility_target(spark, u.kind, name, versioned_views,
+                        mutating=_mutating(sh))
+    if sh.op == "optimize":
+        op, kw = _optimize_plan(t, a)
+        frag = {"mode": "sql_utility", "op": op, "table": name,
+                "new_version": int(getattr(t, op)(**kw))}
+        if "where" in kw:
+            frag["scope"] = {c: list(b) if isinstance(b, tuple) else b
+                             for c, b in kw["where"].items()}
+        return {**frag, "statement": stmt}
+    if sh.op == "vacuum":
+        dry = a["dry"] is not None
+        if a["unit"] and a["unit"].upper() == "VERSIONS":
+            reclaimed = t.vacuum(retain_versions=int(float(a["n"])), dry_run=dry)
+        elif a["unit"]:
+            reclaimed = t.vacuum(retain_hours=float(a["n"]), dry_run=dry)
         else:
             reclaimed = t.vacuum(dry_run=dry)
-        frag = {"mode": "sql_utility", "op": "vacuum",
-                "table": _unquote(m.group(1)),
+        frag = {"mode": "sql_utility", "op": "vacuum", "table": name,
                 "files_reclaimed": len(reclaimed), "statement": stmt}
         if dry:
             # Delta's VACUUM ... DRY RUN: the candidate list IS the
@@ -1970,32 +2124,15 @@ def execute_utility(
             frag["files_would_reclaim"] = frag.pop("files_reclaimed")
             frag["candidates"] = sorted(reclaimed)[:100]
         return frag
-    if kind == "restore":
-        m = re.fullmatch(
-            rf"RESTORE\s+(?:TABLE\s+)?({_IDENT})\s+TO\s+"
-            r"(?:VERSION\s+AS\s+OF\s+(?P<v>\d+)"
-            r"|TIMESTAMP\s+AS\s+OF\s+'(?P<ts>[^']+)')",
-            s, re.I,
-        )
-        if not m:
-            raise SqlDmlError(f"unsupported RESTORE shape\n{_UTILITY_GRAMMAR}")
-        t = _table(m.group(1))
+    if sh.op == "restore":
         v = (
-            t.restore(int(m.group("v")))
-            if m.group("v") is not None
-            else t.restore_to_timestamp(m.group("ts"))
+            t.restore(int(a["v"])) if a["v"] is not None
+            else t.restore_to_timestamp(a["ts"])
         )
-        return {"mode": "sql_utility", "op": "restore",
-                "table": _unquote(m.group(1)),
+        return {"mode": "sql_utility", "op": "restore", "table": name,
                 "new_version": int(v), "statement": stmt}
-    if kind == "describe":
-        m = re.fullmatch(
-            rf"DESCRIBE\s+(HISTORY|DETAIL)\s+({_IDENT})", s, re.I
-        )
-        if not m:
-            raise SqlDmlError(f"unsupported DESCRIBE shape\n{_UTILITY_GRAMMAR}")
-        t = _table(m.group(2), mutating=False)
-        if m.group(1).upper() == "HISTORY":
+    if sh.op == "describe":
+        if a["what"].upper() == "HISTORY":
             rows = [
                 {"version": h["version"], "op": h["op"], "ts": h.get("ts"),
                  "adds": len(h.get("adds", [])),
@@ -2004,10 +2141,9 @@ def execute_utility(
             ]
         else:
             rows = [t.detail()]
-        return {"mode": "sql_utility", "op": f"describe_{m.group(1).lower()}",
-                "table": _unquote(m.group(2)), "rows": rows,
-                "statement": stmt}
-    if kind == "analyze":
+        return {"mode": "sql_utility", "op": f"describe_{a['what'].lower()}",
+                "table": name, "rows": rows, "statement": stmt}
+    if sh.op == "analyze":
         # ANALYZE TABLE (round 15 — Delta's dataSkippingStatsColumns
         # reconfiguration + stats recompute as SQL): footer-only [min,
         # max] harvest for new skipping columns and/or per-file BLOOM
@@ -2015,127 +2151,61 @@ def execute_utility(
         # rewrite; tuple blooms (co-occurrence sidecars) stay native
         # (analyze(bloom_cols=[(a, b)])), the SQL face takes single
         # columns
-        clist = rf"{_IDENT}(?:\s*,\s*{_IDENT})*"
-        m = re.fullmatch(
-            rf"ANALYZE\s+TABLE\s+({_IDENT})\s+COMPUTE\s+STATISTICS\s+FOR"
-            rf"(?:\s+COLUMNS\s+(?P<sc>{clist}))?"
-            rf"(?:\s+BLOOM\s+COLUMNS\s+(?P<bc>{clist}))?",
-            s, re.I,
-        )
-        if not m or (m.group("sc") is None and m.group("bc") is None):
-            raise SqlDmlError(
-                "ANALYZE needs: ANALYZE TABLE <view> COMPUTE STATISTICS "
-                "FOR [COLUMNS a, b] [BLOOM COLUMNS c, d]\n"
-                f"{_UTILITY_GRAMMAR}"
-            )
-        t = _table(m.group(1))
-        sc = _cols(m.group("sc")) if m.group("sc") else ()
-        bc = _cols(m.group("bc")) if m.group("bc") else ()
         try:
-            v = t.analyze(stats_cols=sc, bloom_cols=bc)
+            v = t.analyze(stats_cols=a["stats"], bloom_cols=a["bloom"])
         except ValueError as e:
             raise SqlDmlError(f"ANALYZE refused: {e}") from e
-        return {"mode": "sql_utility", "op": "analyze",
-                "table": _unquote(m.group(1)), "new_version": int(v),
-                "stats_cols": list(sc), "bloom_cols": list(bc),
-                "statement": stmt}
-    if kind == "truncate":
-        m = re.fullmatch(rf"TRUNCATE\s+TABLE\s+({_IDENT})", s, re.I)
-        if not m:
-            raise SqlDmlError(f"unsupported TRUNCATE shape\n{_UTILITY_GRAMMAR}")
-        t = _table(m.group(1))
+        return {"mode": "sql_utility", "op": "analyze", "table": name,
+                "new_version": int(v), "stats_cols": list(a["stats"]),
+                "bloom_cols": list(a["bloom"]), "statement": stmt}
+    if sh.op == "truncate":
         if dryrun:
             # transactional since round 15, so previewable like DML —
             # the would-dereference count is the log's footer total
             # (metadata only, no data read)
             return {"mode": "sql_dml_dryrun", "op": "truncate",
-                    "table": _unquote(m.group(1)),
-                    "rows_would_change": int(t.row_count()),
+                    "table": name, "rows_would_change": int(t.row_count()),
                     "statement": stmt}
         v = t.truncate()
-        return {"mode": "sql_utility", "op": "truncate",
-                "table": _unquote(m.group(1)), "new_version": int(v),
+        return {"mode": "sql_utility", "op": "truncate", "table": name,
+                "new_version": int(v),
                 "metrics": (t.commit_meta(v) or {}).get("metrics", {}),
                 "statement": stmt}
-    if kind == "show":
-        m = re.fullmatch(rf"SHOW\s+TBLPROPERTIES\s+({_IDENT})", s, re.I)
-        if m:
-            # round 15 — Delta's SHOW TBLPROPERTIES: the versioned
-            # property map as (key, value) rows, engine-managed slots
-            # (ivm.*, identity.*, clustering.*, generated.*) included;
-            # readable on pinned registrations (log metadata, no
-            # snapshot)
-            t = _table(m.group(1), mutating=False)
-            props = t.table_properties()
-            return {"mode": "sql_utility", "op": "show_tblproperties",
-                    "table": _unquote(m.group(1)),
-                    "rows": [{"key": k, "value": v}
-                             for k, v in sorted(props.items())],
-                    "statement": stmt}
-        m = re.fullmatch(rf"SHOW\s+CREATE\s+TABLE\s+({_IDENT})", s, re.I)
-        if not m:
-            raise SqlDmlError(f"unsupported SHOW shape\n{_UTILITY_GRAMMAR}")
-        t = _table(m.group(1), mutating=False)
-        ddl = show_create_table(t, _unquote(m.group(1)), versioned_views)
-        return {"mode": "sql_utility", "op": "show_create_table",
-                "table": _unquote(m.group(1)),
-                "rows": [{"createtab_stmt": ddl}], "statement": stmt}
-    if kind == "drop":
-        m = re.fullmatch(
-            rf"DROP\s+(?:TABLE|MATERIALIZED\s+VIEW)\s+(?:IF\s+EXISTS\s+)?"
-            rf"({_IDENT})",
-            s, re.I,
-        )
-        if not m:
-            raise SqlDmlError(f"unsupported DROP shape\n{_UTILITY_GRAMMAR}")
-        name = _unquote(m.group(1))
-        meta = versioned_views.pop(name.lower())
-        # Delta's EXTERNAL-table DROP semantics: deregister only — the
-        # commit log and data stay on disk (every table here lives at a
-        # user-supplied LOCATION, exactly the class Delta never deletes
-        # on DROP); re-register with --versionedTable or CONVERT is the
-        # undo, VACUUM/filesystem removal is the explicit data-deletion
-        # path. A DROP that silently deleted 100 TB would be a landmine.
-        spark.catalog.dropTempView(name)
-        return {"mode": "sql_utility", "op": "drop_table", "table": name,
-                "root": meta["root"], "data_retained": True,
+    if sh.op == "show_tblproperties":
+        # round 15 — Delta's SHOW TBLPROPERTIES: the versioned property
+        # map as (key, value) rows, engine-managed slots (ivm.*,
+        # identity.*, clustering.*, generated.*) included; readable on
+        # pinned registrations (log metadata, no snapshot)
+        props = t.table_properties()
+        return {"mode": "sql_utility", "op": "show_tblproperties",
+                "table": name,
+                "rows": [{"key": k, "value": v}
+                         for k, v in sorted(props.items())
+                         if a["key"] in (None, k)],
                 "statement": stmt}
-    if kind == "refresh":
-        m = re.fullmatch(
-            rf"REFRESH\s+MATERIALIZED\s+VIEW\s+({_IDENT})"
-            rf"(?:\s+TO\s+VERSION\s+(?P<v>\d+))?",
-            s, re.I,
-        )
-        if not m:
-            raise SqlDmlError(f"unsupported REFRESH shape\n{_UTILITY_GRAMMAR}")
-        t = _table(m.group(1))
+    if sh.op == "show_create_table":
+        ddl = show_create_table(t, name, versioned_views)
+        return {"mode": "sql_utility", "op": "show_create_table",
+                "table": name, "rows": [{"createtab_stmt": ddl}],
+                "statement": stmt}
+    if sh.op == "refresh_materialized_view":
         from database_anonymiser_spark.sources.materialized import (
             refresh_materialized,
         )
 
         try:
             r = refresh_materialized(
-                spark, t.root,
-                to_version=int(m.group("v")) if m.group("v") else None,
+                spark, t.root, to_version=int(a["v"]) if a["v"] else None,
             )
         except ValueError as e:
             raise SqlDmlError(str(e)) from e
         return {"mode": "sql_utility", "op": "refresh_materialized_view",
-                "table": _unquote(m.group(1)),
-                "new_version": int(t.latest_version()), **r,
+                "table": name, "new_version": int(t.latest_version()), **r,
                 "statement": stmt}
-    if kind == "create":
-        return _execute_create(spark, s, stmt, versioned_views)
-    if kind == "copy":
-        m = re.fullmatch(
-            rf"COPY\s+INTO\s+({_IDENT})\s+FROM\s+'(?P<p>[^']+)'", s, re.I
-        )
-        if not m:
-            raise SqlDmlError(f"unsupported COPY shape\n{_UTILITY_GRAMMAR}")
-        t = _table(m.group(1))
-        src = m.group("p")
+    if sh.op == "copy_into":
         from pathlib import Path as _P
 
+        src = a["path"]
         p = _P(src)
         if p.is_dir():
             # regular files only: a Spark output DIRECTORY named
@@ -2163,9 +2233,8 @@ def execute_utility(
         new = [f for f in files if f not in loaded]
         if not new:
             return {
-                "mode": "sql_utility", "op": "copy_into",
-                "table": _unquote(m.group(1)), "files_loaded": 0,
-                "files_skipped": len(files),
+                "mode": "sql_utility", "op": "copy_into", "table": name,
+                "files_loaded": 0, "files_skipped": len(files),
                 "new_version": int(t.latest_version()), "statement": stmt,
             }
         v = t.append(
@@ -2173,57 +2242,14 @@ def execute_utility(
             meta={"copy_source": src, "copy_files": new},
         )
         return {
-            "mode": "sql_utility", "op": "copy_into",
-            "table": _unquote(m.group(1)), "files_loaded": len(new),
-            "files_skipped": len(files) - len(new),
+            "mode": "sql_utility", "op": "copy_into", "table": name,
+            "files_loaded": len(new), "files_skipped": len(files) - len(new),
             "new_version": int(v), "statement": stmt,
         }
-    if kind == "convert":
-        m = re.fullmatch(
-            rf"CONVERT\s+TO\s+VERSIONED\s+'(?P<p>[^']+)'\s+"
-            rf"KEY\s*\((?P<k>[^)]*)\)(?:\s+AS\s+(?P<n>{_IDENT}))?",
-            s, re.I,
-        )
-        if not m:
-            raise SqlDmlError(f"unsupported CONVERT shape\n{_UTILITY_GRAMMAR}")
-        from database_anonymiser_spark.sources.versioned import VersionedTable
-
-        kcols = _cols(m.group("k"))
-        if len(kcols) != 1:
-            raise SqlDmlError(
-                "CONVERT takes exactly one KEY column (the footer-stats "
-                "adoption harvests single-column bounds)"
-            )
-        try:
-            t = VersionedTable.convert(spark, m.group("p"), key_col=kcols[0])
-        except OSError as e:
-            raise SqlDmlError(f"CONVERT refused: {e}") from e
-        frag = {
-            "mode": "sql_utility", "op": "convert",
-            "root": m.group("p"),
-            "new_version": int(t.latest_version()),
-            "files_adopted": int(t.detail()["num_files"]),
-            "statement": stmt,
-        }
-        if m.group("n"):
-            name = _unquote(m.group("n"))
-            _register_versioned_view(spark, name, m.group("p"), versioned_views)
-            frag["table"] = name
-        return frag
-    if kind == "erase":
-        m = re.fullmatch(
-            rf"ERASE\s+FROM\s+({_IDENT})\s+WHERE\s+(?P<p>.+)", s, re.I | re.S
-        )
-        if not m:
-            raise SqlDmlError(
-                f"ERASE needs FROM <view> WHERE <pred> (an unscoped erase "
-                f"would be DELETE-the-table; write it explicitly)\n"
-                f"{_UTILITY_GRAMMAR}"
-            )
-        t = _table(m.group(1))
+    if sh.op == "erase":
         pred, membership, prune = _resolve_where(
-            spark, _parse(m.group("p").strip(), expression=True),
-            {_unquote(m.group(1)).lower(): ""},
+            spark, _parse(a["where"].strip(), expression=True),
+            {name.lower(): ""},
         )
         if dryrun:
             # the one dryrun-able maintenance statement (round 15): a
@@ -2236,151 +2262,50 @@ def execute_utility(
             would = t.snapshot().where(F.expr(pred or "true"))
             if membership is not None:
                 would = _membership_filter(t, would, membership)
-            return {"mode": "sql_dml_dryrun", "op": "erase",
-                    "table": _unquote(m.group(1)),
+            return {"mode": "sql_dml_dryrun", "op": "erase", "table": name,
                     "rows_would_change": int(would.count()),
                     "statement": stmt}
-        result = t.erase(
-            pred or "true",
-            prune=prune or None,
-            membership=membership,
-        )
-        return {"mode": "sql_utility", "op": "erase",
-                "table": _unquote(m.group(1)), **result, "statement": stmt}
+        result = t.erase(pred or "true", prune=prune or None,
+                         membership=membership)
+        return {"mode": "sql_utility", "op": "erase", "table": name,
+                **result, "statement": stmt}
     # ALTER — the DDL family (round 14): every sub-shape is a
     # metadata-only commit on an existing native (zero data reads or
-    # rewrites; the docstrings on add_column/rename_column/drop_column/
+    # rewrites; the docstrings on add_columns/rename_column/drop_column/
     # widen_column pin the 100 TB contracts — NULL-fill at scan,
     # column-mapping physical names, lossless widening matrix)
-    m = re.fullmatch(
-        rf"ALTER\s+TABLE\s+({_IDENT})\s+ADD\s+COLUMNS?\s*"
-        rf"(?:\(\s*({_IDENT})\s+(?P<t1>[^)]+?)\s*\)|({_IDENT})\s+(?P<t2>.+))",
-        s, re.I | re.S,
-    )
-    if m:
-        t = _table(m.group(1))
-        col = _unquote(m.group(2) or m.group(4))
-        dtype = (m.group("t1") or m.group("t2")).strip()
-        v = t.add_column(col, dtype)
-        return {"mode": "sql_utility", "op": "add_column",
-                "table": _unquote(m.group(1)), "column": col,
-                "type": dtype, "new_version": int(v), "statement": stmt}
-    m = re.fullmatch(
-        rf"ALTER\s+TABLE\s+({_IDENT})\s+RENAME\s+COLUMN\s+({_IDENT})\s+"
-        rf"TO\s+({_IDENT})",
-        s, re.I,
-    )
-    if m:
-        t = _table(m.group(1))
-        v = t.rename_column(_unquote(m.group(2)), _unquote(m.group(3)))
-        return {"mode": "sql_utility", "op": "rename_column",
-                "table": _unquote(m.group(1)),
-                "from": _unquote(m.group(2)), "to": _unquote(m.group(3)),
-                "new_version": int(v), "statement": stmt}
-    m = re.fullmatch(
-        rf"ALTER\s+TABLE\s+({_IDENT})\s+DROP\s+COLUMNS?\s*"
-        rf"(?:\(\s*({_IDENT})\s*\)|({_IDENT}))",
-        s, re.I,
-    )
-    if m:
-        t = _table(m.group(1))
-        col = _unquote(m.group(2) or m.group(3))
-        v = t.drop_column(col)
-        return {"mode": "sql_utility", "op": "drop_column",
-                "table": _unquote(m.group(1)), "column": col,
-                "new_version": int(v), "statement": stmt}
-    m = re.fullmatch(
-        rf"ALTER\s+TABLE\s+({_IDENT})\s+ALTER\s+COLUMN\s+({_IDENT})\s+"
-        rf"TYPE\s+(?P<t>.+)",
-        s, re.I | re.S,
-    )
-    if m:
-        t = _table(m.group(1))
-        col = _unquote(m.group(2))
-        v = t.widen_column(col, m.group("t").strip())
-        return {"mode": "sql_utility", "op": "widen_column",
-                "table": _unquote(m.group(1)), "column": col,
-                "type": m.group("t").strip(), "new_version": int(v),
-                "statement": stmt}
-    m = re.fullmatch(
-        rf"ALTER\s+TABLE\s+({_IDENT})\s+ADD\s+CONSTRAINT\s+({_IDENT})\s+"
-        rf"CHECK\s*\((?P<p>.+)\)",
-        s, re.I | re.S,
-    )
-    if m:
-        t = _table(m.group(1))
-        v = t.add_constraint(_unquote(m.group(2)), m.group("p").strip())
-        return {"mode": "sql_utility", "op": "add_constraint",
-                "table": _unquote(m.group(1)),
-                "constraint": _unquote(m.group(2)),
-                "new_version": int(v), "statement": stmt}
-    m = re.fullmatch(
-        rf"ALTER\s+TABLE\s+({_IDENT})\s+DROP\s+CONSTRAINT\s+({_IDENT})",
-        s, re.I,
-    )
-    if m:
-        t = _table(m.group(1))
-        v = t.drop_constraint(_unquote(m.group(2)))
-        return {"mode": "sql_utility", "op": "drop_constraint",
-                "table": _unquote(m.group(1)),
-                "constraint": _unquote(m.group(2)),
-                "new_version": int(v), "statement": stmt}
-    m = re.fullmatch(
-        rf"ALTER\s+TABLE\s+({_IDENT})\s+SET\s+TBLPROPERTIES\s*"
-        rf"\((?P<kv>.+)\)",
-        s, re.I | re.S,
-    )
-    if m:
-        t = _table(m.group(1))
-        props: dict[str, str] = {}
-        for item in _split_top(m.group("kv")):
-            # SQL-standard quote escaping: '' inside a literal is one '
-            pm = re.fullmatch(
-                rf"\s*{_SQ_LIT}\s*=\s*{_SQ_LIT}\s*", item
-            )
-            if not pm or not pm.group(1):
-                raise SqlDmlError(
-                    f"malformed TBLPROPERTIES item {item.strip()!r}; "
-                    "expected 'key' = 'value'"
-                )
-            props[_sq_unquote(pm.group(1))] = _sq_unquote(pm.group(2))
-        v = t.set_properties(props)
-        return {"mode": "sql_utility", "op": "set_properties",
-                "table": _unquote(m.group(1)), "properties": props,
-                "new_version": int(v), "statement": stmt}
-    m = re.fullmatch(
-        rf"ALTER\s+TABLE\s+({_IDENT})\s+UNSET\s+TBLPROPERTIES\s*"
-        rf"\((?P<k>.+)\)",
-        s, re.I | re.S,
-    )
-    if m:
-        t = _table(m.group(1))
-        keys = []
-        for item in _split_top(m.group("k")):
-            km = re.fullmatch(rf"\s*{_SQ_LIT}\s*", item)
-            if not km or not km.group(1):
-                raise SqlDmlError(
-                    f"malformed UNSET TBLPROPERTIES item {item.strip()!r}; "
-                    "expected 'key'"
-                )
-            keys.append(_sq_unquote(km.group(1)))
-        v = t.unset_properties(keys)
-        return {"mode": "sql_utility", "op": "unset_properties",
-                "table": _unquote(m.group(1)), "keys": keys,
-                "new_version": int(v), "statement": stmt}
-    m = re.fullmatch(
-        rf"ALTER\s+TABLE\s+({_IDENT})\s+CLUSTER\s+BY\s*\((?P<c>[^)]*)\)",
-        s, re.I,
-    )
-    if not m:
-        raise SqlDmlError(
-            f"unsupported ALTER TABLE shape\n{_UTILITY_GRAMMAR}"
-        )
-    t = _table(m.group(1))
-    v = t.set_clustering(_cols(m.group("c")))
-    return {"mode": "sql_utility", "op": "set_clustering",
-            "table": _unquote(m.group(1)), "new_version": int(v),
-            "statement": stmt}
+    frag = {"mode": "sql_utility", "op": sh.op, "table": name}
+    if sh.op == "add_column":
+        v = t.add_columns(a["columns"])
+        (col, dtype), *more = a["columns"]
+        if more:
+            frag["columns"] = {c: d.simpleString() for c, d in a["columns"]}
+        else:
+            frag.update(column=col, type=dtype.simpleString())
+    elif sh.op == "rename_column":
+        v = t.rename_column(a["from"], a["to"])
+        frag.update({"from": a["from"], "to": a["to"]})
+    elif sh.op == "drop_column":
+        v = t.drop_column(a["column"])
+        frag["column"] = a["column"]
+    elif sh.op == "widen_column":
+        v = t.widen_column(a["column"], a["type"])
+        frag.update(column=a["column"], type=a["type"].simpleString())
+    elif sh.op == "add_constraint":
+        v = t.add_constraint(a["name"], a["predicate"])
+        frag["constraint"] = a["name"]
+    elif sh.op == "drop_constraint":
+        v = t.drop_constraint(a["name"])
+        frag["constraint"] = a["name"]
+    elif sh.op == "set_properties":
+        v = t.set_properties(a["properties"])
+        frag["properties"] = a["properties"]
+    elif sh.op == "unset_properties":
+        v = t.unset_properties(a["keys"])
+        frag["keys"] = a["keys"]
+    else:  # set_clustering
+        v = t.set_clustering(a["cols"])
+    return {**frag, "new_version": int(v), "statement": stmt}
 
 
 def _strip_line_comments(s: str) -> str:
@@ -2431,6 +2356,41 @@ def split_statements(script: str) -> list[str]:
     ]
 
 
+def _dml_target(spark, kind: str, name: str, versioned_views: dict):
+    """The versioned table a DML statement writes, after the refusals
+    every DML statement makes — execution and EXPLAIN alike."""
+    from database_anonymiser_spark.sources.versioned import VersionedTable
+
+    meta = versioned_views.get(name.lower())
+    if meta is None:
+        raise SqlDmlError(
+            f"{kind.upper()} target {name!r} is not a versioned view — "
+            "DML runs only against --versionedTable tables (plain "
+            "--data parquet views are immutable; the commit log is "
+            "what makes DML atomic, CDF-visible and time-travelable)"
+        )
+    if meta["pinned"]:
+        raise SqlDmlError(
+            f"{kind.upper()} target {name!r} is pinned to a historical "
+            "version/timestamp; DML against a time-travel read is "
+            "refused (register the view without @PIN to write at the "
+            "head)"
+        )
+    t = VersionedTable(spark, meta["root"])
+    # round 14: a MATERIALIZED VIEW's contents are derived state —
+    # direct DML would silently diverge it from its definition and
+    # the recorded source watermark would mask the divergence on the
+    # next refresh (DBSQL refuses the same)
+    props = t._raw_properties() or {}
+    if "ivm.source" in props:
+        raise SqlDmlError(
+            f"{kind.upper()} target {name!r} is a MATERIALIZED VIEW "
+            f"— its contents are derived from {props['ivm.source']!r}; "
+            "write to the source and REFRESH MATERIALIZED VIEW instead"
+        )
+    return t
+
+
 def execute_dml(
     spark, stmt: str, versioned_views: dict[str, dict], dryrun: bool = False
 ) -> dict:
@@ -2455,40 +2415,10 @@ def execute_dml(
     if kind is None:  # defensive; the caller classified already
         raise SqlDmlError("not a DML statement")
 
-    def _target_table(name: str) -> "VersionedTable":
-        meta = versioned_views.get(name.lower())
-        if meta is None:
-            raise SqlDmlError(
-                f"{kind.upper()} target {name!r} is not a versioned view — "
-                "DML runs only against --versionedTable tables (plain "
-                "--data parquet views are immutable; the commit log is "
-                "what makes DML atomic, CDF-visible and time-travelable)"
-            )
-        if meta["pinned"]:
-            raise SqlDmlError(
-                f"{kind.upper()} target {name!r} is pinned to a historical "
-                "version/timestamp; DML against a time-travel read is "
-                "refused (register the view without @PIN to write at the "
-                "head)"
-            )
-        t = VersionedTable(spark, meta["root"])
-        # round 14: a MATERIALIZED VIEW's contents are derived state —
-        # direct DML would silently diverge it from its definition and
-        # the recorded source watermark would mask the divergence on the
-        # next refresh (DBSQL refuses the same)
-        props = t._raw_properties() or {}
-        if "ivm.source" in props:
-            raise SqlDmlError(
-                f"{kind.upper()} target {name!r} is a MATERIALIZED VIEW "
-                f"— its contents are derived from {props['ivm.source']!r}; "
-                "write to the source and REFRESH MATERIALIZED VIEW instead"
-            )
-        return t
-
     if kind == "update":
         u = _parse_update(stmt)
         table_name = u.table
-        vt = _target_table(u.table)
+        vt = _dml_target(spark, kind, u.table, versioned_views)
         # [NOT] IN (SELECT ...) → literal list below the cap (also
         # unlocks the IN-list skipping); above it, a conjunct-level term
         # becomes a distributed semi-join spec
@@ -2525,7 +2455,7 @@ def execute_dml(
     elif kind == "delete":
         d = _parse_delete(stmt)
         table_name = d.table
-        vt = _target_table(d.table)
+        vt = _dml_target(spark, kind, d.table, versioned_views)
         pred, membership, prune = _resolve_where(
             spark, d.where, {d.table.lower(): ""}
         )
@@ -2546,7 +2476,7 @@ def execute_dml(
     elif kind == "insert":
         ins = _parse_insert(stmt)
         table_name = ins.table
-        vt = _target_table(ins.table)
+        vt = _dml_target(spark, kind, ins.table, versioned_views)
         sch = vt.snapshot().schema
         ident = vt.identity_column()
         gen_cols = set(vt.generated_columns() or ())
@@ -2601,7 +2531,7 @@ def execute_dml(
     else:
         mg = _parse_merge(stmt)
         table_name = mg.target
-        vt = _target_table(mg.target)
+        vt = _dml_target(spark, kind, mg.target, versioned_views)
         key_cols = vt.key_cols()
         if not key_cols:
             raise SqlDmlError(

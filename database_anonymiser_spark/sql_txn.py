@@ -69,6 +69,7 @@ from database_anonymiser_spark.sql_dml import (
     SqlDmlError,
     _strip_stmt,
     classify_dml,
+    classify_utility,
     execute_dml,
     statement_target,
 )
@@ -287,9 +288,7 @@ class ScriptTransaction:
         """
         if self._done:
             raise SqlTxnError("transaction already committed/rolled back")
-        is_truncate = (
-            re.match(r"\s*TRUNCATE\s+TABLE\b", stmt, re.I) is not None
-        )
+        is_truncate = classify_utility(stmt) == "truncate"
         if classify_dml(stmt) is None and not is_truncate:
             raise SqlTxnError(
                 "transactional statements are UPDATE / DELETE FROM / "

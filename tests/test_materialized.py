@@ -424,7 +424,7 @@ def test_stream_materialize(spark, src, tmp_path):
     assert row["n"] == 1 and row["total"] == 9.0
 
 
-def test_parse_mv_query():
+def test_parse_mv_query(spark):
     srcv, keys, aggs, _f = parse_mv_query(
         "SELECT grp, region, count(*) AS n, sum(a * b) AS s, "
         "avg(x) AS m FROM orders_v GROUP BY grp, region"
@@ -442,3 +442,8 @@ def test_parse_mv_query():
         parse_mv_query("SELECT a, count(*) AS n FROM v GROUP BY b")
     with pytest.raises(ValueError, match="select item"):
         parse_mv_query("SELECT g, x + 1 FROM v GROUP BY g")
+    # a backtick-quoted source view and output name
+    srcv, keys, aggs, _f = parse_mv_query(
+        "SELECT g, sum(v) AS `s` FROM `orders v` GROUP BY g"
+    )
+    assert srcv == "orders v" and keys == ["g"] and aggs == {"s": ("sum", "v")}

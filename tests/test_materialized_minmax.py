@@ -474,7 +474,7 @@ def test_feed_gap_detection(spark, tmp_path):
     assert not _has_feed_gap(t, 1, 3)    # only the compaction between
 
 
-def test_parse_mv_query_new_kinds():
+def test_parse_mv_query_new_kinds(spark):
     srcv, keys, aggs, _f = parse_mv_query(
         "SELECT grp, min(a) AS lo, max(b) AS hi, "
         "approx_count_distinct(c) AS d FROM t GROUP BY grp"
@@ -717,11 +717,19 @@ def test_filter_parse_and_row_local_guards(spark, tmp_path):
         "ts > current_date",
         "ts > date_sub(current_timestamp, 7)",
         "rand() < 0.5",
+        "ts > curdate()",
+        "unix_timestamp() - unix_timestamp(ts) < 3600",
     ):
         with pytest.raises(ValueError, match="ROW-LOCAL"):
             parse_mv_query(
                 f"SELECT g, count(*) AS n FROM t WHERE {bad} GROUP BY g"
             )
+    # the guard reads function calls, not text: a literal 'now' and a
+    # unix_timestamp of a column are row-local
+    for good in ("status <> 'now'", "unix_timestamp(ts) > 0"):
+        assert parse_mv_query(
+            f"SELECT g, count(*) AS n FROM t WHERE {good} GROUP BY g"
+        )[3] == good
     # the API face refuses too
     src = VersionedTable.create(
         spark, str(tmp_path / "s"),

@@ -1337,6 +1337,88 @@ def test_e2e_sql_constraints_properties(spark, tmp_path):
     assert "note" not in t.detail()["properties"]
 
 
+def _status_table(spark, root, constraint: str):
+    t = VersionedTable.create(
+        spark, str(root),
+        spark.createDataFrame([(1, 5, "x")], "k int, a int, status string"),
+        key_col="k",
+    )
+    t.add_constraint("c", constraint)
+    return t, {"t": {"root": str(root), "pinned": False}}
+
+
+def test_rename_ignores_a_column_name_inside_a_string_literal(spark, tmp_path):
+    """A constraint reads the columns its parse tree names: ``'a'`` is a
+    string literal, so renaming column ``a`` is allowed."""
+    from database_anonymiser_spark.sql_dml import execute_utility
+
+    t, views = _status_table(spark, tmp_path / "t", "status <> 'a'")
+    execute_utility(spark, "ALTER TABLE t RENAME COLUMN a TO b", views)
+    assert t.snapshot().columns == ["k", "b", "status"]
+    t.append(spark.createDataFrame([(2, 6, "y")], "k int, b int, status string"))
+    assert t.snapshot().count() == 2
+
+
+def test_rename_and_drop_refuse_a_column_a_constraint_names_in_another_case(
+    spark, tmp_path
+):
+    """``A > 0`` reads column ``a`` (Spark resolves names case-
+    insensitively): renaming or dropping ``a`` would break every later
+    write, so both refuse."""
+    from database_anonymiser_spark.sql_dml import execute_utility
+
+    t, views = _status_table(spark, tmp_path / "t", "A > 0")
+    with pytest.raises(ValueError, match="references 'a'"):
+        execute_utility(spark, "ALTER TABLE t RENAME COLUMN a TO b", views)
+    with pytest.raises(ValueError, match="references 'a'"):
+        t.drop_column("a")
+    t.append(spark.createDataFrame([(2, 6, "y")], "k int, a int, status string"))
+    assert t.snapshot().count() == 2
+
+
+def test_add_columns_adds_every_column_in_one_commit(spark, tmp_path):
+    """``ADD COLUMNS (b INT, c STRING)`` adds both columns in one
+    metadata commit; a repeated name refuses before anything commits."""
+    from database_anonymiser_spark.sql_dml import execute_utility
+
+    root = tmp_path / "t"
+    t = VersionedTable.create(
+        spark, str(root), spark.createDataFrame([(1,)], "k int"), key_col="k",
+    )
+    views = {"t": {"root": str(root), "pinned": False}}
+    v0 = t.latest_version()
+    frag = execute_utility(
+        spark, "ALTER TABLE t ADD COLUMNS (b INT, `c c` STRING)", views
+    )
+    assert frag["op"] == "add_column"
+    assert frag["columns"] == {"b": "int", "c c": "string"}
+    assert frag["new_version"] == v0 + 1 == t.latest_version()
+    assert dict(t.snapshot().dtypes) == {"k": "int", "b": "int", "c c": "string"}
+    with pytest.raises(ValueError, match="already exists"):
+        execute_utility(spark, "ALTER TABLE t ADD COLUMNS (d INT, b INT)", views)
+    assert t.latest_version() == v0 + 1
+
+
+def test_claim_utility_parses_only_what_it_must(spark, monkeypatch):
+    """Routing cost: a SELECT, the benchmark's OPTIMIZE and VACUUM ...
+    RETAIN n VERSIONS are claimed (or not) without one JVM parse; an
+    ALTER TABLE is parsed exactly once."""
+    import database_anonymiser_spark.sql_dml as D
+
+    calls = []
+    parse = D._parse
+    monkeypatch.setattr(
+        D, "_parse", lambda *a, **k: calls.append(a[0]) or parse(*a, **k)
+    )
+    views = {"v": {"root": "unused", "pinned": False}}
+    assert D.claim_utility("SELECT count(*) FROM v WHERE a > 1", views) is None
+    assert D.claim_utility("OPTIMIZE v", views) == "optimize"
+    assert D.claim_utility("VACUUM v RETAIN 10 VERSIONS", views) == "vacuum"
+    assert calls == []
+    assert D.claim_utility("ALTER TABLE v ADD COLUMNS (b INT)", views) == "alter"
+    assert len(calls) == 1
+
+
 def test_e2e_sql_truncate_and_insert_overwrite(spark, tmp_path):
     """TRUNCATE TABLE is a metadata-only dereference (zero data reads,
     history intact, RESTORE undoes it); INSERT OVERWRITE atomically

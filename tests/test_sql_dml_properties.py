@@ -109,10 +109,9 @@ def test_derive_prune_equality_chain_is_intersection(spark, vals):
 # --------------------------------------------------------------------------
 
 from database_anonymiser_spark.sql_dml import (  # noqa: E402
+    _head_args,
     _parse_on_keys,
     _sq_quote,
-    _sq_unquote,
-    _SQ_LIT,
     SqlDmlError,
 )
 from database_anonymiser_spark.sources.materialized import (  # noqa: E402
@@ -161,15 +160,12 @@ def test_on_split_partitions_conjuncts(spark, keys, residuals, flip):
 
 @settings(max_examples=300, deadline=None)
 @given(st.text(alphabet="ab',= c()", max_size=20))
-def test_sq_literal_round_trip(s):
+def test_sq_literal_round_trip(spark, s):
     """The TBLPROPERTIES literal grammar round-trips ANY value: quote →
-    regex-parse → unquote is the identity."""
-    import re as _re
-
+    parse (Spark's property-list grammar) → read is the identity."""
     lit = _sq_quote(s)
-    m = _re.fullmatch(_SQ_LIT, lit)
-    assert m is not None, lit
-    assert _sq_unquote(m.group(1)) == s
+    props = _head_args("set_properties", {"props": f"('k' = {lit})"})
+    assert props == {"properties": {"k": s}}, lit
 
 
 @settings(max_examples=200, deadline=None)
@@ -190,7 +186,7 @@ def test_sq_literal_round_trip(s):
         unique_by=lambda t: t[0],
     ),
 )
-def test_mv_parser_round_trips(keys, aggs):
+def test_mv_parser_round_trips(spark, keys, aggs):
     sel = ", ".join(keys + [f"{expr} AS {name}" for name, expr in aggs])
     src, got_keys, got_aggs, _pf = parse_mv_query(
         f"SELECT {sel} FROM my_view GROUP BY {', '.join(keys)}"

@@ -248,9 +248,31 @@ def test_explain_claims_only_engine_shapes(spark, banded):
     assert claim_utility("EXPLAIN SELECT k FROM cust", views) == "explain"
     # foreign targets / arbitrary SQL fall through to Spark's EXPLAIN
     assert claim_utility("EXPLAIN UPDATE other SET a = 1", views) is None
+    assert claim_utility("EXPLAIN UPDATE cust SET", views) is None
     assert claim_utility(
         "EXPLAIN SELECT a FROM cust JOIN x ON cust.k = x.k", views
     ) is None
+
+
+def test_explain_select_reads_the_where_from_the_parse_tree(spark, banded):
+    """A single-table SELECT with GROUP BY / HAVING / ORDER BY explains
+    its scan: the WHERE (the filter over the relation, alias included)
+    prunes, the HAVING does not."""
+    views = _views(banded)
+    stmt = (
+        "EXPLAIN SELECT count(*) FROM cust c WHERE c.k >= 30000 "
+        "GROUP BY k HAVING count(*) > 1 ORDER BY k"
+    )
+    assert claim_utility(stmt, views) == "explain"
+    frag = execute_utility(spark, stmt, views)
+    assert frag["class"] == "select" and frag["native_op"] == "pushdown_scan"
+    assert frag["prune"] == {"k": [30000, None]}
+    assert frag["files_total"] == 4 and frag["files_would_read"] == 1
+    frag = execute_utility(
+        spark, "EXPLAIN SELECT count(*) FROM cust WHERE k > 1 GROUP BY k",
+        views,
+    )
+    assert frag["prune"] == {"k": [1, None]} and frag["files_would_read"] == 4
 
 
 def test_e2e_explain_in_script(spark, banded, tmp_path):
@@ -355,6 +377,14 @@ def test_explain_refresh_and_analyze_mirror_refusals(spark, banded, tmp_path):
         execute_utility(
             spark, "EXPLAIN REFRESH MATERIALIZED VIEW mp", views
         )
+    # EXPLAIN of any statement runs its execution's validation
+    for stmt, refusal in (
+        ("EXPLAIN OPTIMIZE mp", "pinned"),
+        ("EXPLAIN UPDATE mp SET n = 0", "pinned"),
+        ("EXPLAIN DELETE FROM m WHERE n > 0", "MATERIALIZED VIEW"),
+    ):
+        with pytest.raises(SqlDmlError, match=refusal):
+            execute_utility(spark, stmt, views)
     v0 = banded.latest_version()
     with pytest.raises(SqlDmlError, match="no such column"):
         execute_utility(
