@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from database_anonymiser_spark.safeguards import bounded_collect
+
 #: edge ceiling for the LOCAL union-find fast path (r15, guide §1.2/§5:
 #: at sample scale the propagation loop's cost is per-round job
 #: scheduling — distinct + init groupBy + (join + groupBy + count) per
@@ -52,10 +54,16 @@ from pyspark.sql import functions as F
 CC_LOCAL_EDGE_CAP = 1 << 16
 
 
-def _cc_local(head, out_schema, spark):
-    """Union-find over a collected bounded edge list — the local twin of
-    the min-label propagation loop. Returns None when the input needs the
-    distributed path (NULL/NaN endpoints, unhashable ids)."""
+def _cc_local(head, e: DataFrame):
+    """Union-find over ``head``, the collected (src, dst) rows of the
+    edge frame ``e`` — the local twin of the min-label propagation loop,
+    as a frame of (id, cluster_id). Returns None when the input needs the
+    distributed path: ``head`` is None (over the cap), or NULL/NaN
+    endpoints or unhashable ids. The output schema is taken from the
+    distributed plan unexecuted, so names, types and nullability match
+    exactly."""
+    if head is None:
+        return None
     parent: dict = {}
 
     def find(x):
@@ -90,7 +98,12 @@ def _cc_local(head, out_schema, spark):
         if m is None or v < m:
             comp_min[r] = v
     rows = [(v, comp_min[find(v)]) for v in parent]
-    return spark.createDataFrame(rows, out_schema)
+    proto = (
+        e.groupBy(F.col("src").alias("id"))
+        .agg(F.min("dst").alias("_m"))
+        .select("id", F.least("id", "_m").alias("cluster_id"))
+    )
+    return e.sparkSession.createDataFrame(rows, proto.schema)
 
 
 def connected_components(
@@ -115,20 +128,14 @@ def connected_components(
     # bounded-edge fast path (r15): one collect of the RAW pair list (no
     # distinct, no symmetrization — the local union-find needs neither)
     # replaces the whole propagation loop. Result equality with the
-    # distributed loop is pinned in tests/test_graph.py; the output
-    # schema is taken from the distributed plan unexecuted, so names,
-    # types and nullability match exactly.
-    head = e.limit(CC_LOCAL_EDGE_CAP + 1).collect()
-    if len(head) <= CC_LOCAL_EDGE_CAP:
-        proto = (
-            e.groupBy(F.col("src").alias("id"))
-            .agg(F.min("dst").alias("_m"))
-            .select("id", F.least("id", "_m").alias("cluster_id"))
-        )
-        local = _cc_local(head, proto.schema, pairs.sparkSession)
-        if local is not None:
-            return local
+    # distributed loop is pinned in tests/test_graph.py.
+    local = _cc_local(bounded_collect(e, CC_LOCAL_EDGE_CAP), e)
+    return local if local is not None else _cc_propagate(e, max_iter)
 
+
+def _cc_propagate(e: DataFrame, max_iter: int = 25) -> DataFrame:
+    """The distributed min-label propagation loop of
+    :func:`connected_components` over the (src, dst) edge frame ``e``."""
     sym = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     sym = sym.distinct().localCheckpoint(eager=True)
     # label init folds the would-be first propagation round into the node

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from database_anonymiser_spark.operators.cachectl import scoped_cache
 from database_anonymiser_spark.operators.dedup import MERSENNE_P
+from database_anonymiser_spark.safeguards import bounded_collect
 
 
 def _dec(col, scale: int = 6):
@@ -972,75 +973,14 @@ def train_ivf_codebook(
     tests/test_suite_ops.py; the declared oracle entry stays on the
     training-free codebook, which an ANSI-SQL oracle can reproduce).
 
-    Determinism without fixing a partitioning: init is the ``n_centroids``
-    lowest-id vectors; each Lloyd iteration assigns map-side by float64
-    argmax dot (ties → lower centroid index) and updates centroids from
-    EXACT per-cluster component sums — components quantized to micro-ints
-    (the engine's 6dp convention) and summed as BIGINTs, so the update is
-    identical at any partitioning/order; means are then L2-normalized
-    (spherical k-means — the right objective for cosine retrieval). Empty
-    clusters keep their previous centroid.
-
-    Scale shape: per iteration one map-side Arrow assignment pass + one
-    partial-aggregated groupBy of K×(dim+1) sums; only K×dim totals reach
-    the driver (it IS the model). Train on a deterministic sample
-    (e.g. ``hash_sample``) when the corpus is large — k-means quality
-    saturates long before 100 TB of training points.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    init = df.orderBy(id_col).limit(n_centroids).select(vec_col).collect()
-    C = np.array([[float(x) for x in r[0]] for r in init], dtype=np.float64)
-    C /= np.maximum(np.linalg.norm(C, axis=1)[:, None], 1e-30)
-    dim = C.shape[1]
-    micro = F.transform(
-        F.col(vec_col), lambda x: (_dec(x) * 1_000_000).cast("long")
-    ).alias("_mi")
-
-    for _ in range(n_iter):
-        cmat = [list(map(float, c)) for c in C]
-
-        def assign(it):
-            P = np.array(cmat, dtype=np.float64)
-            for pdf in it:
-                if len(pdf) == 0:
-                    yield pd.DataFrame({"_cid": [], vec_col: []})
-                    continue
-                V = _vecs64(pdf, vec_col)
-                yield pd.DataFrame(
-                    {"_cid": (V @ P.T).argmax(axis=1), vec_col: pdf[vec_col]}
-                )
-
-        a_schema = T.StructType(
-            [T.StructField("_cid", T.IntegerType()),
-             T.StructField(vec_col, _field_type(df, vec_col))]
+    The float view of :func:`train_spherical_kmeans`: the same exact-integer
+    model, each micro-int component read back as ``m / 1e6``."""
+    return [
+        (cid, [m / 1e6 for m in c])
+        for cid, c in train_spherical_kmeans(
+            df, id_col, vec_col, n_clusters=n_centroids, n_iter=n_iter
         )
-        assigned = df.select(id_col, vec_col).mapInPandas(assign, a_schema)
-        sums = (
-            assigned.select("_cid", micro)
-            .groupBy("_cid")
-            .agg(
-                F.count(F.lit(1)).alias("_n"),
-                *[
-                    F.sum(F.element_at("_mi", i + 1)).alias(f"_s{i}")
-                    for i in range(dim)
-                ],
-            )
-            .collect()
-        )
-        newC = C.copy()
-        for r in sums:
-            cid, cnt = r["_cid"], r["_n"]
-            mean = np.array(
-                [r[f"_s{i}"] for i in range(dim)], dtype=np.float64
-            ) / (cnt * 1e6)
-            norm = np.linalg.norm(mean)
-            if norm > 0:
-                newC[cid] = mean / norm
-        C = newC
-    return [(cid, [float(x) for x in C[cid]]) for cid in range(n_centroids)]
+    ]
 
 
 def ivf_n_centroids(n_rows: int, min_list: int = 50, cap: int = 16) -> int:
@@ -1086,8 +1026,9 @@ def ivf_topk(
 
     Codebook: by default the ``n_centroids`` lowest-id vectors
     (deterministic, training-free — what the declared oracle reproduces);
-    pass ``codebook`` (e.g. from :func:`train_ivf_codebook`) to drop in a
-    trained spherical-k-means quantizer WITHOUT changing the plan (recall
+    pass ``codebook`` (e.g. from :func:`train_ivf_codebook`, the float
+    view of :func:`train_spherical_kmeans`) to drop in a trained
+    spherical-k-means quantizer WITHOUT changing the plan (recall
     comparison pinned in tests/test_suite_ops.py). The codebook is
     collected to the driver (K rows — the one legitimate collect: it IS
     the model) and inlined as literals, so list assignment is a map-side
@@ -1222,8 +1163,8 @@ def knn_join(
     from pyspark.sql import types as T
     from pyspark.sql.window import Window
 
-    qrows = queries.select(id_col, vec_col).orderBy(id_col).limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
+    qrows = bounded_collect(queries.select(id_col, vec_col).orderBy(id_col), max_queries)
+    if qrows is None:
         raise ValueError(
             f"query side exceeds max_queries={max_queries}; "
             "block the queries and union the results, or raise the cap"
@@ -1524,40 +1465,58 @@ def _micro_arr(vec_col: str) -> F.Column:
     )
 
 
-#: row / cell ceilings for the LOCAL Lloyd loop (r15, guide §1.2/§5: the
-#: trainer's cost at sample scale is n_iter sequential (mapInPandas +
-#: collect) rounds of pure job scheduling, not arithmetic). Below the cap
-#: the micro-int matrix is MODEL-sized — the same bounded-driver-collect
-#: class as the IVF/PQ codebooks — and the loop replays in-process with
-#: bit-identical semantics (integer sums are order-free, argmax ties
-#: break to the lowest centroid index in both). The effective row cap is
-#: min(ROW_CAP, CELL_CAP // dim): ≤ 2^22 int64 cells ≈ 32 MB on the
-#: driver regardless of embedding width. Above it the distributed loop
-#: runs unchanged — the 100 TB path (which trains on a hash_sample
-#: anyway; a sample above the cap still trains distributed).
+#: row / cell ceilings for the LOCAL Lloyd loop. At sample scale the
+#: trainer's cost is n_iter sequential (mapInPandas + collect) rounds of
+#: job scheduling, not arithmetic; below both ceilings the micro-int
+#: matrix is MODEL-sized — the same bounded-driver-collect class as the
+#: IVF/PQ codebooks — and the loop runs in-process with bit-identical
+#: semantics (integer sums are order-free, argmax ties break to the
+#: lowest centroid index in both). A corpus trains locally when it has at
+#: most ROW_CAP rows and rows × widest vector ≤ CELL_CAP: ≤ 2^22 int64
+#: cells ≈ 32 MB on the driver regardless of embedding width. Above
+#: either, the distributed loop runs — the 100 TB path (which trains on a
+#: hash_sample anyway; a sample above the caps still trains distributed).
 LOCAL_KMEANS_ROW_CAP = 1 << 16
 LOCAL_KMEANS_CELL_CAP = 1 << 22
 
 
+def _assign_sums(A, C, acc: dict) -> dict:
+    """One Lloyd assignment of the micro-int batch ``A`` against the
+    centroid matrix ``C``, added into ``acc`` (cid → (count, component
+    sum)): exact int64 dots, and np.argmax breaks ties to the FIRST
+    maximum == lowest cid — the SQL replay's (dot DESC, cid ASC)
+    row_number. The one kernel of both training paths."""
+    import numpy as np
+
+    cids = (A @ C.T).argmax(axis=1)
+    for cid in np.unique(cids):
+        rows = A[cids == cid]
+        n, s = acc.get(int(cid), (0, 0))
+        acc[int(cid)] = (n + len(rows), s + rows.sum(axis=0))
+    return acc
+
+
+def _recentre(cents: list, sums: dict) -> list:
+    """The Lloyd update: a cluster with a non-zero component sum moves to
+    its re-unitized sum; empty and zero-sum clusters keep their
+    centroid."""
+    new = list(cents)
+    for cid, s in sums.items():
+        if any(s):
+            new[cid] = _unit_micro([int(x) for x in s])
+    return new
+
+
 def _train_kmeans_local(A, cents: list[list[int]], n_iter: int):
     """The Lloyd loop of :func:`train_spherical_kmeans` run locally over
-    the collected micro-int matrix ``A`` — semantics identical to the
-    distributed loop round for round: exact int64 dots, np.argmax ties →
-    first max == lowest cid, exact integer component sums (order-free),
-    empty/zero-sum clusters keep their previous centroid."""
+    the collected micro-int matrix ``A``."""
     import numpy as np
 
     for _ in range(n_iter):
         if len(A) == 0 or not cents:
             break
-        C = np.array([list(c) for c in cents], dtype=np.int64)
-        cids = (A @ C.T).argmax(axis=1)
-        new = list(cents)
-        for cid in np.unique(cids):
-            s = A[cids == cid].sum(axis=0)
-            if s.any():
-                new[int(cid)] = _unit_micro([int(x) for x in s])
-        cents = new
+        acc = _assign_sums(A, np.array(cents, dtype=np.int64), {})
+        cents = _recentre(cents, {cid: s for cid, (_, s) in acc.items()})
     return list(enumerate(cents))
 
 
@@ -1581,7 +1540,12 @@ def train_spherical_kmeans(
     argmax IS the spherical (cosine) objective at 6dp resolution — the
     same quantization contract as :func:`int_planes` / the PQ path.
 
-    Scale shape: per iteration ONE map-side Arrow pass that assigns and
+    Two paths, one kernel (:func:`_assign_sums`). The (id, micro-vector)
+    frame is checkpointed first, so the caller's upstream executes once
+    whichever path trains, and the checkpoint pass observes the exact
+    row count and the widest vector. Within the ``LOCAL_KMEANS_*`` caps
+    ONE collect brings the matrix to the driver and the loop runs there.
+    Above them each iteration is ONE map-side Arrow pass that assigns and
     partially sums in the same batch loop, emitting ≤ K rows of (cid,
     count, component-sum array) per partition — no shuffle, no wide agg
     plan; the driver merges K×partitions partial rows with exact Python
@@ -1591,150 +1555,75 @@ def train_spherical_kmeans(
     bound |partition| ≤ ~9e12 rows before overflow — never binding."""
     import numpy as np
     import pandas as pd
+    import pyarrow.compute as pc
+    from pyspark.sql import Observation
     from pyspark.sql import types as T
 
-    # single-collect fast path (r16): for corpora within the probe cap,
-    # ONE bounded (id, micro-vector) collect serves BOTH the init (the
-    # ``n_clusters`` lowest-id vectors, ordered locally — the same
-    # byte-order-matches-code-point-order argument as graph._cc_local)
-    # and the whole local Lloyd loop. The r15 shape paid a separate
-    # ``orderBy(id).limit(k)`` collect first — a full execution of the
-    # caller's upstream (with AQE, every exchange below it) plus a
-    # TakeOrdered, immediately re-executed by the head collect. The
-    # probe cap stays below ROW_CAP so the collect is ≤ ~16k rows before
-    # dim is known; corpora between the probe cap and the dim-aware cap
-    # fall through to the r15 two-collect shape unchanged.
-    probe_cap = min(LOCAL_KMEANS_ROW_CAP, 1 << 14)
-    head = (
+    seen = Observation()
+    mdf = (
         df.select(F.col(id_col).alias("_kid"), _micro_arr(vec_col).alias("_mi"))
-        .limit(probe_cap + 1)
-        .toArrow()
+        .observe(seen, F.count(F.lit(1)).alias("n"),
+                 F.max(F.size("_mi")).alias("dim"))
+        .localCheckpoint(eager=True)
     )
-    if head.num_rows <= probe_cap:
+    stats = seen.get
+    n, dim = stats["n"], stats["dim"] or 0
+    if n <= LOCAL_KMEANS_ROW_CAP and n * max(dim, 1) <= LOCAL_KMEANS_CELL_CAP:
+        head = mdf.toArrow()
         col = head.column("_mi").combine_chunks()
         flat = col.flatten()
-        widths = np.diff(np.asarray(col.offsets))
-        dim0 = int(widths[0]) if len(widths) else 0
-        ids = head.column("_kid").to_pylist()
-        ids_ok = all(
-            v is not None and not (isinstance(v, float) and v != v) for v in ids
-        )
+        # ragged or NULL vectors train on the distributed path
         if (
             col.null_count == 0
             and flat.null_count == 0
-            and (len(widths) == 0 or (widths == dim0).all())
-            and head.num_rows * max(dim0, 1) <= LOCAL_KMEANS_CELL_CAP
-            and ids_ok
-        ):
-            A = (
-                flat.to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-                .reshape(head.num_rows, dim0)
-                if head.num_rows
-                else np.empty((0, dim0), dtype=np.int64)
-            )
-            try:
-                order = sorted(range(len(ids)), key=lambda i: ids[i])
-            except TypeError:
-                order = None  # unorderable ids: use the collected init below
-            if order is not None:
-                cents = [
-                    _unit_micro([int(x) for x in A[i]])
-                    for i in order[:n_clusters]
-                ]
-                return _train_kmeans_local(A, cents, n_iter)
-
-    init = df.orderBy(id_col).limit(n_clusters).select(vec_col).collect()
-    cents = [
-        _unit_micro([int(_dec6_py(float(x)) * 1_000_000) for x in r[0]])
-        for r in init
-    ]
-
-    # bounded-corpus fast path (r15): when the micro-int matrix fits the
-    # driver caps, ONE Arrow collect replaces the checkpoint + n_iter
-    # sequential (mapInPandas + collect) rounds. _micro_arr is the exact
-    # Column twin of the _dec6_py init quantization, so A holds the same
-    # integers the distributed batches would see; equality of the full
-    # codebook is pinned in tests/test_similarity_ops.py against the
-    # distributed loop. Ragged/null vectors fall through to the
-    # distributed loop untouched.
-    dim = len(cents[0]) if cents else 0
-    cap = min(LOCAL_KMEANS_ROW_CAP, LOCAL_KMEANS_CELL_CAP // max(dim, 1))
-    head = (
-        df.select(_micro_arr(vec_col).alias("_mi")).limit(cap + 1).toArrow()
-    )
-    if head.num_rows <= cap:
-        col = head.column("_mi").combine_chunks()
-        flat = col.flatten()
-        widths = np.diff(np.asarray(col.offsets))
-        if (
-            col.null_count == 0
-            and flat.null_count == 0
-            and (len(widths) == 0 or (widths == dim).all())
+            and (np.diff(np.asarray(col.offsets)) == dim).all()
         ):
             A = (
                 flat.to_numpy(zero_copy_only=False)
                 .astype(np.int64)
                 .reshape(head.num_rows, dim)
-                if head.num_rows
-                else np.empty((0, dim), dtype=np.int64)
             )
+            # the lowest ids in Spark's ascending order: NULLs first, NaN
+            # after every number, strings by UTF-8 byte order (== code
+            # point order). Arrow places NaN with the NULLs, so sort them
+            # last and rotate the NULLs to the front.
+            ids = head.column("_kid")
+            order = pc.sort_indices(ids, null_placement="at_end").to_numpy()
+            order = np.roll(order, ids.null_count)
+            cents = [_unit_micro([int(x) for x in A[i]]) for i in order[:n_clusters]]
             return _train_kmeans_local(A, cents, n_iter)
 
-    # pin the micro vectors once: every Lloyd iteration re-reads this
-    # frame, and without the checkpoint each iteration re-executes the
-    # caller's whole upstream (join/curation lineage) — n_iter× the scan
-    # cost for a training input that is usually a SAMPLE anyway (the
-    # documented 100 TB shape). Lazy: materialized by iteration 1.
-    mdf = df.select(_micro_arr(vec_col).alias("_mi")).localCheckpoint(
-        eager=False
-    )
-
+    init = mdf.orderBy("_kid").limit(n_clusters).select("_mi").collect()
+    cents = [_unit_micro(list(r[0])) for r in init]
+    vecs = mdf.select("_mi")
     p_schema = T.StructType(
         [T.StructField("_cid", T.IntegerType()),
          T.StructField("_n", T.LongType()),
          T.StructField("_s", T.ArrayType(T.LongType()))]
     )
     for _ in range(n_iter):
-        cmat = [list(c) for c in cents]
+        cmat = list(cents)
 
         def partials(it):
             C = np.array(cmat, dtype=np.int64)
             acc: dict = {}
             for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                A = np.vstack(pdf["_mi"].to_numpy()).astype(np.int64)
-                # exact int64 dots; np.argmax breaks ties to the FIRST
-                # maximum == lowest cid — the SQL replay's
-                # (dot DESC, cid ASC) row_number
-                cids = (A @ C.T).argmax(axis=1)
-                for cid in np.unique(cids):
-                    rows = A[cids == cid]
-                    n, s = acc.get(int(cid), (0, None))
-                    part = rows.sum(axis=0)
-                    acc[int(cid)] = (
-                        n + len(rows),
-                        part if s is None else s + part,
-                    )
+                if len(pdf):
+                    A = np.vstack(pdf["_mi"].to_numpy()).astype(np.int64)
+                    _assign_sums(A, C, acc)
             yield pd.DataFrame(
-                {"_cid": list(acc.keys()),
+                {"_cid": list(acc),
                  "_n": [v[0] for v in acc.values()],
                  "_s": [v[1].tolist() for v in acc.values()]}
             )
 
         totals: dict[int, list[int]] = {}
-        for r in mdf.mapInPandas(partials, p_schema).collect():
+        for r in vecs.mapInPandas(partials, p_schema).collect():
             s = totals.get(r["_cid"])
-            if s is None:
-                totals[r["_cid"]] = [int(x) for x in r["_s"]]
-            else:
-                totals[r["_cid"]] = [a + int(b) for a, b in zip(s, r["_s"])]
-        new = list(cents)
-        for cid, s in totals.items():
-            if any(s):
-                new[cid] = _unit_micro(s)
-        cents = new
+            totals[r["_cid"]] = (
+                r["_s"] if s is None else [a + b for a, b in zip(s, r["_s"])]
+            )
+        cents = _recentre(cents, totals)
     return list(enumerate(cents))
 
 
@@ -1768,7 +1657,8 @@ def semantic_clusters(
     (micro² units; cosine ≈ dot/1e12 once both sides are unit) for
     prototype-distance pruning and the oracle's value coverage.
     ``codebook`` accepts either this trainer's micro-int centroids or
-    :func:`train_ivf_codebook` floats (quantized+re-unitized on entry).
+    float ones such as :func:`train_ivf_codebook`'s (quantized and
+    re-unitized on entry).
 
     100 TB shape: training saturates on a deterministic sample (pass a
     ``codebook`` trained on ``hash_sample`` output); assignment is
@@ -1833,9 +1723,9 @@ def pq_codebooks(
     quantized to 6dp micro-ints (the engine's standard integer rendering —
     what makes the whole PQ path reproducible in ANSI SQL, exactly the
     IVF lowest-id-codebook precedent). ``k_sub`` rows is the one driver
-    collect: it IS the model. A trained upgrade would run
-    :func:`train_ivf_codebook`'s exact-integer Lloyd loop per subspace —
-    same plan, different literals."""
+    collect: it IS the model. :func:`train_pq_codebooks` is the trained
+    upgrade (a Lloyd loop per subspace) — same plan, different
+    literals."""
     rows = df.orderBy(id_col).limit(k_sub).select(vec_col).collect()
     if not rows:
         raise ValueError("empty corpus: cannot build PQ codebooks")

@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from database_anonymiser_spark.operators.text import BPE_PIECE_RE
+from database_anonymiser_spark.safeguards import bounded_collect
 
 #: training-table guard: pieces longer than this many characters are
 #: excluded from pair statistics (never from application)
@@ -252,8 +253,8 @@ def train_bpe(
     # bounded-vocab fast path: ≤ cap+1 (word, freq) rows ever reach the
     # driver; reads the just-materialized checkpoint, so the corpus is
     # still scanned exactly once
-    head = words.select("word", "freq").limit(LOCAL_TRAIN_VOCAB_CAP + 1).collect()
-    if len(head) <= LOCAL_TRAIN_VOCAB_CAP:
+    head = bounded_collect(words.select("word", "freq"), LOCAL_TRAIN_VOCAB_CAP)
+    if head is not None:
         return _train_bpe_local(
             docs.sparkSession, head, n_merges, min_pair_count, return_vocab
         )

@@ -68,6 +68,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as st
 
+from database_anonymiser_spark.safeguards import bounded_collect
+
 _LOG_DIR = "_log"
 _DATA_DIR = "data"
 
@@ -3584,13 +3586,11 @@ class VersionedTable:
             dv_map=self._dv_map(touched),
             with_position=True,
         )
-        hits = (
-            tgt.where(F.coalesce(pred, F.lit(False)))
-            .select("_dv_fp", "_dv_ri")
-            .limit(DV_COLLECT_CAP + 1)
-            .collect()
+        hits = bounded_collect(
+            tgt.where(F.coalesce(pred, F.lit(False))).select("_dv_fp", "_dv_ri"),
+            DV_COLLECT_CAP,
         )
-        if len(hits) > DV_COLLECT_CAP:
+        if hits is None:
             return None
         by_uri: dict = {}
         for r in hits:
@@ -4151,10 +4151,11 @@ class VersionedTable:
         incrementally in :meth:`optimize_cluster`. Re-declaring with
         different columns is allowed (Delta allows ALTER ... CLUSTER BY):
         every live file simply counts as unclustered again at the next
-        optimize."""
+        optimize. ``()`` drops the key (``CLUSTER BY NONE``); the declared
+        stats stay."""
         cols = tuple(cols)
-        if not 1 <= len(cols) <= 4:
-            raise ValueError("clustering needs 1-4 columns")
+        if len(cols) > 4:
+            raise ValueError("clustering takes at most 4 columns")
         schema = self._log_schema()
         if schema is not None:
             missing = [c for c in cols if c not in schema.fieldNames()]
@@ -4162,7 +4163,9 @@ class VersionedTable:
                 raise ValueError(f"no such column(s): {missing}")
         v = self.latest_version()
         props = dict(self._raw_properties())
-        props["clustering.cols"] = json.dumps(list(cols))
+        props.pop("clustering.cols", None)
+        if cols:
+            props["clustering.cols"] = json.dumps(list(cols))
         decl = tuple(dict.fromkeys(tuple(cols) + tuple(self._stats_cols or ())))
         _commit(
             self.root, v + 1, [], [], self.key_col(), op="set_clustering",

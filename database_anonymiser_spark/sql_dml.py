@@ -76,7 +76,9 @@ import math
 import re
 from dataclasses import dataclass, field
 from decimal import Decimal
-from functools import cached_property
+from functools import cached_property, lru_cache
+
+from database_anonymiser_spark.safeguards import bounded_collect
 
 __all__ = ["SqlDmlError", "classify_dml", "execute_dml"]
 
@@ -839,8 +841,8 @@ def _resolve_where(spark, where: "_Node | None", qualifiers: dict[str, str]):
         )
         plan = n.at(query.j.plan())
         sub = plan.text[slice(*plan.raw)]
-        rows = spark.sql(sub).limit(IN_SUBQUERY_CAP + 1).collect()
-        if len(rows) > IN_SUBQUERY_CAP:
+        rows = bounded_collect(spark.sql(sub), IN_SUBQUERY_CAP)
+        if rows is None:
             big.append((parent if negated else n, operands, sub, negated))
             continue
         if len(operands) != 1 or (rows and len(rows[0]) != 1):
@@ -1086,10 +1088,13 @@ class _Utility:
         return _catalyst_shape(self.kind, plan, f"{hint}\n{_UTILITY_GRAMMAR}")
 
 
+@lru_cache(maxsize=256)
 def _parse_utility(stmt: str) -> "_Utility | None":
     """The utility record of ``stmt``, or None when its first keyword is
     not a utility keyword (no JVM call either way: the shape is read on
-    first use)."""
+    first use).  Records are memoized by text, so the router's claim,
+    the rollback bookkeeping and the execution of one statement share
+    one parse."""
     head = _UTILITY_KEYWORD.match(stmt)
     return _Utility(head.group(1).lower(), _strip_stmt(stmt)) if head else None
 

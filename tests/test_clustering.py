@@ -34,10 +34,38 @@ def test_set_clustering_is_metadata_and_declares_stats(spark, tmp_path):
     assert d["files_unclustered"] == len(files0)
     # clustering.cols is a plain property mechanically, but the API
     # surfaces it via clustering_cols/detail, not table_properties
-    with pytest.raises(ValueError, match="1-4 columns"):
-        t.set_clustering(())
+    with pytest.raises(ValueError, match="at most 4 columns"):
+        t.set_clustering(("k", "g", "v", "k", "g"))
     with pytest.raises(ValueError, match="no such column"):
         t.set_clustering(("zz",))
+
+
+def test_cluster_by_none_drops_the_clustering_key(spark, tmp_path):
+    """``set_clustering(())`` — and ``ALTER TABLE t CLUSTER BY NONE`` —
+    drops the declared key: clustering_cols() is () again, SHOW CREATE
+    TABLE renders no CLUSTER BY, and the declared stats stay."""
+    from database_anonymiser_spark.sql_dml import execute_utility
+
+    t = _mk(spark, tmp_path / "t")
+    t.set_clustering(("g",))
+    v = t.set_clustering(())
+    assert t.commit_op(v) == "set_clustering"
+    assert t.clustering_cols() == () and t.detail()["clustering_cols"] == []
+    assert "g" in t.stats_cols()
+    with pytest.raises(ValueError, match="no clustering key declared"):
+        t.optimize_cluster()
+
+    views = {"t": {"root": str(t.root), "pinned": False}}
+
+    def ddl():
+        frag = execute_utility(spark, "SHOW CREATE TABLE t", views)
+        return frag["rows"][0]["createtab_stmt"]
+
+    execute_utility(spark, "ALTER TABLE t CLUSTER BY (g, v)", views)
+    assert t.clustering_cols() == ("g", "v") and "CLUSTER BY (g, v)" in ddl()
+    frag = execute_utility(spark, "ALTER TABLE t CLUSTER BY NONE", views)
+    assert frag["new_version"] == t.latest_version()
+    assert t.clustering_cols() == () and "CLUSTER BY" not in ddl()
 
 
 def test_optimize_cluster_is_incremental(spark, tmp_path):

@@ -14,7 +14,11 @@ from database_anonymiser_spark.config_gen import generate_config, mask_sample_va
 from database_anonymiser_spark.executor import execute_plan
 from database_anonymiser_spark.planner import build_plan, resolve_strategy
 from database_anonymiser_spark.preflight import PreflightError, preflight_validate
-from database_anonymiser_spark.safeguards import RowCapExceeded, enforce_row_cap
+from database_anonymiser_spark.safeguards import (
+    RowCapExceeded,
+    bounded_collect,
+    enforce_row_cap,
+)
 from database_anonymiser_spark.sql_gen import emit_sql_script
 
 
@@ -482,6 +486,19 @@ def test_row_cap():
     enforce_row_cap(1000, cap=100, force=True)
     with pytest.raises(RowCapExceeded):
         enforce_row_cap(1000, cap=100)
+
+
+def test_bounded_collect_is_one_capped_job(spark):
+    """bounded_collect returns the rows of an input of exactly ``cap``
+    rows and None at ``cap + 1``, with one Spark job either way (a
+    one-partition input, so the limit needs no second scan)."""
+    at_cap = spark.range(0, 50, 1, 1)
+    over = spark.range(0, 51, 1, 1)
+    rows, jobs = _jobs_launched(spark, lambda: bounded_collect(at_cap, 50))
+    assert [r.id for r in rows] == list(range(50)) and jobs == 1
+    rows, jobs = _jobs_launched(spark, lambda: bounded_collect(over, 50))
+    assert rows is None and jobs == 1
+    assert bounded_collect(spark.range(0), 0) == []
 
 
 def test_config_gen_roundtrip(catalog, tmp_path):

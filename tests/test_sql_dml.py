@@ -239,6 +239,31 @@ def _run(args: list[str]) -> int:
     return cli_main(args)
 
 
+def test_cli_parses_a_utility_statement_once(spark, dml_env, monkeypatch):
+    """One Spark parse per statement: the router's claim, the rollback
+    bookkeeping and the execution read the same utility record."""
+    import database_anonymiser_spark.sql_dml as D
+
+    data_dir, root = dml_env
+    parsed = []
+    real = D._parse
+
+    def counted(text, *args, **kwargs):
+        parsed.append(text)
+        return real(text, *args, **kwargs)
+
+    monkeypatch.setattr(D, "_parse", counted)
+    D._parse_utility.cache_clear()  # no record left by an earlier test
+    stmt = "ALTER TABLE cust ADD COLUMN z int"
+    rc = _run([
+        "--sql", stmt, "--sqlRollbackOnError",
+        "--data", str(data_dir), "--versionedTable", f"cust={root}",
+    ])
+    assert rc == 0
+    assert parsed == [stmt]
+    assert "z" in VersionedTable(spark, root).snapshot().columns
+
+
 def test_e2e_plain_describe_falls_through_to_spark_sql(dml_env):
     """Round-14 advice fix: round 13 claimed EVERY DESCRIBE/ALTER for
     the utility face, breaking round-12-valid plain Spark SQL like

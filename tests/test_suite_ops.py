@@ -1045,7 +1045,7 @@ def test_lsh_hot_bucket_skew_guard_preserves_pairs(spark):
 def test_kmeans_codebook_recall_beats_lowest_id(spark, emb):
     """The trained spherical-k-means codebook (train_ivf_codebook) must
     not lose recall vs the lowest-id placeholder on the fixture — measured
-    0.68 vs 0.62 mean recall@10 over 5 queries; both pipelines are fully
+    0.94 vs 0.86 mean recall@10 over 5 queries; both pipelines are fully
     deterministic (exact-integer mean updates), so the numbers are
     constants of the fixture."""
     cb = SIM.train_ivf_codebook(emb, "vec_id", "embedding", n_centroids=16, n_iter=5)
@@ -2046,17 +2046,29 @@ def test_kmeans_local_fast_path_equals_distributed_loop(
     bit-identical codebook to the distributed loop — the declared
     'assign' branch of sim_cosine_pairs value-hash checks this model, so
     the fast path may not move a single micro-int. Duplicate vectors
-    make assignment ties; n_clusters > corpus hits the short-init edge."""
+    make assignment ties; n_clusters > corpus hits the short-init edge;
+    NULL and NaN ids must take the init order Spark's sort gives them."""
     import database_anonymiser_spark.operators.similarity as S
 
     tricky = emb.limit(40).unionByName(
         emb.limit(7).withColumn("vec_id", F.col("vec_id") + 100000)
+    )
+    odd_ids = spark.createDataFrame(
+        [
+            (None if i == 3 else float("nan") if i == 5 else float(i),
+             [float(i % 4) - 1.5, float(i % 3) + 0.5])
+            for i in range(20)
+        ],
+        "vec_id double, embedding array<float>",
     )
     local = S.train_spherical_kmeans(
         tricky, "vec_id", "embedding", n_clusters=5, n_iter=4
     )
     local_big_k = S.train_spherical_kmeans(
         emb.limit(3), "vec_id", "embedding", n_clusters=8, n_iter=2
+    )
+    local_odd = S.train_spherical_kmeans(
+        odd_ids, "vec_id", "embedding", n_clusters=6, n_iter=2
     )
     monkeypatch.setattr(S, "LOCAL_KMEANS_ROW_CAP", 0)
     dist = S.train_spherical_kmeans(
@@ -2065,8 +2077,65 @@ def test_kmeans_local_fast_path_equals_distributed_loop(
     dist_big_k = S.train_spherical_kmeans(
         emb.limit(3), "vec_id", "embedding", n_clusters=8, n_iter=2
     )
+    dist_odd = S.train_spherical_kmeans(
+        odd_ids, "vec_id", "embedding", n_clusters=6, n_iter=2
+    )
     assert local == dist
     assert local_big_k == dist_big_k
+    assert local_odd == dist_odd
+
+
+def test_kmeans_training_cost_is_bounded(spark, emb, monkeypatch):
+    """train_spherical_kmeans executes the caller's upstream once, on
+    either side of the local cap. Within the cap exactly one collect of
+    training vectors reaches the driver; above it, no collect brings
+    more than LOCAL_KMEANS_CELL_CAP cells plus one row — and both sides
+    train the same model."""
+    import pyarrow as pa
+
+    import database_anonymiser_spark.operators.similarity as S
+
+    runs = spark.sparkContext.accumulator(0)
+
+    @F.udf("array<float>")
+    def upstream(v):
+        runs.add(1)
+        return v
+
+    df = emb.withColumn("embedding", upstream("embedding"))
+    n, dim = emb.count(), len(emb.first()["embedding"])
+    collects = []  # (rows, vector cells) of every driver collect
+    DataFrame = type(df)  # the session's concrete DataFrame class
+    real_collect, real_arrow = DataFrame.collect, DataFrame.toArrow
+
+    def spy_collect(self):
+        rows = real_collect(self)
+        cells = sum(len(v) for r in rows for v in r if isinstance(v, list))
+        collects.append((len(rows), cells))
+        return rows
+
+    def spy_arrow(self):
+        t = real_arrow(self)
+        cells = sum(
+            len(c.combine_chunks().flatten())
+            for c in t.columns if pa.types.is_list(c.type)
+        )
+        collects.append((t.num_rows, cells))
+        return t
+
+    monkeypatch.setattr(DataFrame, "collect", spy_collect)
+    monkeypatch.setattr(DataFrame, "toArrow", spy_arrow)
+    local = S.train_spherical_kmeans(df, "vec_id", "embedding", 4, 2)
+    assert runs.value == n
+    assert [c for c in collects if c[1]] == [(n, n * dim)]
+
+    cap = 100 * dim
+    monkeypatch.setattr(S, "LOCAL_KMEANS_CELL_CAP", cap)
+    runs.value, collects[:] = 0, []
+    dist = S.train_spherical_kmeans(df, "vec_id", "embedding", 4, 2)
+    assert runs.value == n
+    assert collects and all(cells <= cap + dim for _, cells in collects)
+    assert dist == local
 
 
 def test_semantic_clusters_accepts_pretrained_codebook(spark, emb):
