@@ -125,21 +125,25 @@ class FooterStats:
     rows: int
     files: int
     bytes: int
+    row_groups: int
 
 
 def footer_stats(path: str | Path | list) -> FooterStats:
-    """Rows, data files and bytes of a parquet file, a directory of them, or
-    a list of files — summed from the footers by pyarrow, so no row data is
-    read and no Spark job runs. ``_``/``.``-prefixed files (``_SUCCESS``,
-    checksums) are skipped, as Spark skips them."""
+    """Rows, data files, bytes and row groups of a parquet file, a
+    directory of them, or a list of files — summed from the footers by
+    pyarrow, so no row data is read and no Spark job runs. ``_``/``.``-
+    prefixed files (``_SUCCESS``, checksums) are skipped, as Spark skips
+    them."""
     import pyarrow.dataset as ds
 
     src = [str(p) for p in path] if isinstance(path, list) else str(path)
-    dataset = ds.dataset(src, format="parquet")
+    files = list(ds.dataset(src, format="parquet").get_fragments())
+    footers = [f.metadata for f in files]
     return FooterStats(
-        rows=dataset.count_rows(),
-        files=len(dataset.files),
-        bytes=sum(os.path.getsize(f) for f in dataset.files),
+        rows=sum(m.num_rows for m in footers),
+        files=len(files),
+        bytes=sum(os.path.getsize(f.path) for f in files),
+        row_groups=sum(m.num_row_groups for m in footers),
     )
 
 

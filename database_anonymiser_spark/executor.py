@@ -32,10 +32,21 @@ Cost:
   concurrently from a thread pool, which inherits the caller's Spark job
   group, so a 1000-executor cluster isn't serialized on one table's tail
   (the reference is strictly sequential, executor.ts:104-132).
-- A write runs one task per input split, so a table stored as one parquet
-  row group is written by one task. That write is the critical path of a
-  small apply, and it is left narrow on purpose: a ``repartition`` would add
-  a shuffle whose cost exceeds the parallel write it buys at that size.
+- A write runs one task per input split that holds a row group, so a table
+  stored as one parquet row group would be written by one task while the
+  other cores idle. An apply therefore reads a table stored as one file with
+  fewer row groups than its slice count ``n`` as ``n`` contiguous row-index
+  slices, one task each, with no shuffle
+  (:func:`~database_anonymiser_spark.operators.parallel.row_index_slices`):
+  ``n`` is the smaller of the splits Spark plans for the file and the table's
+  share of the apply's rows per core. The staged part files, read in name
+  order, hold the rows in the input's order. Run serially on a 4-core host,
+  the 600k-row, one-row-group ``lineitem`` took 1.50 s as one task, 1.36 s
+  with a hash ``repartition(4, key)``, 1.95 s with a round-robin
+  ``repartition(4)`` and 1.06 s as 3 slices. Each slice decodes the whole row
+  group (``TableResult.slices`` reports the count). The dryrun never runs
+  its plan, so it keeps the plain frame; the staged writes are submitted
+  largest table first (Graham's longest-processing-time rule).
 - Staged writes are file-size governed: ``max_records_per_file`` caps every
   output file (SURVEY.md §7) so a 100 TB apply neither emits multi-TB
   single files nor a small-file storm — Spark splits each task's output at
@@ -55,6 +66,7 @@ from dataclasses import dataclass, field
 from pathlib import Path
 
 from database_anonymiser_spark.catalog import ParquetCatalog, footer_stats
+from database_anonymiser_spark.operators.parallel import row_index_slices
 from database_anonymiser_spark.planner import Plan, PlannedTable
 from database_anonymiser_spark.safeguards import DEFAULT_ROW_CAP, enforce_row_cap
 from database_anonymiser_spark.strategies import (
@@ -86,6 +98,9 @@ class TableResult:
     #: wall time spent on this table: the prepare step, plus the write in
     #: an apply
     wall_s: float = 0.0
+    #: write tasks the table was split into: above 1 when an apply reads it
+    #: as row-index slices, each of which decodes the whole file
+    slices: int = 1
 
 
 @dataclass
@@ -105,14 +120,15 @@ class ExecutionResult:
         return [tr for tr in self.tables if tr.error is not None]
 
 
-def mask_table(catalog: ParquetCatalog, planned: PlannedTable):
+def mask_table(catalog: ParquetCatalog, planned: PlannedTable, df=None):
     """Read + type-safety normalize + projection for one table.
 
     Returns (masked_df, active_rewrites, downgrades). Mirrors the per-table
     body of executor.ts:104-132: live schema re-read (:108), normalize
-    (:109-116), compile (:118).
+    (:109-116), compile (:118). ``df`` is the frame to mask, by default the
+    table as the catalog reads it.
     """
-    df = catalog.read(planned.name)
+    df = catalog.read(planned.name) if df is None else df
     normalized = normalize_columns_for_types(list(planned.columns), df.schema)
     masked, active = masked_projection(df, normalized)
     downgrades = [
@@ -129,25 +145,33 @@ def _fail(res: TableResult, e: Exception) -> None:
     res.error = f"{type(e).__name__}: {e}"
 
 
-def _count_from_footers(res: TableResult, path) -> None:
-    stats = footer_stats(path)
+def _count_from_footers(res: TableResult, stats) -> None:
     res.rows, res.files, res.bytes = stats.rows, stats.files, stats.bytes
 
 
-def _prepare_table(catalog: ParquetCatalog, planned: PlannedTable):
+def _prepare_table(catalog: ParquetCatalog, planned: PlannedTable,
+                   apply_rows: int | None = None):
     """One table's driver-side bookkeeping: mask, downgrades, active-column
     count, footer row count. Launches no Spark job once the catalog holds
-    the table's schema. Returns ``(result, masked)``; ``masked`` is None
-    when the table is skipped or failed."""
+    the table's schema. Given ``apply_rows`` (an apply's total), the table
+    is masked as row-index slices where the slice rule fires. Returns
+    ``(result, masked)``; ``masked`` is None when the table is skipped or
+    failed."""
     res = TableResult(table=planned.table)
     t0 = time.perf_counter()
     try:
-        masked, active, res.downgrades = mask_table(catalog, planned)
+        df = catalog.read(planned.name)
+        stats = footer_stats(catalog.table_path(planned.name))
+        slices = 1
+        if apply_rows is not None:
+            df, slices = row_index_slices(df, stats, apply_rows)
+        masked, active, res.downgrades = mask_table(catalog, planned, df)
         if active == 0:
             # zero effective SETs → skip (query-builder.ts:54-56, executor.ts:120-124)
             res.skipped = True
             return res, None
-        _count_from_footers(res, catalog.table_path(planned.name))
+        _count_from_footers(res, stats)
+        res.slices = slices
         return res, masked
     except Exception as e:
         _fail(res, e)
@@ -188,7 +212,7 @@ def _stage_table(
         masked.write.option("maxRecordsPerFile", max_records_per_file).mode(
             "overwrite"
         ).parquet(str(staging))
-        _count_from_footers(res, staging)
+        _count_from_footers(res, footer_stats(staging))
         return staging
     except Exception as e:
         _fail(res, e)
@@ -203,14 +227,30 @@ def _counted(result: ExecutionResult) -> dict[str, int]:
     return {tr.table: tr.rows for tr in result.tables if not tr.skipped and tr.error is None}
 
 
-def _prepare_plan(catalog, plan, dryrun, row_cap, force, parallelism):
+def _footer_rows(catalog: ParquetCatalog, tables: list[PlannedTable]) -> int:
+    """Rows of the planned tables, from their footers. A table whose
+    footers cannot be read adds nothing: its prepare reports it."""
+    rows = 0
+    for t in tables:
+        try:
+            rows += footer_stats(catalog.table_path(t.name)).rows
+        except (OSError, ValueError):
+            pass
+    return rows
+
+
+def _prepare_plan(catalog, plan, dryrun, row_cap, force, parallelism, sliced=False):
     """Prepare every table. A dryrun's result is complete here. For an
     apply the row cap is enforced here, before any write, and a table that
     failed to prepare rolls the apply back before anything is written
-    (all-or-nothing, main.ts:102-111 ROLLBACK)."""
+    (all-or-nothing, main.ts:102-111 ROLLBACK). ``sliced`` masks each
+    table whose slice rule fires as row-index slices, sized by the rows
+    of every planned table."""
     result = ExecutionResult(mode="dryrun" if dryrun else "apply")
+    tables = list(plan.tables)
+    apply_rows = _footer_rows(catalog, tables) if sliced else None
     prepared = _map(
-        catalog.spark, lambda t: _prepare_table(catalog, t), list(plan.tables), parallelism
+        catalog.spark, lambda t: _prepare_table(catalog, t, apply_rows), tables, parallelism
     )
     result.tables = [tr for tr, _ in prepared]
     if dryrun:
@@ -394,12 +434,19 @@ def execute_plan(
         out_root.mkdir(parents=True, exist_ok=True)
         recover_pending_promote(out_root)
 
-    result, prepared = _prepare_plan(catalog, plan, dryrun, row_cap, force, parallelism)
+    result, prepared = _prepare_plan(
+        catalog, plan, dryrun, row_cap, force, parallelism, sliced=not dryrun
+    )
     if dryrun or result.rolled_back:
         return result
 
-    active = [(planned, tr, masked) for planned, (tr, masked)
-              in zip(plan.tables, prepared) if masked is not None]
+    # largest table first (Graham's longest-processing-time rule): the
+    # pool and Spark's FIFO scheduler start the longest write first
+    active = sorted(
+        ((planned, tr, masked) for planned, (tr, masked)
+         in zip(plan.tables, prepared) if masked is not None),
+        key=lambda a: -a[1].rows,
+    )
     stagings = _map(
         catalog.spark,
         lambda a: _stage_table(out_root, *a, max_records_per_file),

@@ -31,6 +31,7 @@ def build_report(mode: str, plan: Plan, result: ExecutionResult) -> dict:
                     "files": t.files,
                     "bytes": t.bytes,
                     "wall_s": t.wall_s,
+                    "slices": t.slices,
                 }
                 for t in result.tables
             ],

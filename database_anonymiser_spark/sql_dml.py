@@ -231,7 +231,7 @@ class _Node:
             return []
         if self.kind == "In" and self.j.inSetConvertible():
             # a literal list holds no column; an erasure script's IN list
-            # has a thousand entries, which _in_values reads in one call
+            # has a thousand entries, which in_list reads in one call
             return [self.at(self.j.value())]
         return [self.at(c) for c in _seq(self.j.children())]
 
@@ -277,11 +277,59 @@ class _Node:
             return [self]
         return [c for k in self.kids for c in k.conjuncts]
 
+    @cached_property
+    def sql(self) -> str:
+        """Spark's own rendering: the text of a node with no origin."""
+        return self.j.sql()
+
+    @cached_property
+    def in_list(self) -> list | None:
+        """The literals of ``col IN (lit, ...)`` as bounds, in one JVM call
+        (the node's JSON: the IN node, its column, then one Literal per
+        entry), else None."""
+        if self.kids[0].kind != "UnresolvedAttribute" or not self.j.inSetConvertible():
+            return None
+        flat = json.loads(self.j.toJSON())[2:]
+        return [_lit_value((d["dataType"], d["value"])) for d in flat]
+
+    @cached_property
+    def escape(self) -> str:
+        """A LIKE's escape character."""
+        return self.j.escapeChar()
+
+    @cached_property
+    def subquery(self) -> str | None:
+        """A subquery expression's query text."""
+        plan = self.at(self.j.plan())
+        return plan.text[slice(*plan.raw)] if plan.raw else None
+
     def walk(self, parent: "_Node | None" = None):
         """``(node, parent)`` pairs in pre-order, never into a subquery."""
         yield self, parent
         for k in self.kids:
             yield from k.walk(self)
+
+    def frozen(self) -> "_Node":
+        """This expression tree with every property the walks read
+        computed and the JVM handles dropped: a memoized statement record
+        then holds only Python values."""
+        nodes = [n for n, _ in self.walk()]
+        for n in nodes:
+            n.span, n.lit, n.conjuncts
+            if n.kind in ("UnresolvedAttribute", "UnresolvedFunction"):
+                n.parts
+            elif n.kind == "In":
+                n.in_list
+            elif n.kind == "Like":
+                n.escape
+            elif n.kind == "ListQuery":
+                n.subquery
+        for n in (self, *self.conjuncts):  # the nodes rendered on their own
+            if n.span is None:
+                n.sql
+        for n in nodes:
+            n.j = None
+        return self
 
 
 def _parens(text: str, span: tuple[int, int]) -> tuple[int, int]:
@@ -320,7 +368,7 @@ def _render(node: _Node, qualifiers: dict[str, str], subs: dict | None = None,
     ``parens`` widens the result over enclosing parentheses: a conjunct
     taken out of an AND chain keeps its grouping."""
     if node.span is None:  # a TRUE/FALSE literal
-        return node.j.sql()
+        return node.sql
     subs = subs or {}
     text = node.text
     start, stop = _parens(text, node.span) if parens else node.span
@@ -377,7 +425,7 @@ def _relation(node: _Node, alias_ok: bool, what: str) -> tuple[str, str]:
 # statement records
 # --------------------------------------------------------------------------
 
-@dataclass
+@dataclass(frozen=True)
 class _Update:
     table: str
     assignments: dict[str, str] = field(default_factory=dict)
@@ -385,14 +433,14 @@ class _Update:
     where: "_Node | None" = field(default=None, repr=False, compare=False)
 
 
-@dataclass
+@dataclass(frozen=True)
 class _Delete:
     table: str
     predicate: str | None = None
     where: "_Node | None" = field(default=None, repr=False, compare=False)
 
 
-@dataclass
+@dataclass(frozen=True)
 class _Insert:
     table: str
     columns: "list[str] | None"          # None = positional full schema
@@ -411,7 +459,7 @@ class _Insert:
         return [[_render(c, {}) for c in row] for row in self.rows]
 
 
-@dataclass
+@dataclass(frozen=True)
 class _Merge:
     target: str
     target_alias: str
@@ -472,36 +520,26 @@ def _assignments(seq, at: _Node, targets: tuple[str, ...],
     return out
 
 
-def _parse_update(stmt: str) -> _Update:
-    plan = _parse(stmt)
-    if plan.kind != "UpdateTable":
-        raise SqlDmlError(f"unsupported UPDATE shape\n{_GRAMMAR}")
+def _update_record(plan: _Node) -> _Update:
     table, _ = _relation(plan.at(plan.j.table()), False, "UPDATE target")
     strip = {table.lower(): ""}
     assigns = _assignments(plan.j.assignments(), plan, (table.lower(),), strip)
     cond = _opt(plan.j.condition())
     where = plan.at(cond) if cond is not None else None
-    return _Update(table, assigns, where and _render(where, strip), where)
+    return _Update(table, assigns, where and _render(where, strip),
+                   where and where.frozen())
 
 
-def _parse_delete(stmt: str) -> _Delete:
-    plan = _parse(stmt)
-    if plan.kind != "DeleteFromTable":
-        raise SqlDmlError(f"unsupported DELETE shape\n{_GRAMMAR}")
+def _delete_record(plan: _Node) -> _Delete:
     table, _ = _relation(plan.at(plan.j.table()), False, "DELETE target")
     where = plan.at(plan.j.condition())
     if where.lit == ("boolean", "true"):  # no WHERE (or WHERE TRUE)
         return _Delete(table)
-    return _Delete(table, _render(where, {table.lower(): ""}), where)
+    return _Delete(table, _render(where, {table.lower(): ""}), where.frozen())
 
 
-def _parse_insert(stmt: str) -> _Insert:
-    plan = _parse(stmt)
-    if (
-        plan.kind != "InsertIntoStatement"
-        or plan.j.byName()
-        or not plan.j.partitionSpec().isEmpty()
-    ):
+def _insert_record(plan: _Node) -> _Insert:
+    if plan.j.byName() or not plan.j.partitionSpec().isEmpty():
         raise SqlDmlError(f"unsupported INSERT shape\n{_GRAMMAR}")
     table, _ = _relation(plan.at(plan.j.table()), False, "INSERT target")
     columns = _seq(plan.j.userSpecifiedCols()) or None
@@ -516,7 +554,7 @@ def _parse_insert(stmt: str) -> _Insert:
         width = src.j.output().size()
         rows = []
     elif src.kind == "UnresolvedInlineTable":
-        rows = [[src.at(c) for c in _seq(r)] for r in _seq(src.j.rows())]
+        rows = [[src.at(c).frozen() for c in _seq(r)] for r in _seq(src.j.rows())]
         width = len(rows[0])
         if any(len(r) != width for r in rows):
             raise SqlDmlError("VALUES rows have inconsistent arity")
@@ -530,10 +568,7 @@ def _parse_insert(stmt: str) -> _Insert:
     return _Insert(table, columns, query, overwrite, True, rows)
 
 
-def _parse_merge(stmt: str) -> _Merge:
-    plan = _parse(stmt)
-    if plan.kind != "MergeIntoTable":
-        raise SqlDmlError(f"unsupported MERGE shape\n{_GRAMMAR}")
+def _merge_record(plan: _Node) -> _Merge:
     target, talias = _relation(plan.at(plan.j.targetTable()), True, "MERGE target")
     src = plan.at(plan.j.sourceTable())
     inner = src.at(src.j.child()) if src.kind == "SubqueryAlias" else src
@@ -554,7 +589,7 @@ def _parse_merge(stmt: str) -> _Merge:
     # a SET column names a TARGET column: bare or target-qualified only
     targets = (talias.lower(), "t")
     merge = _Merge(target, talias, source_sql, is_query, salias,
-                   plan.at(plan.j.mergeCondition()))
+                   plan.at(plan.j.mergeCondition()).frozen())
     for actions, out in (
         (plan.j.matchedActions(), merge.matched),
         (plan.j.notMatchedActions(), merge.not_matched),
@@ -576,6 +611,69 @@ def _parse_merge(stmt: str) -> _Merge:
                     _assignments(a.assignments(), plan, targets, requal),
                 ))
     return merge
+
+
+#: Spark's node for each DML statement: its keyword, the record builder
+#: and the accessor of its target relation
+_DML = {
+    "UpdateTable": ("UPDATE", _update_record, lambda j: j.table()),
+    "DeleteFromTable": ("DELETE", _delete_record, lambda j: j.table()),
+    "InsertIntoStatement": ("INSERT", _insert_record, lambda j: j.table()),
+    "MergeIntoTable": ("MERGE", _merge_record, lambda j: j.targetTable()),
+}
+
+
+@dataclass(frozen=True)
+class _DmlParse:
+    kind: str                 # Spark's plan node
+    target: str | None        # the target table, read with an alias allowed
+    record: "_Update | _Delete | _Insert | _Merge | None" = None
+    error: str | None = None  # the record's refusal
+
+
+@lru_cache(maxsize=256)
+def _parse_dml(stmt: str) -> _DmlParse:
+    """One Spark parse of a DML statement, memoized by text like
+    :func:`_parse_utility`: the rollback bookkeeping's target and the
+    statement record, whose trees are frozen (Python values only).  A
+    refusal is kept as its message and raised on every read."""
+    plan = _parse(stmt)
+    if plan.kind not in _DML:
+        return _DmlParse(plan.kind, None)
+    _, build, target = _DML[plan.kind]
+    try:
+        name = _relation(plan.at(target(plan.j)), True, "target")[0]
+    except SqlDmlError:
+        name = None
+    try:
+        return _DmlParse(plan.kind, name, build(plan))
+    except SqlDmlError as e:
+        return _DmlParse(plan.kind, name, error=str(e))
+
+
+def _dml_record(stmt: str, kind: str):
+    p = _parse_dml(stmt)
+    if p.kind != kind:
+        raise SqlDmlError(f"unsupported {_DML[kind][0]} shape\n{_GRAMMAR}")
+    if p.error is not None:
+        raise SqlDmlError(p.error)
+    return p.record
+
+
+def _parse_update(stmt: str) -> _Update:
+    return _dml_record(stmt, "UpdateTable")
+
+
+def _parse_delete(stmt: str) -> _Delete:
+    return _dml_record(stmt, "DeleteFromTable")
+
+
+def _parse_insert(stmt: str) -> _Insert:
+    return _dml_record(stmt, "InsertIntoStatement")
+
+
+def _parse_merge(stmt: str) -> _Merge:
+    return _dml_record(stmt, "MergeIntoTable")
 
 
 def _on_keys(
@@ -657,16 +755,6 @@ def _lit_value(lit):
     return None
 
 
-def _in_values(node: _Node) -> list | None:
-    """The literals of ``col IN (lit, ...)`` as bounds, in one JVM call
-    (the node's JSON: the IN node, its column, then one Literal per
-    entry), else None."""
-    if not node.j.inSetConvertible():
-        return None
-    flat = json.loads(node.j.toJSON())[2:]
-    return [_lit_value((d["dataType"], d["value"])) for d in flat]
-
-
 def _py_bound(v):
     """A collected IN-subquery value as :func:`_lit_value` reads the
     literal it is spliced in as."""
@@ -740,7 +828,7 @@ def _prune(conjuncts: list[_Node], qualifiers: dict[str, str],
                 _narrow(col, lo, hi)
         elif c.kind in ("In", "InSubquery"):
             vals = (
-                _in_values(c) if c.kind == "In"
+                c.in_list if c.kind == "In"
                 else (in_values or {}).get(id(c))
             )
             if vals and None not in vals:
@@ -759,7 +847,7 @@ def _prune(conjuncts: list[_Node], qualifiers: dict[str, str],
             # conjoin into the row predicate that silently skipped
             # matching rows. (A wildcard or escape inside the prefix is
             # not a pure prefix test and contributes nothing.)
-            pat, esc = kids[1].lit[1], c.j.escapeChar()
+            pat, esc = kids[1].lit[1], c.escape
             prefix = pat[:-1]
             if pat.endswith("%") and prefix and not (set(prefix) & {"%", "_", esc}):
                 hi = None
@@ -839,8 +927,7 @@ def _resolve_where(spark, where: "_Node | None", qualifiers: dict[str, str]):
             parent is not None and parent.kind == "Not"
             and parent.raw[0] == n.raw[0]
         )
-        plan = n.at(query.j.plan())
-        sub = plan.text[slice(*plan.raw)]
+        sub = query.subquery
         rows = bounded_collect(spark.sql(sub), IN_SUBQUERY_CAP)
         if rows is None:
             big.append((parent if negated else n, operands, sub, negated))
@@ -1371,12 +1458,7 @@ def statement_target(stmt: str) -> str | None:
     (DESCRIBE) and shapes without a view target (CONVERT — it creates
     the table it names)."""
     if classify_dml(stmt):  # a DML target comes from Spark's parse
-        plan = _parse(stmt)
-        if plan.kind == "MergeIntoTable":
-            return _relation(plan.at(plan.j.targetTable()), True, "target")[0]
-        if plan.kind in ("UpdateTable", "DeleteFromTable", "InsertIntoStatement"):
-            return _relation(plan.at(plan.j.table()), True, "target")[0]
-        return None
+        return _parse_dml(stmt).target
     u = _parse_utility(stmt)
     return u.shape.target if u is not None and u.kind in _WRITES else None
 
@@ -2552,6 +2634,7 @@ def execute_dml(
             else spark.table(mg.source_sql)
         )
         res_sql = " AND ".join(f"({c})" for c in residual) if residual else None
+        clauses = list(mg.matched)  # the record is shared: never edit it
         if res_sql:
             # Delta's residual-ON semantics over the key-joined native
             # merge: matched clauses require the residual; a key-matched
@@ -2560,14 +2643,14 @@ def execute_dml(
             # match), so the BY SOURCE clauses apply there, gated on NOT
             # residual. WHEN NOT MATCHED inserts stay key-equality-keyed
             # (module docstring: the key-uniqueness deviation).
-            mg.matched = [
+            clauses = [
                 (cl[0],
                  res_sql if cl[1] is None else f"({res_sql}) AND ({cl[1]})",
                  *cl[2:])
-                for cl in mg.matched
+                for cl in clauses
             ]
             not_res = f"NOT coalesce({res_sql}, false)"
-            mg.matched.extend(
+            clauses.extend(
                 (cl[0],
                  not_res if cl[1] is None else f"({not_res}) AND ({cl[1]})",
                  *cl[2:])
@@ -2617,9 +2700,9 @@ def execute_dml(
             }
         new_v = vt.merge(
             src,
-            matched=mg.matched,
-            not_matched=mg.not_matched,
-            not_matched_by_source=mg.by_source or None,
+            matched=clauses,
+            not_matched=list(mg.not_matched),
+            not_matched_by_source=list(mg.by_source) or None,
         )
     # the one new commit record only (never the whole history — the log
     # can be long; this is the report's operationMetrics slot)

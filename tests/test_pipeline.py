@@ -1,5 +1,7 @@
 """End-to-end tests of the faithful pipeline: configGen → plan → dryrun → apply."""
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -449,6 +451,176 @@ def test_footer_stats_match_spark_count(spark, sf_dir, catalog, tmp_path):
         df = local.read("events")
         assert footer_stats(local.table_path("events")).rows == df.count() == 1000
         assert df.schema["ts"].dataType.simpleString() == "timestamp_ntz"
+
+
+@contextmanager
+def _small_splits(spark, max_bytes="2KB", open_cost="512"):
+    """Spark's file-split settings lowered so that the sf0.001 customer
+    file (6.9 KB, 150 rows, one row group) plans 4 splits, as lineitem
+    does at sf0.1."""
+    keys = {"spark.sql.files.maxPartitionBytes": max_bytes,
+            "spark.sql.files.openCostInBytes": open_cost}
+    old = {k: spark.conf.get(k) for k in keys}
+    for k, v in keys.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+@pytest.fixture()
+def hmac_key():
+    from database_anonymiser_spark import strategies as S
+
+    S.set_hmac_key("slice-key")
+    yield
+    S.set_hmac_key(None)
+
+
+def _slice_plan(tables=("customer", "supplier")):
+    """HASH_HMAC, TRUNCATE and SET_NULL on customer; supplier (10 rows) is
+    too small a share of the apply to be sliced."""
+    d = base_config_dict(column_strategy={})
+    d["rules"] = [
+        {"table": "public.customer", "enabled": True, "columns": [
+            {"name": "c_name", "strategy": "HASH_HMAC"},
+            {"name": "c_mktsegment", "strategy": "TRUNCATE"},
+            {"name": "c_acctbal", "strategy": "SET_NULL"},
+        ]},
+        {"table": "public.supplier", "enabled": True, "columns": [
+            {"name": "s_name", "strategy": "HASH_SHA256"},
+        ]},
+    ]
+    d["rules"] = [r for r in d["rules"] if r["table"].split(".")[1] in tables]
+    return build_plan(config_from_dict(d))
+
+
+def _staged_rows(table_dir):
+    """Rows of every part file, concatenated in name order, and the row
+    count of each file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    parts = [pq.read_table(p) for p in sorted(table_dir.glob("part-*.parquet"))]
+    return pa.concat_tables(parts).to_pylist(), [t.num_rows for t in parts]
+
+
+def _job_tasks(spark, fn):
+    """(fn(), task count of each Spark job fn launched)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"tasks-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    return out, sorted(
+        sum(tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(j).stageIds)
+        for j in tracker.getJobIdsForGroup(group)
+    )
+
+
+def test_apply_slices_a_single_row_group_table(spark, sf_dir, tmp_path, hmac_key):
+    """A one-row-group table that Spark plans 4 splits for is written as 4
+    row-index slices, one task each, in one job: the part files, read in
+    name order, hold the unsliced apply's rows in its order (150 rows, so
+    the slices are 37/38/37/38), none of them empty. The report carries
+    the slice count; supplier's share is one task, so it is not split."""
+    from database_anonymiser_spark.reporting import build_report
+
+    catalog = ParquetCatalog(spark, sf_dir)
+    plan = _slice_plan()
+    plain = execute_plan(catalog, plan, dryrun=False, output_root=tmp_path / "plain")
+    with _small_splits(spark):
+        sliced, tasks = _job_tasks(spark, lambda: execute_plan(
+            catalog, plan, dryrun=False, output_root=tmp_path / "sliced"))
+    assert [t.slices for t in plain.tables] == [1, 1]
+    assert [t.slices for t in sliced.tables] == [4, 1]
+    # one job per table, 4 tasks each: customer's 4 slices, and Spark's own
+    # 4 splits of supplier's file (3 of them empty, as unsliced files are)
+    assert tasks == [4, 4]
+    assert sliced.updated_by_table == plain.updated_by_table == {
+        "public.customer": 150, "public.supplier": 10}
+    want, _ = _staged_rows(tmp_path / "plain" / "customer.parquet")
+    got, counts = _staged_rows(tmp_path / "sliced" / "customer.parquet")
+    assert got == want and counts == [37, 38, 37, 38]
+    assert sliced.tables[0].files == 4
+    assert _staged_rows(tmp_path / "sliced" / "supplier.parquet")[0] == \
+        _staged_rows(tmp_path / "plain" / "supplier.parquet")[0]
+    report = build_report("apply", plan, sliced)["result"]["tables"]
+    assert [t["slices"] for t in report] == [4, 1]
+
+
+def test_dryrun_keeps_the_plain_frame(spark, sf_dir, hmac_key):
+    """Slicing is the apply's: the dryrun masks the plain scan (no Union,
+    no _metadata) and, warm, still launches no Spark job."""
+    from database_anonymiser_spark import executor as EX
+
+    catalog = ParquetCatalog(spark, sf_dir)
+    plan = _slice_plan()
+    customer = plan.tables[0]
+    with _small_splits(spark):
+        execute_plan(catalog, plan, dryrun=True)  # warm the schema cache
+        res, n_jobs = _jobs_launched(spark, lambda: execute_plan(catalog, plan, dryrun=True))
+        _, dry = EX._prepare_table(catalog, customer)
+        _, wet = EX._prepare_table(catalog, customer, apply_rows=160)
+    assert n_jobs == 0 and [t.slices for t in res.tables] == [1, 1]
+    dry_plan = dry._jdf.queryExecution().analyzed().toString()
+    assert "Union" not in dry_plan and "_metadata" not in dry_plan
+    assert "Union" in wet._jdf.queryExecution().analyzed().toString()
+
+
+def test_slicing_leaves_split_inputs_alone(spark, sf_dir, tmp_path, hmac_key):
+    """A file with at least as many row groups as slices, and a directory
+    of several files, are already split by Spark: neither is sliced."""
+    import pyarrow.parquet as pq
+
+    cust = pq.read_table(f"{sf_dir}/customer.parquet")
+    groups = tmp_path / "groups"
+    groups.mkdir()
+    pq.write_table(cust, groups / "customer.parquet", row_group_size=30)
+    files = tmp_path / "files"
+    (files / "customer.parquet").mkdir(parents=True)
+    pq.write_table(cust.slice(0, 75), files / "customer.parquet" / "part-0.parquet")
+    pq.write_table(cust.slice(75), files / "customer.parquet" / "part-1.parquet")
+    plan = _slice_plan(tables=("customer",))
+    with _small_splits(spark):
+        for src in (groups, files):
+            res = execute_plan(ParquetCatalog(spark, src), plan, dryrun=False,
+                               output_root=tmp_path / f"out-{src.name}")
+            assert res.updated_by_table == {"public.customer": 150}
+            assert res.tables[0].slices == 1
+    assert pq.ParquetFile(groups / "customer.parquet").metadata.num_row_groups == 5
+
+
+def test_sliced_write_failure_removes_every_staging(spark, sf_dir, tmp_path, monkeypatch,
+                                                     hmac_key):
+    """A sliced table whose staged write fails rolls the apply back: no
+    table promoted, no staging left behind."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real = DataFrameWriter.parquet
+
+    def failing(self, path, *a, **kw):
+        real(self, path, *a, **kw)
+        if "_staging_customer" in str(path):
+            raise RuntimeError("simulated write failure")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    with _small_splits(spark):
+        res = execute_plan(ParquetCatalog(spark, sf_dir), _slice_plan(tables=("customer",)),
+                           dryrun=False, output_root=tmp_path)
+    assert res.rolled_back is True and res.tables[0].slices == 4
+    assert [tr.table for tr in res.failed_tables] == ["public.customer"]
+    assert res.updated_by_table == {}
+    assert list(tmp_path.iterdir()) == []
 
 
 def test_missing_table_fails_in_dryrun(catalog):
@@ -935,7 +1107,7 @@ def test_apply_with_hmac_strategy_no_key_leak(catalog, spark, tmp_path):
         write_json_report(tmp_path / "rep.json", report)
         (entry,) = report["result"]["tables"]
         assert set(entry) == {"table", "rows", "skipped", "error", "downgrades",
-                              "files", "bytes", "wall_s"}
+                              "files", "bytes", "wall_s", "slices"}
         # files/bytes describe the staged output the rows were counted from
         parts = list((tmp_path / "out" / "customer.parquet").glob("*.parquet"))
         assert entry["rows"] == 150 and entry["files"] == len(parts)

@@ -102,6 +102,13 @@ def test_parse_delete(spark):
     assert (d2.table, d2.predicate) == ("cust", None)
     with pytest.raises(SqlDmlError):
         _parse_delete("DELETE FROM cust c WHERE c.k = 3")
+    # the kept record is frozen: every shape a walk reads is read first
+    from database_anonymiser_spark.sql_dml import _prune
+
+    pred = "lower(v) IN ('a', 'b') AND v LIKE 'x%' AND TRUE"
+    d3 = _parse_delete(f"DELETE FROM cust WHERE {pred}")
+    assert d3.predicate == pred and d3.where.j is None
+    assert _prune(d3.where.conjuncts, {}) == {"v": ("x", "y")}
 
 
 def test_parse_merge_full_grammar(spark):
@@ -262,6 +269,56 @@ def test_cli_parses_a_utility_statement_once(spark, dml_env, monkeypatch):
     assert rc == 0
     assert parsed == [stmt]
     assert "z" in VersionedTable(spark, root).snapshot().columns
+
+
+@pytest.mark.parametrize("stmt", [
+    "UPDATE cust SET v = 'x' WHERE k = 1",
+    "DELETE FROM cust WHERE k = 4",
+    "INSERT INTO cust VALUES (7, 'seven')",
+    "MERGE INTO cust AS c USING src AS u ON c.k = u.k "
+    "WHEN MATCHED THEN UPDATE SET v = u.v WHEN NOT MATCHED THEN INSERT *",
+])
+def test_cli_parses_a_dml_statement_once(spark, dml_env, monkeypatch, stmt):
+    """One Spark parse per DML statement: the rollback bookkeeping's
+    target and the execution read the same memoized record."""
+    import database_anonymiser_spark.sql_dml as D
+
+    data_dir, root = dml_env
+    parsed = []
+    real = D._parse
+
+    def counted(text, *args, **kwargs):
+        parsed.append(text)
+        return real(text, *args, **kwargs)
+
+    monkeypatch.setattr(D, "_parse", counted)
+    D._parse_dml.cache_clear()  # no record left by an earlier test
+    before = VersionedTable(spark, root).latest_version()
+    rc = _run([
+        "--sql", stmt, "--sqlRollbackOnError",
+        "--data", str(data_dir), "--versionedTable", f"cust={root}",
+    ])
+    assert rc == 0
+    assert parsed == [stmt]
+    assert VersionedTable(spark, root).latest_version() == before + 1
+
+
+def test_memoized_merge_record_is_not_edited(spark, dml_env):
+    """A MERGE with a residual ON rewrites its clauses for execution; the
+    memoized record keeps the parsed ones, so the same text runs the
+    same way twice."""
+    import database_anonymiser_spark.sql_dml as D
+
+    data_dir, root = dml_env
+    stmt = ("MERGE INTO cust AS c USING src AS u ON c.k = u.k AND u.v <> 'x' "
+            "WHEN MATCHED THEN UPDATE SET v = u.v")
+    parsed = D._parse_merge(stmt)
+    clauses = list(parsed.matched)
+    for _ in range(2):
+        assert _run(["--sql", stmt, "--data", str(data_dir),
+                     "--versionedTable", f"cust={root}"]) == 0
+    assert D._parse_merge(stmt) is parsed and parsed.matched == clauses
+    assert parsed.on.j is None  # frozen: no JVM handle is kept
 
 
 def test_e2e_plain_describe_falls_through_to_spark_sql(dml_env):
