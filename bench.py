@@ -509,12 +509,6 @@ def main():
                 n_probes=93,
             )
         ),
-        # the pre-r13 blind-flip default, kept as the comparison row
-        "lsh_flip3": _recall(
-            lambda q: lsh_bucket_topk(
-                emb, "vec_id", "embedding", q, K, n_planes=8, dim=64
-            )
-        ),
     }
     # recall-vs-knob curves (round-7 verdict #2): the sweep that justifies
     # each default, re-recorded every round so a recall regression names
@@ -535,7 +529,7 @@ def main():
             for f in (1, 2, 3)
         },
         # round 13: query-directed probing (margin-ranked masks) — the
-        # sweep that justifies the n_probes=64 default above
+        # sweep that justifies the n_probes=93 default above
         "lsh_n_probes": {
             str(p): _recall(
                 lambda q: lsh_bucket_topk(

@@ -277,7 +277,7 @@ class VersionedAnnIndex:
         index = (
             self.table._read_paths(
                 [e["path"] for e in entries],
-                align_to=self.table.snapshot(version),
+                schema=self.table.snapshot(version).schema,
             )
             if entries
             else self.table.snapshot(version).limit(0)
@@ -329,7 +329,7 @@ class VersionedAnnIndex:
             return self.table.snapshot(version).limit(0).select(
                 F.col(id_col), F.lit(0.0).alias("cosine")
             )
-        # no align_to: the rebuild commit logs the index schema, and
+        # no schema: the rebuild commit logs the index schema, and
         # constructing a snapshot frame just for alignment would count
         # (and at scale, list) the whole live set
         index = self.table._read_paths([e["path"] for e in entries])

@@ -787,15 +787,16 @@ def lsh_bucket_topk(
     k: int = 10,
     n_planes: int = 8,
     dim: int = 64,
-    n_flip: int = 3,
-    n_probes: int | None = None,
+    n_flip: int | None = None,
+    n_probes: int = 93,
 ) -> DataFrame:
     """Approximate top-k: random-hyperplane signature bucketing + exact
     re-rank inside the query's bucket. Recall measured in tests.
 
-    ``n_flip`` enables MULTI-PROBE search (Lv et al., VLDB'07): besides the
-    query's own bucket, probe every bucket whose signature differs in at
-    most ``n_flip`` sign bits — a true neighbour that straddles one
+    ``n_flip``, when passed, selects blind MULTI-PROBE search (Lv et
+    al., VLDB'07): besides the query's own bucket, probe every bucket
+    whose signature differs in at most ``n_flip`` sign bits — a true
+    neighbour that straddles one
     hyperplane lands one Hamming step away, so probing ≤1-flip buckets
     buys most of the lost recall for (1 + n_planes) bucket lookups instead
     of maintaining more hash tables. The probe set is a tiny broadcast
@@ -813,7 +814,8 @@ def lsh_bucket_topk(
     at the SAME 93-bucket budget the old n_flip=3 default spends,
     recall@10 rises 0.733 → 0.833, and 0.9 is reached at 144 probes
     (56% of buckets) where the flip rule needs essentially all of them.
-    The production default is therefore ``n_probes=93``. TIER NOTE:
+    The default is therefore ``n_probes=93`` (fewer than 7 planes have
+    fewer buckets: pass ``n_probes`` or ``n_flip``). TIER NOTE:
     this fixture (uniform random 64-dim) is hyperplane LSH's
     concentration-of-measure worst case — recall is largely a function
     of the candidate fraction examined, and no sub-50%-of-buckets
@@ -825,11 +827,11 @@ def lsh_bucket_topk(
     tests/test_suite_ops.py. The ranking is computed IN-PLAN on the one
     query row (exact-decimal margins, deterministic mask tie-break —
     engine-reproducible like every other decision in this module); the
-    table side is untouched. ``n_flip`` is ignored when ``n_probes`` is
-    set. Requires ``n_planes <= 12`` (the mask enumeration is 2^p on
+    table side is untouched. Passing ``n_flip`` selects the flip rule
+    instead. Requires ``n_planes <= 12`` (the mask enumeration is 2^p on
     one row).
 
-    Default ``n_flip=3`` is measured on the 2k-vector bench fixture
+    The flip rule, measured on the 2k-vector bench fixture
     (round 8): at 8 planes, recall@10 = 0.067 / 0.267 / 0.733 for 1 / 2 /
     3 flips (93 of 256 buckets probed at 3); at 6 planes, 3 flips reach
     0.867. Single-probe recall on random data is near-zero because true
@@ -855,7 +857,7 @@ def lsh_bucket_topk(
         *[f"sb_{i}" for i in range(n_planes)]
     )
     qrow = with_sig.where(F.col(id_col) == query_id)
-    if n_probes is not None:
+    if n_flip is None:
         if not 1 <= n_probes <= 2**n_planes:
             raise ValueError(f"n_probes must be in [1, {2**n_planes}]")
         if n_planes > 12:

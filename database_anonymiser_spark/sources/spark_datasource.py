@@ -73,12 +73,9 @@ from pyspark.sql.types import StructType
 
 from database_anonymiser_spark.sources.versioned import (
     ROW_PRESERVING_OPS,
-    _bloom_hashes,
-    _entry_matches_nullness,
-    _entry_matches_points,
-    _entry_overlaps_range,
     _key_first,
     _key_tuple,
+    _SkipSpec,
     _list_versions,
     _log_path,
     _replay,
@@ -244,8 +241,8 @@ class _SnapshotReader(DataSourceReader):
         #: versionAsOf / timestampAsOf pin (None = latest) — Delta's
         #: batch time-travel options, resolved by the DataSource
         self.version = version
-        #: (logical col, kind, payload) triples recorded by pushFilters —
-        #: kind 'range' carries (lo, hi), kind 'points' a value list.
+        #: (logical col, kind, payload) terms recorded by pushFilters —
+        #: the versioned ``_SkipSpec`` vocabulary, plain picklable tuples.
         #: Always empty on this base class (no pushFilters): Spark's
         #: worker HARD-FAILS any source defining pushFilters while
         #: ``spark.sql.python.filterPushdown.enabled`` is false (its
@@ -256,10 +253,8 @@ class _SnapshotReader(DataSourceReader):
         live, schema, colmap, key_col = _snapshot_state(self.root, self.version)
         phys, names = _arrow_physical(schema, colmap)
         m = dict((colmap or {}).get("map") or {})
-        # composite keys: the entry key slots describe the LEADING column
-        k0 = _key_first(key_col)
-        key_pcol = m.get(k0, k0)
         root = Path(self.root)
+        skip = _SkipSpec(self.pushed, root, key_col, colmap)
         # the surviving files' scans also evaluate the predicates
         # (physical-named) — row-group pruning + pre-hand-off filtering
         scanf = [
@@ -267,33 +262,7 @@ class _SnapshotReader(DataSourceReader):
         ] or None
         out = []
         for e in live.values():
-            skip = False
-            for c, kind, payload in self.pushed:
-                pcol = m.get(c, c)
-                if kind == "range":
-                    lo, hi = payload
-                    if not _entry_overlaps_range(e, pcol, key_pcol, lo, hi):
-                        skip = True
-                        break
-                elif kind == "nullness":
-                    if not _entry_matches_nullness(e, pcol, payload):
-                        skip = True
-                        break
-                else:
-                    try:
-                        vals = sorted(payload)
-                    except TypeError:
-                        continue  # mixed-type IN list: cannot prune
-                    hpairs = (
-                        [_bloom_hashes(v) for v in vals]
-                        if (e.get("bloom") or {}).get(pcol) else None
-                    )
-                    if not _entry_matches_points(
-                        root, e, pcol, key_pcol, vals, hpairs
-                    ):
-                        skip = True
-                        break
-            if skip:
+            if not skip.admits(e):
                 continue
             path = e["path"]
             if not os.path.isabs(path):
@@ -319,10 +288,10 @@ class _PushdownSnapshotReader(_SnapshotReader):
     worker refuses a pushFilters-defining source without it, which is
     why pushdown is an opt-in subclass rather than the default).
 
-    Equality / range / IN filters on top-level columns become stats +
-    bloom file pruning in ``partitions()`` — the same arithmetic as the
-    native ``files_matching`` / ``files_matching_any`` read path, via
-    the shared ``_entry_*`` matchers. ALL filters are returned to Spark
+    Equality / range / IN / IS [NOT] NULL filters on top-level columns
+    become spec terms, and ``partitions()`` keeps the files the
+    versioned ``_SkipSpec`` admits — the one file test the native
+    ``files_matching`` read path and every write's scoping use. ALL filters are returned to Spark
     for row-level re-evaluation: the pushdown only shrinks the FILE
     set (stats/bloom can prove a file empty for a predicate, never
     evaluate it row-exactly), exactly like parquet row-group stats."""
@@ -1312,7 +1281,10 @@ class _VersionedStreamWriter(_VersionedWriterBase, DataSourceStreamArrowWriter):
         self._abort(messages)
 
 
-def register_sql_views(spark, tables: dict) -> None:
+def register_sql_views(
+    spark, tables: dict, version: int | None = None,
+    timestamp: str | None = None, pushdown: bool = False,
+) -> None:
     """The SQL face: register each versioned table as a temp view served
     by the DataSource, so plain ``spark.sql`` (joins, CTEs, windows —
     the whole surface) runs over it::
@@ -1320,20 +1292,33 @@ def register_sql_views(spark, tables: dict) -> None:
         register_sql_views(spark, {"docs": "/data/docs", "dims": "/data/dims"})
         spark.sql("SELECT ... FROM docs JOIN dims USING (k)")
 
-    Views are PINNED SNAPSHOTS of each table's head at registration —
-    repeatable reads for a whole SQL session by construction; re-call to
-    advance to the current head. (Why not ``CREATE TABLE ... USING
-    versioned``: Spark 4.1 passes a catalog table's scan an EMPTY
-    options dict, so a Python DataSource behind a catalog table can
-    never find its path — measured here, the reason this face is
-    view-based.)"""
+    Views are PINNED SNAPSHOTS of each table's head at registration (or
+    of ``version`` / ``timestamp``, Delta's AS OF) — repeatable reads
+    for a whole SQL session by construction; re-call to advance to the
+    current head. (Why not ``CREATE TABLE ... USING versioned``: Spark
+    4.1 passes a catalog table's scan an EMPTY options dict, so a Python
+    DataSource behind a catalog table can never find its path —
+    measured here, the reason this face is view-based.)
+
+    ``pushdown=True`` serves the views through the FILE-SKIPPING reader
+    (equality/range/IN/nullness filters prune files by stats + bloom
+    before Spark re-evaluates the rows) and sets
+    ``spark.sql.python.filterPushdown.enabled``, which that reader
+    needs — the face the CLI's SQL mode registers. Spark 4.1 keeps the
+    planned partitions on the view's relation, so a query that pushes
+    no filter reuses the file set of the view's previous query."""
+    if pushdown:
+        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(VersionedDataSource)
     for name, root in tables.items():
-        (
-            spark.read.format("versioned")
-            .option("path", str(root)).load()
-            .createOrReplaceTempView(name)
-        )
+        reader = spark.read.format("versioned").option("path", str(root))
+        if pushdown:
+            reader = reader.option("pushdown", "true")
+        if version is not None:
+            reader = reader.option("versionAsOf", str(version))
+        if timestamp is not None:
+            reader = reader.option("timestampAsOf", timestamp)
+        reader.load().createOrReplaceTempView(name)
 
 
 def _writer_state(root: str, write_schema):

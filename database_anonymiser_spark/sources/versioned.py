@@ -831,19 +831,6 @@ def _bloom_build(values, fpp: float = _BLOOM_FPP) -> bytes:
     return json.dumps({"m": m, "k": k, "n": len(vals)}).encode() + b"\n" + bytes(bits)
 
 
-def _bloom_maybe_contains(blob: bytes, value) -> bool:
-    nl = blob.index(b"\n")
-    hdr = json.loads(blob[:nl])
-    m, k = hdr["m"], hdr["k"]
-    bits = blob[nl + 1:]
-    h1, h2 = _bloom_hashes(value)
-    for i in range(k):
-        b = (h1 + i * h2) % m
-        if not (bits[b >> 3] >> (b & 7)) & 1:
-            return False
-    return True
-
-
 def _bloom_load(root: Path, ref: str) -> bytes | None:
     """Sidecar loader with a small LRU (sidecars are immutable — written
     tmp+rename, never modified). ``ref`` is root-relative or absolute
@@ -921,27 +908,148 @@ def _entry_matches_nullness(e: dict, pcol: str, form: str) -> bool:
 
 
 def _entry_matches_points(
-    root: Path, e: dict, pcol: str, key_pcol: str, vals_sorted: list,
-    hpairs: list | None,
+    e: dict, pcol: str, key_pcol: str, vals_sorted: list
 ) -> bool:
-    """File-level point-lookup test: can this entry hold ANY of the
-    sorted probe values? Range stats first (one bisect), then the
-    bloom sidecar when the entry carries one for ``pcol`` (``hpairs``
-    = precomputed ``_bloom_hashes`` pairs, shared across files). False
-    positives only — a file is dropped only when provably empty."""
+    """File-level point-lookup test on range stats: can this entry hold
+    ANY of the sorted probe values? One bisect; false positives only."""
     clo, chi = _entry_bounds(e, pcol, key_pcol)
-    if clo is not None:
-        try:
-            i = bisect.bisect_left(vals_sorted, clo)
-            if not (i < len(vals_sorted) and vals_sorted[i] <= chi):
-                return False
-        except TypeError:
-            pass
-    ref = (e.get("bloom") or {}).get(pcol)
-    if ref is not None and hpairs is not None:
-        if not _bloom_ref_matches_any(root, ref, hpairs):
+    if clo is None:
+        return True
+    try:
+        i = bisect.bisect_left(vals_sorted, clo)
+        return i < len(vals_sorted) and vals_sorted[i] <= chi
+    except TypeError:
+        return True
+
+
+def _skip_terms(prune: dict | None) -> list[tuple]:
+    """The ``prune`` vocabulary as ``(col, kind, payload)`` terms:
+    ``(lo, hi)`` → ``"range"`` (None = unbounded), ``"isnull"`` /
+    ``"notnull"`` → ``"nullness"``, a set of values → ``"points"``, and
+    a set of value tuples under a column-TUPLE key → ``"tuple"`` (the
+    composite-key point lookup). A set, never a list: a 2-element list
+    already reads as a range."""
+    terms = []
+    for col, b in (prune or {}).items():
+        if isinstance(b, (set, frozenset)):
+            terms.append((col, "tuple" if isinstance(col, tuple) else "points", b))
+        elif isinstance(b, str):
+            if b not in _NULLNESS:
+                raise ValueError(
+                    f"predicate for {col!r} must be (lo, hi), a set or one "
+                    f"of {_NULLNESS}, got {b!r}"
+                )
+            terms.append((col, "nullness", b))
+        else:
+            lo, hi = b
+            terms.append((col, "range", (lo, hi)))
+    return terms
+
+
+class _SkipSpec:
+    """THE file-skipping rule (Delta's data skipping): may a live entry
+    hold a row satisfying every ``(logical col, kind, payload)`` term
+    (:func:`_skip_terms`, or the pushdown reader's recorded filters)?
+    Physical names, sorted probe values and bloom hashes are resolved
+    once per spec, not per file.
+
+    :meth:`admits` is pure metadata arithmetic — no SparkSession, so the
+    DataSource planner runs it too — and one-sided: missing stats,
+    absent sidecars and point values that cannot be ordered keep the
+    file; a bloom prunes wherever a sidecar exists (per column, and per
+    column TUPLE for composite points). A point set holding no non-NULL
+    value admits nothing (``col IN ()`` is never TRUE).
+    :meth:`row_predicate` is the matching exact row test."""
+
+    def __init__(self, terms, root, key_col, colmap: dict | None = None):
+        m = (colmap or {}).get("map") or {}
+        k0 = _key_first(key_col)
+        self.root = Path(root)
+        self.terms = list(terms)
+        self.key_pcol = m.get(k0, k0)
+        self.empty = False
+        #: (kind, physical col | bloom sidecar key, payload): the cheap
+        #: stats tests first, bloom sidecar reads last
+        self.tests: list = []
+        blooms = []
+        for col, kind, payload in self.terms:
+            if kind in ("range", "nullness"):
+                self.tests.append((kind, m.get(col, col), payload))
+                continue
+            cols = list(col) if kind == "tuple" else [col]
+            rows = {tuple(t) if kind == "tuple" else (t,) for t in payload}
+            rows = [r for r in rows if all(v is not None for v in r)]
+            if not rows:
+                self.empty = True
+                continue
+            try:
+                per_col = [sorted({r[i] for r in rows}) for i in range(len(cols))]
+            except TypeError:
+                continue  # values that cannot be ordered: no pruning
+            pcols = [m.get(c, c) for c in cols]
+            self.tests += [("points", pc, vs) for pc, vs in zip(pcols, per_col)]
+            blooms += zip(pcols, per_col)
+            if len(cols) > 1:
+                blooms.append((",".join(pcols), [_tuple_render(r) for r in rows]))
+        self.tests += [("bloom", key, vs) for key, vs in blooms]
+        self._hpairs: dict = {}
+
+    def admits(self, e: dict) -> bool:
+        if self.empty:
             return False
-    return True
+        for i, (kind, pc, p) in enumerate(self.tests):
+            if kind == "range":
+                ok = _entry_overlaps_range(e, pc, self.key_pcol, *p)
+            elif kind == "nullness":
+                ok = _entry_matches_nullness(e, pc, p)
+            elif kind == "points":
+                ok = _entry_matches_points(e, pc, self.key_pcol, p)
+            else:
+                ref = (e.get("bloom") or {}).get(pc)
+                if ref is None:
+                    continue
+                if i not in self._hpairs:
+                    self._hpairs[i] = [_bloom_hashes(v) for v in p]
+                ok = _bloom_ref_matches_any(self.root, ref, self._hpairs[i])
+            if not ok:
+                return False
+        return True
+
+    def row_predicate(self, pred: "F.Column | None" = None) -> F.Column:
+        """``pred`` AND every term's exact row test — conjoined into the
+        operation's row filter, so file skipping and row filtering agree
+        by construction: a too-narrow hint narrows the operation
+        consistently instead of splitting it per file."""
+        conj = [] if pred is None else [pred]
+        for col, kind, payload in self.terms:
+            if kind == "nullness":
+                c = F.col(col)
+                conj.append(c.isNull() if payload == "isnull" else c.isNotNull())
+            elif kind == "range":
+                lo, hi = payload
+                # None = unbounded: a between(None, x) would NULL the
+                # conjunction into a silent no-op
+                if lo is not None:
+                    conj.append(F.col(col) >= F.lit(lo))
+                if hi is not None:
+                    conj.append(F.col(col) <= F.lit(hi))
+            elif kind == "points":
+                conj.append(F.col(col).isin([v for v in payload if v is not None]))
+            else:
+                anyof = F.lit(False)
+                for t in payload:
+                    if all(v is not None for v in t):
+                        allof = F.lit(True)
+                        for c, v in zip(col, t):
+                            allof = allof & (F.col(c) == F.lit(v))
+                        anyof = anyof | allof
+                conj.append(anyof)
+        if not conj:
+            return F.lit(True)
+        out = conj[0]
+        for c in conj[1:]:
+            out = out & c
+        return out
 
 
 def _bloom_sidecars_for(
@@ -1193,31 +1301,6 @@ def _norm_clauses(clauses, family: str) -> list[tuple]:
     if any(cond is None for _k, cond, _p in out[:-1]):
         raise ValueError(f"only the LAST {family} clause may omit its condition")
     return out
-
-
-def _and_prune(pred: F.Column, prune: dict | None) -> F.Column:
-    """AND the caller's prune ranges into the row predicate so file-level
-    skipping and row-level filtering can never disagree (see the
-    update_where docstring's prune contract). Nullness prune forms
-    (``"isnull"`` / ``"notnull"``, round 12) conjoin the matching
-    IS (NOT) NULL row test under the same contract."""
-    if prune:
-        for col, b in prune.items():
-            if isinstance(b, str):
-                pred = pred & (
-                    F.col(col).isNull() if b == "isnull"
-                    else F.col(col).isNotNull()
-                )
-                continue
-            lo, hi = b
-            # None = unbounded, matching files_matching's contract — a
-            # between(None, x) would NULL the whole conjunction and turn
-            # the operation into a silent no-op (round-11 fix)
-            if lo is not None:
-                pred = pred & (F.col(col) >= F.lit(lo))
-            if hi is not None:
-                pred = pred & (F.col(col) <= F.lit(hi))
-    return pred
 
 
 #: marker column for the membership semi-join (round 14); reserved name,
@@ -1498,37 +1581,15 @@ class VersionedTable:
                     )
                     return self.spark.createDataFrame([], schema)
             raise FileNotFoundError(f"no data ever committed at {self.root}")
-        dvs = self._dv_map(entries)
-        if dvs and logged is not None:
-            # deletion vectors present: route through the DV-aware reader
-            # (anti-joins dead positions); the common no-DV case below
-            # stays on the zero-overhead direct read
+        if logged is not None:
             return self._read_paths(
-                [e["path"] for e in entries],
-                align_to=self.spark.createDataFrame([], logged),
-                dv_map=dvs,
+                [e["path"] for e in entries], schema=logged,
+                dv_map=self._dv_map(entries),
             )
         DATA_FILES_READ += len(entries)
-        paths = [str(self.root / e["path"]) for e in entries]
-        if logged is not None:
-            m = self._colmap.get("map") or {}
-            if m:
-                # column mapping: the bytes carry PHYSICAL names — read
-                # against the physical rendering of the logical schema,
-                # then alias back (Delta's column-mapping read, same
-                # reason renames never rewrite files)
-                from pyspark.sql.types import StructField
-
-                phys = StructType(
-                    [StructField(m.get(f.name, f.name), f.dataType, f.nullable)
-                     for f in logged.fields]
-                )
-                return self.spark.read.schema(phys).parquet(*paths).select(
-                    *[F.col(m.get(f.name, f.name)).alias(f.name)
-                      for f in logged.fields]
-                )
-            return self.spark.read.schema(logged).parquet(*paths)
-        return self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        return self.spark.read.option("mergeSchema", "true").parquet(
+            *[str(self.root / e["path"]) for e in entries]
+        )
 
     @staticmethod
     def _file_uri(abs_path: str) -> str:
@@ -1560,15 +1621,17 @@ class VersionedTable:
     def _read_paths(
         self,
         paths,
-        align_to=None,
+        schema=None,
         dv_map: dict | None = None,
         with_position: bool = False,
     ) -> DataFrame:
-        """Read specific live files against an explicit schema (the
-        ``align_to`` frame's if given, else the log-recorded table
-        schema), NULL-filling columns that pre-evolution files lack — no
-        footer union. Legacy tables without a logged schema pay one
-        mergeSchema read.
+        """Read specific live files against an explicit ``schema`` (default
+        the log-recorded table schema), NULL-filling columns that
+        pre-evolution files lack — no footer union; under column mapping
+        the bytes carry PHYSICAL names, read against the physical
+        rendering and aliased back (Delta's column-mapping read, the
+        reason renames never rewrite files). Legacy tables without a
+        logged schema pay one mergeSchema read.
 
         ``dv_map`` ({path → deletion-vector sidecar ref}, round 9):
         files carrying a DV are read WITH ``_metadata.file_path`` /
@@ -1580,11 +1643,8 @@ class VersionedTable:
         global DATA_FILES_READ
         paths = list(paths)
         DATA_FILES_READ += len(paths)
-        schema = (
-            align_to.schema
-            if align_to is not None
-            else (self._log_schema() or self.snapshot().schema)
-        )
+        if schema is None:
+            schema = self._log_schema() or self.snapshot().schema
         m = self._colmap.get("map") or {}
         from pyspark.sql.types import StructField, StructType
 
@@ -1601,7 +1661,8 @@ class VersionedTable:
             if m
             else [_col(f.name) for f in schema.fields]
         )
-        dv_map = {p: r for p, r in (dv_map or {}).items() if p in set(paths)}
+        wanted = set(paths)
+        dv_map = {p: r for p, r in (dv_map or {}).items() if p in wanted}
         meta_cols = [
             F.col("_metadata.file_path").alias("_dv_fp"),
             F.col("_metadata.row_index").alias("_dv_ri"),
@@ -1609,10 +1670,14 @@ class VersionedTable:
         plain = [p for p in paths if p not in dv_map]
         parts = []
         if plain:
+            d = self.spark.read.schema(phys).parquet(
+                *[str(self.root / p) for p in plain]
+            )
+            # without a mapping or positions the scan already has the
+            # output columns, in order
             parts.append(
-                self.spark.read.schema(phys).parquet(
-                    *[str(self.root / p) for p in plain]
-                ).select(*(meta_cols if with_position else []), *out_cols)
+                d.select(*(meta_cols if with_position else []), *out_cols)
+                if m or with_position else d
             )
         if dv_map:
             import pandas as pd
@@ -1629,90 +1694,53 @@ class VersionedTable:
             return parts[0]
         return parts[0].unionByName(parts[1])
 
-    def files_matching(
-        self, predicates: dict[str, tuple], version: int | None = None
-    ) -> list[dict]:
-        """Live files whose recorded stats can satisfy ``{col: (lo, hi)}``
-        range predicates — driver-side metadata arithmetic, no data scan.
-        A file without stats for a predicate column is kept (must-scan);
-        the key column's commit-level [key_min, key_max] serves as its
-        stats. This is Delta's data-skipping read path over the same
-        per-file min/max the z-order OPTIMIZE records. ``version`` pins
-        the snapshot (default latest) — incremental consumers (IVM's
-        extremum recompute) pass the version their cursor is advancing
-        to, so a concurrent writer landing mid-refresh cannot skew the
-        read past the recorded cursor (round-7 advice).
+    def _skip(self, prune: dict | None = None, terms=()) -> _SkipSpec:
+        """The file-skipping spec for ``prune`` (plus extra ``terms``)
+        under the key/column-mapping state the last ``_live_entries``
+        call loaded."""
+        return _SkipSpec(
+            [*_skip_terms(prune), *terms], self.root, self._key_col, self._colmap
+        )
 
-        A predicate value may also be the string ``"isnull"`` /
-        ``"notnull"`` (round 12 — Delta prunes the same forms from its
-        per-add nullCount): files whose recorded null_count proves the
-        nullness test empty are skipped — e.g. a consent-backfill
-        ``read_where({"consent": "isnull"})`` touches only files that
-        actually hold NULLs."""
+    def _matching(self, prune: dict | None, version: int | None):
+        """(live entries the ``prune`` spec admits, the spec)."""
         entries = self._live_entries(version)
-        # column mapping: stats/bloom keys are PHYSICAL (frozen at the
-        # column's birth) — translate each queried logical name once
-        pred = {self._phys(c): b for c, b in predicates.items()}
-        key_pcol = self._phys(_key_first(self._key_col))
+        skip = self._skip(prune)
+        return [e for e in entries if skip.admits(e)], skip
 
-        def _match(e, pcol, b):
-            if isinstance(b, str):
-                if b not in _NULLNESS:
-                    raise ValueError(
-                        f"predicate for {pcol!r} must be (lo, hi) or one "
-                        f"of {_NULLNESS}, got {b!r}"
-                    )
-                return _entry_matches_nullness(e, pcol, b)
-            return _entry_overlaps_range(e, pcol, key_pcol, *b)
-
-        return [
-            e for e in entries
-            if all(_match(e, pcol, b) for pcol, b in pred.items())
-        ]
+    def files_matching(
+        self, predicates: dict, version: int | None = None
+    ) -> list[dict]:
+        """Live files whose recorded stats (and bloom sidecars) may hold a
+        row satisfying every ``predicates`` term — ``{col: (lo, hi) |
+        "isnull" | "notnull" | set_of_values}``, or a set of value tuples
+        under a column-tuple key; :class:`_SkipSpec` is the rule.
+        Driver-side metadata arithmetic, no data scan. This is Delta's
+        data-skipping read path over the same per-file min/max the
+        z-order OPTIMIZE records. ``version`` pins the snapshot (default
+        latest) — incremental consumers (IVM's extremum recompute) pass
+        the version their cursor is advancing to, so a concurrent writer
+        landing mid-refresh cannot skew the read past the recorded
+        cursor (round-7 advice)."""
+        return self._matching(predicates, version)[0]
 
     def files_matching_any(
         self, col: str, values: list, version: int | None = None
     ) -> list[dict]:
-        """Live files whose recorded [min, max] stats for ``col`` contain
-        ANY of ``values`` — the POINT-LOOKUP face of
-        :meth:`files_matching` (which serves range predicates). Driver-side
-        metadata arithmetic: one bisect of the sorted value list per file,
-        O(files × log |values|), no data scan. A file without stats for
-        ``col`` is kept (must-scan), matching the range path's contract.
-        NULL probe values are dropped (min/max stats never witness NULLs;
-        a NULL point-lookup matches nothing).
+        """Live files that may hold ANY of ``values`` in ``col`` — the
+        POINT-LOOKUP face of :meth:`files_matching` (``{col:
+        set(values)}``): one bisect of the sorted values per file, then
+        the column's bloom sidecar where the file carries one (declared
+        via ``analyze(bloom_cols=...)``, round 9 — the access path for a
+        column the layout is NOT clustered by, where [min, max] prunes
+        nothing). NULL values never match.
 
         This is what serves bucket/key point probes at scale — e.g. the
         streaming near-dedup sink probing its LSH band store: after a
         Z-ORDER compaction on the probed column each value maps to at
         most one file, so a probe of v values reads ≤ v files however
-        large the store is.
-
-        Files carrying a BLOOM sidecar for ``col`` (declared via
-        ``analyze(bloom_cols=...)`` — round 9) are additionally pruned by
-        bloom membership, AFTER the range test: the second access path
-        for point lookups on a column the layout is NOT clustered by,
-        where every file's [min, max] spans the whole domain and range
-        stats prune nothing. One small sidecar read per file (LRU-cached,
-        immutable), never a data scan; false positives only — a bloom
-        can keep a file, never wrongly drop one."""
-        vals = sorted(v for v in values if v is not None)
-        if not vals:
-            return []
-        entries = self._live_entries(version)  # also refreshes _key_col/_colmap
-        pcol = self._phys(col)  # stats/bloom keys are physical
-        key_pcol = self._phys(_key_first(self._key_col))
-        # probe hashes computed once, shared across files — and only
-        # when some entry actually carries a bloom sidecar for the column
-        hpairs = (
-            [_bloom_hashes(v) for v in vals]
-            if any((e.get("bloom") or {}).get(pcol) for e in entries)
-            else None
-        )
-        return [
-            e for e in entries
-            if _entry_matches_points(self.root, e, pcol, key_pcol, vals, hpairs)
-        ]
+        large the store is."""
+        return self.files_matching({col: set(values)}, version)
 
     def read_matching_any(
         self, col: str, values: list, version: int | None = None
@@ -1757,9 +1785,10 @@ class VersionedTable:
     ) -> DataFrame:
         """Point-lookup on a column TUPLE (round 11 — the serving face of
         composite keys: a CDC consumer fetching specific (tenant, entity)
-        rows): file pruning is the per-column CONJUNCTION of
-        :meth:`files_matching_any` tests (range stats + bloom sidecars,
-        false positives only), then the survivors' rows filter exactly —
+        rows): files are pruned by the ``{tuple(cols): set(tuples)}``
+        spec — the per-column point tests, then the tuple bloom where a
+        file carries one (it witnesses CO-OCCURRENCE, which per-column
+        tests cannot) — and the survivors' rows filter exactly:
         ≤ ``ISIN_LITERAL_CAP`` tuples as an OR-of-conjunctions literal
         (parquet row-group pushdown), above it a BROADCAST left-semi join
         on the tuple (same measured trade as :meth:`read_matching_any`).
@@ -1780,53 +1809,14 @@ class VersionedTable:
             )
         if not tups:
             return self._empty_frame(version)
-        entries = self._live_entries(version)
-        key_pcol = self._phys(_key_first(self._key_col))
-        keep = entries
-        for i, c in enumerate(cols):
-            pcol = self._phys(c)
-            vals = sorted({t[i] for t in tups})
-            hpairs = (
-                [_bloom_hashes(v) for v in vals]
-                if any((e.get("bloom") or {}).get(pcol) for e in keep)
-                else None
-            )
-            keep = [
-                e for e in keep
-                if _entry_matches_points(
-                    self.root, e, pcol, key_pcol, vals, hpairs
-                )
-            ]
-        # tuple bloom (round 12): the per-column conjunction admits files
-        # holding the components in DIFFERENT rows; a concatenated-tuple
-        # sidecar (analyze(bloom_cols=[("a","b")])) witnesses
-        # co-occurrence and prunes them — consulted AFTER the cheap
-        # per-column tests, on the already-shrunk survivor set
-        tkey = ",".join(self._phys(c) for c in cols)
-        if len(cols) > 1 and any(
-            (e.get("bloom") or {}).get(tkey) for e in keep
-        ):
-            thp = [_bloom_hashes(_tuple_render(t)) for t in tups]
-            keep = [
-                e for e in keep
-                if (e.get("bloom") or {}).get(tkey) is None
-                or _bloom_ref_matches_any(
-                    self.root, e["bloom"][tkey], thp
-                )
-            ]
+        keep, skip = self._matching({tuple(cols): set(tups)}, version)
         if not keep:
             return self._empty_frame(version)
         df = self._read_paths(
             [e["path"] for e in keep], dv_map=self._dv_map(keep)
         )
         if len(tups) <= ISIN_LITERAL_CAP:
-            pred = F.lit(False)
-            for t in tups:
-                conj = F.lit(True)
-                for c, v in zip(cols, t):
-                    conj = conj & (F.col(c) == F.lit(v))
-                pred = pred | conj
-            return df.where(pred)
+            return df.where(skip.row_predicate())
         import pandas as pd
 
         probe = self.spark.createDataFrame(
@@ -1835,28 +1825,20 @@ class VersionedTable:
         return df.join(F.broadcast(probe), cols, "left_semi")
 
     def read_where(
-        self, predicates: dict[str, tuple], version: int | None = None
+        self, predicates: dict, version: int | None = None
     ) -> DataFrame:
         """Snapshot read with file skipping: prune files via
-        :meth:`files_matching`, then apply the same range predicates as
-        real filters (row-group pushdown handles the residual within the
+        :meth:`files_matching`, then apply the same terms as real row
+        filters (row-group pushdown handles the residual within the
         surviving files). Empty survivor set → empty frame with the table
         schema. ``version`` pins the read (default latest)."""
-        entries = self.files_matching(predicates, version=version)
+        entries, skip = self._matching(predicates, version)
         if not entries:
             return self._empty_frame(version)
         df = self._read_paths(
             [e["path"] for e in entries], dv_map=self._dv_map(entries)
         )
-        for col, b in predicates.items():
-            if isinstance(b, str):  # "isnull" / "notnull", validated above
-                df = df.where(
-                    F.col(col).isNull() if b == "isnull"
-                    else F.col(col).isNotNull()
-                )
-            else:
-                df = df.where(F.col(col).between(*b))
-        return df
+        return df.where(skip.row_predicate()) if predicates else df
 
     # ----------------------------------------------------------- write
 
@@ -2937,98 +2919,36 @@ class VersionedTable:
 
         los = [stats[f"_lo{i}"] for i in range(len(key_cols))]
         his = [stats[f"_hi{i}"] for i in range(len(key_cols))]
-        lo = los[0]
-
-        # per-key-column sorted DISTINCT probe lists — for a single key
-        # this is exactly the old points list; for a composite key the
-        # per-file test is the CONJUNCTION of per-column bisects (false
-        # positives only, like bloom — a file survives when every key
-        # column's range holds at least one probe value)
-        points_cols: "list[list] | None" = None
-        if skip_by == "points" and lo is not None:
+        # a file is touched when it may hold a source key — the distinct
+        # key tuples under skip_by="points" (collected up to
+        # POINT_SKIP_CAP, beyond that range), else each key column's
+        # source bounds — or an in-scope by-source row. The same specs
+        # are the OCC test against a winner's added files.
+        points = None
+        if skip_by == "points" and los[0] is not None:
             if stats["n_distinct"] <= POINT_SKIP_CAP:
-                rows = (
-                    source.select(*key_cols)
-                    .where(all_nn)
-                    .distinct()
-                    .collect()
-                )
-                points_cols = [
-                    sorted({r[i] for r in rows})
-                    for i in range(len(key_cols))
-                ]
-            # else: fall back to range skipping (documented cap)
+                points = {
+                    tuple(r)
+                    for r in source.select(*key_cols).where(all_nn)
+                    .distinct().collect()
+                }
+        skips = []
+        if los[0] is not None:  # else no fully-keyed source row: no match
+            skips.append(self._skip(
+                {tuple(key_cols): points} if points is not None
+                else {c: (los[i], his[i]) for i, c in enumerate(key_cols)}
+            ))
+        # by-source clauses invert the question: a file may hold UNMATCHED
+        # rows regardless of source keys, so it is read unless its stats
+        # prove the scope empty (an unscoped full sync reads every file)
+        scope = self._skip(by_source_scope)
+        if bys_clauses:
+            skips.append(scope)
 
-        # trailing key columns read their recorded per-file bounds from
-        # the declared stats (PHYSICAL names, like every stats key)
-        trail_pcols = [self._phys(c) for c in key_cols[1:]]
-        # tuple bloom probes (round 12): when the table carries a
-        # concatenated-tuple sidecar for the key tuple, the collected
-        # distinct source tuples probe it AFTER the per-column
-        # conjunction — pruning correlated-key files the per-column
-        # test admits. Hashes computed once, only if some entry
-        # actually carries the sidecar.
-        tuple_hpairs = None
-        tkey = ",".join(self._phys(c) for c in key_cols)
-        if (
-            points_cols is not None
-            and len(key_cols) > 1
-            and any((e.get("bloom") or {}).get(tkey) for e in entries)
-        ):
-            tuple_hpairs = [
-                _bloom_hashes(_tuple_render(tuple(r[i] for i in range(len(key_cols)))))
-                for r in rows
-            ]
+        def touches(e: dict) -> bool:
+            return any(sk.admits(e) for sk in skips)
 
-        def may_match(e: dict) -> bool:
-            if lo is None:  # no fully-keyed source row: nothing matches
-                return False
-            bounds = [(e.get("key_min"), e.get("key_max"))]
-            for pc in trail_pcols:
-                s = (e.get("stats") or {}).get(pc) or (None, None)
-                bounds.append((s[0], s[1]))
-            for i, (clo, chi) in enumerate(bounds):
-                if clo is None or chi is None:
-                    continue  # no stats for this column: cannot prune by it
-                try:
-                    if chi < los[i] or clo > his[i]:
-                        return False
-                    if points_cols is not None:
-                        vs = points_cols[i]
-                        j = bisect.bisect_left(vs, clo)
-                        if not (j < len(vs) and vs[j] <= chi):
-                            return False
-                except TypeError:
-                    continue  # incomparable serialized stats: keep
-            if tuple_hpairs is not None:
-                ref = (e.get("bloom") or {}).get(tkey)
-                if ref is not None and not _bloom_ref_matches_any(
-                    self.root, ref, tuple_hpairs
-                ):
-                    return False
-            return True
-
-        # by-source clause inverts the skipping question for target rows:
-        # a file may hold UNMATCHED rows regardless of source keys, so it
-        # must be read unless its stats prove the scope empty for it
-        key_pcol = self._phys(k0)
-        scope_pred = (
-            {self._phys(c): b for c, b in by_source_scope.items()}
-            if by_source_scope is not None
-            else None
-        )
-
-        def in_scope(e: dict) -> bool:
-            if not bys_clauses:
-                return False
-            if scope_pred is None:
-                return True  # unscoped full sync: every file is a candidate
-            return all(
-                _entry_overlaps_range(e, pcol, key_pcol, slo, shi)
-                for pcol, (slo, shi) in scope_pred.items()
-            )
-
-        touched = [e for e in entries if may_match(e) or in_scope(e)]
+        touched = [e for e in entries if touches(e)]
 
         new_files: list[_FileEntry] = []
         # insert clauses still insert when NO target file intersects the
@@ -3078,13 +2998,7 @@ class VersionedTable:
                 # before the join (bare column refs stay unambiguous);
                 # file pruning dropped provably-out-of-scope files, this
                 # re-tests the survivors' rows exactly
-                scope_expr = F.lit(True)
-                for c, (slo, shi) in (by_source_scope or {}).items():
-                    if slo is not None:
-                        scope_expr = scope_expr & (F.col(c) >= F.lit(slo))
-                    if shi is not None:
-                        scope_expr = scope_expr & (F.col(c) <= F.lit(shi))
-                tgt = tgt.withColumn(bs, scope_expr)
+                tgt = tgt.withColumn(bs, scope.row_predicate())
             if VALIDATE_MERGE_TARGET_KEYS:
                 # opt-in invariant audit: the single-join MERGE emits one
                 # updated row PER duplicate target key; a table whose
@@ -3205,7 +3119,7 @@ class VersionedTable:
                 try:
                     self._check_constraints(
                         self._read_paths(
-                            [e.path for e in staged], align_to=rewritten
+                            [e.path for e in staged], schema=rewritten.schema
                         )
                     )
                 except ConstraintViolation:
@@ -3220,7 +3134,7 @@ class VersionedTable:
         # number below was already computed for the merge itself)
         metrics = {
             "source_rows": int(stats["n_all"]),
-            "skip_by": "points" if points_cols is not None else "range",
+            "skip_by": "points" if points is not None else "range",
             "files_touched": len(touched),
             "files_carried": len(entries) - len(touched),
             "files_written": len(new_files),
@@ -3234,7 +3148,7 @@ class VersionedTable:
         # match our source keys or fall in our by-source scope
         return self._commit_rebasing(
             v, new_files, [e["path"] for e in touched], key_col,
-            lambda a: may_match(a) or in_scope(a), max_retries,
+            touches, max_retries,
             op=commit_op,
             schema=(
                 evolved_schema.jsonValue() if evolved_schema is not None
@@ -3312,32 +3226,6 @@ class VersionedTable:
                 base_v = head
         raise AssertionError("unreachable")
 
-    def _prune_add_conflict(self, prune, prune_values=None):
-        """The read-set test a predicate-scoped UPDATE/DELETE rebase runs
-        against winner-ADDED files: without a prune hint, ANY added file
-        could hold rows the predicate matches (the snapshot we evaluated
-        it on didn't contain them — write skew), so everything conflicts;
-        with one, the prune contract (predicate ⇒ prune ranges /
-        membership) lets stats-disjoint adds pass. Same
-        ``_entry_overlaps_range`` arithmetic as the file skipping that
-        scoped the operation in the first place."""
-        key_pcol = self._phys(_key_first(self._key_col))
-        if prune is None and prune_values is None:
-            return lambda a: True
-        if prune_values is not None:
-            pcol = self._phys(prune_values[0])
-            vals = sorted(v for v in prune_values[1] if v is not None)
-            return lambda a: _entry_matches_points(
-                self.root, a, pcol, key_pcol, vals, None
-            )
-        pp = {self._phys(c): b for c, b in prune.items()}
-        return lambda a: all(
-            _entry_matches_nullness(a, pcol, b)
-            if isinstance(b, str)
-            else _entry_overlaps_range(a, pcol, key_pcol, *b)
-            for pcol, b in pp.items()
-        )
-
     def _membership_plan(self, membership, sch):
         """Round 14 — plan the ``membership=(col, subjects_df, negated)``
         semi-join predicate (the oversized ``[NOT] IN (SELECT ...)``
@@ -3401,34 +3289,30 @@ class VersionedTable:
             return col, None, False, "never", None
         return col, vals, False, "test", {col: (row["lo"], row["hi"])}
 
-    @staticmethod
-    def _merge_membership_prune(prune, m_prune):
-        """Conjoin the membership-implied range into the caller's prune
-        dict (both are relaxations of the total predicate, so their
-        intersection is too). On a same-column collision the ranges are
-        intersected when both are (lo, hi) tuples; a mixed-type
-        comparison or a nullness string keeps the caller's entry
-        (conservative — wider prune only reads more files)."""
-        if not m_prune:
-            return prune
-        out = dict(prune or {})
-        for c, (lo, hi) in m_prune.items():
-            cur = out.get(c)
-            if cur is None:
-                out[c] = (lo, hi)
-            elif isinstance(cur, tuple):
-                try:
-                    clo, chi = cur
-                    nlo = lo if clo is None else (
-                        clo if lo is None else max(clo, lo)
-                    )
-                    nhi = hi if chi is None else (
-                        chi if hi is None else min(chi, hi)
-                    )
-                    out[c] = (nlo, nhi)
-                except TypeError:
-                    pass
-        return out
+    def _scope(self, v: int, pred, prune, membership, sch=None):
+        """The scoping step of :meth:`update_where` / :meth:`delete_where`
+        at version ``v``: plan the membership join, build the ``prune``
+        spec (an IN membership's subject range conjoins as one more
+        term), and return ``(entries, touched, pred, add_conflict,
+        member)`` — the live entries, the files the spec admits (none
+        when the membership can never be TRUE), ``pred`` AND the spec's
+        row predicate, the OCC test for a winner's added file (the spec
+        itself: with no hint, every added file conflicts — write skew),
+        and ``(col, subjects, negated)`` when the join is needed."""
+        m_fate = m_prune = member = None
+        if membership is not None:
+            sch = sch or self._log_schema(v) or self.snapshot(v).schema
+            m_col, m_vals, m_neg, m_fate, m_prune = self._membership_plan(
+                membership, sch
+            )
+            if m_fate == "test":
+                member = (m_col, m_vals, m_neg)
+        entries = self._live_entries(v)
+        skip = self._skip(prune, _skip_terms(m_prune))
+        touched = (
+            [] if m_fate == "never" else [e for e in entries if skip.admits(e)]
+        )
+        return entries, touched, skip.row_predicate(pred), skip.admits, member
 
     def _with_membership(self, tgt, col, vals, negated):
         """Join the subject set onto the read target and return
@@ -3461,22 +3345,18 @@ class VersionedTable:
         semantics: rows where ``predicate`` is TRUE get each assignment
         applied; NULL/FALSE rows are untouched (SQL UPDATE semantics).
 
-        ``prune`` optionally gives ``{col: (lo, hi)}`` ranges IMPLIED BY the
-        predicate: files whose recorded stats cannot intersect them carry
-        over BY REFERENCE and are never read or rewritten — at 100 TB a
-        scoped update costs O(files containing matches), not O(table).
-
-        Prune contract (one-sided, round-5 advice): ``prune`` must be a
-        RELAXATION of the predicate — every row the predicate matches must
-        fall inside the prune ranges. A too-WIDE prune only rewrites more
-        files. To keep a too-NARROW prune from corrupting results
-        *silently* (skipped files keeping rows the predicate matches while
-        unskipped files change theirs), the prune ranges are ALSO applied
-        as a row-level conjunct of the predicate: file skipping and the
-        row filter then agree by construction, and a narrow prune
-        consistently narrows the operation's scope instead of splitting it
-        per-file. (Delta derives skipping from the predicate itself; here
-        the hint is caller-supplied, so it is made self-consistent.)
+        ``prune`` optionally gives file-skipping terms IMPLIED BY the
+        predicate (the :meth:`files_matching` vocabulary): files the
+        :class:`_SkipSpec` rules out carry over BY REFERENCE and are never
+        read or rewritten — at 100 TB a scoped update costs O(files
+        containing matches), not O(table). The contract is one-sided
+        (round-5 advice): every row the predicate matches must satisfy
+        the terms; a too-wide prune only rewrites more files, and since
+        the spec's row predicate is also conjoined into ``predicate``, a
+        too-narrow one narrows the update consistently instead of
+        splitting it per file. (Delta derives skipping from the
+        predicate itself; here the hint is caller-supplied, so it is made
+        self-consistent.)
 
         ``membership=(col, subjects_df, negated)`` (round 14) conjoins an
         exact ``col [NOT] IN (subjects)`` test evaluated as a DISTRIBUTED
@@ -3513,22 +3393,11 @@ class VersionedTable:
                 f"identity column {ident[0]!r} is GENERATED ALWAYS; "
                 "update_where may not assign it"
             )
-        m_col = m_vals = None
-        m_negated = False
-        m_fate = None
-        if membership is not None:
-            m_col, m_vals, m_negated, m_fate, m_prune = self._membership_plan(
-                membership, sch
-            )
-            prune = self._merge_membership_prune(prune, m_prune)
-        entries = self._live_entries(v)
-        if m_fate == "never":
-            # the membership conjunct can never be TRUE: commit the
-            # (auditable) empty update without reading anything
-            touched = []
-        else:
-            touched = self.files_matching(prune) if prune else entries
-        pred = _and_prune(pred, prune)
+        # a membership that can never be TRUE touches nothing: the
+        # (auditable) empty update commits without reading anything
+        entries, touched, pred, add_conflict, member = self._scope(
+            v, pred, prune, membership, sch
+        )
         touched_paths = {e["path"] for e in touched}
         new_files: list = []
         if touched:
@@ -3536,11 +3405,9 @@ class VersionedTable:
                 sorted(touched_paths), dv_map=self._dv_map(touched)
             )
             out_cols = list(tgt.columns)
-            if m_fate == "test":
-                tgt, member = self._with_membership(
-                    tgt, m_col, m_vals, m_negated
-                )
-                pred = pred & member
+            if member is not None:
+                tgt, hit = self._with_membership(tgt, *member)
+                pred = pred & hit
             rewritten = tgt.select(
                 *[
                     F.when(pred, assigns[c]).otherwise(_col(c)).alias(c)
@@ -3555,10 +3422,9 @@ class VersionedTable:
                 colmap=self._colmap,
             )
         # losing an OCC race auto-rebases when provably safe (round 11):
-        # data-only winners that touched none of our files AND (under a
-        # prune) added nothing inside our scope — the already-written
-        # files re-commit at the new head, zero re-read
-        add_conflict = self._prune_add_conflict(prune)
+        # data-only winners that touched none of our files AND added
+        # nothing our spec admits — the already-written files re-commit
+        # at the new head, zero re-read
         # Delta's operationMetrics slot, FREE numbers only (round 11):
         # everything below was already known to the write
         op_meta = {
@@ -3669,19 +3535,20 @@ class VersionedTable:
     def delete_where(
         self,
         predicate: "F.Column | str",
-        prune: dict[str, tuple] | None = None,
+        prune: dict | None = None,
         dv: bool = False,
-        prune_values: tuple | None = None,
         membership: "tuple | None" = None,
         max_retries: int = 3,
     ) -> int:
         """Predicate-scoped DELETE (copy-on-write). Rows where ``predicate``
         is TRUE are dropped; NULL/FALSE rows survive (SQL DELETE
         semantics). ``prune`` file-skips exactly like :meth:`update_where`,
-        under the same one-sided contract: prune must be implied by the
-        predicate, and its ranges are also applied as a row-level conjunct
-        so a too-narrow prune narrows the delete consistently instead of
-        deleting per-file-inconsistently. Returns the new version.
+        under the same one-sided contract and row conjunct — a point set
+        (``{col: set(values)}``) makes it a POINT-LOOKUP delete: range
+        stats and bloom sidecars pick the files, which is what makes a
+        per-document forget on a bucket-clustered store touch ≈ the
+        document's files instead of scanning it (streaming/pipeline.py::
+        neardedup_forget). Returns the new version.
 
         ``dv=True`` (round 9 — Delta deletion vectors): instead of
         rewriting every touched file, mark the matched rows dead in
@@ -3701,59 +3568,28 @@ class VersionedTable:
         — above it the call falls back to the rewrite path, which a
         mass delete wants anyway.
 
-        ``prune_values=(col, values)`` (round 9) is the POINT-LOOKUP
-        touch set: files are selected by :meth:`files_matching_any` —
-        range stats AND bloom sidecars prune — under the same one-sided
-        contract as ``prune`` (the predicate must imply membership in
-        ``values``); unlike ``prune`` no extra row conjunct is added,
-        the caller's predicate is authoritative. This is what makes a
-        per-document forget on a bucket-clustered store touch ≈ the
-        document's files instead of scanning it (streaming/pipeline.py::
-        neardedup_forget).
-
         ``membership=(col, subjects_df, negated)`` (round 14): exact
         ``col [NOT] IN (subjects)`` conjunct evaluated as a distributed
         join — see :meth:`update_where` and :meth:`_membership_plan`.
-        Mutually exclusive with ``dv`` and ``prune_values`` (the mass
-        delete wants the rewrite path)."""
-        if prune is not None and prune_values is not None:
-            raise ValueError("pass prune OR prune_values, not both")
-        if membership is not None and (dv or prune_values is not None):
-            # the DV path's position collect and the point-lookup touch
-            # set both assume a string/Column predicate; the semi-join
-            # membership is the mass-delete shape, which wants the
-            # rewrite path anyway
-            raise ValueError(
-                "membership is mutually exclusive with dv and prune_values"
-            )
+        Mutually exclusive with ``dv`` (the mass delete wants the
+        rewrite path)."""
+        if membership is not None and dv:
+            # the DV path's position collect assumes a string/Column
+            # predicate; the semi-join membership is the mass-delete
+            # shape, which wants the rewrite path anyway
+            raise ValueError("membership is mutually exclusive with dv")
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
         key_col = self.key_col()
         v = self.latest_version()
-        m_col = m_vals = None
-        m_negated = False
-        m_fate = None
-        if membership is not None:
-            sch = self._log_schema(v) or self.snapshot(v).schema
-            m_col, m_vals, m_negated, m_fate, m_prune = self._membership_plan(
-                membership, sch
-            )
-            prune = self._merge_membership_prune(prune, m_prune)
-        entries = self._live_entries(v)
-        if prune_values is not None:
-            touched = self.files_matching_any(
-                prune_values[0], list(prune_values[1])
-            )
-        elif m_fate == "never":
-            touched = []  # membership never TRUE: auditable empty delete
-        else:
-            touched = self.files_matching(prune) if prune else entries
-        pred = _and_prune(pred, prune)
+        # a membership that can never be TRUE: auditable empty delete
+        entries, touched, pred, add_conflict, member = self._scope(
+            v, pred, prune, membership
+        )
         touched_paths = {e["path"] for e in touched}
         if touched and dv:
             done = self._delete_dv(
                 pred, touched, entries, key_col, v,
-                add_conflict=self._prune_add_conflict(prune, prune_values),
-                max_retries=max_retries,
+                add_conflict=add_conflict, max_retries=max_retries,
             )
             if done is not None:
                 return done
@@ -3764,11 +3600,9 @@ class VersionedTable:
                 sorted(touched_paths), dv_map=self._dv_map(touched)
             )
             out_cols = list(tgt.columns)
-            if m_fate == "test":
-                tgt, member = self._with_membership(
-                    tgt, m_col, m_vals, m_negated
-                )
-                pred = pred & member
+            if member is not None:
+                tgt, hit = self._with_membership(tgt, *member)
+                pred = pred & hit
             survivors = tgt.where(~F.coalesce(pred, F.lit(False))).select(
                 *out_cols
             )
@@ -3777,8 +3611,7 @@ class VersionedTable:
                 colmap=self._colmap,
             )
         # OCC auto-rebase (round 11) — same winner validation as
-        # update_where; the prune/prune_values hint is the read-set test
-        add_conflict = self._prune_add_conflict(prune, prune_values)
+        # update_where
         # rows_deleted from footer counts alone: touched minus rewritten
         # (both recorded per file) — metadata arithmetic, no extra job
         op_meta = {
@@ -3911,7 +3744,7 @@ class VersionedTable:
             if not paths:
                 return schema_src.limit(0)
             return self._read_paths(
-                paths, align_to=schema_src, dv_map=self._dv_map(ents)
+                paths, schema=schema_src.schema, dv_map=self._dv_map(ents)
             )
 
         # key join re-identifies the same logical row across file
@@ -4352,7 +4185,7 @@ class VersionedTable:
         n_files = max(1, -(-total // target_file_bytes))
         df = self._read_paths(
             sorted(e["path"] for e, _ in small),
-            align_to=self.snapshot(v),
+            schema=self.snapshot(v).schema,
             dv_map=self._dv_map([e for e, _ in small]),
         ).repartition(int(n_files))
         new_files = _write_data_files(

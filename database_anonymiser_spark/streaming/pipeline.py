@@ -1171,9 +1171,7 @@ def neardedup_forget(
     touched = store.files_matching_any("id", ids)
     meta["store_files_touched"] = len(touched)
     n_store = store.row_count()
-    store.delete_where(
-        F.col("id").isin(ids), dv=dv, prune_values=("id", ids)
-    )
+    store.delete_where(F.col("id").isin(ids), dv=dv, prune={"id": set(ids)})
     meta["store_rows_marked"] = n_store - store.row_count()
     return meta
 

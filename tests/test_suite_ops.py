@@ -1908,7 +1908,7 @@ def test_ann_recall_floors_pq_and_multiprobe_lsh(spark, sf_dir):
     )
     r_lsh = recall(
         lambda q: SIM.lsh_bucket_topk(
-            emb, "vec_id", "embedding", q, K, n_planes=8, dim=64
+            emb, "vec_id", "embedding", q, K, n_planes=8, dim=64, n_flip=3
         )
     )
     # round 13: query-directed probing at the production default (93
