@@ -225,6 +225,16 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
         "--maxRows", type=int, default=20, dest="max_rows",
         help="SQL mode: print at most this many result rows",
     )
+    p.add_argument(
+        "--pushdown", action=argparse.BooleanOptionalAction, default=True,
+        help="SQL mode: register --versionedTable views through the "
+        "FILE-SKIPPING pushdown reader face (equality/range/IN filters "
+        "prune files by stats + bloom before Spark re-evaluates rows; "
+        "sets spark.sql.python.filterPushdown.enabled) — the scan-side "
+        "twin of the DML face's derive_prune. Round 14: the DEFAULT "
+        "after the round-13 opt-in bake; --no-pushdown restores the "
+        "plain snapshot face",
+    )
     args = p.parse_args(argv)
     if args.sql is not None and args.sql_file is not None:
         p.error("set --sql OR --sqlFile, not both")
@@ -313,7 +323,6 @@ def main(argv: list[str] | None = None) -> int:
 
         from database_anonymiser_spark.sources.spark_datasource import (
             VersionedDataSource,
-            register_sql_views,
         )
 
         stmt = args.sql if args.sql is not None else Path(args.sql_file).read_text()
@@ -337,28 +346,34 @@ def main(argv: list[str] | None = None) -> int:
                 )
                 return name, root, pin
 
-            def _axis(val: str, flag: str) -> tuple[bool, str]:
-                """One time-axis value: (is a timestamp, value) for a
-                version number or ts:<ISO> (round 13 — CLI parity with
-                the DataSource's timestamp options)."""
+            def _axis(reader, val: str, flag: str, version_opt: str,
+                      ts_opt: str):
+                """One time-axis value: a version number, or ts:<ISO>
+                (round 13 — CLI parity with the DataSource's timestamp
+                options)."""
                 if val.startswith("ts:"):
-                    return True, val[3:]
+                    return reader.option(ts_opt, val[3:])
                 if not val.isdigit():
                     raise SystemExit(
                         f"{flag}: pin {val!r} must be a version number "
                         "or ts:<ISO-8601 UTC>"
                     )
-                return False, val
+                return reader.option(version_opt, val)
 
+            if args.pushdown:
+                spark.conf.set(
+                    "spark.sql.python.filterPushdown.enabled", "true"
+                )
             for spec in args.versioned_tables or []:
                 name, root, ver = _spec(spec, "--versionedTable")
-                is_ts, pin = _axis(ver, "--versionedTable") if ver else (False, None)
-                # time travel through the DataSource option path
-                register_sql_views(
-                    spark, {name: root}, pushdown=True,
-                    timestamp=pin if is_ts else None,
-                    version=None if is_ts else pin,
-                )
+                reader = spark.read.format("versioned").option("path", root)
+                if args.pushdown:
+                    reader = reader.option("pushdown", "true")
+                if ver:
+                    # time travel through the DataSource option path
+                    reader = _axis(reader, ver, "--versionedTable",
+                                   "versionAsOf", "timestampAsOf")
+                reader.load().createOrReplaceTempView(name)
                 versioned_views[name.lower()] = {
                     "root": root, "pinned": bool(ver)
                 }
@@ -370,11 +385,14 @@ def main(argv: list[str] | None = None) -> int:
                     .option("readChangeFeed", "true")
                 )
                 since, _, end = pin.partition("..")
-                for val, axis in ((since or "0", "starting"), (end, "ending")):
-                    if val:
-                        is_ts, val = _axis(val, "--changesTable")
-                        opt = "Timestamp" if is_ts else "Version"
-                        reader = reader.option(axis + opt, val)
+                if since:
+                    reader = _axis(reader, since, "--changesTable",
+                                   "startingVersion", "startingTimestamp")
+                else:
+                    reader = reader.option("startingVersion", "0")
+                if end:
+                    reader = _axis(reader, end, "--changesTable",
+                                   "endingVersion", "endingTimestamp")
                 reader.load().createOrReplaceTempView(name)
         t0 = _time.time()
         from database_anonymiser_spark.sql_dml import (

@@ -1281,10 +1281,7 @@ class _VersionedStreamWriter(_VersionedWriterBase, DataSourceStreamArrowWriter):
         self._abort(messages)
 
 
-def register_sql_views(
-    spark, tables: dict, version: int | None = None,
-    timestamp: str | None = None, pushdown: bool = False,
-) -> None:
+def register_sql_views(spark, tables: dict) -> None:
     """The SQL face: register each versioned table as a temp view served
     by the DataSource, so plain ``spark.sql`` (joins, CTEs, windows —
     the whole surface) runs over it::
@@ -1292,33 +1289,20 @@ def register_sql_views(
         register_sql_views(spark, {"docs": "/data/docs", "dims": "/data/dims"})
         spark.sql("SELECT ... FROM docs JOIN dims USING (k)")
 
-    Views are PINNED SNAPSHOTS of each table's head at registration (or
-    of ``version`` / ``timestamp``, Delta's AS OF) — repeatable reads
-    for a whole SQL session by construction; re-call to advance to the
-    current head. (Why not ``CREATE TABLE ... USING versioned``: Spark
-    4.1 passes a catalog table's scan an EMPTY options dict, so a Python
-    DataSource behind a catalog table can never find its path —
-    measured here, the reason this face is view-based.)
-
-    ``pushdown=True`` serves the views through the FILE-SKIPPING reader
-    (equality/range/IN/nullness filters prune files by stats + bloom
-    before Spark re-evaluates the rows) and sets
-    ``spark.sql.python.filterPushdown.enabled``, which that reader
-    needs — the face the CLI's SQL mode registers. Spark 4.1 keeps the
-    planned partitions on the view's relation, so a query that pushes
-    no filter reuses the file set of the view's previous query."""
-    if pushdown:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    Views are PINNED SNAPSHOTS of each table's head at registration —
+    repeatable reads for a whole SQL session by construction; re-call to
+    advance to the current head. (Why not ``CREATE TABLE ... USING
+    versioned``: Spark 4.1 passes a catalog table's scan an EMPTY
+    options dict, so a Python DataSource behind a catalog table can
+    never find its path — measured here, the reason this face is
+    view-based.)"""
     spark.dataSource.register(VersionedDataSource)
     for name, root in tables.items():
-        reader = spark.read.format("versioned").option("path", str(root))
-        if pushdown:
-            reader = reader.option("pushdown", "true")
-        if version is not None:
-            reader = reader.option("versionAsOf", str(version))
-        if timestamp is not None:
-            reader = reader.option("timestampAsOf", timestamp)
-        reader.load().createOrReplaceTempView(name)
+        (
+            spark.read.format("versioned")
+            .option("path", str(root)).load()
+            .createOrReplaceTempView(name)
+        )
 
 
 def _writer_state(root: str, write_schema):

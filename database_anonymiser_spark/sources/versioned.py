@@ -1694,18 +1694,22 @@ class VersionedTable:
             return parts[0]
         return parts[0].unionByName(parts[1])
 
-    def _skip(self, prune: dict | None = None, terms=()) -> _SkipSpec:
-        """The file-skipping spec for ``prune`` (plus extra ``terms``)
-        under the key/column-mapping state the last ``_live_entries``
-        call loaded."""
-        return _SkipSpec(
-            [*_skip_terms(prune), *terms], self.root, self._key_col, self._colmap
-        )
+    def _live(self, version: int | None = None):
+        """``(live entries, spec)``: the entries at ``version`` and a
+        builder of the file-skipping spec for ``prune`` (plus extra
+        terms) under the key and column mapping of that same load."""
+        entries = self._live_entries(version)
+        root, key_col, colmap = self.root, self._key_col, self._colmap
+
+        def spec(prune: dict | None = None, terms=()) -> _SkipSpec:
+            return _SkipSpec([*_skip_terms(prune), *terms], root, key_col, colmap)
+
+        return entries, spec
 
     def _matching(self, prune: dict | None, version: int | None):
         """(live entries the ``prune`` spec admits, the spec)."""
-        entries = self._live_entries(version)
-        skip = self._skip(prune)
+        entries, spec = self._live(version)
+        skip = spec(prune)
         return [e for e in entries if skip.admits(e)], skip
 
     def files_matching(
@@ -2690,7 +2694,8 @@ class VersionedTable:
         an in-scope by-source row (an unscoped by-source list touches
         every file). ``skip_by="range"`` tests the source's key bounds;
         ``"points"`` tests its distinct keys, collected up to
-        ``POINT_SKIP_CAP`` (beyond that, range).
+        ``POINT_SKIP_CAP`` (beyond that, or when a source key column's
+        type differs from the table's, range).
 
         ``merge_schema=True`` is Delta's schema evolution: source columns
         a clause assigns (all of them under updateAll/insertAll) join the
@@ -2783,7 +2788,7 @@ class VersionedTable:
         key_cols = _key_tuple(key_col)
         k0 = key_cols[0]
         v = self.latest_version()
-        entries = self._live_entries(v)
+        entries, spec = self._live(v)
         source = self._apply_generated(source)
         ident = self.identity_column()
         gen_cols = self.generated_columns()
@@ -2926,7 +2931,13 @@ class VersionedTable:
         # are the OCC test against a winner's added files.
         points = None
         if skip_by == "points" and los[0] is not None:
-            if stats["n_distinct"] <= POINT_SKIP_CAP:
+            # bloom probes hash str(value): a source key typed unlike the
+            # table's (1.0 against 1) joins its match yet misses the
+            # bloom, so only same-typed keys skip by points
+            sch = self._log_schema(v) or self.snapshot(v).schema
+            if stats["n_distinct"] <= POINT_SKIP_CAP and all(
+                source.schema[c].dataType == sch[c].dataType for c in key_cols
+            ):
                 points = {
                     tuple(r)
                     for r in source.select(*key_cols).where(all_nn)
@@ -2934,14 +2945,14 @@ class VersionedTable:
                 }
         skips = []
         if los[0] is not None:  # else no fully-keyed source row: no match
-            skips.append(self._skip(
+            skips.append(spec(
                 {tuple(key_cols): points} if points is not None
                 else {c: (los[i], his[i]) for i, c in enumerate(key_cols)}
             ))
         # by-source clauses invert the question: a file may hold UNMATCHED
         # rows regardless of source keys, so it is read unless its stats
         # prove the scope empty (an unscoped full sync reads every file)
-        scope = self._skip(by_source_scope)
+        scope = spec(by_source_scope)
         if bys_clauses:
             skips.append(scope)
 
@@ -3307,8 +3318,8 @@ class VersionedTable:
             )
             if m_fate == "test":
                 member = (m_col, m_vals, m_neg)
-        entries = self._live_entries(v)
-        skip = self._skip(prune, _skip_terms(m_prune))
+        entries, spec = self._live(v)
+        skip = spec(prune, _skip_terms(m_prune))
         touched = (
             [] if m_fate == "never" else [e for e in entries if skip.admits(e)]
         )

@@ -1466,15 +1466,29 @@ def statement_target(stmt: str) -> str | None:
 def _register_versioned_view(spark, name: str, root: str,
                              versioned_views: dict) -> None:
     """Make a table CREATE/CONVERT just produced addressable by the rest
-    of the session/script: register it as a temp view under ``name``
-    through the pushdown face every other CLI view uses, and add it to
-    ``versioned_views`` (un-pinned) so subsequent DML/maintenance
-    statements can target it."""
+    of the session/script: register the DataSource read face as a temp
+    view under ``name`` and add it to ``versioned_views`` (un-pinned) so
+    subsequent DML/maintenance statements can target it."""
     from database_anonymiser_spark.sources.spark_datasource import (
-        register_sql_views,
+        VersionedDataSource,
     )
 
-    register_sql_views(spark, {name: root}, pushdown=True)
+    try:
+        spark.dataSource.register(VersionedDataSource)
+    except Exception:
+        pass  # already registered
+    reader = spark.read.format("versioned").option("path", str(root))
+    # match the session's SELECT face (round-14 review): when the CLI
+    # enabled pushdown (the default) it set this conf — a mid-script
+    # CREATE must not register a slower, inconsistent plain-scan view
+    if (
+        str(
+            spark.conf.get("spark.sql.python.filterPushdown.enabled", "false")
+        ).lower()
+        == "true"
+    ):
+        reader = reader.option("pushdown", "true")
+    reader.load().createOrReplaceTempView(name)
     versioned_views[name.lower()] = {"root": str(root), "pinned": False}
 
 

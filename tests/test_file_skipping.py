@@ -277,3 +277,58 @@ def test_point_delete_rebases_past_a_bloom_disjoint_winner(
     assert t.commit_op(v) == ("delete_dv" if dv else "delete_where")
     tags = {r.tag for r in t.snapshot().collect()}
     assert "t05" not in tags and {"t00", "t99"} <= tags
+
+
+def test_points_merge_with_a_differently_typed_source_key(spark, tmp_path):
+    """A bloom probe hashes ``str(value)``: an INT source key 1 joins the
+    DOUBLE row 1.0 but renders "1" against the bloom's "1.0". A points
+    merge with such a source skips by range instead, so it updates the
+    row rather than skipping its file and inserting a duplicate key."""
+    sch = "k double, v string"
+    t = VersionedTable.create(
+        spark, str(tmp_path / "t"),
+        spark.createDataFrame([(1.0, "a"), (2.0, "b")], sch).coalesce(1),
+        key_col="k",
+    )
+    t.append(spark.createDataFrame([(10.0, "c")], sch).coalesce(1))
+    t.analyze(bloom_cols=("k",))
+    v = t.merge(
+        spark.createDataFrame([(1, "x")], "k int, v string"), skip_by="points"
+    )
+    m = t.commit_meta(v)["metrics"]
+    assert m["skip_by"] == "range" and m["files_touched"] == 1
+    assert sorted(tuple(r) for r in t.snapshot().collect()) == [
+        (1.0, "x"), (2.0, "b"), (10.0, "c")
+    ]
+    # same-typed keys still skip by points, the bloom included
+    v = t.merge(spark.createDataFrame([(2.0, "y")], sch), skip_by="points")
+    m = t.commit_meta(v)["metrics"]
+    assert m["skip_by"] == "points" and m["files_touched"] == 1
+
+
+def test_created_view_follows_the_session_face(spark, tmp_path):
+    """A table CREATE ... CLONE registers through ``execute_utility``
+    gets the plain view when the session has not enabled Python filter
+    pushdown, so a filtered query followed by an unfiltered count on the
+    same view still counts every file."""
+    spark.dataSource.register(VersionedDataSource)
+    src = VersionedTable.create(
+        spark, str(tmp_path / "src"),
+        spark.createDataFrame([(1, "a")], "k int, v string").coalesce(1),
+        key_col="k",
+    )
+    src.append(spark.createDataFrame([(2, "b")], "k int, v string").coalesce(1))
+    views = {"src": {"root": str(src.root), "pinned": False}}
+    conf = "spark.sql.python.filterPushdown.enabled"
+    prev = spark.conf.get(conf, "false")
+    spark.conf.set(conf, "false")
+    try:
+        execute_utility(
+            spark, f"CREATE TABLE c SHALLOW CLONE src LOCATION "
+            f"'{tmp_path / 'c'}'", views,
+        )
+        assert "c" in views
+        assert [r.v for r in spark.sql("SELECT v FROM c WHERE k = 2").collect()] == ["b"]
+        assert spark.sql("SELECT count(*) FROM c").first()[0] == 2
+    finally:
+        spark.conf.set(conf, prev)

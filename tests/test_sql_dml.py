@@ -2114,8 +2114,8 @@ def test_e2e_changes_table_timestamp_bounds(spark, dml_env, tmp_path):
 
 def test_e2e_optimize_merge_runs_and_pushdown(spark, dml_env, tmp_path):
     """OPTIMIZE ... MERGE RUNS k reaches the round-13 bounded
-    cross-generation merge from SQL; the CLI registers versioned views
-    through the file-skipping reader face."""
+    cross-generation merge from SQL; --pushdown registers versioned
+    views through the file-skipping reader face."""
     data_dir, root = dml_env
     t = VersionedTable(spark, root)
     # build 3 z-runs: cluster, then two trickle generations
@@ -2152,9 +2152,8 @@ def test_e2e_optimize_merge_runs_and_pushdown(spark, dml_env, tmp_path):
         "--data", str(data_dir), "--versionedTable", f"other={root2}",
     ])
     assert rc == 2
-    # the CLI registers versioned views through the file-skipping
-    # pushdown face; the plain snapshot face (the API's reader without
-    # option("pushdown")) returns the same answers
+    # pushdown face is the DEFAULT since round 14 (parity baked in
+    # round 13 behind the flag): same answers through the pruning reader
     out = tmp_path / "pd"
     rc = _run([
         "--sql", "SELECT k, v FROM cust WHERE k >= 50",
@@ -2162,7 +2161,13 @@ def test_e2e_optimize_merge_runs_and_pushdown(spark, dml_env, tmp_path):
         "--out", str(out),
     ])
     assert rc == 0
-    got = sorted(tuple(r) for r in spark.read.parquet(str(out)).collect())
-    assert [k for k, _v in got] == [50, 60]
-    plain = spark.read.format("versioned").option("path", str(root)).load()
-    assert sorted(tuple(r) for r in plain.where("k >= 50").collect()) == got
+    assert sorted(r["k"] for r in spark.read.parquet(str(out)).collect()) == [50, 60]
+    # --no-pushdown restores the plain snapshot face, same answers
+    out2 = tmp_path / "pd2"
+    rc = _run([
+        "--sql", "SELECT k, v FROM cust WHERE k >= 50",
+        "--data", str(data_dir), "--versionedTable", f"cust={root}",
+        "--no-pushdown", "--out", str(out2),
+    ])
+    assert rc == 0
+    assert sorted(r["k"] for r in spark.read.parquet(str(out2)).collect()) == [50, 60]
