@@ -226,14 +226,15 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
         help="SQL mode: print at most this many result rows",
     )
     p.add_argument(
-        "--pushdown", action=argparse.BooleanOptionalAction, default=True,
+        "--pushdown", action=argparse.BooleanOptionalAction, default=False,
         help="SQL mode: register --versionedTable views through the "
         "FILE-SKIPPING pushdown reader face (equality/range/IN filters "
         "prune files by stats + bloom before Spark re-evaluates rows; "
-        "sets spark.sql.python.filterPushdown.enabled) — the scan-side "
-        "twin of the DML face's derive_prune. Round 14: the DEFAULT "
-        "after the round-13 opt-in bake; --no-pushdown restores the "
-        "plain snapshot face",
+        "sets spark.sql.python.filterPushdown.enabled). Off by default: "
+        "Spark keeps one planned read per view, so a view scanned twice "
+        "in a session (a later query, a self-join, a UNION) reuses the "
+        "last pushed filter's files and answers wrongly; the default "
+        "plain snapshot face reads every live file",
     )
     args = p.parse_args(argv)
     if args.sql is not None and args.sql_file is not None:

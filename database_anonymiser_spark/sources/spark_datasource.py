@@ -73,12 +73,15 @@ from pyspark.sql.types import StructType
 
 from database_anonymiser_spark.sources.versioned import (
     ROW_PRESERVING_OPS,
+    _DATA_DIR,
+    _file_entry,
     _key_first,
     _key_tuple,
     _SkipSpec,
     _list_versions,
     _log_path,
     _replay,
+    _store_casts,
 )
 
 
@@ -1116,7 +1119,7 @@ class VersionedDataSource(DataSource):
 
 class _WriteMessage(WriterCommitMessage):
     def __init__(self, entries: list):
-        #: serialized _FileEntry dicts (path/key bounds/stats/rows/bloom)
+        #: the written files' _FileEntry records
         self.entries = entries
 
 
@@ -1142,14 +1145,6 @@ class _VersionedWriterBase:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from database_anonymiser_spark.sources.versioned import (
-            _DATA_DIR,
-            _bloom_sidecars_for,
-            _footer_col_stats,
-            _footer_key_stats,
-            _split_stats_decl,
-        )
-
         batches = list(iterator)
         if not batches:
             return _WriteMessage([])
@@ -1160,51 +1155,18 @@ class _VersionedWriterBase:
                 b.rename_columns([m.get(n, n) for n in b.schema.names])
                 for b in batches
             ]
-        k0 = _key_first(self.key_col)
-        key_phys = m.get(k0, k0)
-        decl = tuple(
-            "bloom:" + m.get(c[len("bloom:"):], c[len("bloom:"):])
-            if str(c).startswith("bloom:") else m.get(c, c)
-            for c in self.stats_cols
-        )
-        range_cols, bloom_cols = _split_stats_decl(decl)
         root = Path(self.root)
         sub = root / _DATA_DIR / _uuid.uuid4().hex
         sub.mkdir(parents=True, exist_ok=True)
         fp = sub / f"part-{_uuid.uuid4().hex}.parquet"
         pq.write_table(pa.Table.from_batches(batches), str(fp))
-        lo, hi = _footer_key_stats(fp, key_phys)
-        stats = None
-        if range_cols:
-            stats = {}
-            for c in range_cols:
-                clo, chi, cnc = _footer_col_stats(fp, c)
-                stats[c] = [clo, chi, cnc]
-        n_rows = pq.ParquetFile(str(fp)).metadata.num_rows
-        bloom = _bloom_sidecars_for(root, fp, bloom_cols)
-        return _WriteMessage(
-            [{
-                "path": str(fp.relative_to(root)),
-                "key_min": lo, "key_max": hi,
-                "stats": stats, "num_rows": n_rows, "bloom": bloom,
-            }]
-        )
+        return _WriteMessage([_file_entry(
+            root, fp, _key_first(self.key_col), self.stats_cols, m
+        )])
 
     # driver side
     def _entries(self, messages):
-        from database_anonymiser_spark.sources.versioned import _FileEntry
-
-        out = []
-        for msg in messages:
-            for e in (msg.entries if msg else []):
-                out.append(
-                    _FileEntry(
-                        e["path"], e["key_min"], e["key_max"],
-                        e["stats"], e["num_rows"], bloom=e.get("bloom"),
-                        size=e.get("size"),
-                    )
-                )
-        return out
+        return [e for msg in messages for e in (msg.entries if msg else [])]
 
     def _commit_entries(self, entries, op: str, meta: dict | None = None):
         from database_anonymiser_spark.sources.versioned import (
@@ -1225,11 +1187,10 @@ class _VersionedWriterBase:
 
     def _abort(self, messages):
         root = Path(self.root)
-        for msg in messages:
-            for e in (msg.entries if msg else []):
-                (root / e["path"]).unlink(missing_ok=True)
-                for p in (e.get("bloom") or {}).values():
-                    (root / p).unlink(missing_ok=True)
+        for e in self._entries(messages):
+            (root / e.path).unlink(missing_ok=True)
+            for p in (e.bloom or {}).values():
+                (root / p).unlink(missing_ok=True)
 
 
 class _VersionedBatchWriter(_VersionedWriterBase, DataSourceArrowWriter):
@@ -1307,11 +1268,10 @@ def register_sql_views(spark, tables: dict) -> None:
 
 def _writer_state(root: str, write_schema):
     """Validate the incoming frame against the table and assemble the
-    pickled writer config. Append-only: the logical schemas must match
-    exactly (use the append/merge APIs for evolution), and tables with
-    CHECK constraints refuse (the writer path has no executor-side SQL
-    evaluator — route constrained tables through the foreachBatch merge
-    sink instead)."""
+    pickled writer config. Append-only, with the table's exact column
+    names and types (the append/merge APIs evolve and cast); tables with
+    CHECK constraints refuse (no executor-side SQL evaluator — use the
+    foreachBatch merge sink)."""
     p = Path(root)
     versions = _list_versions(p)
     if not versions:
@@ -1363,5 +1323,14 @@ def _writer_state(root: str, write_schema):
             f"into table {[f.name for f in logical.fields]} — the DataSource "
             "writer is append-only with an exact column match (evolve via "
             "VersionedTable.append(merge_schema=True))"
+        )
+    # the store-assignment rule refuses what it refuses; what it would
+    # cast is refused too, because the Arrow batches are written as given
+    casts = _store_casts(write_schema, logical)
+    if casts:
+        raise ValueError(
+            f"column(s) {sorted(casts)} differ from the table's types and the "
+            "DataSource writer writes types as given: cast the frame, or use "
+            "VersionedTable.append, which conforms it"
         )
     return key_col, stats_cols, colmap

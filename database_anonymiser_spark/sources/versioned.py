@@ -695,14 +695,6 @@ def _has_map_type(dt) -> bool:
     return False
 
 
-def _footer_key_stats(file_path: Path, key_col: str | None):
-    """(min, max) of ``key_col`` from the parquet footer row-group stats —
-    metadata only, no data scan. None bounds disable skipping for the file
-    (a reader must then always consider it — safe, just unpruned)."""
-    lo, hi, _ = _footer_col_stats(file_path, key_col)
-    return lo, hi
-
-
 def _footer_col_stats(file_path: Path, col: str | None):
     """(min, max, null_count) of ``col`` from the parquet footer row-group
     stats — metadata only, no data scan. The three slots degrade
@@ -1095,6 +1087,113 @@ def _bloom_sidecars_for(
     return out or None
 
 
+def _store_casts(src: st.StructType, dst: st.StructType, keys=()) -> dict:
+    """The one rule for a written column's type: Spark's ANSI store
+    assignment (``Cast.canANSIStoreAssign``; SQL INSERT follows it, Delta
+    applies it to UPDATE and MERGE). Returns ``{column: dst type}`` for
+    each ``src`` column typed unlike ``dst`` that may be cast; any other
+    pair raises ValueError naming every refused column. Merge ``keys``
+    are compared by the ON condition too, so a string key admits only a
+    string ('01' = 1 compares by value, the cast '1' by text)."""
+
+    def admits(a, b) -> bool:
+        if isinstance(a, st.NullType) or a == b or any(
+            isinstance(a, t) and isinstance(b, t) for t in (st.NumericType, st.DatetimeType)
+        ):
+            return True
+        if isinstance(b, st.StringType):
+            return isinstance(a, (st.AtomicType, st.CalendarIntervalType))
+        if isinstance(a, st.ArrayType) and isinstance(b, st.ArrayType):
+            return admits(a.elementType, b.elementType)
+        if isinstance(a, st.MapType) and isinstance(b, st.MapType):
+            return admits(a.keyType, b.keyType) and admits(a.valueType, b.valueType)
+        if isinstance(a, st.StructType) and isinstance(b, st.StructType):
+            return len(a.fields) == len(b.fields) and all(
+                admits(x.dataType, y.dataType) for x, y in zip(a.fields, b.fields)
+            )
+        return False
+
+    casts, refused = {}, []
+    for f in src.fields:
+        if f.name not in dst.names:
+            continue
+        a, b = f.dataType, dst[f.name].dataType
+        # simpleString names a type without its nullability
+        if a.simpleString() == b.simpleString():
+            continue
+        if admits(a, b) and not (f.name in keys and isinstance(b, st.StringType)):
+            casts[f.name] = b
+        else:
+            refused.append(f"{f.name} ({a.simpleString()} into {b.simpleString()})")
+    if refused:
+        raise ValueError("ANSI store assignment cannot write these column "
+                         "types: " + ", ".join(refused))
+    return casts
+
+
+def _conform(df: DataFrame, schema: st.StructType) -> DataFrame:
+    """``df`` cast to ``schema`` by :func:`_store_casts` (ANSI casts raise
+    on overflow); a same-typed frame comes back as itself."""
+    casts = _store_casts(df.schema, schema)
+    if not casts:
+        return df
+    return df.select(*[_col(c).cast(casts[c]).alias(c) if c in casts else _col(c)
+                       for c in df.columns])
+
+
+def _merge_keys(src: DataFrame, schema: st.StructType, keys) -> tuple:
+    """``({key: Column in the table's type}, a count of the key values the
+    cast changes | None)`` for MERGE's ``keys`` of ``src``. A merge refuses
+    a count above 0: it joins on the cast key, and 1.5 into int matches
+    the row 1, which ``ON t.k = s.k`` does not."""
+    casts = _store_casts(
+        src.schema, st.StructType([f for f in schema.fields if f.name in keys]), keys
+    )
+    kx = {c: _col(c).cast(casts[c]) if c in casts else _col(c) for c in keys}
+    return kx, sum(F.count(F.when(kx[c] != _col(c), 1)) for c in casts) if casts else None
+
+
+def _conform_exprs(frame: DataFrame, exprs: dict, schema: st.StructType) -> dict:
+    """UPDATE/MERGE assignments ``{column: Column over frame}`` under
+    :func:`_store_casts`, judged before the CASE they land in coerces
+    them to a common type with the old value ('7' and an int would pass)."""
+    if not exprs:
+        return exprs
+    casts = _store_casts(
+        frame.select(*[e.alias(c) for c, e in exprs.items()]).schema, schema
+    )
+    return {c: e.cast(casts[c]) if c in casts else e for c, e in exprs.items()}
+
+
+def _file_entry(root: Path, p: Path, key_col, stats_cols, m=None, clustered=None):
+    """The log entry of one written or adopted parquet file, from its
+    footer: key bounds, ``[min, max, null_count]`` per range column and the
+    key, row count, size, bloom sidecars. ``m`` maps the LOGICAL
+    ``key_col``/``stats_cols`` to the file's physical names."""
+    import pyarrow.parquet as pq
+
+    m = m or {}
+    key_col = m.get(key_col, key_col)
+    range_cols, bloom_cols = _split_stats_decl(
+        _BLOOM_PREFIX + ",".join(m.get(x, x) for x in c[len(_BLOOM_PREFIX):].split(","))
+        if str(c).startswith(_BLOOM_PREFIX) else m.get(c, c)
+        for c in stats_cols or ()
+    )
+    lo, hi, key_nc = _footer_col_stats(p, key_col)
+    stats = {c: list(_footer_col_stats(p, c)) for c in range_cols}
+    if key_col is not None and key_nc is not None:
+        stats.setdefault(key_col, [lo, hi, key_nc])
+    try:
+        n_rows, size = pq.ParquetFile(str(p)).metadata.num_rows, p.stat().st_size
+    except Exception:
+        n_rows = size = None
+    return _FileEntry(
+        str(p.relative_to(root)), lo, hi, stats or None, n_rows,
+        bloom=_bloom_sidecars_for(root, p, bloom_cols) if n_rows != 0 else None,
+        size=size, clustered=clustered,
+    )
+
+
 def _write_data_files(
     df: DataFrame,
     root: Path,
@@ -1102,85 +1201,39 @@ def _write_data_files(
     stats_cols: tuple[str, ...] = (),
     colmap: dict | None = None,
     clustered_run: int | None = None,
+    schema: st.StructType | None = None,
+    check=None,
 ) -> list[_FileEntry]:
-    """Write df as parquet under data/<uuid>/ and return entries with
-    footer key stats (plus per-column stats for ``stats_cols``). Files are
-    INVISIBLE until a commit references them.
-
-    ``colmap`` (round 9, column mapping): the parquet BYTES and every
-    per-file stat/bloom key use PHYSICAL column names — frozen at the
-    column's birth, immutable across renames — while ``df``, ``key_col``
-    and ``stats_cols`` arrive in LOGICAL names. The rename happens here,
-    at the single write chokepoint, so no other write path knows
-    mappings exist."""
-    import pyarrow.parquet as pq
-
-    # composite keys: the entry-level key slots track the LEADING key
-    # column; trailing key columns arrive via stats_cols (declared at
-    # create), so their bounds are recorded through the same plumbing
-    key_col = _key_first(key_col)
+    """Write df as parquet under data/<uuid>/ and return its files'
+    entries; they stay INVISIBLE until a commit references them.
+    ``schema`` (the caller's logged schema) conforms the frame by
+    :func:`_store_casts`; ``check`` (CHECK constraints) then sees the
+    stored values. ``colmap`` renames LOGICAL columns to their PHYSICAL
+    names (frozen at birth) here, so no other write path knows mappings
+    exist."""
+    if schema is not None:
+        df = _conform(df, schema)
+    if check is not None:
+        check(df)
     m = dict((colmap or {}).get("map") or {})
-    if m:
-        for lg, ph in m.items():
-            if lg != ph and lg in df.columns:
-                df = df.withColumnRenamed(lg, ph)
-        key_col = m.get(key_col, key_col)
-        stats_cols = tuple(
-            _BLOOM_PREFIX + ",".join(
-                m.get(p, p) for p in c[len(_BLOOM_PREFIX):].split(",")
-            )
-            if str(c).startswith(_BLOOM_PREFIX)
-            else m.get(c, c)
-            for c in stats_cols or ()
-        )
-    range_cols, bloom_cols = _split_stats_decl(stats_cols)
-    sub = f"{_DATA_DIR}/{uuid.uuid4().hex}"
-    out = root / sub
+    for lg, ph in m.items():
+        if lg != ph and lg in df.columns:
+            df = df.withColumnRenamed(lg, ph)
+    out = root / _DATA_DIR / uuid.uuid4().hex
     df.write.mode("error").parquet(str(out))
     entries = []
     for p in sorted(out.rglob("*.parquet")):
-        lo, hi, key_nc = _footer_col_stats(p, key_col)
-        stats = None
-        if range_cols:
-            stats = {}
-            for c in range_cols:
-                # 3-slot stat [min, max, null_count] (round 12 — Delta's
-                # nullCount): the third slot serves IS (NOT) NULL
-                # skipping; 2-slot entries from older commits read as
-                # null_count-unknown (must-scan for nullness)
-                clo, chi, cnc = _footer_col_stats(p, c)
-                stats[c] = [clo, chi, cnc]
-        if key_col is not None and key_nc is not None and (
-            key_col not in (stats or {})
-        ):
-            # the LEADING key column's stat rides too (same harvest, the
-            # footer was already open): its null_count lets diff() prove
-            # "no NULL keys in these files" and skip the any-NULL routing
-            # plan entirely (round 12)
-            stats = dict(stats or {})
-            stats[key_col] = [lo, hi, key_nc]
-        try:
-            n_rows = pq.ParquetFile(str(p)).metadata.num_rows
-        except Exception:
-            n_rows = None
-        if n_rows == 0:
+        # composite keys: the entry-level key slots track the LEADING key
+        # column; trailing key columns ride the declared stats_cols
+        e = _file_entry(root, p, _key_first(key_col), stats_cols, m, clustered_run)
+        if e.num_rows == 0:
             # an empty task's part file: dead weight in the log (a
             # stat-less entry defeats skipping and the MERGE rebase
             # validation, and every read lists it forever) — drop it
             # here, the one write chokepoint (round 10)
             p.unlink(missing_ok=True)
             continue
-        try:
-            size = p.stat().st_size
-        except OSError:
-            size = None
-        entries.append(
-            _FileEntry(
-                str(p.relative_to(root)), lo, hi, stats, n_rows,
-                bloom=_bloom_sidecars_for(root, p, bloom_cols),
-                size=size, clustered=clustered_run,
-            )
-        )
+        entries.append(e)
     return entries
 
 
@@ -2263,8 +2316,6 @@ class VersionedTable:
         )
         if not files:
             raise FileNotFoundError(f"no parquet files under {t.root}")
-        import pyarrow.parquet as pq
-
         _replay_cache_invalidate(t.root)
         # composite key: same normalization as create — leading column
         # fills the entry key slots, trailing ones ride stats_cols
@@ -2272,31 +2323,10 @@ class VersionedTable:
         key_col = list(kt) if len(kt) > 1 else (kt[0] if kt else None)
         if len(kt) > 1:
             stats_cols = tuple(dict.fromkeys(tuple(stats_cols) + kt[1:]))
-        range_cols, bloom_cols = _split_stats_decl(stats_cols)
-        adds = []
-        for p in files:
-            lo, hi = _footer_key_stats(p, _key_first(key_col))
-            stats = None
-            if range_cols:
-                stats = {}
-                for c in range_cols:
-                    clo, chi, cnc = _footer_col_stats(p, c)
-                    stats[c] = [clo, chi, cnc]
-            try:
-                n_rows = pq.ParquetFile(str(p)).metadata.num_rows
-            except Exception:
-                n_rows = None
-            try:
-                size = p.stat().st_size
-            except OSError:
-                size = None
-            adds.append(
-                _FileEntry(
-                    str(p.relative_to(t.root)), lo, hi, stats, n_rows,
-                    bloom=_bloom_sidecars_for(t.root, p, bloom_cols),
-                    size=size,
-                )
-            )
+        adds = [
+            _file_entry(t.root, p, _key_first(key_col), stats_cols)
+            for p in files
+        ]
         # footer-derived schema of the whole set (mergeSchema=false is
         # fine: convert requires a uniform layout, like Delta's CONVERT)
         schema = spark.read.parquet(
@@ -2436,11 +2466,10 @@ class VersionedTable:
     def _align_schema(
         self, df: DataFrame, cur, merge_schema: bool, op: str, carry: tuple = ()
     ):
-        """Validate + align a write's frame against the logged schema
-        ``cur``; returns ``(df_aligned, evolved_schema | None)``. Shared
-        by append and MERGE (one rule set, no drift):
+        """Align a write's frame's COLUMNS with the logged schema ``cur``;
+        returns ``(df_aligned, evolved_schema | None)``. Shared by append
+        and MERGE (one rule set, no drift):
 
-        - type changes are always rejected;
         - columns the table has but ``df`` lacks are NULL-backfilled;
         - columns ``df`` adds are ADDITIVE evolution — only under
           ``merge_schema=True`` (else a loud error), appended after the
@@ -2449,49 +2478,27 @@ class VersionedTable:
           physical name whose bytes belong to a different logical
           column).
 
-        ``carry`` columns (MERGE's op column) ride through every
-        projection untouched and never participate in the comparison.
+        Types are :func:`_store_casts`' business. ``carry`` columns
+        (MERGE's op column) ride through untouched and uncompared.
         """
         cur_types = {f.name: f.dataType for f in cur.fields}
-        new_types = {
-            f.name: f.dataType
-            for f in df.schema.fields
-            if f.name not in carry
-        }
-        clash = [
-            c for c in cur_types if c in new_types and cur_types[c] != new_types[c]
-        ]
-        # a frame column NARROWER than the table's (post-widen_column
-        # writers still producing the old type) upcasts losslessly
-        # instead of erroring — Delta's writer does the same
-        upcast = [
-            c
-            for c in clash
-            if cur_types[c].typeName()
-            in self._WIDENINGS.get(new_types[c].typeName(), ())
-        ]
-        for c in upcast:
-            df = df.withColumn(c, F.col(c).cast(cur_types[c]))
-            new_types[c] = cur_types[c]
-        clash = [c for c in clash if c not in upcast]
-        if clash:
-            raise ValueError(f"schema evolution cannot change column types: {clash}")
+        new_names = {c for c in df.columns if c not in carry}
         evolved_schema = None
-        if set(new_types) != set(cur_types):
+        if new_names != set(cur_types):
             if not merge_schema:
                 raise ValueError(
                     f"{op} schema differs from table schema; pass "
                     f"merge_schema=True to evolve (table-only: "
-                    f"{sorted(set(cur_types) - set(new_types))}, {op}-only: "
-                    f"{sorted(set(new_types) - set(cur_types))})"
+                    f"{sorted(set(cur_types) - new_names)}, {op}-only: "
+                    f"{sorted(new_names - set(cur_types))})"
                 )
             missing = [
                 F.lit(None).cast(cur_types[c]).alias(c)
                 for c in cur_types
-                if c not in new_types
+                if c not in new_names
             ]
             df = df.select(*df.columns, *missing)
-            if set(new_types) - set(cur_types):
+            if new_names - set(cur_types):
                 # additive evolution: the log's recorded schema advances —
                 # table columns first (stable positions), new ones appended
                 new_fields = [
@@ -2509,10 +2516,10 @@ class VersionedTable:
                     taken = {m.get(n, n) for n in cur_types} | set(
                         self._colmap.get("retired") or []
                     )
-                    clash2 = [f.name for f in new_fields if f.name in taken]
-                    if clash2:
+                    clash = [f.name for f in new_fields if f.name in taken]
+                    if clash:
                         raise ValueError(
-                            f"new column(s) {clash2} collide with a "
+                            f"new column(s) {clash} collide with a "
                             "historical physical column name (renamed or "
                             "dropped earlier); choose different names"
                         )
@@ -2542,8 +2549,8 @@ class VersionedTable:
         accepted (old files simply lack them — Spark's parquet reader
         NULL-fills missing columns at scan time under mergeSchema, which
         :meth:`snapshot` turns on, so no historical file is ever
-        rewritten). Type changes and (without the flag) any schema
-        mismatch are rejected loudly.
+        rewritten). Without the flag any column mismatch is rejected
+        loudly; types are cast by :func:`_store_casts`.
 
         LOSING AN OCC RACE AUTO-RETRIES (round 9 — Delta's automatic
         conflict resolution for its one read-set-free commit class): a
@@ -2577,11 +2584,12 @@ class VersionedTable:
         df = self._apply_generated(df)
         cur = self._log_schema() or self.snapshot().schema
         df, evolved_schema = self._align_schema(df, cur, merge_schema, op="append")
-        self._check_constraints(df)
         validated = cur.jsonValue()
-        adds = _write_data_files(df, self.root, key_col,
-                                 stats_cols=self._stats_cols,
-                                 colmap=self._colmap)
+        adds = _write_data_files(
+            df, self.root, key_col, stats_cols=self._stats_cols,
+            colmap=self._colmap, schema=evolved_schema or cur,
+            check=self._check_constraints,
+        )
         if ident is not None:
             id_meta = self._allocate_identity(adds)
         for attempt in range(max_retries + 1):
@@ -2694,8 +2702,9 @@ class VersionedTable:
         an in-scope by-source row (an unscoped by-source list touches
         every file). ``skip_by="range"`` tests the source's key bounds;
         ``"points"`` tests its distinct keys, collected up to
-        ``POINT_SKIP_CAP`` (beyond that, or when a source key column's
-        type differs from the table's, range).
+        ``POINT_SKIP_CAP`` (beyond that, range). Source keys, whole
+        source rows and set/values are cast by :func:`_store_casts`; a key
+        cast that changes a value refuses the merge.
 
         ``merge_schema=True`` is Delta's schema evolution: source columns
         a clause assigns (all of them under updateAll/insertAll) join the
@@ -2789,6 +2798,7 @@ class VersionedTable:
         k0 = key_cols[0]
         v = self.latest_version()
         entries, spec = self._live(v)
+        sch = self._log_schema(v) or self.snapshot(v).schema
         source = self._apply_generated(source)
         ident = self.identity_column()
         gen_cols = self.generated_columns()
@@ -2843,7 +2853,7 @@ class VersionedTable:
         src_user_cols = set(source.columns)
         evolved_schema = None
         if merge_schema:
-            cur = self._log_schema() or self.snapshot().schema
+            cur = sch
             # Delta's clause-evolution rule: the schema evolves only for
             # source columns a clause assigns; any other new column (a
             # clause input, the op column) rides through as carry
@@ -2864,6 +2874,16 @@ class VersionedTable:
                 source, cur, True, op="merge", carry=carry_cols,
             )
 
+        # the store-assignment rule on the source columns the join writes
+        # as they are: the key, and every table column when a clause
+        # takes the whole source row. Key bounds and points are then in
+        # the table's types, so every points merge can probe blooms; the
+        # aggregate below runs on the source as given, to count the keys
+        # a cast would change
+        kx, n_changed = _merge_keys(source, sch, key_cols)
+        given, source = source, _conform(source, st.StructType(
+            [f for f in sch.fields if takes_all or f.name in key_cols]
+        ))
         # one aggregate pass serves BOTH the duplicate-key contract check
         # and the skipping bounds (partial aggregation keeps map-side
         # output to one row per task). NULL-key accounting: a key tuple
@@ -2890,9 +2910,11 @@ class VersionedTable:
         for i, c in enumerate(key_cols):
             # per-column bounds over fully-keyed rows only
             aggs += [
-                F.min(F.when(all_nn, F.col(c))).alias(f"_lo{i}"),
-                F.max(F.when(all_nn, F.col(c))).alias(f"_hi{i}"),
+                F.min(F.when(all_nn, kx[c])).alias(f"_lo{i}"),
+                F.max(F.when(all_nn, kx[c])).alias(f"_hi{i}"),
             ]
+        if n_changed is not None:
+            aggs.append(n_changed.alias("n_changed"))
         if op_col is not None:
             aggs.append(
                 F.sum(
@@ -2902,7 +2924,13 @@ class VersionedTable:
         ident_supplied = ident is not None and ident[0] in source.columns
         if ident_supplied:
             aggs.append(F.max(F.col(ident[0])).alias("_max_ident"))
-        stats = source.agg(*aggs).first()
+        stats = given.agg(*aggs).first()
+        if n_changed is not None and stats["n_changed"]:
+            raise ValueError(
+                f"store assignment would change {stats['n_changed']} source "
+                f"key value(s) into the table's key types; the merge matches "
+                "on the stored key, so it refuses a cast that changes one"
+            )
         n_null = stats["n_all"] - stats["n_keys"]
         if (
             stats["n_keys"] != stats["n_distinct"]
@@ -2930,19 +2958,15 @@ class VersionedTable:
         # source bounds — or an in-scope by-source row. The same specs
         # are the OCC test against a winner's added files.
         points = None
-        if skip_by == "points" and los[0] is not None:
-            # bloom probes hash str(value): a source key typed unlike the
-            # table's (1.0 against 1) joins its match yet misses the
-            # bloom, so only same-typed keys skip by points
-            sch = self._log_schema(v) or self.snapshot(v).schema
-            if stats["n_distinct"] <= POINT_SKIP_CAP and all(
-                source.schema[c].dataType == sch[c].dataType for c in key_cols
-            ):
-                points = {
-                    tuple(r)
-                    for r in source.select(*key_cols).where(all_nn)
-                    .distinct().collect()
-                }
+        if (
+            skip_by == "points" and los[0] is not None
+            and stats["n_distinct"] <= POINT_SKIP_CAP
+        ):
+            points = {
+                tuple(r)
+                for r in source.select(*key_cols).where(all_nn)
+                .distinct().collect()
+            }
         skips = []
         if los[0] is not None:  # else no fully-keyed source row: no match
             skips.append(spec(
@@ -2962,29 +2986,35 @@ class VersionedTable:
         touched = [e for e in entries if touches(e)]
 
         new_files: list[_FileEntry] = []
+        tgt = (
+            self._read_paths(
+                [e["path"] for e in touched], dv_map=self._dv_map(touched)
+            )
+            if touched
+            else self._empty_frame(v)
+        )
+        if evolved_schema is not None:
+            # evolution: touched files are rewritten WITH the new
+            # columns (NULL for existing rows); untouched files
+            # NULL-fill at scan time under the evolved log schema
+            for f in evolved_schema.fields:
+                if f.name not in tgt.columns:
+                    tgt = tgt.withColumn(f.name, F.lit(None).cast(f.dataType))
         # insert clauses still insert when NO target file intersects the
         # source keys: the join then runs against the empty frame, which
         # the optimizer drops (no exchange, the source is projected)
-        if touched or (nm_clauses and stats["n_all"] > 0):
+        if not (touched or (nm_clauses and stats["n_all"] > 0)):
+            # a merge that writes nothing still refuses a set expression
+            # the rule refuses (an analysis, no job)
+            j = tgt.alias("t").crossJoin(source.alias("s"))
+            for _k, _c, p in [*m_clauses, *nm_clauses, *bys_clauses]:
+                _conform_exprs(j, {c: F.expr(e) for c, e in (p or {}).items()}, tgt.schema)
+        else:
             # ONE full-outer join resolves keeps, updates/deletes and
             # inserts together (Delta's merge shape): one co-shuffle of
             # (touched rows, source rows). Presence markers classify
             # sides NULL-key-safely; the key join itself stays plain
             # equality (NULL keys never match — SQL MERGE).
-            tgt = (
-                self._read_paths(
-                    [e["path"] for e in touched], dv_map=self._dv_map(touched)
-                )
-                if touched
-                else self._empty_frame(v)
-            )
-            if evolved_schema is not None:
-                # evolution: touched files are rewritten WITH the new
-                # columns (NULL for existing rows); untouched files
-                # NULL-fill at scan time under the evolved log schema
-                for f in evolved_schema.fields:
-                    if f.name not in tgt.columns:
-                        tgt = tgt.withColumn(f.name, F.lit(None).cast(f.dataType))
             cols = tgt.columns
             if takes_all:
                 miss = [c for c in cols if c not in source.columns]
@@ -3046,7 +3076,9 @@ class VersionedTable:
                         f"clause set/values reference unknown target "
                         f"column(s) {unknown}"
                     )
-            dtypes = {f.name: f.dataType for f in tgt.schema.fields}
+            row_t = st.StructType(
+                [st.StructField(c, tgt.schema[c].dataType) for c in cols]
+            )
             t_img = F.struct(*[F.col(f"t.{c}").alias(c) for c in cols])
             # updateAll/insertAll: columns _align_schema NULL-backfilled
             # take the target value (Delta's autoMerge updateAll keeps
@@ -3060,9 +3092,7 @@ class VersionedTable:
                     for c in cols
                 ]
             )
-            null_img = F.lit(None).cast(
-                st.StructType([st.StructField(c, dtypes[c]) for c in cols])
-            )
+            null_img = F.lit(None).cast(row_t)
 
             def image(kind: str, payload) -> F.Column:
                 if kind == "delete":
@@ -3072,15 +3102,11 @@ class VersionedTable:
                 # an unmatched source row has every t. column NULL, so an
                 # absent column keeps the target value on an update and
                 # is NULL on an insert
+                sets = _conform_exprs(
+                    j, {c: F.expr(e) for c, e in payload.items()}, row_t
+                )
                 return F.struct(
-                    *[
-                        (
-                            F.expr(payload[c]).cast(dtypes[c])
-                            if c in payload
-                            else F.col(f"t.{c}")
-                        ).alias(c)
-                        for c in cols
-                    ]
+                    *[sets.get(c, F.col(f"t.{c}")).alias(c) for c in cols]
                 )
 
             unmatched_t = F.col(ms).isNull()
@@ -3119,7 +3145,7 @@ class VersionedTable:
                     rewritten = rewritten.withColumn(gcol, F.expr(gexpr))
             staged = _write_data_files(
                 rewritten, self.root, key_col, stats_cols=self._stats_cols,
-                colmap=self._colmap,
+                colmap=self._colmap, schema=row_t,
             )
             if self.constraints():
                 # a set/values expr can produce values the raw source
@@ -3378,9 +3404,9 @@ class VersionedTable:
         vs shuffle for the join.
 
         Assignment keys absent from the table schema raise ``ValueError``
-        (a typo'd column must not commit a silent no-op version). Returns
-        the new version; no rows touched still commits (an empty UPDATE is
-        a valid, auditable version).
+        (a typo'd column must not commit a silent no-op version); values
+        are cast by :func:`_store_casts`. Returns the new version; no rows
+        touched still commits (an empty UPDATE is a valid, auditable version).
         """
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
         assigns = {
@@ -3419,19 +3445,22 @@ class VersionedTable:
             if member is not None:
                 tgt, hit = self._with_membership(tgt, *member)
                 pred = pred & hit
+            sets = _conform_exprs(tgt, assigns, sch)
             rewritten = tgt.select(
                 *[
-                    F.when(pred, assigns[c]).otherwise(_col(c)).alias(c)
-                    if c in assigns
+                    F.when(pred, sets[c]).otherwise(_col(c)).alias(c)
+                    if c in sets
                     else _col(c)
                     for c in out_cols
                 ]
             )
-            self._check_constraints(rewritten)
             new_files = _write_data_files(
                 rewritten, self.root, key_col, stats_cols=self._stats_cols,
-                colmap=self._colmap,
+                colmap=self._colmap, schema=sch, check=self._check_constraints,
             )
+        else:
+            # an UPDATE that matches no file refuses a type all the same
+            _conform_exprs(self._empty_frame(v), assigns, sch)
         # losing an OCC race auto-rebases when provably safe (round 11):
         # data-only winners that touched none of our files AND added
         # nothing our spec admits — the already-written files re-commit
@@ -4312,12 +4341,11 @@ class VersionedTable:
         verified, not assumed, in tests/test_versioned.py). Narrowings
         and cross-family changes are refused with the allowed matrix.
 
-        Interplay: later appends/merges should supply the NEW type;
-        frames still carrying the OLD (or any narrower-widenable) type
-        are upcast automatically by :meth:`_align_schema` instead of
-        refused — Delta's writer does the same. A streaming follower
-        sees the schema change and fails with its restart contract
-        (the stream-start schema is the fixed view)."""
+        Interplay: later writes cast frames of the OLD type to the NEW
+        one by :func:`_store_casts`, as Delta's writer does; the
+        data-source writer, which writes Arrow batches as given, refuses
+        them. A streaming follower sees the schema change and fails with
+        its restart contract (the stream-start schema is the fixed view)."""
         from pyspark.sql.types import DataType, StructField, StructType
 
         schema = self._log_schema()
@@ -4588,10 +4616,9 @@ class VersionedTable:
         df = self._apply_generated(df)
         cur = self._log_schema() or self.snapshot().schema
         df, _evolved = self._align_schema(df, cur, False, op="append")
-        self._check_constraints(df)
         adds = _write_data_files(
             df, self.root, key_col, stats_cols=self._stats_cols,
-            colmap=self._colmap,
+            colmap=self._colmap, schema=cur, check=self._check_constraints,
         )
         id_meta = self._allocate_identity(adds) if ident is not None else None
         v = self.latest_version()

@@ -2496,7 +2496,9 @@ def execute_dml(
     version does not move."""
     from pyspark.sql import functions as F
 
-    from database_anonymiser_spark.sources.versioned import VersionedTable
+    from database_anonymiser_spark.sources.versioned import (
+        VersionedTable, _conform, _conform_exprs, _merge_keys,
+    )
 
     kind = classify_dml(stmt)
     if kind is None:  # defensive; the caller classified already
@@ -2526,6 +2528,9 @@ def execute_dml(
                 raise SqlDmlError(
                     f"UPDATE assigns columns absent from {u.table!r}: {unknown}"
                 )
+            # and through the store-assignment rule the real op applies
+            assigns = {c: F.expr(e) for c, e in u.assignments.items()}
+            _conform_exprs(vt.snapshot(), assigns, sch)
             return {
                 "mode": "sql_dml_dryrun", "op": kind, "table": u.table,
                 "rows_would_change": int(n), "statement": stmt,
@@ -2564,7 +2569,7 @@ def execute_dml(
         ins = _parse_insert(stmt)
         table_name = ins.table
         vt = _dml_target(spark, kind, ins.table, versioned_views)
-        sch = vt.snapshot().schema
+        sch = vt._log_schema() or vt.snapshot().schema
         ident = vt.identity_column()
         gen_cols = set(vt.generated_columns() or ())
         target_cols = ins.columns or [f.name for f in sch.fields]
@@ -2584,24 +2589,22 @@ def execute_dml(
                 f"INSERT arity mismatch: {len(target_cols)} target "
                 f"column(s), source has {len(src.columns)}"
             )
-        # positional mapping (SQL INSERT semantics), cast to the target
-        # types; unnamed columns NULL-fill — except identity (allocated
-        # by append) and generated columns (recomputed by append)
-        by_type = {f.name: f.dataType for f in sch.fields}
-        named = {
-            t: F.col(c).cast(by_type[t]).alias(t)
-            for c, t in zip(src.columns, target_cols)
-        }
+        # positional mapping (SQL INSERT semantics); append conforms the
+        # types by the store-assignment rule. Unnamed columns NULL-fill —
+        # except identity (allocated by append) and generated columns
+        # (recomputed by append)
+        named = {t: F.col(c).alias(t) for c, t in zip(src.columns, target_cols)}
         for f in sch.fields:
             if f.name in named or f.name in gen_cols or (
                 ident is not None and f.name == ident[0]
             ):
                 continue
-            named[f.name] = F.lit(None).cast(f.dataType).alias(f.name)
+            named[f.name] = F.lit(None).alias(f.name)
         # schema field order — append's alignment is name-based but a
         # schema-ordered frame is what a reader of the report expects
         df = src.select(*[named[f.name] for f in sch.fields if f.name in named])
         if dryrun:
+            _conform(df, sch)  # the store-assignment rule append applies
             return {
                 "mode": "sql_dml_dryrun",
                 "op": "insert_overwrite" if ins.overwrite else kind,
@@ -2671,6 +2674,13 @@ def execute_dml(
                 src = src.withColumnRenamed(scol, tcol)
         if dryrun:
             key_list = list(key_cols)
+            # the real merge's key rule: a key cast it refuses, or one
+            # that changes a source key's value, refuses the dry run too
+            sch = vt._log_schema() or vt.snapshot().schema
+            n_changed = _merge_keys(src, sch, key_list)[1]
+            if n_changed is not None and src.agg(n_changed).first()[0]:
+                raise SqlDmlError("store assignment would change a source "
+                                  "key value; the merge refuses such a cast")
             if res_sql:
                 # full-ON matched count: key equality AND the residual
                 t = vt.snapshot().alias("t")

@@ -280,10 +280,11 @@ def test_point_delete_rebases_past_a_bloom_disjoint_winner(
 
 
 def test_points_merge_with_a_differently_typed_source_key(spark, tmp_path):
-    """A bloom probe hashes ``str(value)``: an INT source key 1 joins the
-    DOUBLE row 1.0 but renders "1" against the bloom's "1.0". A points
-    merge with such a source skips by range instead, so it updates the
-    row rather than skipping its file and inserting a duplicate key."""
+    """A bloom probe hashes ``str(value)``: an INT source key 1 would
+    render "1" against the bloom's "1.0". Merge casts its source keys to
+    the table's types first, so the points merge probes the bloom with
+    1.0 and updates the row rather than skipping its file and inserting
+    a duplicate key."""
     sch = "k double, v string"
     t = VersionedTable.create(
         spark, str(tmp_path / "t"),
@@ -296,7 +297,7 @@ def test_points_merge_with_a_differently_typed_source_key(spark, tmp_path):
         spark.createDataFrame([(1, "x")], "k int, v string"), skip_by="points"
     )
     m = t.commit_meta(v)["metrics"]
-    assert m["skip_by"] == "range" and m["files_touched"] == 1
+    assert m["skip_by"] == "points" and m["files_touched"] == 1
     assert sorted(tuple(r) for r in t.snapshot().collect()) == [
         (1.0, "x"), (2.0, "b"), (10.0, "c")
     ]

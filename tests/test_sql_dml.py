@@ -2112,6 +2112,37 @@ def test_e2e_changes_table_timestamp_bounds(spark, dml_env, tmp_path):
     assert rows == {("update_preimage", 1), ("update_postimage", 1)}
 
 
+def test_cli_default_view_face_answers_every_scan(spark, tmp_path, in_tmp_path):
+    """Under the CLI's default flags a --versionedTable view is the plain
+    snapshot face: a view scanned twice in one statement, or again after
+    a filtered query, counts every file of a two-file table."""
+    root = tmp_path / "d"
+    t = VersionedTable.create(
+        spark, str(root),
+        spark.createDataFrame([(1, "a")], "k int, v string").coalesce(1),
+        key_col="k",
+    )
+    t.append(spark.createDataFrame([(2, "b")], "k int, v string").coalesce(1))
+    data_dir = tmp_path / "data"
+    data_dir.mkdir()
+    out = tmp_path / "u"
+    rc = _run([
+        "--sql", "SELECT count(*) AS n FROM d WHERE k = 1 "
+        "UNION ALL SELECT count(*) AS n FROM d",
+        "--data", str(data_dir), "--versionedTable", f"d={root}",
+        "--out", str(out),
+    ])
+    assert rc == 0
+    assert sorted(r["n"] for r in spark.read.parquet(str(out)).collect()) == [1, 2]
+    rc = _run([
+        "--sql", "SELECT v FROM d WHERE k = 2",
+        "--data", str(data_dir), "--versionedTable", f"d={root}",
+    ])
+    assert rc == 0
+    # the view the CLI registered stays in the session
+    assert spark.sql("SELECT count(*) FROM d").first()[0] == 2
+
+
 def test_e2e_optimize_merge_runs_and_pushdown(spark, dml_env, tmp_path):
     """OPTIMIZE ... MERGE RUNS k reaches the round-13 bounded
     cross-generation merge from SQL; --pushdown registers versioned
@@ -2152,17 +2183,16 @@ def test_e2e_optimize_merge_runs_and_pushdown(spark, dml_env, tmp_path):
         "--data", str(data_dir), "--versionedTable", f"other={root2}",
     ])
     assert rc == 2
-    # pushdown face is the DEFAULT since round 14 (parity baked in
-    # round 13 behind the flag): same answers through the pruning reader
+    # --pushdown: same answers through the pruning reader
     out = tmp_path / "pd"
     rc = _run([
         "--sql", "SELECT k, v FROM cust WHERE k >= 50",
         "--data", str(data_dir), "--versionedTable", f"cust={root}",
-        "--out", str(out),
+        "--pushdown", "--out", str(out),
     ])
     assert rc == 0
     assert sorted(r["k"] for r in spark.read.parquet(str(out)).collect()) == [50, 60]
-    # --no-pushdown restores the plain snapshot face, same answers
+    # --no-pushdown (the default) is the plain snapshot face, same answers
     out2 = tmp_path / "pd2"
     rc = _run([
         "--sql", "SELECT k, v FROM cust WHERE k >= 50",

@@ -3592,9 +3592,12 @@ def test_merge_schema_evolution_preserves_target_only_cols(spark, table):
 
 
 def test_merge_schema_evolution_rejects_type_change(spark, table):
+    """A type change is not evolution: the store-assignment rule casts
+    the ``long v`` source into the table's ``double v``."""
     src = spark.createDataFrame([(1, "x", 5)], "k long, name string, v long")
-    with pytest.raises(ValueError, match="cannot change column types"):
-        table.merge(src, merge_schema=True)
+    table.merge(src, merge_schema=True)
+    assert dict(table.snapshot().dtypes)["v"] == "double"
+    assert table.snapshot().where("k = 1").first()["v"] == 5.0
 
 
 def test_apply_changes_schema_evolution_replica_follows_ddl(spark, tmp_path):
