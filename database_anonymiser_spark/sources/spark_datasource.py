@@ -43,7 +43,8 @@ delegate to the DataFrame-based ``diff()``), aligned to the logical
 schema (missing columns NULL-filled, post-evolution extras dropped,
 COLUMN MAPPING applied physical→logical from the partition's carried
 map). That makes the source distributed at any scale: a 10k-file
-backfill interval is 10k independent Arrow reads.
+backfill interval is 10k independent Arrow reads. A snapshot read
+packs consecutive small live files into one partition (``_PACK_BYTES``).
 """
 
 from __future__ import annotations
@@ -93,6 +94,22 @@ class _EmptyPartition(InputPartition):
 
     def __init__(self):
         super().__init__(0)
+
+
+#: a snapshot read packs consecutive live files into one partition (one
+#: Python task) up to this many bytes; a larger file reads alone. A task
+#: costs about what pyarrow takes to read a few MB, so the small files
+#: that DV updates and merges add between compactions share a task
+#: instead of paying one each (Spark's own file scans weigh a file open
+#: at the same 4 MB, ``spark.sql.files.openCostInBytes``).
+_PACK_BYTES = 4 << 20
+
+
+class _FilesPartition(InputPartition):
+    """Consecutive live files of a snapshot read, read by one task."""
+
+    def __init__(self, files: list):
+        self.files = files
 
 
 class _FilePartition(InputPartition):
@@ -153,7 +170,7 @@ def _scan_expr(filters, schema):
 
 
 def _read_file_aligned(part: _FilePartition):
-    """One partition = one parquet file, read with pure pyarrow and
+    """One parquet file of a partition, read with pure pyarrow and
     aligned to the logical schema: dataset-projection against the
     physical rendering (typed NULL-fill for pre-evolution files,
     post-evolution extras dropped), then one rename physical→logical.
@@ -263,7 +280,7 @@ class _SnapshotReader(DataSourceReader):
         scanf = [
             (m.get(c, c), kind, payload) for c, kind, payload in self.pushed
         ] or None
-        out = []
+        out, size = [], 0
         for e in live.values():
             if not skip.admits(e):
                 continue
@@ -273,15 +290,20 @@ class _SnapshotReader(DataSourceReader):
             dv = e.get("dv")
             if dv and not os.path.isabs(dv):
                 dv = str(root / dv)
-            out.append(
+            b = e.get("size") or _PACK_BYTES
+            if not out or size + b > _PACK_BYTES:
+                out.append(_FilesPartition([]))
+                size = 0
+            out[-1].files.append(
                 _FilePartition(path, phys, names, dv_path=dv, scan_filters=scanf)
             )
+            size += b
         return out or [_EmptyPartition()]
 
     def read(self, partition):
         if partition is None or isinstance(partition, _EmptyPartition):
             return iter(())
-        return _read_file_aligned(partition)
+        return (b for f in partition.files for b in _read_file_aligned(f))
 
 
 class _PushdownSnapshotReader(_SnapshotReader):

@@ -765,9 +765,27 @@ def _py_bound(v):
     return v if isinstance(v, int) else str(v)
 
 
+def _point_types(schema) -> dict:
+    """{lowercased column: the Python type an IN value must have to be
+    probed as a point}: ``int`` for integral columns, ``str`` for string
+    ones. A bloom hashes ``str(value)`` as stored, so a value of another
+    type (``1`` against a double's ``1.0``) would miss its own row; such
+    a column skips by range instead (the merge keys' rule)."""
+    from pyspark.sql import types as T
+
+    kinds = {T.ByteType: int, T.ShortType: int, T.IntegerType: int,
+             T.LongType: int, T.StringType: str}
+    return {
+        f.name.lower(): kinds[type(f.dataType)]
+        for f in (schema.fields if schema is not None else ())
+        if type(f.dataType) in kinds
+    }
+
+
 def _prune(conjuncts: list[_Node], qualifiers: dict[str, str],
-           in_values: dict | None = None) -> dict:
-    """``{col: (lo, hi) | "isnull" | "notnull"}`` file-skipping hints
+           in_values: dict | None = None,
+           point_types: dict | None = None) -> dict:
+    """``{col: (lo, hi) | {values} | "isnull" | "notnull"}`` file-skipping hints
     IMPLIED by a conjunction — what Delta compiles from the WHERE clause,
     rendered for the native ops' ``prune=`` vocabulary (round 13: a
     scoped SQL UPDATE/DELETE must cost O(files containing matches), not
@@ -779,6 +797,10 @@ def _prune(conjuncts: list[_Node], qualifiers: dict[str, str],
     contribute; anything else (an OR, functions, subqueries,
     column-to-column) is simply not pruned on.  ``in_values`` maps an
     ``IN (SELECT ...)`` node (by ``id``) to its materialized values.
+    ``point_types`` (:func:`_point_types` of the target table) turns an
+    IN list on a column whose type its values share into a point set —
+    range stats and the bloom then skip per value; any other IN list
+    relaxes to its ``[min, max]`` range.
     The native ops additionally conjoin the prune into the row predicate
     (their documented self-consistency contract), so a derived hint can
     narrow a read but never split semantics."""
@@ -789,6 +811,15 @@ def _prune(conjuncts: list[_Node], qualifiers: dict[str, str],
         if col in unprunable:
             return
         cur = out.get(col)
+        if isinstance(cur, set):
+            # points AND a range: the points inside it
+            try:
+                out[col] = {x for x in cur if (lo is None or x >= lo)
+                            and (hi is None or x <= hi)}
+            except TypeError:
+                unprunable.add(col)
+                out.pop(col, None)
+            return
         if isinstance(cur, str):
             cur = (None, None)
         clo, chi = cur if cur else (None, None)
@@ -831,7 +862,16 @@ def _prune(conjuncts: list[_Node], qualifiers: dict[str, str],
                 c.in_list if c.kind == "In"
                 else (in_values or {}).get(id(c))
             )
-            if vals and None not in vals:
+            want = (point_types or {}).get(col.lower())
+            if vals and None not in vals and col not in unprunable and (
+                want is not None and all(type(x) is want for x in vals)
+            ):
+                cur = out.get(col)
+                pts = set(vals) if not isinstance(cur, set) else cur & set(vals)
+                out[col] = pts
+                if isinstance(cur, tuple):
+                    _narrow(col, *cur)  # an earlier range filters the points
+            elif vals and None not in vals:
                 try:
                     _narrow(col, min(vals), max(vals))
                 except TypeError:
@@ -889,7 +929,8 @@ def _sql_literal(v) -> str:
     return _sq_quote(v)
 
 
-def _resolve_where(spark, where: "_Node | None", qualifiers: dict[str, str]):
+def _resolve_where(spark, where: "_Node | None", qualifiers: dict[str, str],
+                   point_types: dict | None = None):
     """The WHERE as executed: ``(predicate, membership, prune)``.
 
     ``predicate`` is the text with ``qualifiers`` applied and every
@@ -912,7 +953,8 @@ def _resolve_where(spark, where: "_Node | None", qualifiers: dict[str, str]):
     statement (two subject sets would need two joins); anything else is
     refused with guidance to use MERGE.
 
-    ``prune`` is :func:`_prune` over the executed conjuncts."""
+    ``prune`` is :func:`_prune` over the executed conjuncts, with the
+    target's ``point_types``."""
     if where is None:
         return None, None, None
     subs: dict = {}
@@ -943,7 +985,7 @@ def _resolve_where(spark, where: "_Node | None", qualifiers: dict[str, str]):
             subs[id(n)] = (n.span, "(TRUE)" if negated else "(FALSE)", False)
     if not big:
         return (_render(where, qualifiers, subs), None,
-                _prune(where.conjuncts, qualifiers, in_values))
+                _prune(where.conjuncts, qualifiers, in_values, point_types))
     term, operands, sub, negated = big[0]
     col = _column(operands[0], qualifiers) if len(operands) == 1 else None
     if col is None:
@@ -971,7 +1013,7 @@ def _resolve_where(spark, where: "_Node | None", qualifiers: dict[str, str]):
         _render(c, qualifiers, subs, parens=True) for c in kept
     ) or None
     return (pred, (col, spark.sql(sub), negated),
-            _prune(kept, qualifiers, in_values))
+            _prune(kept, qualifiers, in_values, point_types))
 
 
 def _materialize_in_subqueries(spark, pred: str) -> str | None:
@@ -1968,7 +2010,8 @@ def _execute_explain(spark, inner: str, stmt: str, versioned_views: dict) -> dic
     def _scan_effect(vt, prune: dict):
         total = len(vt.files_matching({}))
         out["prune"] = {
-            c: (list(b) if isinstance(b, tuple) else b)
+            c: (list(b) if isinstance(b, tuple)
+                else {"in": sorted(b)} if isinstance(b, set) else b)
             for c, b in (prune or {}).items()
         }
         out["files_total"] = total
@@ -1981,7 +2024,9 @@ def _execute_explain(spark, inner: str, stmt: str, versioned_views: dict) -> dic
         (SELECT ...) included — and report which plan such a term takes
         and what the derived skipping reads."""
         quals = {table.lower(): ""}
-        new_pred, membership, prune = _resolve_where(spark, where, quals)
+        new_pred, membership, prune = _resolve_where(
+            spark, where, quals, _point_types(vt._log_schema())
+        )
         if membership is not None:
             col, subjects, negated = membership
             out["membership"] = {
@@ -2107,7 +2152,9 @@ def _execute_explain(spark, inner: str, stmt: str, versioned_views: dict) -> dic
         vt = _vt(name)
         out["class"] = "select"
         out["native_op"] = "pushdown_scan"
-        _scan_effect(vt, _prune(where.conjuncts, quals) if where is not None else {})
+        _scan_effect(vt, _prune(
+            where.conjuncts, quals, point_types=_point_types(vt._log_schema())
+        ) if where is not None else {})
         return out
     raise SqlDmlError(
         "EXPLAIN supports the engine's own statement shapes "
@@ -2223,7 +2270,9 @@ def execute_utility(
             rows = [
                 {"version": h["version"], "op": h["op"], "ts": h.get("ts"),
                  "adds": len(h.get("adds", [])),
-                 "removes": len(h.get("removes", []))}
+                 "removes": len(h.get("removes", [])),
+                 # Delta's operationMetrics column
+                 "metrics": (h.get("meta") or {}).get("metrics", {})}
                 for h in t.history()
             ]
         else:
@@ -2336,7 +2385,7 @@ def execute_utility(
     if sh.op == "erase":
         pred, membership, prune = _resolve_where(
             spark, _parse(a["where"].strip(), expression=True),
-            {name.lower(): ""},
+            {name.lower(): ""}, _point_types(t._log_schema()),
         )
         if dryrun:
             # the one dryrun-able maintenance statement (round 15): a
@@ -2512,7 +2561,7 @@ def execute_dml(
         # unlocks the IN-list skipping); above it, a conjunct-level term
         # becomes a distributed semi-join spec
         pred, membership, prune = _resolve_where(
-            spark, u.where, {u.table.lower(): ""}
+            spark, u.where, {u.table.lower(): ""}, _point_types(vt._log_schema())
         )
         if dryrun:
             would = vt.snapshot().where(F.expr(pred or "true"))
@@ -2549,7 +2598,7 @@ def execute_dml(
         table_name = d.table
         vt = _dml_target(spark, kind, d.table, versioned_views)
         pred, membership, prune = _resolve_where(
-            spark, d.where, {d.table.lower(): ""}
+            spark, d.where, {d.table.lower(): ""}, _point_types(vt._log_schema())
         )
         if dryrun:
             would = vt.snapshot().where(F.expr(pred or "true"))

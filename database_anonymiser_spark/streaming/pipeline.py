@@ -1117,7 +1117,6 @@ def neardedup_forget(
     out_root: str,
     store_root: str,
     doc_ids,
-    dv: bool = True,
 ) -> dict:
     """Per-document right-to-be-forgotten for the near-dedup ingest
     (round 9) — remove documents from the curated OUT table AND their
@@ -1130,10 +1129,11 @@ def neardedup_forget(
       band rows are SCATTERED across the bucket keyspace, so range stats
       cannot find them): located via the ``id`` BLOOM sidecar index
       (built once on first call via ``analyze(bloom_cols=('id',))``,
-      maintained by every subsequent write) and deleted with DELETION
-      VECTORS by default — a forget of one document marks ~n_bands rows
-      dead in a handful of files, rewriting nothing. ``dv=False`` uses
-      the rewrite path (same pruned touch set).
+      maintained by every subsequent write) and deleted by
+      ``delete_where``, whose cost rule marks the few matched rows dead
+      with DELETION VECTORS — a forget of one document marks ~n_bands
+      rows dead in a handful of files, rewriting nothing — and rewrites
+      instead when they are a large share of the touched files.
 
     Forgetting also forgets the DEDUP MEMORY for those documents — a
     later re-delivery of the same or near-duplicate text is admitted
@@ -1171,7 +1171,7 @@ def neardedup_forget(
     touched = store.files_matching_any("id", ids)
     meta["store_files_touched"] = len(touched)
     n_store = store.row_count()
-    store.delete_where(F.col("id").isin(ids), dv=dv, prune={"id": set(ids)})
+    store.delete_where(F.col("id").isin(ids), prune={"id": set(ids)})
     meta["store_rows_marked"] = n_store - store.row_count()
     return meta
 

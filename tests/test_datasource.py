@@ -13,8 +13,16 @@ import json
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
+import database_anonymiser_spark.sources.versioned as V
 from database_anonymiser_spark.sources.versioned import VersionedTable
+
+
+def _scanned(r) -> list:
+    """The files a data-source reader's partitions hold, in scan order
+    (a partition packs consecutive small files)."""
+    return [f for p in r.partitions() for f in p.files]
 
 
 @pytest.fixture()
@@ -119,7 +127,9 @@ def test_versioned_datasource_schema_evolution_null_fill(registered, tmp_path):
     assert rows == {1: None, 2: 9}
 
 
-def test_versioned_datasource_reads_honor_deletion_vectors(registered, tmp_path):
+def test_versioned_datasource_reads_honor_deletion_vectors(
+    registered, tmp_path, monkeypatch
+):
     """A snapshot through format("versioned") must drop DV-marked rows —
     the executor-side pyarrow reader applies the sidecar mask before any
     batch leaves the partition (a DV'd row must never resurrect through
@@ -141,7 +151,9 @@ def test_versioned_datasource_reads_honor_deletion_vectors(registered, tmp_path)
     _drain(spark, root, out_dir, ck)
     assert spark.read.parquet(str(out_dir)).count() == 40
 
-    v = t.delete_where("k % 10 = 3", dv=True)
+    # 4 of 40 rows: a share that lets the cost rule mark them
+    monkeypatch.setattr(V, "DV_MAX_SHARE", 0.25)
+    v = t.delete_where("k % 10 = 3")
     assert t.commit_op(v) == "delete_dv"
     got = spark.read.format("versioned").option("path", str(root)).load()
     assert got.count() == 36
@@ -152,6 +164,49 @@ def test_versioned_datasource_reads_honor_deletion_vectors(registered, tmp_path)
         _drain(spark, root, out_dir, ck)
     _drain(spark, root, out_dir, ck, skipChangeCommits="true")
     assert spark.read.parquet(str(out_dir)).count() == 40  # nothing re-sent
+
+
+def test_snapshot_read_packs_small_files_into_one_task(
+    registered, tmp_path, monkeypatch
+):
+    """A snapshot read hands Spark one partition (one Python task) per
+    run of consecutive live files up to ``_PACK_BYTES``: the small files
+    DV updates and merges add between compactions share a task, and a
+    file past the bound reads alone. The rows are the same either way."""
+    import database_anonymiser_spark.sources.spark_datasource as DS
+
+    spark = registered
+    root = tmp_path / "p"
+    t = VersionedTable.create(
+        spark, root,
+        spark.createDataFrame(
+            [(i, f"n{i}") for i in range(50)], "k long, name string"
+        ).coalesce(1),
+        key_col="k",
+    )
+    for lo in (50, 100, 150):
+        t.append(spark.createDataFrame(
+            [(i, f"n{i}") for i in range(lo, lo + 50)], "k long, name string"
+        ).coalesce(1))
+    t.update_where({"name": F.lit("u")}, "k = 7")  # a DV and one more file
+    files = t._live_entries()
+    assert len(files) == 5 and any(e.get("dv") for e in files)
+
+    parts = DS._SnapshotReader(str(root)).partitions()
+    assert [len(p.files) for p in parts] == [5]
+    want = sorted((i, "u" if i == 7 else f"n{i}") for i in range(200))
+    got = spark.read.format("versioned").option("path", str(root)).load()
+    assert got.rdd.getNumPartitions() == 1
+    assert sorted(tuple(r) for r in got.collect()) == want
+
+    monkeypatch.setattr(DS, "_PACK_BYTES", min(e["size"] for e in files))
+    parts = DS._SnapshotReader(str(root)).partitions()
+    assert [len(p.files) for p in parts] == [1] * 5
+    assert sorted(
+        (r["k"], r["name"]) for p in parts
+        for b in DS._SnapshotReader(str(root)).read(p)
+        for r in b.to_pylist()
+    ) == want
 
 
 def test_stream_writer_epoch_replay_survives_housekeeping(registered, tmp_path):
@@ -257,17 +312,17 @@ def test_pushdown_reader_prunes_files_by_stats_and_bloom(registered, tmp_path):
     r = _PushdownSnapshotReader(str(root))
     kept = r.pushFilters([EqualTo(("k",), 42)])
     assert list(kept) == [EqualTo(("k",), 42)]  # all returned to Spark
-    assert len(r.partitions()) == len(t.files_matching_any("k", [42]))
-    assert len(r.partitions()) < total
+    assert len(_scanned(r)) == len(t.files_matching_any("k", [42]))
+    assert len(_scanned(r)) < total
 
     r2 = _PushdownSnapshotReader(str(root))
     r2.pushFilters([GreaterThan(("k",), 1750)])
-    assert len(r2.partitions()) == len(t.files_matching({"k": (1751, 2**62)}))
-    assert len(r2.partitions()) < total
+    assert len(_scanned(r2)) == len(t.files_matching({"k": (1751, 2**62)}))
+    assert len(_scanned(r2)) < total
 
     r3 = _PushdownSnapshotReader(str(root))
     r3.pushFilters([In(("dom",), ("d3", "d5"))])
-    assert len(r3.partitions()) == len(t.files_matching_any("dom", ["d3", "d5"]))
+    assert len(_scanned(r3)) == len(t.files_matching_any("dom", ["d3", "d5"]))
 
     # base reader never defines pushFilters (worker refuses it when the
     # session conf is off — the reason pushdown is an opt-in subclass)
@@ -282,11 +337,11 @@ def test_pushdown_reader_prunes_files_by_stats_and_bloom(registered, tmp_path):
     )
 
     scanned = [
-        b.num_rows for p in r2.partitions() for b in _read_file_aligned(p)
+        b.num_rows for p in _scanned(r2) for b in _read_file_aligned(p)
     ]
     assert sum(scanned) == 250  # k >= 1750, not the ~2000-row file set
     scanned_in = [
-        b.num_rows for p in r3.partitions() for b in _read_file_aligned(p)
+        b.num_rows for p in _scanned(r3) for b in _read_file_aligned(p)
     ]
     assert sum(scanned_in) == sum(1 for i in range(2000) if i % 17 in (3, 5))
 
@@ -307,7 +362,7 @@ def test_pushdown_reader_prunes_files_by_stats_and_bloom(registered, tmp_path):
         # deletion vectors: positional masks apply BEFORE the scan
         # filter — a DV'd row must not resurrect through the filtered
         # scan, and survivors stay exact
-        t.delete_where("k % 500 = 499", dv=True)
+        t.delete_where("k % 500 = 499")
         pushed2 = (
             spark.read.format("versioned")
             .option("path", str(root)).option("pushdown", "true").load()
@@ -483,7 +538,7 @@ def test_versioned_datasource_writer_batch_and_stream(registered, tmp_path):
     assert dst.snapshot().where("k = 999").first()["score"] == 9.5
 
 
-def test_stream_read_change_feed_full_lifecycle(registered, tmp_path):
+def test_stream_read_change_feed_full_lifecycle(registered, tmp_path, monkeypatch):
     """readChangeFeed=true — the Delta streaming-CDF face: every commit's
     row-level change events, tagged _change_type / _commit_version /
     _commit_timestamp, exactly matching the native batch diff
@@ -510,7 +565,9 @@ def test_stream_read_change_feed_full_lifecycle(registered, tmp_path):
         ),
         when_matched="update",
     )
-    t.delete_where("k = 2", dv=True)
+    # 1 of 7 rows: a share that lets the cost rule mark it
+    monkeypatch.setattr(V, "DV_MAX_SHARE", 0.25)
+    t.delete_where("k = 2")
     t.update_where({"name": "upper(name)"}, "k = 3")
     t.compact(target_file_bytes=1 << 20)
     t.append(
@@ -675,7 +732,7 @@ def test_stream_replicate_mirrors_source(registered, tmp_path):
         ),
         when_matched="update",
     )
-    t.delete_where("k % 9 = 4", dv=True)
+    t.delete_where("k % 9 = 4")
     t.update_where({"name": "upper(name)"}, "k = 2")
     t.compact(target_file_bytes=1 << 20)
 
@@ -843,7 +900,7 @@ def test_cdf_diff_partitions_split_by_key_disjoint_groups(registered, tmp_path):
         [(i, float(i)) for i in range(1000)], "k long, v double"
     ).repartitionByRange(8, "k")
     t = VersionedTable.create(spark, root, df, key_col="k")
-    t.delete_where("k < 50 or k >= 950", dv=True)
+    t.delete_where("k < 50 or k >= 950")
 
     rdr = _ChangesStreamReader(str(root), {"readchangefeed": "true"})
     start = {"version": 0}  # past the create: just the delete commit

@@ -6,9 +6,11 @@ the same predicate, because each builds the one ``_SkipSpec``."""
 
 from __future__ import annotations
 
+import datetime
 import os
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql.datasource import (
     GreaterThanOrEqual,
     In,
@@ -22,7 +24,7 @@ from database_anonymiser_spark.sources.spark_datasource import (
     _PushdownSnapshotReader,
 )
 from database_anonymiser_spark.sources.versioned import VersionedTable
-from database_anonymiser_spark.sql_dml import execute_utility
+from database_anonymiser_spark.sql_dml import execute_dml, execute_utility
 
 SCHEMA = "a int, b int, n int, tag string"
 
@@ -69,7 +71,7 @@ def _pushdown(t, filters) -> set:
     r = _PushdownSnapshotReader(str(t.root))
     r.pushFilters(filters)
     return {
-        os.path.basename(p.path) for p in r.partitions() if hasattr(p, "path")
+        os.path.basename(f.path) for p in r.partitions() for f in getattr(p, "files", ())
     }
 
 
@@ -132,8 +134,8 @@ def test_every_site_picks_the_same_files(
 def test_in_list_on_a_bloom_column(spark, table):
     """A point set on the unclustered ``tag`` column: range stats keep
     every file, the per-column bloom keeps the one holding the values —
-    at every site that takes the points. SQL keeps its range
-    relaxation for IN lists (a superset: every file)."""
+    at every site that takes the points, SQL EXPLAIN and DELETE included
+    (a string IN list on a string column is a point set)."""
     t = table
     order = _files(t)
     vals = {"t09", "t13"}  # both in file 1 only
@@ -144,10 +146,39 @@ def test_in_list_on_a_bloom_column(spark, table):
     assert _read_files(lambda: t.read_matching_any("tag", sorted(vals))) == 1
     assert _read_files(lambda: t.read_where({"tag": vals})) == 1
     assert _scope_merge(spark, t, {"tag": vals}) == 1
-    assert _explain(spark, t, "tag IN ('t09', 't13')") == 4
+    assert _explain(spark, t, "tag IN ('t09', 't13')") == 1
     assert sorted(r.tag for r in t.read_where({"tag": vals}).collect()) == [
         "t09", "t13"
     ]
+    n = t.row_count()
+    f0 = V.DATA_FILES_READ
+    frag = execute_dml(
+        spark, "DELETE FROM t WHERE tag IN ('t09', 't13')",
+        {"t": {"root": str(t.root), "pinned": False}},
+    )
+    assert V.DATA_FILES_READ - f0 == 1
+    assert frag["metrics"]["files_touched"] == 1
+    assert t.row_count() == n - 2
+
+
+def test_point_row_test_is_one_sql_expression(spark):
+    """A points term's row test is one ``IN`` parsed from SQL text (an
+    ``isin`` of literals costs one py4j call per value) and selects what
+    ``isin`` selects, for every literal type it renders."""
+    vals = ["o'k", "back\\slash", "é中", "", 'q"', "t\nu"]
+    df = spark.createDataFrame(
+        [(i, s, float(i) / 2, i % 2 == 0, datetime.date(2020, 1, i + 1))
+         for i, s in enumerate([*vals, "miss"])],
+        "i bigint, s string, d double, b boolean, t date",
+    )
+    for col, pts in (
+        ("s", vals), ("i", [0, 3, 2**40]), ("d", [0.5, 1e20, 2.0]),
+        ("b", [True]), ("t", [datetime.date(2020, 1, 2)]),  # takes isin
+    ):
+        got = V._SkipSpec([(col, "points", pts)], "/", None).row_predicate()
+        want = df.where(F.col(col).isin(pts))
+        assert sorted(df.where(got).collect()) == sorted(want.collect()), col
+    assert "'o\\'k'" in str(V._isin("s", ["o'k"]))
 
 
 def test_tuple_points_use_the_tuple_bloom(spark, table):
@@ -209,10 +240,15 @@ def test_empty_point_set_admits_nothing(spark, table):
 
 
 @pytest.mark.parametrize("dv", [False, True])
-def test_delete_with_a_point_set_prune(spark, tmp_path, dv):
+def test_delete_with_a_point_set_prune(spark, monkeypatch, tmp_path, dv):
     """``delete_where(prune={col: set})`` is the point-lookup delete:
     range stats and the bloom pick the touched files — the set
-    ``files_matching_any`` names — on the rewrite and the DV path."""
+    ``files_matching_any`` names — on the rewrite and the DV path (a
+    quarter share lets the cost rule pick DVs for 3 of 20 rows; a zero
+    budget forces the rewrite)."""
+    if not dv:
+        monkeypatch.setattr(V, "DV_COLLECT_CAP", 0)
+    monkeypatch.setattr(V, "DV_MAX_SHARE", 0.25)
     spark.dataSource.register(VersionedDataSource)
     t = VersionedTable.create(
         spark, str(tmp_path / "t"),
@@ -228,7 +264,7 @@ def test_delete_with_a_point_set_prune(spark, tmp_path, dv):
     before = t.row_count()
     f0 = V.DATA_FILES_READ
     v = t.delete_where(f"tag IN ('{gone[0]}', '{gone[1]}', '{gone[2]}')",
-                       dv=dv, prune={"tag": set(gone)})
+                       prune={"tag": set(gone)})
     assert V.DATA_FILES_READ - f0 == len(expect)
     if not dv:
         assert t.commit_meta(v)["metrics"]["files_touched"] == len(expect)
@@ -245,7 +281,10 @@ def test_point_delete_rebases_past_a_bloom_disjoint_winner(
     """A point-set delete loses an OCC race to an append whose file's
     [min, max] covers the deleted values but whose bloom proves them
     absent: the delete's OCC test is the same spec, bloom included, so it
-    rebases instead of raising."""
+    rebases instead of raising. The cost rule picks DVs for 1 of 10
+    rows; a zero budget forces the rewrite."""
+    if not dv:
+        monkeypatch.setattr(V, "DV_COLLECT_CAP", 0)
     t = VersionedTable.create(
         spark, str(tmp_path / "t"),
         spark.createDataFrame(_rows(0), SCHEMA).coalesce(1),
@@ -268,7 +307,7 @@ def test_point_delete_rebases_past_a_bloom_disjoint_winner(
         return orig(root, version, adds, removes, key_col, **kw)
 
     monkeypatch.setattr(V, "_commit", interpose)
-    v = t.delete_where("tag = 't05'", dv=dv, prune={"tag": {"t05"}})
+    v = t.delete_where("tag = 't05'", prune={"tag": {"t05"}})
     assert fired["done"]
     (added,) = [e for e in t._live_entries() if e["key_min"] == 100]
     assert (added.get("bloom") or {}).get("tag")

@@ -21,6 +21,12 @@ import database_anonymiser_spark.sources.versioned as V
 from database_anonymiser_spark.sources.versioned import VersionedTable
 
 
+def _scanned(r) -> list:
+    """The files a data-source reader's partitions hold, in scan order
+    (a partition packs consecutive small files)."""
+    return [f for p in r.partitions() for f in p.files]
+
+
 @pytest.fixture()
 def registered(spark):
     from database_anonymiser_spark.sources.spark_datasource import (
@@ -104,9 +110,13 @@ def test_null_scrub_update_touches_only_null_files(spark, tmp_path):
     v = t.update_where(
         {"v": F.lit(-1.0)}, F.col("v").isNull(), prune={"v": "isnull"}
     )
-    assert V.DATA_FILES_READ - f0 == 2
+    # the two NULL-bearing files, read twice: the deletion-vector
+    # collect finds 110 matches over its 10-row budget (5 % of their
+    # 200 rows), then the rewrite reads them; clean files never
+    assert V.DATA_FILES_READ - f0 == 4
     m = t.commit_meta(v)["metrics"]
     assert m["files_touched"] == 2 and m["files_carried"] == n_files - 2
+    assert m["dv_fallback"] is True
     snap = t.snapshot()
     assert snap.where("v = -1.0").count() == 110
     assert snap.where("v IS NULL").count() == 0
@@ -116,7 +126,7 @@ def test_null_scrub_update_touches_only_null_files(spark, tmp_path):
     t2 = _mk(spark, tmp_path / "t2")
     f0 = V.DATA_FILES_READ
     t2.delete_where(F.col("v").isNull(), prune={"v": "isnull"})
-    assert V.DATA_FILES_READ - f0 == 2
+    assert V.DATA_FILES_READ - f0 == 4  # DV collect, then the rewrite
     assert t2.row_count() == 290
     assert t2.snapshot().where("v IS NULL").count() == 0
 
@@ -166,15 +176,15 @@ def test_datasource_pushdown_prunes_on_nullness(registered, tmp_path):
     r = _PushdownSnapshotReader(str(root))
     kept = r.pushFilters([IsNull(("v",))])
     assert list(kept) == [IsNull(("v",))]  # returned for re-evaluation
-    assert len(r.partitions()) == 2 < total
+    assert len(_scanned(r)) == 2 < total
     # the surviving files' pyarrow scans also evaluate the predicate —
     # exactly the NULL rows leave the executors
-    assert sum(b.num_rows for p in r.partitions()
+    assert sum(b.num_rows for p in _scanned(r)
                for b in _read_file_aligned(p)) == 110
 
     r2 = _PushdownSnapshotReader(str(root))
     r2.pushFilters([IsNotNull(("v",))])
-    assert len(r2.partitions()) == 3 < total
+    assert len(_scanned(r2)) == 3 < total
 
     # Spark derives IsNotNull from every comparison: an ordinary v > x
     # scan must prune the all-NULL file through the derived filter

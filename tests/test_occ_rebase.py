@@ -74,7 +74,7 @@ def test_update_where_without_prune_refuses_rebase(
     t = _mk(spark, tmp_path / "t")
     w = VersionedTable(spark, str(tmp_path / "t"))
     _race(
-        monkeypatch, {"update_where"},
+        monkeypatch, {"update_where", "update_dv"},
         lambda: w.append(
             spark.createDataFrame(
                 [(900, "app", 0)], "k long, name string, grp int"
@@ -123,7 +123,8 @@ def test_delete_where_rebases_rewrite_and_dv(spark, monkeypatch, tmp_path):
     assert t.commit_op(v) == "delete_where"
     assert t.row_count() == 76  # 80 - 5 deleted + 1 appended
 
-    # DV path
+    # DV path: a 1-row delete of a 10-row file, under a share that allows it
+    monkeypatch.setattr(V, "DV_MAX_SHARE", 0.25)
     t2 = _mk(spark, tmp_path / "b")
     w2 = VersionedTable(spark, str(tmp_path / "b"))
     _race(
@@ -134,7 +135,7 @@ def test_delete_where_rebases_rewrite_and_dv(spark, monkeypatch, tmp_path):
             )
         ),
     )
-    v2 = t2.delete_where("k = 3", prune={"k": (3, 3)}, dv=True)
+    v2 = t2.delete_where("k = 3", prune={"k": (3, 3)})
     assert t2.commit_op(v2) == "delete_dv"
     assert t2.snapshot().where("k = 3").count() == 0
     assert t2.snapshot().where("k = 902").count() == 1

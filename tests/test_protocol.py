@@ -67,7 +67,7 @@ def test_features_adopted_on_first_use_and_visible_in_detail(spark, tmp_path):
     # protocol slots are NOT user properties
     assert not any(k.startswith("protocol.") for k in d["properties"])
 
-    t.delete_where("k = 3", dv=True)
+    t.delete_where("k = 3")
     assert t.detail()["reader_features"] == ["deletionVectors"]
     t.rename_column("name", "label")
     assert t.detail()["reader_features"] == ["columnMapping", "deletionVectors"]
@@ -149,7 +149,7 @@ def test_corrupt_protocol_refuses(spark, tmp_path):
 
 def test_protocol_survives_checkpoint_and_clone(spark, tmp_path):
     t = _mk(spark, tmp_path / "t")
-    t.delete_where("k = 5", dv=True)
+    t.delete_where("k = 5")
     for i in range(V.CHECKPOINT_INTERVAL + 1):
         t.set_properties({"tick": str(i)})
     assert V._list_checkpoints(t.root)
@@ -161,7 +161,7 @@ def test_protocol_survives_checkpoint_and_clone(spark, tmp_path):
 
     # adoption is idempotent: a second DV delete adds no metadata churn
     v0 = t.latest_version()
-    t.delete_where("k = 7", dv=True)
+    t.delete_where("k = 7")
     rec = json.loads((t.root / "_log" / f"{v0 + 1:08d}.json").read_text())
     assert "properties" not in (rec.get("meta") or {})
 

@@ -1315,7 +1315,7 @@ def test_stream_curate_then_neardedup_pipeline(spark, tmp_path):
             "fingerprint"} <= cols
 
 
-def test_neardedup_forget_document(spark, tmp_path):
+def test_neardedup_forget_document(spark, monkeypatch, tmp_path):
     """Round 9: per-document right-to-be-forgotten over the near-dedup
     pipeline — the doc leaves the OUT table via a point-skipped
     delete-merge and its band signatures leave the STORE via the 'id'
@@ -1342,6 +1342,9 @@ def test_neardedup_forget_document(spark, tmp_path):
     n_sig = store.snapshot().count()
     n_live = len(store._live_entries())
 
+    # 8 of this small store's rows: a share that lets the cost rule
+    # mark them with deletion vectors
+    monkeypatch.setattr(V, "DV_MAX_SHARE", 0.25)
     meta = P.neardedup_forget(spark, out_root, store_root, [7, 13])
     assert meta["out_deleted"] == 2
     assert meta["store_rows_marked"] == 2 * 4  # 4 bands per doc

@@ -226,12 +226,14 @@ def test_update_where_scoped_with_pruning(spark, tmp_path):
         .sortWithinPartitions("k")
     )
     t = VersionedTable.create(spark, tmp_path / "u", df, key_col="k")
-    v0_paths = {e["path"] for e in t._live_entries(0)}
+    # a file's identity is (path, deletion vector): a DV write keeps
+    # the path and changes the vector
+    v0_paths = {(e["path"], e.get("dv")) for e in t._live_entries(0)}
     assert len(v0_paths) == 3
 
     t.update_where({"v": F.col("v") + 1000.0}, F.col("v") < 10.0, prune={"k": (0, 9)})
-    v1_paths = {e["path"] for e in t._live_entries(1)}
-    # only the file containing k in [0,9] was rewritten; two carried
+    v1_paths = {(e["path"], e.get("dv")) for e in t._live_entries(1)}
+    # only the file containing k in [0,9] changed; two carried
     assert len(v0_paths & v1_paths) == 2
     got = {r["k"]: r["v"] for r in t.snapshot().collect()}
     assert got[1] == 1001.0 and got[9] == 1009.0
@@ -406,13 +408,14 @@ def test_update_where_narrow_prune_is_consistent_not_per_file(spark, tmp_path):
         .sortWithinPartitions("k")
     )
     t = VersionedTable.create(spark, tmp_path / "t", df, key_col="k")
-    v0_paths = {e["path"] for e in t._live_entries(0)}
+    # a file's identity is (path, deletion vector)
+    v0_paths = {(e["path"], e.get("dv")) for e in t._live_entries(0)}
     # predicate matches EVERY row; prune covers only the first file's range
     t.update_where({"v": F.lit(-1.0)}, F.col("v") >= 0.0, prune={"k": (0, 5)})
     got = {r["k"]: r["v"] for r in t.snapshot().collect()}
     assert all(got[k] == -1.0 for k in range(6))
     assert all(got[k] == float(k) for k in range(6, 300))  # outside prune: untouched
-    carried = v0_paths & {e["path"] for e in t._live_entries(1)}
+    carried = v0_paths & {(e["path"], e.get("dv")) for e in t._live_entries(1)}
     assert len(carried) == 2  # the two non-intersecting files carried by reference
 
 
@@ -1288,8 +1291,9 @@ def test_ivm_minmax_avg_bounded_recompute(spark, tmp_path):
     n_live = len(base._live_entries())
     candidates = len(base.files_matching({"g": (2, 2)}))
     assert candidates < n_live, "zorder stats must let the group range prune"
-    pre_files = {e["path"] for e in base._live_entries(v_pre)}
-    now_files = {e["path"] for e in base._live_entries()}
+    # file identity is (path, deletion vector), as the change feed reads it
+    pre_files = {(e["path"], e.get("dv")) for e in base._live_entries(v_pre)}
+    now_files = {(e["path"], e.get("dv")) for e in base._live_entries()}
     n_changed = len(pre_files ^ now_files)
     before = V.DATA_FILES_READ
     view.refresh(base)
@@ -3114,13 +3118,13 @@ def test_drop_column_metadata_only_and_resurrection_guard(spark, tmp_path):
 
 
 def test_deletion_vectors_trickle_delete_lifecycle(spark, tmp_path):
-    """Round 9 (Delta deletion vectors): delete_where(dv=True) marks rows
+    """Round 9 (Delta deletion vectors): a trickle delete_where marks rows
     dead in per-file sidecars — zero rewrite — and EVERY read face honors
     them: snapshot, row_count, point/range reads, merge, CDF (newly-dead
     rows surface as delete events via the (path, dv) file identity),
     RESTORE rolls a DV state back, compact/purge materialize them away,
-    and erase purges first. Above DV_COLLECT_CAP the call falls back to
-    the rewrite path."""
+    and erase purges. Above the cost rule's DV_COLLECT_CAP bound the call
+    falls back to the rewrite path."""
     import database_anonymiser_spark.sources.versioned as V
 
     df = spark.createDataFrame(
@@ -3130,7 +3134,7 @@ def test_deletion_vectors_trickle_delete_lifecycle(spark, tmp_path):
     t = VersionedTable.create(spark, tmp_path / "t", df, key_col="k")
     files_before = sorted(e["path"] for e in t._live_entries())
 
-    v1 = t.delete_where(F.col("k").isin(3, 500, 997), dv=True)
+    v1 = t.delete_where(F.col("k").isin(3, 500, 997))
     # zero rewrite: same data files, a DV sidecar appeared
     assert sorted(e["path"] for e in t._live_entries()) == files_before
     assert any(e.get("dv") for e in t._live_entries())
@@ -3149,7 +3153,7 @@ def test_deletion_vectors_trickle_delete_lifecycle(spark, tmp_path):
     assert got == {("delete", 3), ("delete", 500), ("delete", 997)}
 
     # cumulative second DV on the same file(s)
-    t.delete_where(F.col("k") == 4, dv=True)
+    t.delete_where(F.col("k") == 4)
     assert t.snapshot().count() == 996
     assert t.row_count() == 996
 
@@ -3187,7 +3191,7 @@ def test_deletion_vectors_trickle_delete_lifecycle(spark, tmp_path):
     monkey_cap = V.DV_COLLECT_CAP
     try:
         V.DV_COLLECT_CAP = 10
-        t2.delete_where(F.col("k") < 100, dv=True)  # 100 > cap -> rewrite
+        t2.delete_where(F.col("k") < 100)  # 100 > cap -> rewrite
     finally:
         V.DV_COLLECT_CAP = monkey_cap
     assert t2.snapshot().count() == 400
@@ -3199,7 +3203,7 @@ def test_deletion_vectors_trickle_delete_lifecycle(spark, tmp_path):
         spark.createDataFrame([(i, f"s{i}") for i in range(50)], "k long, name string"),
         key_col="k",
     )
-    t3.delete_where(F.col("k") == 7, dv=True)
+    t3.delete_where(F.col("k") == 7)
     out = t3.erase(F.col("k") == 8)
     assert out["rows_deleted"] == 1
     # nothing on disk holds k=7 or k=8 anymore (the erase contract)
@@ -3224,7 +3228,7 @@ def test_deletion_vectors_ivm_and_vacuum(spark, tmp_path):
     view = IncrementalAggView.create(
         spark, tmp_path / "view", t, group_col="lab", sum_col="v", minmax=True
     )
-    t.delete_where(F.col("k").isin(0, 7, 23, 104), dv=True)
+    t.delete_where(F.col("k").isin(0, 7, 23, 104))
     view.refresh(t)
     want = {
         (r["lab"], r["n_rows"], r["sum_value"], r["min_value"], r["max_value"])
@@ -4740,6 +4744,6 @@ def test_maintenance_commits_carry_free_operation_metrics(spark, tmp_path):
     m = t.commit_meta(v)["metrics"]
     assert m["files_reclustered"] >= 1 and m["files_written"] >= 1
 
-    # DV delete still reports rows_marked (existing slot)
-    v = t.delete_where("k = 20", prune={"k": (20, 20)}, dv=True)
-    assert t.commit_meta(v)["rows_marked"] == 1
+    # a DV delete reports the same metrics block
+    v = t.delete_where("k = 20", prune={"k": (20, 20)})
+    assert t.commit_meta(v)["metrics"]["rows_deleted"] == 1

@@ -222,7 +222,7 @@ def datasource_read(spark, sf_dir: str, meta: dict) -> int:
             .withColumn("o_totalprice", F.col("o_totalprice") + 1),
             when_matched="update",
         )
-        t.delete_where("o_orderkey % 97 = 0", dv=True)
+        t.delete_where("o_orderkey % 97 = 0")  # ~1 % of rows: the DV path
 
         agg = lambda df: df.agg(
             F.count("*").alias("n"), F.sum("o_totalprice").alias("s")
